@@ -81,9 +81,13 @@ def __getattr__(name: str):
         return get_session
     # submodule attribute access (``sparkgraft.scans`` after a bare
     # ``import sparkgraft``, ``from sparkgraft import ranking``, ...)
+    # Only a missing SUBMODULE maps to AttributeError; a submodule that
+    # exists but fails on a missing dependency surfaces its real error.
     try:
         return importlib.import_module(f".{name}", __name__)
-    except ModuleNotFoundError:
+    except ModuleNotFoundError as exc:
+        if exc.name != f"{__name__}.{name}":
+            raise
         raise AttributeError(
             f"module {__name__!r} has no attribute {name!r}"
         ) from None

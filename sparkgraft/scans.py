@@ -16,6 +16,31 @@ from pyspark.sql import functions as F
 
 from .catalog import TABLES, load
 from .registry import query
+from .table import (
+    CommitConflict,
+    EXPIRED_SUFFIX,
+    MOR_DELETE_CLASS,
+    TXN_CKPT_POINTER,
+    commit_rewrite,
+    commit_snapshot,
+    data_files_of,
+    empty_log,
+    expire_snapshots,
+    head_version,
+    log_versions,
+    manifest_path,
+    mor_read,
+    read_manifest,
+    split_head_files,
+    tree_files,
+    try_publish,
+    txn_ckpt_path,
+    txn_commit,
+    txn_delta_merge,
+    txn_head_tables,
+    txn_publish,
+    txn_write_checkpoint,
+)
 
 _SCRATCH = os.path.join(tempfile.gettempdir(), "sparkgraft_sinks")
 
@@ -1302,16 +1327,9 @@ def scan_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap2_dir
     )
 
-    def _data_files(d: str) -> list[str]:
-        return sorted(
-            os.path.join(d, f)
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    snap1_files = _data_files(snap1_dir)
+    snap1_files = data_files_of(snap1_dir)
     log = spark.createDataFrame(
-        [(1, snap1_files), (2, snap1_files + _data_files(snap2_dir))],
+        [(1, snap1_files), (2, snap1_files + data_files_of(snap2_dir))],
         "snapshot int, files array<string>",
     )
     log.write.mode("overwrite").json(manifest)
@@ -1540,15 +1558,8 @@ def scan_snapshot_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap2_dir
     )
 
-    def _data_files(d: str) -> list[str]:
-        return sorted(
-            os.path.join(d, f)
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    v1 = _data_files(snap1_dir)
-    v2 = v1 + _data_files(snap2_dir)
+    v1 = data_files_of(snap1_dir)
+    v2 = v1 + data_files_of(snap2_dir)
     delta = sorted(set(v2) - set(v1))  # manifest diff, KB-scale metadata
     return spark.read.parquet(*delta).agg(
         F.count("*").cast("long").alias("n_rows"),
@@ -1563,226 +1574,6 @@ def scan_snapshot_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the read side, sink_manifest_atomic_publish the single-writer half) ---
 
 
-def _log_versions(log_dir: str) -> list[int]:
-    """Committed snapshot versions, ascending (KB-scale metadata listing)."""
-    return sorted(
-        int(f[1:-5])
-        for f in os.listdir(log_dir)
-        if f.startswith("v") and f.endswith(".json")
-    )
-
-
-def _read_manifest(log_dir: str, version: int) -> dict:
-    import json
-
-    with open(os.path.join(log_dir, f"v{version}.json")) as fh:
-        return json.load(fh)
-
-
-def _try_publish(
-    log_dir: str,
-    version: int,
-    files: list[str],
-    extra: dict | None = None,
-) -> bool:
-    """Attempt to commit snapshot ``version`` — the atomic COMPARE-AND-SWAP.
-
-    The manifest is fully written to a writer-private temp file first,
-    then ``os.link``ed to its final name: link(2) fails with EEXIST
-    atomically when another writer already holds that version, and a
-    winner's manifest appears complete in one shot (no torn reads — the
-    reason this is link-after-write, not open(O_EXCL)-then-write, and
-    why rename(2) is unusable here: it silently overwrites, so it can't
-    arbitrate). Returns False when the version was lost to a racer; the
-    caller re-reads the head and rebases. This is the single-node
-    essence of Delta/Iceberg's commit protocol (their LogStores do the
-    same put-if-absent against object storage)."""
-    import json
-
-    tmp = os.path.join(log_dir, f".tmp-v{version}-pid{os.getpid()}-{id(files)}")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"snapshot": version, "files": sorted(files), **(extra or {})},
-            fh,
-        )
-    try:
-        os.link(tmp, os.path.join(log_dir, f"v{version}.json"))
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
-
-
-class CommitConflict(RuntimeError):
-    """A remove-set no longer present in the head snapshot: the files
-    this commit rewrites were already rewritten/removed by a racer.
-    Blind retry would resurrect or double-apply them — the caller must
-    re-plan from the new head (Delta/Iceberg surface the same condition
-    as ConcurrentModification/ValidationException)."""
-
-
-def _commit_snapshot(
-    log_dir: str,
-    add_files: list[str],
-    remove_files: list[str] | None = None,
-    max_attempts: int = 50,
-    extra: dict | None = None,
-) -> tuple[int, int]:
-    """Optimistic-concurrency commit loop: read head, build the child
-    file list (parent − removed + added), CAS-publish, rebase-and-retry
-    on loss. Commits are REMOVE/ADD DELTAS, not absolute file lists —
-    the reason rebase is safe: an append (no removes) commutes with
-    anything, and a rewrite (compaction: removes the inputs it
-    compacted, adds their replacement) rebased onto a racer's append
-    keeps the appended files instead of silently dropping them (the
-    lost-update a naive \"replace the whole list\" semantic has). The
-    one genuine conflict — our removes are no longer all present in the
-    head, i.e. a racer already rewrote the same files — raises
-    ``CommitConflict`` instead of retrying. Returns
-    (version, n_retries)."""
-    removes = set(remove_files or [])
-    retries = 0
-    while True:
-        versions = _log_versions(log_dir)
-        head = versions[-1] if versions else 0
-        parent = _read_manifest(log_dir, head)["files"] if head else []
-        if removes and not removes <= set(parent):
-            raise CommitConflict(
-                f"removed files not in head v{head}: "
-                f"{sorted(removes - set(parent))}"
-            )
-        files = [f for f in parent if f not in removes] + list(add_files)
-        if _try_publish(log_dir, head + 1, files, extra=extra):
-            return head + 1, retries
-        retries += 1
-        if retries >= max_attempts:
-            raise RuntimeError(
-                f"commit lost the CAS {max_attempts} times in {log_dir}"
-            )
-
-
-def _data_files_of(d: str) -> list[str]:
-    return sorted(
-        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-    )
-
-
-def _mor_read(spark: SparkSession, files: list, key: str) -> DataFrame:
-    """MERGE-ON-READ of a manifest's file list: data files anti-joined
-    against the union of its equality tombstones on ``key`` (broadcast
-    — tombstones are KB). The one way every snapshot-log table with
-    deletes is read in this repo (r13 review fix: five inline copies
-    collapsed here, next to the `_MOR_DELETE_CLASS` convention that
-    classifies the files)."""
-    del_seg = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}"
-    data = [f for f in files if del_seg not in f]
-    tombs = [f for f in files if del_seg in f]
-    df = spark.read.parquet(*data)
-    if tombs:
-        df = df.join(
-            F.broadcast(spark.read.parquet(*tombs).select(key)),
-            key,
-            "left_anti",
-        )
-    return df
-
-
-# Snapshot-expiry conventions are OWNED here (r13 review fix: the
-# suffix literal had spread to four sites and the expiry procedure was
-# re-derived inline in the vacuum×CDF key — one owner, like
-# _TXN_CKPT_POINTER below).
-_EXPIRED_SUFFIX = ".json.expired"
-_SEQ_CKPT_PREFIX = "seq-v"
-
-
-def _seq_first_versions(log_dir: str) -> tuple[int, dict]:
-    """The NEWEST persisted sequence checkpoint: (horizon,
-    {file -> first-referencing version}) for files that were live when
-    snapshots <= horizon expired; (0, {}) when no expiry has happened.
-    Readers that derive per-file sequence numbers by walking manifests
-    MUST seed from this once the walk would cross expired territory —
-    the Iceberg discipline that sequence numbers are durable metadata,
-    never re-derived from history retention may delete."""
-    import json
-
-    horizons = sorted(
-        int(f[len(_SEQ_CKPT_PREFIX):-5])
-        for f in os.listdir(log_dir)
-        if f.startswith(_SEQ_CKPT_PREFIX) and f.endswith(".json")
-    )
-    if not horizons:
-        return 0, {}
-    with open(
-        os.path.join(log_dir, f"{_SEQ_CKPT_PREFIX}{horizons[-1]}.json")
-    ) as fh:
-        rec = json.load(fh)
-    return int(rec["horizon"]), {
-        f: int(v) for f, v in rec["first_versions"].items()
-    }
-
-
-def _expire_snapshots(
-    log_dir: str, retain_last: int
-) -> tuple[list[int], list[int], list[str]]:
-    """Expire all but the last ``retain_last`` snapshots — the shared
-    procedure `sink_snapshot_vacuum` proves and every caller reuses:
-
-    1. PERSIST the sequence numbers the expired prefix owns — a
-       ``seq-v{horizon}.json`` checkpoint mapping every still-live file
-       to its first-referencing version — BEFORE the manifests
-       disappear (without it, any later delete-bearing commit is
-       unplannable: the CDF's sequence scoping walks manifests from
-       genesis);
-    2. delete files referenced ONLY by expired manifests (exact list,
-       never a directory sweep);
-    3. tombstone expired manifests to ``v{N}{_EXPIRED_SUFFIX}`` so
-       time travel past retention fails fast.
-
-    Returns (retained, expired, orphans). KB manifest arithmetic
-    throughout — a 100 TB table expires without touching data bytes
-    beyond the orphan unlinks."""
-    import json
-
-    versions = _log_versions(log_dir)
-    retained = versions[-retain_last:]
-    expired = versions[:-retain_last]
-    if not expired:
-        return retained, [], []
-    live: set[str] = set()
-    for v in retained:
-        live |= set(_read_manifest(log_dir, v)["files"])
-    orphans: set[str] = set()
-    for v in expired:
-        orphans |= set(_read_manifest(log_dir, v)["files"])
-    orphans -= live
-    seen: dict = {}
-    for v in versions:
-        for f in _read_manifest(log_dir, v)["files"]:
-            seen.setdefault(f, v)
-    horizon = expired[-1]
-    tmp = os.path.join(log_dir, f".seq-tmp-{os.getpid()}")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "horizon": horizon,
-                "first_versions": {
-                    f: v for f, v in sorted(seen.items()) if f in live
-                },
-            },
-            fh,
-        )
-    os.replace(
-        tmp, os.path.join(log_dir, f"{_SEQ_CKPT_PREFIX}{horizon}.json")
-    )
-    for f in sorted(orphans):
-        os.unlink(f)
-    for v in expired:
-        os.rename(
-            os.path.join(log_dir, f"v{v}.json"),
-            os.path.join(log_dir, f"v{v}{_EXPIRED_SUFFIX}"),
-        )
-    return retained, expired, sorted(orphans)
 
 
 _CC_CUTOFF = "1998-01-01"
@@ -1805,7 +1596,7 @@ def sink_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table: after a base commit (pre-{_CC_CUTOFF} orders, v1), writer A
     and writer B each stage their data files (the even/odd halves of
     the remaining orders), BOTH read head = v1, B publishes v2 first,
-    and A's compare-and-swap for v2 MUST fail (`_try_publish` → False,
+    and A's compare-and-swap for v2 MUST fail (`try_publish` → False,
     asserted) — A then rebases onto v2 and lands v3. The final log is
     LINEAR (v1, v2, v3 — asserted contiguous with one winner per
     version) and the v3 snapshot contains base + B + A exactly once:
@@ -1814,7 +1605,7 @@ def sink_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     would break the count/cents hash. The race here is deterministically
     scripted so the LOSING path is exercised every run; the genuinely
     interleaved two-thread version is tests/test_round8_ops.py's
-    contention test over the same `_commit_snapshot` machinery.
+    contention test over the same `commit_snapshot` machinery.
 
     Scale: the CAS arbitrates on a manifest NAME, never data — writers
     stage arbitrarily large file sets with zero coordination and the
@@ -1823,9 +1614,7 @@ def sink_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is re-reading one manifest, independent of table size."""
     root = _scratch(sf_dir, "cc_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):  # idempotent re-run within one process
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)  # idempotent re-run within one process
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
@@ -1843,28 +1632,28 @@ def sink_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(b_dir)
 
-    v1, r1 = _commit_snapshot(log_dir, _data_files_of(base_dir))
+    v1, r1 = commit_snapshot(log_dir, data_files_of(base_dir))
     if (v1, r1) != (1, 0):
         raise RuntimeError(f"base commit not v1/clean: {(v1, r1)}")
 
     # both writers read the same head ...
-    head_a = _log_versions(log_dir)[-1]
-    parent_a = _read_manifest(log_dir, head_a)["files"]
+    head_a = head_version(log_dir)
+    parent_a = read_manifest(log_dir, head_a)["files"]
     # ... B publishes first and wins v2 ...
-    v2, r2 = _commit_snapshot(log_dir, _data_files_of(b_dir))
+    v2, r2 = commit_snapshot(log_dir, data_files_of(b_dir))
     if (v2, r2) != (2, 0):
         raise RuntimeError(f"writer B did not win v2 cleanly: {(v2, r2)}")
     # ... A's stale CAS must LOSE, then rebase onto v2 and land v3
-    if _try_publish(log_dir, head_a + 1, parent_a + _data_files_of(a_dir)):
+    if try_publish(log_dir, head_a + 1, parent_a + data_files_of(a_dir)):
         raise RuntimeError("stale CAS won against a committed version")
     n_retries = 1
-    v3, r3 = _commit_snapshot(log_dir, _data_files_of(a_dir))
+    v3, r3 = commit_snapshot(log_dir, data_files_of(a_dir))
     if (v3, r3) != (3, 0):
         raise RuntimeError(f"writer A's rebase did not land v3: {(v3, r3)}")
 
-    versions = _log_versions(log_dir)
+    versions = log_versions(log_dir)
     linear = versions == [1, 2, 3]
-    final = _read_manifest(log_dir, versions[-1])["files"]
+    final = read_manifest(log_dir, versions[-1])["files"]
     if len(final) != len(set(final)):
         raise RuntimeError("snapshot file list carries duplicates")
     return spark.read.parquet(*final).agg(
@@ -1921,9 +1710,7 @@ def sink_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the-world lock (readers inside retention pin manifests, not dirs)."""
     root = _scratch(sf_dir, "vacuum_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
@@ -1932,36 +1719,36 @@ def sink_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact_dir = os.path.join(root, "compact")
     rest_dir = os.path.join(root, "rest")
     base.write.mode("overwrite").parquet(base_dir)
-    base_files = _data_files_of(base_dir)  # pinned BEFORE vacuum unlinks
-    _commit_snapshot(log_dir, base_files)  # v1
+    base_files = data_files_of(base_dir)  # pinned BEFORE vacuum unlinks
+    commit_snapshot(log_dir, base_files)  # v1
     spark.read.parquet(*base_files).coalesce(1).write.mode(
         "overwrite"
     ).parquet(compact_dir)
-    _commit_snapshot(  # v2: compaction = remove the inputs, add the rewrite
+    commit_snapshot(  # v2: compaction = remove the inputs, add the rewrite
         log_dir,
-        _data_files_of(compact_dir),
+        data_files_of(compact_dir),
         remove_files=base_files,
     )
     o.filter(F.col("o_orderdate") >= cutoff).write.mode("overwrite").parquet(
         rest_dir
     )
-    _commit_snapshot(log_dir, _data_files_of(rest_dir))  # v3
+    commit_snapshot(log_dir, data_files_of(rest_dir))  # v3
 
-    retained, expired, orphans = _expire_snapshots(log_dir, retain_last=2)
+    retained, expired, orphans = expire_snapshots(log_dir, retain_last=2)
     if set(orphans) != set(base_files):
         raise RuntimeError(f"orphan set wrong: {sorted(orphans)}")
     live: set[str] = set()
     for v in retained:
-        live |= set(_read_manifest(log_dir, v)["files"])
+        live |= set(read_manifest(log_dir, v)["files"])
     vacuum_ok = (
         not any(os.path.exists(f) for f in orphans)
         and all(os.path.exists(f) for f in live)
-        and _log_versions(log_dir) == retained
+        and log_versions(log_dir) == retained
     )
 
     per_snap = []
     for v in retained:
-        files = _read_manifest(log_dir, v)["files"]
+        files = read_manifest(log_dir, v)["files"]
         per_snap.append(
             spark.read.parquet(*files).agg(
                 F.lit(v).cast("int").alias("snapshot"),
@@ -2092,9 +1879,7 @@ def scan_snapshot_as_of_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
 
     root = _scratch(sf_dir, "asof_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
@@ -2106,20 +1891,20 @@ def scan_snapshot_as_of_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         d = os.path.join(root, name)
         df.write.mode("overwrite").parquet(d)
         wm = (
-            spark.read.parquet(*_data_files_of(d))
+            spark.read.parquet(*data_files_of(d))
             .agg(F.max(F.to_date("o_orderdate")).cast("string"))
             .collect()[0][0]
         )
         # the watermark rides IN the commit record (manifests are
         # immutable once published — no post-publish patching)
-        _commit_snapshot(
-            log_dir, _data_files_of(d), extra={"watermark": wm}
+        commit_snapshot(
+            log_dir, data_files_of(d), extra={"watermark": wm}
         )
 
     def resolve(as_of: str) -> dict:
         best = None
-        for v in _log_versions(log_dir):
-            m = _read_manifest(log_dir, v)
+        for v in log_versions(log_dir):
+            m = read_manifest(log_dir, v)
             if m["watermark"] <= as_of:
                 best = m
         if best is None:
@@ -2187,9 +1972,7 @@ def sink_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-local."""
     root = _scratch(sf_dir, "autocompact_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     q = F.abs(F.xxhash64("o_orderkey")) % 4
@@ -2201,10 +1984,10 @@ def sink_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(d)
         )
-        _commit_snapshot(log_dir, _data_files_of(d))
+        commit_snapshot(log_dir, data_files_of(d))
 
-    head = _log_versions(log_dir)[-1]
-    before = _read_manifest(log_dir, head)["files"]
+    head = head_version(log_dir)
+    before = read_manifest(log_dir, head)["files"]
     if len(before) <= _COMPACT_FILE_THRESHOLD:
         raise RuntimeError(
             f"ingestion debris missing: only {len(before)} files"
@@ -2217,11 +2000,11 @@ def sink_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(cdir)
     )
-    after_files = _data_files_of(cdir)
-    _commit_snapshot(log_dir, after_files, remove_files=before)
+    after_files = data_files_of(cdir)
+    commit_snapshot(log_dir, after_files, remove_files=before)
 
-    versions = _log_versions(log_dir)
-    head_files = _read_manifest(log_dir, versions[-1])["files"]
+    versions = log_versions(log_dir)
+    head_files = read_manifest(log_dir, versions[-1])["files"]
     if versions != [1, 2, 3, 4, 5]:
         raise RuntimeError(f"log not linear: {versions}")
     if sorted(head_files) != sorted(after_files):
@@ -2280,9 +2063,7 @@ def sink_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "cow_delete_table")
     log_dir = os.path.join(root, "log")
     data_dir = os.path.join(root, "data")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     (
@@ -2292,13 +2073,8 @@ def sink_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_year")
         .parquet(data_dir)
     )
-    all_files = sorted(
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(data_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    _commit_snapshot(log_dir, all_files)  # v1
+    all_files = tree_files(data_dir)
+    commit_snapshot(log_dir, all_files)  # v1
 
     affected = [f for f in all_files if f"{os.sep}o_year=1997{os.sep}" in f]
     if len(affected) != 1:
@@ -2311,11 +2087,11 @@ def sink_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(rewrite_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(rewrite_dir), remove_files=affected
+    commit_snapshot(
+        log_dir, data_files_of(rewrite_dir), remove_files=affected
     )  # v2: the COW delete
 
-    head = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
+    head = read_manifest(log_dir, head_version(log_dir))["files"]
     untouched = set(all_files) - set(affected)
     if not untouched <= set(head):
         raise RuntimeError("COW delete disturbed non-matching files")
@@ -2371,9 +2147,7 @@ def sink_schema_evolution_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the schema version come from the manifest, not a directory walk."""
     root = _scratch(sf_dir, "schema_evo_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
@@ -2382,8 +2156,8 @@ def sink_schema_evolution_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.filter(F.col("o_orderdate") < cutoff).select(
         "o_orderkey", "o_totalprice"
     ).write.mode("overwrite").parquet(v1_dir)
-    _commit_snapshot(
-        log_dir, _data_files_of(v1_dir), extra={"schema_version": 1}
+    commit_snapshot(
+        log_dir, data_files_of(v1_dir), extra={"schema_version": 1}
     )
     (
         o.filter(F.col("o_orderdate") >= cutoff)
@@ -2398,15 +2172,15 @@ def sink_schema_evolution_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(v2_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(v2_dir), extra={"schema_version": 2}
+    commit_snapshot(
+        log_dir, data_files_of(v2_dir), extra={"schema_version": 2}
     )
 
-    versions = _log_versions(log_dir)
-    head = _read_manifest(log_dir, versions[-1])
+    versions = log_versions(log_dir)
+    head = read_manifest(log_dir, versions[-1])
     if head.get("schema_version") != 2:
         raise RuntimeError("head manifest lost the schema bump")
-    if not set(_data_files_of(v1_dir)) <= set(head["files"]):
+    if not set(data_files_of(v1_dir)) <= set(head["files"]):
         raise RuntimeError("evolution rewrote history — old files replaced")
     merged = spark.read.option("mergeSchema", "true").parquet(*head["files"])
     return (
@@ -2473,9 +2247,7 @@ def sink_acid_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "acid_upsert_table")
     log_dir = os.path.join(root, "log")
     data_dir = os.path.join(root, "data")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -2489,13 +2261,8 @@ def sink_acid_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_year")
         .parquet(data_dir)
     )
-    all_files = sorted(
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(data_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    _commit_snapshot(log_dir, all_files)  # v1
+    all_files = tree_files(data_dir)
+    commit_snapshot(log_dir, all_files)  # v1
 
     # MERGE batch: updates target only 1996 keys → file-level pruning
     affected = [f for f in all_files if f"{os.sep}o_year=1996{os.sep}" in f]
@@ -2526,10 +2293,10 @@ def sink_acid_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(insert_dir)
     )
-    adds = _data_files_of(rewrite_dir) + _data_files_of(insert_dir)
-    _commit_snapshot(log_dir, adds, remove_files=affected)  # v2: the MERGE
+    adds = data_files_of(rewrite_dir) + data_files_of(insert_dir)
+    commit_snapshot(log_dir, adds, remove_files=affected)  # v2: the MERGE
 
-    head = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
+    head = read_manifest(log_dir, head_version(log_dir))["files"]
     if set(affected) & set(head):
         raise RuntimeError("merged-away file still referenced")
     if not (set(all_files) - set(affected)) <= set(head):
@@ -2623,29 +2390,29 @@ def scan_branch_tag_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(odd_dir)
 
-    v1, _ = _commit_snapshot(log_dir, _data_files_of(base_dir))
+    v1, _ = commit_snapshot(log_dir, data_files_of(base_dir))
     set_ref("tag_baseline", v1)  # frozen pointer
     set_ref("branch_main", v1)
     set_ref("branch_audit", v1)  # branch = cheap pointer copy, zero data
 
     # main advances: child of main's head (v1) + even files
-    base_files = _read_manifest(log_dir, get_ref("branch_main"))["files"]
-    v2, _ = _commit_snapshot(log_dir, _data_files_of(even_dir))
+    base_files = read_manifest(log_dir, get_ref("branch_main"))["files"]
+    v2, _ = commit_snapshot(log_dir, data_files_of(even_dir))
     set_ref("branch_main", v2)
     # audit advances INDEPENDENTLY from ITS head (v1) + odd files; the
     # log is shared and linear, the branch structure lives in the refs —
     # v3's parent-by-ref is v1, so build its file list from v1, not head
-    if not _try_publish(
+    if not try_publish(
         log_dir,
         v2 + 1,
-        base_files + _data_files_of(odd_dir),
+        base_files + data_files_of(odd_dir),
     ):
         raise RuntimeError("branch commit lost an uncontended CAS")
     set_ref("branch_audit", v2 + 1)
 
-    main_files = set(_read_manifest(log_dir, get_ref("branch_main"))["files"])
+    main_files = set(read_manifest(log_dir, get_ref("branch_main"))["files"])
     audit_files = set(
-        _read_manifest(log_dir, get_ref("branch_audit"))["files"]
+        read_manifest(log_dir, get_ref("branch_audit"))["files"]
     )
     shared = set(base_files)
     if not (shared <= main_files and shared <= audit_files):
@@ -2661,7 +2428,7 @@ def scan_branch_tag_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("branch:main", "branch_main"),
         ("tag:baseline", "tag_baseline"),
     ]:
-        files = _read_manifest(log_dir, get_ref(name))["files"]
+        files = read_manifest(log_dir, get_ref(name))["files"]
         per.append(
             spark.read.parquet(*files).agg(
                 F.lit(ref).alias("ref"),
@@ -2722,7 +2489,7 @@ def scan_distcp_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     load(spark, sf_dir, "orders").repartition(4).write.mode(
         "overwrite"
     ).parquet(src_dir)
-    src_files = _data_files_of(src_dir)
+    src_files = data_files_of(src_dir)
 
     files = (
         spark.read.format("binaryFile")
@@ -2791,21 +2558,6 @@ def scan_distcp_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row-level-change matrix; sink_merge_delete/sink_acid_upsert are the
 # copy-on-write half) ---
 
-_MOR_DELETE_CLASS = "deletes"  # path segment classifying tombstone files
-_POS_DELETE_CLASS = "pos"  # sub-segment for POSITIONAL delete vectors
-# (deletes/pos/...); shared with the streaming CDF reader's classifier
-
-
-def _split_head_files(files: list[str]) -> tuple[list[str], list[str]]:
-    """Partition a snapshot's file list into (data, delete) classes by
-    the tombstone path convention — the single-node essence of Iceberg's
-    separate data/delete manifests (the class rides in KB metadata, the
-    reader never opens a file to learn what kind it is)."""
-    seg = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}"
-    deletes = [f for f in files if seg in f]
-    data = [f for f in files if seg not in f]
-    return data, deletes
-
 
 _MOR_PRED_SQL = "o_orderkey % 10 = 3"  # scatters over EVERY data file
 
@@ -2852,11 +2604,9 @@ def sink_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "mor_delete_table")
     log_dir = os.path.join(root, "log")
     data_dir = os.path.join(root, "data")
-    del_dir = os.path.join(root, _MOR_DELETE_CLASS, "d1")
+    del_dir = os.path.join(root, MOR_DELETE_CLASS, "d1")
     fold_dir = os.path.join(root, "fold")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     (
@@ -2866,13 +2616,8 @@ def sink_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_year")
         .parquet(data_dir)
     )
-    v1_files = sorted(
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(data_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    _commit_snapshot(log_dir, v1_files)  # v1: the base table
+    v1_files = tree_files(data_dir)
+    commit_snapshot(log_dir, v1_files)  # v1: the base table
 
     # v2: the DELETE — one equality-delete file, ADD-only commit.
     (
@@ -2883,23 +2628,23 @@ def sink_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(del_dir)
     )
-    tombstones = _data_files_of(del_dir)
+    tombstones = data_files_of(del_dir)
     if len(tombstones) != 1:
         raise RuntimeError(f"expected one tombstone file, got {tombstones}")
-    _commit_snapshot(log_dir, tombstones, extra={"op": "mor-delete"})
+    commit_snapshot(log_dir, tombstones, extra={"op": "mor-delete"})
 
-    head_v2 = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
-    data_v2, dels_v2 = _split_head_files(head_v2)
+    head_v2 = read_manifest(log_dir, head_version(log_dir))["files"]
+    data_v2, dels_v2 = split_head_files(head_v2)
     if sorted(data_v2) != v1_files:
         raise RuntimeError("MOR delete disturbed data files — must be add-only")
     if dels_v2 != tombstones:
         raise RuntimeError(f"head delete class wrong: {dels_v2}")
     # Time travel: v1 (pre-delete) must still contain the deleted rows.
-    v1_read = spark.read.parquet(*_read_manifest(log_dir, 1)["files"])
+    v1_read = spark.read.parquet(*read_manifest(log_dir, 1)["files"])
     if v1_read.filter(F.expr(_MOR_PRED_SQL)).limit(1).count() == 0:
         raise RuntimeError("v1 lost the deleted rows — time travel broken")
 
-    def _mor_read() -> DataFrame:
+    def mor_read() -> DataFrame:
         keys = spark.read.parquet(*dels_v2).select("o_orderkey")
         return spark.read.parquet(*data_v2).join(
             F.broadcast(keys), "o_orderkey", "left_anti"
@@ -2911,18 +2656,18 @@ def sink_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     ]
-    mor_row = _mor_read().agg(*digest).collect()[0]
+    mor_row = mor_read().agg(*digest).collect()[0]
 
     # v3: the FOLD — rewrite data applying the vector, retire everything.
-    _mor_read().coalesce(2).write.mode("overwrite").parquet(fold_dir)
-    _commit_snapshot(
+    mor_read().coalesce(2).write.mode("overwrite").parquet(fold_dir)
+    commit_snapshot(
         log_dir,
-        _data_files_of(fold_dir),
+        data_files_of(fold_dir),
         remove_files=head_v2,
         extra={"op": "mor-fold"},
     )
-    head_v3 = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
-    data_v3, dels_v3 = _split_head_files(head_v3)
+    head_v3 = read_manifest(log_dir, head_version(log_dir))["files"]
+    data_v3, dels_v3 = split_head_files(head_v3)
     if dels_v3:
         raise RuntimeError(f"fold left tombstones in the head: {dels_v3}")
     fold_row = spark.read.parquet(*data_v3).agg(*digest).collect()[0]
@@ -2988,9 +2733,7 @@ def sink_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = os.path.join(root, "log")
     gen1_dir = os.path.join(root, "gen1")
     gen2_dir = os.path.join(root, "gen2")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
@@ -3004,16 +2747,8 @@ def sink_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(gen1_dir)
     )
 
-    def _tree_files(d: str) -> list[str]:
-        return sorted(
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-
-    gen1_files = _tree_files(gen1_dir)
-    _commit_snapshot(
+    gen1_files = tree_files(gen1_dir)
+    commit_snapshot(
         log_dir, gen1_files, extra={"spec": ["o_year"], "spec_id": 1}
     )  # v1: layout generation 1
 
@@ -3025,14 +2760,14 @@ def sink_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_year", "o_quarter")
         .parquet(gen2_dir)
     )
-    gen2_files = _tree_files(gen2_dir)
-    _commit_snapshot(
+    gen2_files = tree_files(gen2_dir)
+    commit_snapshot(
         log_dir,
         gen2_files,
         extra={"spec": ["o_year", "o_quarter"], "spec_id": 2},
     )  # v2: the EVOLUTION — add-only, nothing rewritten
 
-    head = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
+    head = read_manifest(log_dir, head_version(log_dir))["files"]
     if sorted(f for f in head if f.startswith(gen1_dir)) != gen1_files:
         raise RuntimeError("evolution disturbed generation-1 files")
 
@@ -3127,9 +2862,7 @@ def sink_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash regardless of layout."""
     root = _scratch(sf_dir, "optimize_zorder_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     q = F.abs(F.xxhash64("o_orderkey")) % 4
@@ -3141,9 +2874,9 @@ def sink_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(d)
         )
-        _commit_snapshot(log_dir, _data_files_of(d))
+        commit_snapshot(log_dir, data_files_of(d))
 
-    before = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
+    before = read_manifest(log_dir, head_version(log_dir))["files"]
     if len(before) != 16:
         raise RuntimeError(f"ingestion debris wrong: {len(before)} files")
 
@@ -3194,13 +2927,13 @@ def sink_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(zdir)
     )
-    after_files = _data_files_of(zdir)
-    _commit_snapshot(
+    after_files = data_files_of(zdir)
+    commit_snapshot(
         log_dir, after_files, remove_files=before, extra={"op": "optimize-zorder"}
     )
 
-    versions = _log_versions(log_dir)
-    head_files = _read_manifest(log_dir, versions[-1])["files"]
+    versions = log_versions(log_dir)
+    head_files = read_manifest(log_dir, versions[-1])["files"]
     if versions != [1, 2, 3, 4, 5]:
         raise RuntimeError(f"log not linear: {versions}")
     if sorted(head_files) != sorted(after_files):
@@ -3267,11 +3000,9 @@ def sink_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "mor_upsert_table")
     log_dir = os.path.join(root, "log")
     data_dir = os.path.join(root, "data")
-    del_dir = os.path.join(root, _MOR_DELETE_CLASS, "u1")
+    del_dir = os.path.join(root, MOR_DELETE_CLASS, "u1")
     up_dir = os.path.join(root, "upsert")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -3285,13 +3016,8 @@ def sink_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_year")
         .parquet(data_dir)
     )
-    v1_files = sorted(
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(data_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    _commit_snapshot(log_dir, v1_files)  # v1
+    v1_files = tree_files(data_dir)
+    commit_snapshot(log_dir, v1_files)  # v1
 
     matched = F.col("o_orderkey") % 5 == 0
     base = spark.read.parquet(*v1_files)
@@ -3309,13 +3035,13 @@ def sink_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates.unionByName(inserts).coalesce(1).write.mode("overwrite").parquet(
         up_dir
     )
-    adds = _data_files_of(del_dir) + _data_files_of(up_dir)
+    adds = data_files_of(del_dir) + data_files_of(up_dir)
     if len(adds) != 2:
         raise RuntimeError(f"MOR merge must add exactly 2 files: {adds}")
-    _commit_snapshot(log_dir, adds, extra={"op": "mor-merge"})  # v2
+    commit_snapshot(log_dir, adds, extra={"op": "mor-merge"})  # v2
 
-    head = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
-    data_files, tombstones = _split_head_files(head)
+    head = read_manifest(log_dir, head_version(log_dir))["files"]
+    data_files, tombstones = split_head_files(head)
     if not set(v1_files) <= set(data_files):
         raise RuntimeError("MOR merge disturbed base files — must be add-only")
     if len(tombstones) != 1:
@@ -3323,8 +3049,8 @@ def sink_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Sequence-scoped read: file -> first-appearance version from the log.
     first_ver: dict[str, int] = {}
-    for v in _log_versions(log_dir):
-        for f in _read_manifest(log_dir, v)["files"]:
+    for v in log_versions(log_dir):
+        for f in read_manifest(log_dir, v)["files"]:
             first_ver.setdefault(f, v)
     tomb_ver = first_ver[tombstones[0]]
     old_data = [f for f in data_files if first_ver[f] < tomb_ver]
@@ -3368,8 +3094,8 @@ def scan_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs once commits number in the thousands (Delta's _last_checkpoint
     / Iceberg's snapshot metadata). This key's table uses a DELTA-FORM
     log — each manifest records ONLY its commit's added files (Delta's
-    actions-log shape, published through the same `_try_publish`
-    write-temp-then-link CAS; the main `_commit_snapshot` log stores
+    actions-log shape, published through the same `try_publish`
+    write-temp-then-link CAS; the main `commit_snapshot` log stores
     absolute lists, where the head manifest alone is the state and
     checkpoints are moot — the delta form is exactly WHY real formats
     checkpoint). Resolving the head therefore means replaying every
@@ -3393,9 +3119,7 @@ def scan_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch(sf_dir, "log_checkpoint_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     n_commits, ckpt_at = 12, 10
@@ -3404,10 +3128,8 @@ def scan_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Union of add-deltas v1..upto — the no-checkpoint reader."""
         state: set[str] = set()
         for v in range(1, upto + 1):
-            path = os.path.join(log_dir, f"v{v}.json")
-            opened.append(path)
-            with open(path) as fh:
-                state |= set(json.load(fh)["files"])
+            opened.append(manifest_path(log_dir, v))
+            state |= set(read_manifest(log_dir, v)["files"])
         return state
 
     for i in range(n_commits):  # one small append commit per slice
@@ -3419,7 +3141,7 @@ def scan_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(d)
         )
         # delta-form manifest: this commit's ADDS only
-        if not _try_publish(log_dir, i + 1, _data_files_of(d)):
+        if not try_publish(log_dir, i + 1, data_files_of(d)):
             raise RuntimeError(f"single-writer CAS lost v{i + 1}")
         if i + 1 == ckpt_at:
             # checkpointer pays the full replay ONCE, then readers don't
@@ -3428,7 +3150,7 @@ def scan_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             with open(tmp, "w") as fh:
                 json.dump({"version": ckpt_at, "files": sorted(state)}, fh)
             try:
-                os.link(tmp, os.path.join(log_dir, f"ckpt-v{ckpt_at}.json"))
+                os.link(tmp, txn_ckpt_path(log_dir, ckpt_at))
             except FileExistsError:
                 pass
             finally:
@@ -3436,20 +3158,18 @@ def scan_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             ptmp = os.path.join(log_dir, f".lastckpt-tmp-{os.getpid()}")
             with open(ptmp, "w") as fh:
                 fh.write(str(ckpt_at))
-            os.replace(ptmp, os.path.join(log_dir, "_last_checkpoint"))
+            os.replace(ptmp, os.path.join(log_dir, TXN_CKPT_POINTER))
 
     # Checkpoint-based head resolution: pointer -> checkpoint -> tail.
     opened: list[str] = []
-    with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
+    with open(os.path.join(log_dir, TXN_CKPT_POINTER)) as fh:
         ckpt_ver = int(fh.read())
-    with open(os.path.join(log_dir, f"ckpt-v{ckpt_ver}.json")) as fh:
+    with open(txn_ckpt_path(log_dir, ckpt_ver)) as fh:
         state = set(json.load(fh)["files"])
-    head_ver = _log_versions(log_dir)[-1]
+    head_ver = head_version(log_dir)
     for v in range(ckpt_ver + 1, head_ver + 1):
-        path = os.path.join(log_dir, f"v{v}.json")
-        opened.append(path)
-        with open(path) as fh:
-            state |= set(json.load(fh)["files"])
+        opened.append(manifest_path(log_dir, v))
+        state |= set(read_manifest(log_dir, v)["files"])
     resolved = sorted(state)
     manifests_read = len(opened)
 
@@ -3547,7 +3267,7 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             return int(fh.read())
 
     def ref_files(name: str) -> list[str]:
-        return _read_manifest(log_dir, get_ref(name))["files"]
+        return read_manifest(log_dir, get_ref(name))["files"]
 
     def audit(files: list[str]) -> int:
         """DQ gate on a staged snapshot: violating-row count (negative
@@ -3565,7 +3285,7 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base_dir = os.path.join(root, "base")
     o.repartition(2).write.mode("overwrite").parquet(base_dir)
-    v1, _ = _commit_snapshot(log_dir, _data_files_of(base_dir))
+    v1, _ = commit_snapshot(log_dir, data_files_of(base_dir))
     set_ref("main", v1)
 
     # Batch 1 (POISONED): re-keyed rows with negated cents — every row
@@ -3582,10 +3302,10 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(bad_dir)
     )
-    bad_files = _data_files_of(bad_dir)
+    bad_files = data_files_of(bad_dir)
     if spark.read.parquet(*bad_files).limit(1).count() == 0:
         raise RuntimeError("staged poisoned batch is empty — vacuous gate")
-    v2, _ = _commit_snapshot(log_dir, bad_files)  # stage commit
+    v2, _ = commit_snapshot(log_dir, bad_files)  # stage commit
     set_ref("wap_batch1", v2)
     if audit(ref_files("wap_batch1")) == 0:
         raise RuntimeError("poisoned batch passed the audit — gate broken")
@@ -3610,10 +3330,10 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(good_dir)
     )
-    if not _try_publish(
+    if not try_publish(
         log_dir,
         v2 + 1,
-        ref_files("main") + _data_files_of(good_dir),
+        ref_files("main") + data_files_of(good_dir),
     ):
         raise RuntimeError("stage commit lost an uncontended CAS")
     set_ref("wap_batch2", v2 + 1)
@@ -3679,9 +3399,7 @@ def dq_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta breaks the hash."""
     root = _scratch(sf_dir, "drift_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
@@ -3693,11 +3411,11 @@ def dq_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.filter(F.col("o_orderdate") >= cutoff).repartition(2).write.mode(
         "overwrite"
     ).parquet(delta_dir)
-    _commit_snapshot(log_dir, _data_files_of(base_dir))  # v1
-    _commit_snapshot(log_dir, _data_files_of(delta_dir))  # v2 append
+    commit_snapshot(log_dir, data_files_of(base_dir))  # v1
+    commit_snapshot(log_dir, data_files_of(delta_dir))  # v2 append
 
-    v1_files = _read_manifest(log_dir, 1)["files"]
-    v2_files = _read_manifest(log_dir, 2)["files"]
+    v1_files = read_manifest(log_dir, 1)["files"]
+    v2_files = read_manifest(log_dir, 2)["files"]
     delta_files = sorted(set(v2_files) - set(v1_files))
 
     def stats(files: list[str]) -> DataFrame:
@@ -3845,8 +3563,8 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.filter(F.col("o_orderdate") < cutoff).repartition(2).write.mode(
         "overwrite"
     ).parquet(base_dir)
-    base_files = _data_files_of(base_dir)
-    v1, _ = _commit_snapshot(log_dir, base_files)
+    base_files = data_files_of(base_dir)
+    v1, _ = commit_snapshot(log_dir, base_files)
     set_ref("tag_baseline", v1)
     set_ref("branch_main", v1)
 
@@ -3861,8 +3579,8 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(bad_dir)
     )
-    bad_files = _data_files_of(bad_dir)
-    v2, _ = _commit_snapshot(log_dir, bad_files)
+    bad_files = data_files_of(bad_dir)
+    v2, _ = commit_snapshot(log_dir, bad_files)
     set_ref("wap_reject", v2)
     n_bad = (
         spark.read.parquet(*bad_files).filter(F.col("cents") < 0).count()
@@ -3875,7 +3593,7 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.read.parquet(*base_files).coalesce(1).write.mode(
         "overwrite"
     ).parquet(compact_dir)
-    if not _try_publish(log_dir, v2 + 1, _data_files_of(compact_dir)):
+    if not try_publish(log_dir, v2 + 1, data_files_of(compact_dir)):
         raise RuntimeError("compaction commit lost an uncontended CAS")
     set_ref("branch_main", v2 + 1)
     # v4: main appends the remaining orders
@@ -3883,14 +3601,14 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         rest_dir
     )
     v4_files = (
-        _read_manifest(log_dir, get_ref("branch_main"))["files"]
-        + _data_files_of(rest_dir)
+        read_manifest(log_dir, get_ref("branch_main"))["files"]
+        + data_files_of(rest_dir)
     )
-    if not _try_publish(log_dir, v2 + 2, v4_files):
+    if not try_publish(log_dir, v2 + 2, v4_files):
         raise RuntimeError("append commit lost an uncontended CAS")
     set_ref("branch_main", v2 + 2)
 
-    versions = _log_versions(log_dir)
+    versions = log_versions(log_dir)
     window = set(versions[-2:])  # retain_last = 2
     ref_pinned = {get_ref(name) for name in os.listdir(refs_dir)}
     retained = sorted(window | ref_pinned)
@@ -3902,12 +3620,12 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     live: set[str] = set()
     for v in retained:
-        live |= set(_read_manifest(log_dir, v)["files"])
+        live |= set(read_manifest(log_dir, v)["files"])
     # Counterfactual: a refs-BLIND live set misses v1's files entirely —
     # the naive vacuum would have deleted what the tag still references.
     naive_live: set[str] = set()
     for v in sorted(window):
-        naive_live |= set(_read_manifest(log_dir, v)["files"])
+        naive_live |= set(read_manifest(log_dir, v)["files"])
     if set(base_files) & naive_live:
         raise RuntimeError("counterfactual broken: window already covers v1")
     if not set(base_files) <= live:
@@ -3915,7 +3633,7 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orphans: set[str] = set()
     for v in expired:
-        orphans |= set(_read_manifest(log_dir, v)["files"])
+        orphans |= set(read_manifest(log_dir, v)["files"])
     orphans -= live
     if orphans != set(bad_files):
         raise RuntimeError(f"orphan set wrong: {sorted(orphans)}")
@@ -3923,16 +3641,16 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.unlink(f)
     for v in expired:
         os.rename(
-            os.path.join(log_dir, f"v{v}.json"),
-            os.path.join(log_dir, f"v{v}{_EXPIRED_SUFFIX}"),
+            manifest_path(log_dir, v),
+            os.path.join(log_dir, f"v{v}{EXPIRED_SUFFIX}"),
         )
     if any(os.path.exists(f) for f in orphans):
         raise RuntimeError("rejected batch's files survived the vacuum")
     if not all(os.path.exists(f) for f in live):
         raise RuntimeError("vacuum deleted a live file")
-    if _log_versions(log_dir) != retained:
+    if log_versions(log_dir) != retained:
         raise RuntimeError(
-            f"log after vacuum: {_log_versions(log_dir)} != {retained}"
+            f"log after vacuum: {log_versions(log_dir)} != {retained}"
         )
 
     digest = [
@@ -3946,7 +3664,7 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("branch:main", "branch_main"),
         ("tag:baseline", "tag_baseline"),
     ]:
-        files = _read_manifest(log_dir, get_ref(name))["files"]
+        files = read_manifest(log_dir, get_ref(name))["files"]
         per.append(
             spark.read.parquet(*files).agg(
                 F.lit(ref).alias("ref"),
@@ -3998,9 +3716,7 @@ def scan_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore is instant even when the mistake was 10 TB."""
     root = _scratch(sf_dir, "rollback_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -4010,8 +3726,8 @@ def scan_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad_dir = os.path.join(root, "bad")
     good_dir = os.path.join(root, "good")
     o.repartition(2).write.mode("overwrite").parquet(base_dir)
-    v1, _ = _commit_snapshot(log_dir, _data_files_of(base_dir))
-    v1_files = _read_manifest(log_dir, v1)["files"]
+    v1, _ = commit_snapshot(log_dir, data_files_of(base_dir))
+    v1_files = read_manifest(log_dir, v1)["files"]
 
     (
         o.filter(F.col("o_orderkey") % 100 == 13)
@@ -4023,10 +3739,10 @@ def scan_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(bad_dir)
     )
-    bad_files = _data_files_of(bad_dir)
-    v2, _ = _commit_snapshot(log_dir, bad_files)
+    bad_files = data_files_of(bad_dir)
+    v2, _ = commit_snapshot(log_dir, bad_files)
     if (
-        spark.read.parquet(*_read_manifest(log_dir, v2)["files"])
+        spark.read.parquet(*read_manifest(log_dir, v2)["files"])
         .filter(F.col("cents") < 0)
         .limit(1)
         .count()
@@ -4035,10 +3751,10 @@ def scan_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("bad batch left no visible violations at v2")
 
     # v3: THE ROLLBACK — remove exactly v2's adds; nothing new lands
-    v3, _ = _commit_snapshot(
+    v3, _ = commit_snapshot(
         log_dir, [], remove_files=bad_files, extra={"op": "rollback", "to": v1}
     )
-    v3_files = _read_manifest(log_dir, v3)["files"]
+    v3_files = read_manifest(log_dir, v3)["files"]
     if v3_files != v1_files:
         raise RuntimeError(
             f"rollback did not restore v1's file list: {v3_files}"
@@ -4048,7 +3764,7 @@ def scan_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("rollback materialized new files")
     # forensic record: v2 must still show the poisoned rows ...
     still_bad = (
-        spark.read.parquet(*_read_manifest(log_dir, v2)["files"])
+        spark.read.parquet(*read_manifest(log_dir, v2)["files"])
         .filter(F.col("cents") < 0)
         .count()
     )
@@ -4073,12 +3789,12 @@ def scan_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(good_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(good_dir))
-    versions = _log_versions(log_dir)
+    commit_snapshot(log_dir, data_files_of(good_dir))
+    versions = log_versions(log_dir)
     if versions != [1, 2, 3, 4]:
         raise RuntimeError(f"history not linear: {versions}")
 
-    head = _read_manifest(log_dir, versions[-1])["files"]
+    head = read_manifest(log_dir, versions[-1])["files"]
     return spark.read.parquet(*head).agg(
         F.lit(3).cast("int").alias("rollback_version"),
         F.lit(len(versions)).cast("int").alias("n_snapshots"),
@@ -4118,7 +3834,7 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     the branch's compaction delta (which removes the same base files)
     must raise CommitConflict (asserted), not resurrect dead files or
     double-apply the rewrite. This is the same conflict rule
-    `_commit_snapshot` enforces between racing writers, applied across
+    `commit_snapshot` enforces between racing writers, applied across
     refs.
 
     Scale: a cherry-pick is KB manifest arithmetic + one CAS — promoting
@@ -4145,11 +3861,11 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
             return int(fh.read())
 
     def ref_files(name: str) -> list[str]:
-        return _read_manifest(log_dir, get_ref(name))["files"]
+        return read_manifest(log_dir, get_ref(name))["files"]
 
     def cherry_pick(target: str, adds: list[str], removes: list[str]) -> int:
         """Re-apply a commit's remove/add delta onto the target ref —
-        the cross-ref form of `_commit_snapshot`'s conflict rule."""
+        the cross-ref form of `commit_snapshot`'s conflict rule."""
         parent = ref_files(target)
         if not set(removes) <= set(parent):
             raise CommitConflict(
@@ -4157,8 +3873,8 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{sorted(set(removes) - set(parent))}"
             )
         child = [f for f in parent if f not in set(removes)] + adds
-        version = _log_versions(log_dir)[-1] + 1
-        if not _try_publish(log_dir, version, child):
+        version = head_version(log_dir) + 1
+        if not try_publish(log_dir, version, child):
             raise RuntimeError("cherry-pick lost an uncontended CAS")
         set_ref(target, version)
         return version
@@ -4171,8 +3887,8 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.filter(F.col("o_orderdate") < cutoff).repartition(2).write.mode(
         "overwrite"
     ).parquet(base_dir)
-    base_files = _data_files_of(base_dir)
-    v1, _ = _commit_snapshot(log_dir, base_files)
+    base_files = data_files_of(base_dir)
+    v1, _ = commit_snapshot(log_dir, base_files)
     set_ref("branch_main", v1)
     set_ref("branch_audit", v1)
 
@@ -4185,27 +3901,27 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(a2_dir)
 
     # audit lands A1 (v2) then A2 (v3), each a child of ITS OWN head
-    if not _try_publish(
-        log_dir, v1 + 1, ref_files("branch_audit") + _data_files_of(a1_dir)
+    if not try_publish(
+        log_dir, v1 + 1, ref_files("branch_audit") + data_files_of(a1_dir)
     ):
         raise RuntimeError("A1 commit lost an uncontended CAS")
     set_ref("branch_audit", v1 + 1)
     v2_files = ref_files("branch_audit")
-    if not _try_publish(
-        log_dir, v1 + 2, v2_files + _data_files_of(a2_dir)
+    if not try_publish(
+        log_dir, v1 + 2, v2_files + data_files_of(a2_dir)
     ):
         raise RuntimeError("A2 commit lost an uncontended CAS")
     set_ref("branch_audit", v1 + 2)
 
     # cherry-pick A2 only: the delta between the branch's v3 and v2
     a2_delta_add = sorted(set(ref_files("branch_audit")) - set(v2_files))
-    if a2_delta_add != _data_files_of(a2_dir):
+    if a2_delta_add != data_files_of(a2_dir):
         raise RuntimeError(f"A2 delta wrong: {a2_delta_add}")
     cherry_pick("branch_main", a2_delta_add, [])
     main_files = set(ref_files("branch_main"))
     if main_files != set(base_files) | set(a2_delta_add):
         raise RuntimeError(f"main after cherry-pick: {sorted(main_files)}")
-    if main_files & set(_data_files_of(a1_dir)):
+    if main_files & set(data_files_of(a1_dir)):
         raise RuntimeError("cherry-pick leaked A1 files onto main")
 
     # main compacts the base away; the branch's competing compaction
@@ -4214,14 +3930,14 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.read.parquet(*base_files).coalesce(1).write.mode(
         "overwrite"
     ).parquet(mc_dir)
-    cherry_pick("branch_main", _data_files_of(mc_dir), base_files)
+    cherry_pick("branch_main", data_files_of(mc_dir), base_files)
     ac_dir = os.path.join(root, "audit_compact")
     spark.read.parquet(*base_files).coalesce(1).write.mode(
         "overwrite"
     ).parquet(ac_dir)
     conflict_detected = False
     try:
-        cherry_pick("branch_main", _data_files_of(ac_dir), base_files)
+        cherry_pick("branch_main", data_files_of(ac_dir), base_files)
     except CommitConflict:
         conflict_detected = True
     if not conflict_detected:
@@ -4312,22 +4028,22 @@ def scan_branch_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(odd_dir)
 
-    base_files = _data_files_of(base_dir)
-    v1, _ = _commit_snapshot(log_dir, base_files)
+    base_files = data_files_of(base_dir)
+    v1, _ = commit_snapshot(log_dir, base_files)
     set_ref("branch_main", v1)
     set_ref("branch_audit", v1)
-    if not _try_publish(log_dir, v1 + 1, base_files + _data_files_of(even_dir)):
+    if not try_publish(log_dir, v1 + 1, base_files + data_files_of(even_dir)):
         raise RuntimeError("main commit lost an uncontended CAS")
     set_ref("branch_main", v1 + 1)
-    if not _try_publish(log_dir, v1 + 2, base_files + _data_files_of(odd_dir)):
+    if not try_publish(log_dir, v1 + 2, base_files + data_files_of(odd_dir)):
         raise RuntimeError("audit commit lost an uncontended CAS")
     set_ref("branch_audit", v1 + 2)
 
     main_files = set(
-        _read_manifest(log_dir, get_ref("branch_main"))["files"]
+        read_manifest(log_dir, get_ref("branch_main"))["files"]
     )
     audit_files = set(
-        _read_manifest(log_dir, get_ref("branch_audit"))["files"]
+        read_manifest(log_dir, get_ref("branch_audit"))["files"]
     )
     shared = sorted(main_files & audit_files)
     main_only = sorted(main_files - audit_files)
@@ -4947,22 +4663,20 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "rdf_table")
     log_dir = os.path.join(root, "log")
     data_dir = os.path.join(root, "data")
-    eq_dir = os.path.join(root, _MOR_DELETE_CLASS, "eq")
-    dv_dir = os.path.join(root, _MOR_DELETE_CLASS, "pos")
+    eq_dir = os.path.join(root, MOR_DELETE_CLASS, "eq")
+    dv_dir = os.path.join(root, MOR_DELETE_CLASS, "pos")
     clean_dir = os.path.join(root, "rewritten")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     o.repartition(4, "o_orderkey").write.mode("overwrite").parquet(data_dir)
-    base_files = _data_files_of(data_dir)
+    base_files = data_files_of(data_dir)
     if len(base_files) != 4:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 4")
-    _commit_snapshot(log_dir, base_files)  # v1
+    commit_snapshot(log_dir, base_files)  # v1
 
     # v2: equality tombstone (values, not positions), ADD-only
     (
@@ -4973,8 +4687,8 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(eq_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(eq_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(eq_dir), extra={"op": "mor-delete"}
     )
 
     # v3: positional delete vector (positions, not values), ADD-only
@@ -4991,23 +4705,23 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(dv_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(dv_dir), extra={"op": "pos-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(dv_dir), extra={"op": "pos-delete"}
     )
 
-    head_pre = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
-    data_pre, dels_pre = _split_head_files(head_pre)
+    head_pre = read_manifest(log_dir, head_version(log_dir))["files"]
+    data_pre, dels_pre = split_head_files(head_pre)
     if sorted(data_pre) != base_files or len(dels_pre) != 2:
         raise RuntimeError(
             f"pre-compaction head wrong: {len(data_pre)} data, "
             f"{len(dels_pre)} delete files"
         )
 
-    def _mor_read() -> DataFrame:
-        eq_keys = spark.read.parquet(*_data_files_of(eq_dir)).select(
+    def mor_read() -> DataFrame:
+        eq_keys = spark.read.parquet(*data_files_of(eq_dir)).select(
             "o_orderkey"
         )
-        dv = spark.read.parquet(*_data_files_of(dv_dir))
+        dv = spark.read.parquet(*data_files_of(dv_dir))
         return (
             spark.read.parquet(*data_pre)
             .withColumn("file_path", F.col("_metadata.file_path"))
@@ -5017,7 +4731,7 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("file_path", "row_index")
         )
 
-    mor = _mor_read()
+    mor = mor_read()
     mor_plan = mor._jdf.queryExecution().optimizedPlan().toString()
     if mor_plan.count("LeftAnti") != 2:
         raise RuntimeError(
@@ -5037,23 +4751,23 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file count (a host whose bin-packing reads the base as one scan
     # partition would emit 1 file and silently break the oracle's
     # files_after=2), the sink_auto_compaction precedent
-    _mor_read().repartition(2).write.mode("overwrite").parquet(clean_dir)
-    clean_files = _data_files_of(clean_dir)
+    mor_read().repartition(2).write.mode("overwrite").parquet(clean_dir)
+    clean_files = data_files_of(clean_dir)
     if len(clean_files) != 2:
         raise RuntimeError(
             f"rewrite landed {len(clean_files)} files, oracle assumes 2"
         )
-    _commit_snapshot(
+    commit_snapshot(
         log_dir, clean_files, remove_files=head_pre, extra={"op": "rewrite"}
     )
 
-    versions = _log_versions(log_dir)
+    versions = log_versions(log_dir)
     if versions != [1, 2, 3, 4]:
         raise RuntimeError(f"log not linear: {versions}")
-    if _read_manifest(log_dir, 4).get("op") != "rewrite":
+    if read_manifest(log_dir, 4).get("op") != "rewrite":
         raise RuntimeError("rewrite commit missing its op stamp")
-    head_post = _read_manifest(log_dir, 4)["files"]
-    data_post, dels_post = _split_head_files(head_post)
+    head_post = read_manifest(log_dir, 4)["files"]
+    data_post, dels_post = split_head_files(head_post)
     if dels_post:
         raise RuntimeError(f"rewrite left delete files live: {dels_post}")
     if len(head_post) >= len(head_pre):
@@ -5102,29 +4816,6 @@ class _InjectedCrash(RuntimeError):
     """The publish process dying between staging and the txn commit."""
 
 
-def _txn_publish(
-    txn_dir: str, version: int, tables: dict, ops: dict | None = None
-) -> None:
-    """CAS-publish transaction ``version`` binding every table's file
-    list in ONE manifest — the multi-table generalization of
-    `_try_publish`: visibility for ALL tables flips on a single
-    link(2), so readers can never observe table A at txn N and table B
-    at txn N−1. Loses raise (single writer here; a rebase loop would
-    wrap this exactly like `_commit_snapshot`). ``ops`` stamps
-    PER-TABLE operation labels (e.g. {"fact": "rewrite"} for a
-    compaction txn) — the field the cross-table change feed keys on to
-    emit zero events for layout-only table deltas."""
-    extra = {"tables": tables}
-    if ops:
-        extra["ops"] = ops
-    if not _try_publish(txn_dir, version, [], extra=extra):
-        raise CommitConflict(f"txn v{version} lost the CAS in {txn_dir}")
-
-
-def _txn_head_tables(txn_dir: str) -> tuple[int, dict]:
-    versions = _log_versions(txn_dir)
-    head = versions[-1] if versions else 0
-    return head, (_read_manifest(txn_dir, head)["tables"] if head else {})
 
 
 @query(
@@ -5175,9 +4866,7 @@ def sink_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     which happen OUTSIDE the critical section."""
     root = _scratch(sf_dir, "mtp_txn")
     txn_dir = os.path.join(root, "txnlog")
-    os.makedirs(txn_dir, exist_ok=True)
-    for v in os.listdir(txn_dir):
-        os.unlink(os.path.join(txn_dir, v))
+    empty_log(txn_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5191,15 +4880,15 @@ def sink_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stage(df: DataFrame, name: str) -> list[str]:
         d = os.path.join(root, name)
         df.repartition(2).write.mode("overwrite").parquet(d)
-        return _data_files_of(d)
+        return data_files_of(d)
 
     # txn1: the initial consistent star (old fact slice + even-key dims)
     fact1 = stage(o.filter(F.col("o_orderdate") < cutoff), "fact1")
     dim1 = stage(c.filter(F.col("c_custkey") % _MTP_DIM_MOD == 0), "dim1")
-    _txn_publish(txn_dir, 1, {"fact": fact1, "dim": dim1})
+    txn_publish(txn_dir, 1, {"fact": fact1, "dim": dim1})
 
     def read_table(name: str) -> DataFrame:
-        _, tables = _txn_head_tables(txn_dir)
+        _, tables = txn_head_tables(txn_dir)
         return spark.read.parquet(*tables[name])
 
     digest = [
@@ -5218,7 +4907,7 @@ def sink_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim2 = stage(
             c.filter(F.col("c_custkey") % _MTP_DIM_MOD != 0), "dim2"
         )
-        _txn_publish(
+        txn_publish(
             txn_dir, 2, {"fact": fact1 + fact2, "dim": dim1 + dim2}
         )
 
@@ -5233,12 +4922,12 @@ def sink_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # THE proof: after the crash, readers see the OLD state of BOTH
     # tables — head is still txn1, the staged fact2 files exist on disk
     # but no manifest references them
-    head_after_crash, tables_after_crash = _txn_head_tables(txn_dir)
+    head_after_crash, tables_after_crash = txn_head_tables(txn_dir)
     if head_after_crash != 1:
         raise RuntimeError(
             f"crash leaked a txn: head {head_after_crash}, wanted 1"
         )
-    staged_fact2 = _data_files_of(os.path.join(root, "fact2"))
+    staged_fact2 = data_files_of(os.path.join(root, "fact2"))
     if not staged_fact2 or not all(os.path.exists(f) for f in staged_fact2):
         raise RuntimeError("fact2 staging must have completed pre-crash")
     referenced = set(tables_after_crash["fact"]) | set(
@@ -5256,7 +4945,7 @@ def sink_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # restart: re-stage idempotently, commit txn2 — both tables flip
     publish_txn2(crash_after_fact=False)
-    head, _ = _txn_head_tables(txn_dir)
+    head, _ = txn_head_tables(txn_dir)
     if head != 2:
         raise RuntimeError(f"txn2 did not publish: head {head}")
 
@@ -5289,61 +4978,6 @@ _RDR_EQ1 = 4  # tombstone known at rewrite plan time: o_orderkey % 10 == 4
 _RDR_EQ2 = 6  # the RACER's tombstone, landed mid-rewrite: % 10 == 6
 
 
-def _commit_rewrite(
-    log_dir: str,
-    add_files: list[str],
-    remove_files: list[str],
-    planned_at: int,
-) -> tuple[int, int]:
-    """Commit a rewrite PLANNED AT snapshot ``planned_at``, validating
-    the race every delete-applying compaction must check: if any commit
-    AFTER planned_at added a delete-class file, that delete applies (by
-    the strictly-lower-sequence rule) to the data files this rewrite is
-    replacing — but NOT to their replacements, whose sequence is higher.
-    Committing anyway would silently RESURRECT the racer's deleted rows
-    inside the clean files, so the only safe outcome is
-    ``CommitConflict`` and a re-plan from the new head (Iceberg's
-    rewrite_data_files surfaces the same condition as 'found new delete
-    for replaced data file'). The check is KB manifest arithmetic —
-    never a data read.
-
-    The validation runs INSIDE the CAS-retry loop: a validate-once-
-    then-delegate shape would re-validate nothing after losing the CAS,
-    re-opening the exact window this helper closes (a tombstone landing
-    between the check and the retried publish)."""
-    seg = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}"
-    removes = set(remove_files)
-    retries = 0
-    while True:
-        versions = _log_versions(log_dir)
-        head = versions[-1] if versions else 0
-        # validate EVERY commit between plan and the CURRENT head — on
-        # a retry the window re-extends to the rebased head, so a
-        # tombstone landing between a lost CAS and the retried publish
-        # is still caught
-        for v in range(planned_at + 1, head + 1):
-            added = set(_read_manifest(log_dir, v)["files"]) - set(
-                _read_manifest(log_dir, v - 1)["files"]
-            )
-            new_dels = sorted(p for p in added if seg in p)
-            if new_dels:
-                raise CommitConflict(
-                    f"new delete file(s) landed at v{v} after the rewrite "
-                    f"planned at v{planned_at}: {new_dels} — committing "
-                    "would resurrect their rows; re-plan from the head"
-                )
-        parent = _read_manifest(log_dir, head)["files"] if head else []
-        if removes and not removes <= set(parent):
-            raise CommitConflict(
-                f"removed files not in head v{head}: "
-                f"{sorted(removes - set(parent))}"
-            )
-        files = [f for f in parent if f not in removes] + list(add_files)
-        if _try_publish(log_dir, head + 1, files, extra={"op": "rewrite"}):
-            return head + 1, retries
-        retries += 1
-        if retries >= 50:
-            raise RuntimeError(f"rewrite lost the CAS 50 times in {log_dir}")
 
 
 @query(
@@ -5362,7 +4996,7 @@ def _commit_rewrite(
 def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REWRITE vs CONCURRENT DELETE — the writer race
     `sink_rewrite_data_files` opens and the commit-time validation that
-    closes it. The base remove/add protocol (`_commit_snapshot`) only
+    closes it. The base remove/add protocol (`commit_snapshot`) only
     conflicts when a racer REMOVED the rewriter's inputs; a racer that
     ADDS an equality tombstone mid-rewrite passes that check — the
     tombstone survives the rebase — but the strictly-lower-sequence
@@ -5384,21 +5018,19 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "rdr_table")
     log_dir = os.path.join(root, "log")
     data_dir = os.path.join(root, "data")
-    t1_dir = os.path.join(root, _MOR_DELETE_CLASS, "t1")
-    t2_dir = os.path.join(root, _MOR_DELETE_CLASS, "t2")
+    t1_dir = os.path.join(root, MOR_DELETE_CLASS, "t1")
+    t2_dir = os.path.join(root, MOR_DELETE_CLASS, "t2")
     stale_dir = os.path.join(root, "stale_rewrite")
     clean_dir = os.path.join(root, "clean_rewrite")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     o.repartition(4, "o_orderkey").write.mode("overwrite").parquet(data_dir)
-    base_files = _data_files_of(data_dir)
-    _commit_snapshot(log_dir, base_files)  # v1
+    base_files = data_files_of(data_dir)
+    commit_snapshot(log_dir, base_files)  # v1
 
     def land_tombstone(mod: int, d: str) -> list[str]:
         (
@@ -5409,15 +5041,15 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(d)
         )
-        files = _data_files_of(d)
-        _commit_snapshot(log_dir, files, extra={"op": "mor-delete"})
+        files = data_files_of(d)
+        commit_snapshot(log_dir, files, extra={"op": "mor-delete"})
         return files
 
     t1 = land_tombstone(_RDR_EQ1, t1_dir)  # v2
 
     # the rewrite PLANS at v2: apply the known tombstone, stage clean files
-    planned_at = _log_versions(log_dir)[-1]
-    head_at_plan = _read_manifest(log_dir, planned_at)["files"]
+    planned_at = head_version(log_dir)
+    head_at_plan = read_manifest(log_dir, planned_at)["files"]
     keys1 = spark.read.parquet(*t1).select("o_orderkey")
     (
         spark.read.parquet(*base_files)
@@ -5432,9 +5064,9 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rewrite tries to commit its stale plan: must be refused
     race_detected = False
     try:
-        _commit_rewrite(
+        commit_rewrite(
             log_dir,
-            _data_files_of(stale_dir),
+            data_files_of(stale_dir),
             remove_files=head_at_plan,
             planned_at=planned_at,
         )
@@ -5449,7 +5081,7 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measure the counterfactual: the staged files DO contain exactly
     # the racer's deleted rows (what a blind commit would resurrect)
     resurrect = (
-        spark.read.parquet(*_data_files_of(stale_dir))
+        spark.read.parquet(*data_files_of(stale_dir))
         .filter(F.col("o_orderkey") % 10 == _RDR_EQ2)
         .count()
     )
@@ -5461,8 +5093,8 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # re-plan from the new head and commit clean
-    replanned_at = _log_versions(log_dir)[-1]
-    head_now = _read_manifest(log_dir, replanned_at)["files"]
+    replanned_at = head_version(log_dir)
+    head_now = read_manifest(log_dir, replanned_at)["files"]
     keys12 = spark.read.parquet(*t1, *t2).select("o_orderkey")
     (
         spark.read.parquet(*base_files)
@@ -5471,18 +5103,18 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(clean_dir)
     )
-    _commit_rewrite(
+    commit_rewrite(
         log_dir,
-        _data_files_of(clean_dir),
+        data_files_of(clean_dir),
         remove_files=head_now,
         planned_at=replanned_at,
     )  # v4: the clean, re-planned rewrite
 
-    versions = _log_versions(log_dir)
+    versions = log_versions(log_dir)
     if versions != [1, 2, 3, 4]:
         raise RuntimeError(f"log not linear: {versions}")
-    head_files = _read_manifest(log_dir, 4)["files"]
-    _, dels = _split_head_files(head_files)
+    head_files = read_manifest(log_dir, 4)["files"]
+    _, dels = split_head_files(head_files)
     if dels:
         raise RuntimeError(f"re-planned rewrite left tombstones: {dels}")
 
@@ -5500,43 +5132,6 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
 # disjoint-table updates, aborts on same-table overlap ---
 
 
-def _txn_commit(
-    txn_dir: str, updates: dict, read_at: int, max_attempts: int = 50
-) -> tuple[int, int, int]:
-    """Commit ``updates`` ({table -> new file list}) against the txn
-    root with optimistic rebase — the multi-table generalization of
-    `_commit_snapshot`'s loop: read the head, overlay ONLY the tables
-    this txn writes, CAS; on loss re-read and retry. The one genuine
-    conflict: the head's version of a written table CHANGED since this
-    txn read it (``read_at``) — a blind overlay would silently drop
-    the racer's update to the same table, so the loser must abort and
-    re-plan (Iceberg/Delta surface the same per-table check via
-    validation snapshots). Disjoint-table racers always merge. Returns
-    (version, n_retries, n_validations)."""
-    retries = 0
-    while True:
-        versions = _log_versions(txn_dir)
-        head = versions[-1] if versions else 0
-        head_tables = (
-            dict(_read_manifest(txn_dir, head)["tables"]) if head else {}
-        )
-        base_tables = (
-            _read_manifest(txn_dir, read_at)["tables"] if read_at else {}
-        )
-        for t in updates:
-            if head_tables.get(t) != base_tables.get(t):
-                raise CommitConflict(
-                    f"table {t!r} changed between read_at v{read_at} and "
-                    f"head v{head} — same-table race, re-plan required"
-                )
-        merged = {**head_tables, **updates}
-        if _try_publish(txn_dir, head + 1, [], extra={"tables": merged}):
-            return head + 1, retries, len(updates)
-        retries += 1
-        if retries >= max_attempts:
-            raise RuntimeError(
-                f"txn lost the CAS {max_attempts} times in {txn_dir}"
-            )
 
 
 @query(
@@ -5574,9 +5169,7 @@ def sink_multi_table_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     the commit critical section never touches data."""
     root = _scratch(sf_dir, "mtc_txn")
     txn_dir = os.path.join(root, "txnlog")
-    os.makedirs(txn_dir, exist_ok=True)
-    for v in os.listdir(txn_dir):
-        os.unlink(os.path.join(txn_dir, v))
+    empty_log(txn_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5589,13 +5182,13 @@ def sink_multi_table_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stage(df: DataFrame, name: str) -> list[str]:
         d = os.path.join(root, name)
         df.repartition(2).write.mode("overwrite").parquet(d)
-        return _data_files_of(d)
+        return data_files_of(d)
 
     fact1 = stage(o.filter(F.col("o_orderdate") < cutoff), "fact1")
     dim1 = stage(
         c.filter(F.col("c_custkey") % _MTP_DIM_MOD == 0), "dim1"
     )
-    v1, _, _ = _txn_commit(
+    v1, _, _ = txn_commit(
         txn_dir, {"fact": fact1, "dim": dim1}, read_at=0
     )
 
@@ -5605,7 +5198,7 @@ def sink_multi_table_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.filter(F.col("c_custkey") % _MTP_DIM_MOD != 0), "dim2_B"
     )
     # A commits first (wins)
-    v2, a_retries, _ = _txn_commit(
+    v2, a_retries, _ = txn_commit(
         txn_dir, {"fact": fact1 + fact2}, read_at=v1
     )
     if (v2, a_retries) != (2, 0):
@@ -5613,17 +5206,17 @@ def sink_multi_table_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # B commits against its STALE read — simulate the interleave by
     # attempting the publish at the version B believes is next (2),
     # losing the CAS to A, and rebasing onto A's head
-    b_lost_cas = not _try_publish(
+    b_lost_cas = not try_publish(
         txn_dir, 2, [], extra={"tables": {"fact": fact1, "dim": dim1 + dim2}}
     )
     if not b_lost_cas:
         raise RuntimeError("B's stale publish must lose the CAS to A")
-    v3, _, _ = _txn_commit(txn_dir, {"dim": dim1 + dim2}, read_at=v1)
+    v3, _, _ = txn_commit(txn_dir, {"dim": dim1 + dim2}, read_at=v1)
     if v3 != 3:
         raise RuntimeError(f"B's rebase landed at v{v3}, wanted 3")
 
     # the rebase preserved A's update: head carries BOTH
-    head, tables = _txn_head_tables(txn_dir)
+    head, tables = txn_head_tables(txn_dir)
     if sorted(tables["fact"]) != sorted(fact1 + fact2):
         raise RuntimeError("B's rebase dropped A's fact update — lost update")
     if sorted(tables["dim"]) != sorted(dim1 + dim2):
@@ -5636,14 +5229,14 @@ def sink_multi_table_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c_aborted = False
     try:
-        _txn_commit(txn_dir, {"fact": fact1 + fact_c}, read_at=v1)
+        txn_commit(txn_dir, {"fact": fact1 + fact_c}, read_at=v1)
     except CommitConflict:
         c_aborted = True
     if not c_aborted:
         raise RuntimeError(
             "same-table racer committed over A's update — lost update"
         )
-    head2, _ = _txn_head_tables(txn_dir)
+    head2, _ = txn_head_tables(txn_dir)
     if head2 != 3:
         raise RuntimeError(f"aborted txn moved the head to v{head2}")
 
@@ -5708,9 +5301,7 @@ def sink_multi_table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the txn root into one consistent sweep across every table)."""
     root = _scratch(sf_dir, "mtv_txn")
     txn_dir = os.path.join(root, "txnlog")
-    os.makedirs(txn_dir, exist_ok=True)
-    for v in os.listdir(txn_dir):
-        os.unlink(os.path.join(txn_dir, v))
+    empty_log(txn_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5723,7 +5314,7 @@ def sink_multi_table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stage(df: DataFrame, name: str, pinned: int | None = None) -> list[str]:
         d = os.path.join(root, "staging", name)
         df.repartition(2).write.mode("overwrite").parquet(d)
-        files = _data_files_of(d)
+        files = data_files_of(d)
         # LOUD layout guard (r11 ADVICE): for the stagings whose FILE
         # COUNT the oracle pins (dim_v1 -> n_collected_expired, the
         # crashed staging -> n_collected_orphans), repartition(2) must
@@ -5744,7 +5335,7 @@ def sink_multi_table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # txn1: fact slice + the dim build that txn2 will REPLACE
     fact1 = stage(o.filter(F.col("o_orderdate") < cutoff), "fact1")
     dim_v1 = stage(c.filter(F.col("c_custkey") % 2 == 0), "dim_v1", pinned=2)
-    _txn_publish(txn_dir, 1, {"fact": fact1, "dim": dim_v1})
+    txn_publish(txn_dir, 1, {"fact": fact1, "dim": dim_v1})
 
     # a publisher stages and CRASHES: referenced by no txn, ever
     orphan = stage(
@@ -5754,7 +5345,7 @@ def sink_multi_table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # txn2: fact grows (fresh staging), dim REWRITTEN in full
     fact2 = stage(o.filter(F.col("o_orderdate") >= cutoff), "fact2")
     dim_v2 = stage(c, "dim_v2")
-    _txn_publish(txn_dir, 2, {"fact": fact1 + fact2, "dim": dim_v2})
+    txn_publish(txn_dir, 2, {"fact": fact1 + fact2, "dim": dim_v2})
 
     # txn3: a fact append (re-keyed slice, lands after the head probe)
     fact3 = stage(
@@ -5765,11 +5356,11 @@ def sink_multi_table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "fact3",
     )
-    _txn_publish(
+    txn_publish(
         txn_dir, 3, {"fact": fact1 + fact2 + fact3, "dim": dim_v2}
     )
 
-    head, tables = _txn_head_tables(txn_dir)
+    head, tables = txn_head_tables(txn_dir)
     digest = [
         F.count("*").cast("long").alias("n"),
         F.sum("cents").cast("long").alias("cents"),
@@ -5779,19 +5370,14 @@ def sink_multi_table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ---- THE VACUUM ----
-    versions = _log_versions(txn_dir)
+    versions = log_versions(txn_dir)
     retained = versions[-_MTV_RETAIN:]
     live: set = set()
     for v in retained:
-        for fl in _read_manifest(txn_dir, v)["tables"].values():
+        for fl in read_manifest(txn_dir, v)["tables"].values():
             live |= set(fl)
     staging_root = os.path.join(root, "staging")
-    candidates = sorted(
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(staging_root)
-        for f in fs
-        if f.endswith(".parquet")
-    )
+    candidates = tree_files(staging_root)
     garbage = [f for f in candidates if f not in live]
     expected = sorted(set(dim_v1) | set(orphan))
     if sorted(garbage) != expected:
@@ -5816,7 +5402,7 @@ def sink_multi_table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # time travel inside the window still works; outside is collected
     spark.read.parquet(
-        *_read_manifest(txn_dir, retained[0])["tables"]["dim"]
+        *read_manifest(txn_dir, retained[0])["tables"]["dim"]
     ).count()
 
     # the oracle pins the FULL star at txn2's completeness: fact =
@@ -5846,54 +5432,6 @@ _TXC_CKPTS = (5, 10)  # checkpoint cadence: every 5 txns
 _TXC_ASOF = 8  # the AS-OF probe: resolves via ckpt-5 + 3 tail deltas
 _TXC_DIM_AT = {1: 0, 6: 1, 11: 2}  # txn -> dim slice (c_custkey % 3)
 
-# The delta-form txn root's checkpoint file conventions are OWNED here
-# (scan_txn_checkpoint writes them; the r13 checkpoint-aware feed in
-# streaming.py resolves through them — shared names, never re-derived)
-_TXN_CKPT_POINTER = "_last_checkpoint"
-
-
-def _txn_ckpt_path(txn_dir: str, at: int) -> str:
-    return os.path.join(txn_dir, f"ckpt-v{at}.json")
-
-
-def _txn_delta_merge(state: dict, adds: dict) -> None:
-    """Fold one delta-form txn manifest's per-table adds into a
-    cumulative {table -> set(files)} state."""
-    for t, fl in adds.items():
-        state.setdefault(t, set()).update(fl)
-
-
-def _txn_write_checkpoint(txn_dir: str, at: int) -> None:
-    """Materialize the cumulative {table -> files} map at txn ``at``
-    (the checkpointer pays the genesis walk ONCE) as a put-if-absent
-    checkpoint file, then advance the `_last_checkpoint` pointer via
-    os.replace — racing checkpointers write identical bytes, so the
-    link(2) collision is benign."""
-    import json
-
-    state: dict = {}
-    for v in range(1, at + 1):
-        with open(os.path.join(txn_dir, f"v{v}.json")) as fh:
-            _txn_delta_merge(state, json.load(fh)["table_adds"])
-    tmp = os.path.join(txn_dir, f".ckpt-tmp-{os.getpid()}")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "version": at,
-                "tables": {t: sorted(fl) for t, fl in state.items()},
-            },
-            fh,
-        )
-    try:
-        os.link(tmp, _txn_ckpt_path(txn_dir, at))
-    except FileExistsError:
-        pass  # racing checkpointers write identical bytes
-    finally:
-        os.unlink(tmp)
-    ptmp = os.path.join(txn_dir, f".lastckpt-tmp-{os.getpid()}")
-    with open(ptmp, "w") as fh:
-        fh.write(str(at))
-    os.replace(ptmp, os.path.join(txn_dir, _TXN_CKPT_POINTER))
 
 
 @query(
@@ -5924,7 +5462,7 @@ def scan_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     — `scan_log_checkpoint`'s O(tail) head resolution ported to the
     multi-table txn root). This root's manifests are DELTA-FORM: each
     txn records only its PER-TABLE ADDS (the Delta actions-log shape
-    generalized across tables — the absolute-map form of `_txn_commit`
+    generalized across tables — the absolute-map form of `txn_commit`
     makes the head manifest self-sufficient and checkpoints moot, which
     is exactly why a delta-form root needs them). Resolving any state
     therefore means replaying every txn since genesis — O(commits)
@@ -5956,9 +5494,7 @@ def scan_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch(sf_dir, "txn_checkpoint_root")
     txn_dir = os.path.join(root, "txnlog")
-    os.makedirs(txn_dir, exist_ok=True)
-    for v in os.listdir(txn_dir):
-        os.unlink(os.path.join(txn_dir, v))
+    empty_log(txn_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -5966,20 +5502,18 @@ def scan_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
 
-    _merge = _txn_delta_merge
+    _merge = txn_delta_merge
 
     def _replay(upto: int, opened: list) -> dict:
         """Union of per-table add-deltas txn 1..upto — the
         no-checkpoint reader."""
         state: dict = {}
         for v in range(1, upto + 1):
-            path = os.path.join(txn_dir, f"v{v}.json")
-            opened.append(path)
-            with open(path) as fh:
-                _merge(state, json.load(fh)["table_adds"])
+            opened.append(manifest_path(txn_dir, v))
+            _merge(state, read_manifest(txn_dir, v)["table_adds"])
         return state
 
-    _write_ckpt = functools.partial(_txn_write_checkpoint, txn_dir)
+    _write_ckpt = functools.partial(txn_write_checkpoint, txn_dir)
 
     # the history: every txn appends a fact slice; txns 1/6/11 also
     # advance the dim — both tables always land through ONE manifest
@@ -5992,7 +5526,7 @@ def scan_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(d)
         )
-        adds = {"fact": _data_files_of(d)}
+        adds = {"fact": data_files_of(d)}
         if txn in _TXC_DIM_AT:
             dd = os.path.join(root, f"dim{txn:02d}")
             (
@@ -6001,8 +5535,8 @@ def scan_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .write.mode("overwrite")
                 .parquet(dd)
             )
-            adds["dim"] = _data_files_of(dd)
-        if not _try_publish(txn_dir, txn, [], extra={"table_adds": adds}):
+            adds["dim"] = data_files_of(dd)
+        if not try_publish(txn_dir, txn, [], extra={"table_adds": adds}):
             raise RuntimeError(f"single-writer CAS lost txn {txn}")
         if txn in _TXC_CKPTS:
             _write_ckpt(txn)
@@ -6022,23 +5556,21 @@ def scan_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = 0
         if older:
             base = older[-1]
-            with open(_txn_ckpt_path(txn_dir, base)) as fh:
+            with open(txn_ckpt_path(txn_dir, base)) as fh:
                 state = {
                     t: set(fl)
                     for t, fl in json.load(fh)["tables"].items()
                 }
         opened: list = []
         for v in range(base + 1, at + 1):
-            path = os.path.join(txn_dir, f"v{v}.json")
-            opened.append(path)
-            with open(path) as fh:
-                _merge(state, json.load(fh)["table_adds"])
+            opened.append(manifest_path(txn_dir, v))
+            _merge(state, read_manifest(txn_dir, v)["table_adds"])
         return state, len(opened)
 
     # HEAD resolution: pointer -> newest checkpoint -> tail
-    with open(os.path.join(txn_dir, _TXN_CKPT_POINTER)) as fh:
+    with open(os.path.join(txn_dir, TXN_CKPT_POINTER)) as fh:
         ckpt_ver = int(fh.read())
-    head_ver = _log_versions(txn_dir)[-1]
+    head_ver = head_version(txn_dir)
     head_state, head_reads = _resolve(head_ver)
     if head_reads != head_ver - ckpt_ver:
         raise RuntimeError(
@@ -6063,8 +5595,7 @@ def scan_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     asof_full: dict = {}
     for v in range(1, _TXC_ASOF + 1):
-        with open(os.path.join(txn_dir, f"v{v}.json")) as fh:
-            _merge(asof_full, json.load(fh)["table_adds"])
+        _merge(asof_full, read_manifest(txn_dir, v)["table_adds"])
     if {t: sorted(fl) for t, fl in asof_state.items()} != {
         t: sorted(fl) for t, fl in asof_full.items()
     }:
@@ -6173,7 +5704,7 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
     log_dir = os.path.join(root, "log")
     gen1_dir = os.path.join(root, "gen1")
     gen2_dir = os.path.join(root, "gen2")
-    eq_dir = os.path.join(root, _MOR_DELETE_CLASS, "eq")
+    eq_dir = os.path.join(root, MOR_DELETE_CLASS, "eq")
     os.makedirs(log_dir, exist_ok=True)
 
     o = (
@@ -6191,14 +5722,6 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
     # Unpersisted right after v3 — the rewrites read the STAGED files.
     o.persist()
 
-    def _tree_files(d: str) -> list[str]:
-        return sorted(
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-
     # v1: generation 1 — partitioned by YEAR
     (
         o.filter(F.col("o_year") < _RPE_CUT)
@@ -6207,8 +5730,8 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
         .partitionBy("o_year")
         .parquet(gen1_dir)
     )
-    _commit_snapshot(
-        log_dir, _tree_files(gen1_dir), extra={"spec": ["o_year"], "spec_id": 1}
+    commit_snapshot(
+        log_dir, tree_files(gen1_dir), extra={"spec": ["o_year"], "spec_id": 1}
     )
 
     # v2: THE EVOLUTION — generation 2 partitioned by (YEAR, QUARTER)
@@ -6220,9 +5743,9 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
         .partitionBy("o_year", "o_quarter")
         .parquet(gen2_dir)
     )
-    _commit_snapshot(
+    commit_snapshot(
         log_dir,
-        _tree_files(gen2_dir),
+        tree_files(gen2_dir),
         extra={"spec": ["o_year", "o_quarter"], "spec_id": 2},
     )
 
@@ -6234,13 +5757,13 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
         .write.mode("overwrite")
         .parquet(eq_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(eq_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(eq_dir), extra={"op": "mor-delete"}
     )
     o.unpersist()
 
-    head_pre = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
-    data_pre, dels_pre = _split_head_files(head_pre)
+    head_pre = read_manifest(log_dir, head_version(log_dir))["files"]
+    data_pre, dels_pre = split_head_files(head_pre)
     tomb = spark.read.parquet(*dels_pre).select("o_orderkey")
     digest = [
         F.count("*").cast("long").alias("n"),
@@ -6288,15 +5811,15 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
         obs1.get["n"] + obs2.get["n"],
         obs1.get["cents"] + obs2.get["cents"],
     )
-    _commit_snapshot(
+    commit_snapshot(
         log_dir,
-        _tree_files(rw1) + _tree_files(rw2),
+        tree_files(rw1) + tree_files(rw2),
         remove_files=head_pre,
         extra={"op": "rewrite", "specs": {"1": ["o_year"], "2": ["o_year", "o_quarter"]}},
     )
 
-    head_post = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
-    data_post, dels_post = _split_head_files(head_post)
+    head_post = read_manifest(log_dir, head_version(log_dir))["files"]
+    data_post, dels_post = split_head_files(head_post)
     if dels_post:
         raise RuntimeError(f"rewrite left delete files live: {dels_post}")
 

@@ -43,6 +43,28 @@ from pyspark.sql import types as T
 
 from sparkgraft.proofs import multisets_equal
 from sparkgraft.registry import query
+from sparkgraft.table import (
+    MOR_DELETE_CLASS,
+    TXN_CKPT_POINTER,
+    commit_snapshot,
+    data_files_of,
+    expire_snapshots,
+    expired_horizon,
+    head_version,
+    is_delete_file,
+    is_pos_delete_file,
+    log_versions,
+    manifest_path,
+    read_manifest,
+    seq_first_versions,
+    try_publish,
+    txn_ckpt_path,
+    txn_commit,
+    txn_delta_merge,
+    txn_head_tables,
+    txn_publish,
+    txn_write_checkpoint,
+)
 
 # Parquet stores events.ts as TIMESTAMP(NANOS). This reader build surfaces
 # it as TIMESTAMP_NTZ (µs-truncated — sub-µs bits are zero in this corpus,
@@ -1081,8 +1103,6 @@ def _stage_slices(df: DataFrame, slice_expr, out_dir: str) -> dict[int, list[str
     §2.4: N full scans of the source collapse into one scan + one
     shuffle of the same bytes; r13 measured the N-scan staging loops as
     the second-largest cost inside the CDF protocol keys."""
-    from sparkgraft.scans import _data_files_of
-
     (
         df.withColumn("sgs", slice_expr.cast("int"))
         .repartition("sgs")
@@ -1091,7 +1111,7 @@ def _stage_slices(df: DataFrame, slice_expr, out_dir: str) -> dict[int, list[str
         .parquet(out_dir)
     )
     return {
-        int(d.split("=", 1)[1]): _data_files_of(os.path.join(out_dir, d))
+        int(d.split("=", 1)[1]): data_files_of(os.path.join(out_dir, d))
         for d in os.listdir(out_dir)
         if d.startswith("sgs=")
     }
@@ -1110,19 +1130,120 @@ def _write_with_probe(batch_df: DataFrame, path: str, probe_col) -> list:
     re-reading the cache. The observed write computes the probe as an
     AggregatingAccumulator during the single source scan: the batch is
     read exactly once, no exchange, no cache held. ``collect_set``
-    dedups exactly like ``distinct()`` (it is the same NULL-safe
-    equality); asserts on the returned values now run after the write,
-    which only matters on the failure path (the stream dies either way
-    and the orphan batch dir lives in the key's scratch root)."""
+    dedups non-NULL values exactly like ``distinct()``, but it SKIPS
+    NULLs where ``distinct()`` would surface one — so the same pass
+    also counts NULL probe values and raises on any: a change row with
+    no version must fail the single-commit guard, not slip past it.
+    Asserts on the returned values now run after the write, which only
+    matters on the failure path (the stream dies either way and the
+    orphan batch dir lives in the key's scratch root)."""
     from pyspark.sql import Observation
 
     obs = Observation()
     (
-        batch_df.observe(obs, F.collect_set(probe_col).alias("p"))
+        batch_df.observe(
+            obs,
+            F.collect_set(probe_col).alias("p"),
+            F.count_if(F.isnull(probe_col)).alias("n_null"),
+        )
         .write.mode("overwrite")
         .parquet(path)
     )
+    if obs.get["n_null"]:
+        raise RuntimeError(
+            f"{obs.get['n_null']} row(s) of the batch written to {path} "
+            "carry a NULL probe value"
+        )
     return obs.get["p"]
+
+
+def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
+    """The foreachBatch sink that maintains an INDEX TABLE (a snapshot
+    log under ``idx_log``) from a keyed change feed
+    (`_payload_cdf_datasource`). Per micro-batch: persist the batch
+    (one source scan feeds the probe and the writes), ONE distinct
+    probe job, the insert rows written through ``transform``, the
+    delete keys (column ``key``) written as an equality tombstone under
+    ``deletes/``, and ONE index commit.
+
+    ``redelivery`` names how a batch whose commit already landed is
+    recognised and skipped:
+
+    - ``"head_count"``: batch b's commit IS index version b+1 (only
+      this feed writes the log, one commit per batch);
+    - ``"feed_batch"``: every commit stamps ``feed_batch=b`` — survives
+      other writers (compaction) interleaving commits;
+    - any other name is a SOURCE-VERSION stamp: every commit stamps
+      ``{redelivery: v}`` with v read from the batch's own event rows,
+      never from the foreachBatch id (ids reset to 0 when the Spark
+      checkpoint is lost while the reader's state_dir cursor survives).
+      A batch spanning two source versions breaks the
+      one-commit-per-batch contract and raises; an empty batch (a
+      metadata-only source commit) leaves the index log untouched.
+
+    Scale: per-batch cost is the batch's delta rows through
+    ``transform`` plus a KB commit; the stamp check is a KB manifest
+    walk."""
+    by_source = redelivery not in ("head_count", "feed_batch")
+
+    def stamps(field: str) -> set:
+        return {
+            read_manifest(idx_log, v).get(field)
+            for v in log_versions(idx_log)
+        }
+
+    def maintain(batch_df: DataFrame, batch_id: int) -> None:
+        if redelivery == "head_count" and head_version(idx_log) > batch_id:
+            return  # redelivered batch: the commit already landed
+        if redelivery == "feed_batch" and batch_id in stamps("feed_batch"):
+            return  # redelivered batch: its commit already landed
+        batch_df.persist()
+        try:
+            # ONE probe job (it also materializes the cache the writes
+            # below re-read)
+            probe = (
+                batch_df.select(
+                    *(["version"] if by_source else []), "change_type"
+                )
+                .distinct()
+                .collect()
+            )
+            kinds = {r["change_type"] for r in probe}
+            stamp = None
+            if redelivery == "feed_batch":
+                stamp = {"feed_batch": batch_id}
+            if by_source:
+                src_vs = sorted({r["version"] for r in probe})
+                if len(src_vs) > 1:
+                    raise RuntimeError(
+                        f"batch {batch_id} spans source versions {src_vs} "
+                        "— one-commit-per-batch contract broken"
+                    )
+                if not src_vs or src_vs[0] in stamps(redelivery):
+                    return  # metadata-only commit, or redelivered
+                stamp = {redelivery: int(src_vs[0])}
+            adds: list[str] = []
+            if "insert" in kinds:
+                ins = batch_df.filter(
+                    F.col("change_type") == "insert"
+                ).drop("version", "change_type")
+                add_dir = os.path.join(idx_root, f"add_b{batch_id:05d}")
+                transform(ins).coalesce(1).write.parquet(add_dir)
+                adds += data_files_of(add_dir)
+            if "delete" in kinds:
+                dels = batch_df.filter(F.col("change_type") == "delete")
+                t_dir = os.path.join(
+                    idx_root, MOR_DELETE_CLASS, f"b{batch_id:05d}"
+                )
+                dels.select(key).coalesce(1).write.parquet(t_dir)
+                adds += data_files_of(t_dir)
+            if not adds:
+                raise RuntimeError(f"feed batch {batch_id} carried no events")
+            commit_snapshot(idx_log, adds, extra=stamp)
+        finally:
+            batch_df.unpersist()
+
+    return maintain
 
 
 @query(
@@ -1415,7 +1536,7 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING APPENDS INTO THE ACID TABLE — the composition that
     makes the r8 commit protocol a real sink: every micro-batch commits
-    through `_commit_snapshot` with its batch id stamped in the manifest
+    through `commit_snapshot` with its batch id stamped in the manifest
     (the Delta txnAppId/txnVersion discipline), so the snapshot log IS
     the exactly-once ledger and batch readers time-travel a streaming
     table for free. The injected kill point is the COMPLEMENT of
@@ -1447,20 +1568,13 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in staged:
         shutil.copy2(p, src)
 
-    from sparkgraft.scans import (
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-    )
-
     crash_armed = {"on": True}
     delivered: list[int] = []
 
     def committed_batches() -> set[int]:
         return {
-            _read_manifest(log_dir, v).get("batch_id")
-            for v in _log_versions(log_dir)
+            read_manifest(log_dir, v).get("batch_id")
+            for v in log_versions(log_dir)
         }
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -1469,8 +1583,8 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             return  # txn-idempotent skip: this batch already committed
         bdir = os.path.join(data, f"b{batch_id:05d}")
         batch_df.write.mode("overwrite").parquet(bdir)
-        _commit_snapshot(
-            log_dir, _data_files_of(bdir), extra={"batch_id": int(batch_id)}
+        commit_snapshot(
+            log_dir, data_files_of(bdir), extra={"batch_id": int(batch_id)}
         )
         if int(batch_id) == 1 and crash_armed["on"]:
             crash_armed["on"] = False
@@ -1499,7 +1613,7 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise
     if 1 not in committed_batches():
         raise RuntimeError("crashed batch's commit is missing — wrong kill point")
-    n_before = len(_log_versions(log_dir))
+    n_before = len(log_versions(log_dir))
     n_phase1 = len(delivered)  # slice point for the restart's deliveries
     # (r9 ADVICE fix: indexing the SECOND occurrence of batch 1 found the
     # phase-1 delivery whenever the restart delivered out of order, so
@@ -1509,12 +1623,12 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     phase2 = delivered[n_phase1:]
     if not phase2 or phase2[0] != 1:
         raise RuntimeError(f"batch 1 was not re-delivered first: {delivered}")
-    versions = _log_versions(log_dir)
+    versions = log_versions(log_dir)
     if len(versions) != n_before + 2:  # batches 2 and 3 only — 1 skipped
         raise RuntimeError(
             f"replay double-committed: {n_before} -> {len(versions)}"
         )
-    head_files = _read_manifest(log_dir, versions[-1])["files"]
+    head_files = read_manifest(log_dir, versions[-1])["files"]
     if len(head_files) != len(set(head_files)):
         raise RuntimeError("head snapshot carries duplicate files")
 
@@ -1559,22 +1673,10 @@ def _snapshot_cdf_datasource():
         def __init__(self, options):
             self.log_dir = options["log_dir"]
 
-        def _versions(self):
-            return sorted(
-                int(f[1:-5])
-                for f in os.listdir(self.log_dir)
-                if f.startswith("v") and f.endswith(".json")
-            )
-
         def _files(self, version):
-            import json
-
             if version <= 0:
                 return []
-            with open(
-                os.path.join(self.log_dir, f"v{version}.json")
-            ) as fh:
-                return json.load(fh)["files"]
+            return read_manifest(self.log_dir, version)["files"]
 
         def _emit(self, version):
             # append-tailing only: one commit's ADDED files. Row-level
@@ -1601,9 +1703,8 @@ def _snapshot_cdf_datasource():
             return {"version": 0}
 
         def read(self, start):
-            head = self._versions()
             nxt = start["version"] + 1
-            if not head or nxt > head[-1]:
+            if nxt > head_version(self.log_dir):
                 return iter([]), {"version": start["version"]}
             # Materialized list iterator: Spark's simple-reader wrapper
             # copy.copy()s the cached iterator on prefetch replay — a
@@ -1673,7 +1774,6 @@ def stream_snapshot_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented prototyping surface — the partitioned reader swap
     distributes file reads without touching the offset protocol."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -1696,7 +1796,7 @@ def stream_snapshot_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(sdir)
         )
-        _commit_snapshot(log_dir, _data_files_of(sdir))
+        commit_snapshot(log_dir, data_files_of(sdir))
 
     land_commit(0)  # v1
     land_commit(1)  # v2
@@ -1832,7 +1932,6 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     as signed upserts and never re-reads the table — the standard
     100 TB incremental-view pattern."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -1852,7 +1951,7 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         o, F.col("o_orderkey") % 2, os.path.join(root, "halves")
     )
     even_f = halves[0]
-    _commit_snapshot(log_dir, even_f + halves[1])  # v1
+    commit_snapshot(log_dir, even_f + halves[1])  # v1
 
     # v2: COW delete — rewrite the even file without orderkey%10=4 rows
     rw_dir = os.path.join(root, "rewrite")
@@ -1862,7 +1961,7 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(rw_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(rw_dir), remove_files=even_f)
+    commit_snapshot(log_dir, data_files_of(rw_dir), remove_files=even_f)
     # delta file counts per version: v1 adds both base files; v2 removes
     # the even file and adds its rewrite — each delta file is one
     # executor partition below
@@ -1924,9 +2023,8 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(sign).cast("long").alias("n"),
         F.sum(sign * F.col("cents")).cast("long").alias("cents"),
     ).collect()[0]
-    from sparkgraft.scans import _log_versions, _read_manifest
 
-    head_files = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
+    head_files = read_manifest(log_dir, head_version(log_dir))["files"]
     head = spark.read.parquet(*head_files).agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
@@ -1948,57 +2046,30 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _snapshot_cdf_partitioned_datasource():
-    from pyspark.sql import types as T
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
+def _cdf_cursor_base():
+    """THE offset cursor every partitioned change-feed reader shares:
+    offsets are log versions ``{"version": v}``, one commit per
+    micro-batch, and the cursor survives restarts. Subclasses implement
+    only ``_plan(start, end)`` (the partitions of versions start+1..end)
+    and ``read``; ``_manifest`` stays overridable (the checkpoint-aware
+    txn feed records every open through it).
 
-    class CDFFilePartition(InputPartition):
-        """One DELTA FILE of one commit — an ADDED file (change
-        'insert') or, with emit_deletes, a REMOVED file (change
-        'delete') — the unit of executor work. Must be picklable: it
-        ships to the Python worker that reads it."""
+    Restart safety (r9 ADVICE, r12 ADVICE #1): the in-memory cursor
+    ``_last`` is clamped against every offset the engine hands back —
+    `partitions(start, end)` re-syncs it when a checkpointed batch
+    replays, `commit(end)` persists it to ``state_dir`` (when given) so
+    a fresh reader instance resumes at the committed version, and
+    `initialOffset` — consulted only when the Spark checkpoint is
+    absent — reports the restored cursor instead of version 0, which
+    would replay 1.._last in ONE oversized batch (breaking the
+    one-commit-per-batch contract and any feed_batch-stamp dedup)."""
+    from pyspark.sql.datasource import DataSourceStreamReader
 
-        def __init__(self, version: int, path: str, change: str = "insert"):
-            self.version = version
-            self.path = path
-            self.change = change
-
-    class PartitionedCDFReader(DataSourceStreamReader):
-        """The PRODUCTION form of the snapshot-log CDF source
-        (`stream_snapshot_cdf` documents the swap): the full
-        `DataSourceStreamReader` API, where `partitions(start, end)`
-        plans one `InputPartition` PER DELTA FILE on the driver (KB
-        manifest arithmetic only) and `read(partition)` executes ON THE
-        EXECUTORS — each Python worker opens exactly its own file, so
-        feed throughput scales with the cluster while the driver never
-        touches a data byte. Offsets stay snapshot versions; the
-        one-commit-per-micro-batch discipline is enforced in
-        `latestOffset` (advance by at most one version per batch).
-
-        emit_deletes=true upgrades the feed to FULL CDF (r10 — this
-        retired the driver-side simple reader the r9 verdict marked
-        weak): a commit's REMOVED files are planned as their own
-        partitions and their rows stream as change_type='delete' events
-        next to the adds' 'insert' events, still read on executors.
-
-        Restart safety (r9 ADVICE): the in-memory batch cursor is
-        clamped against every offset the engine hands back —
-        `partitions(start, end)` re-syncs it when a checkpointed batch
-        replays, `commit(end)` persists it to `state_dir` (when given)
-        so a fresh reader instance resumes at the committed version
-        instead of re-announcing version 0 as the latest offset."""
-
+    class CDFCursorReader(DataSourceStreamReader):
         def __init__(self, options):
             import json
 
             self.log_dir = options["log_dir"]
-            self.emit_deletes = (
-                options.get("emit_deletes", "false").lower() == "true"
-            )
             self.state_dir = options.get("state_dir")
             self._last = 0
             if self.state_dir:
@@ -2012,25 +2083,17 @@ def _snapshot_cdf_partitioned_datasource():
             self._restored = self._last
 
         def _versions(self):
-            return sorted(
-                int(f[1:-5])
-                for f in os.listdir(self.log_dir)
-                if f.startswith("v") and f.endswith(".json")
-            )
+            return log_versions(self.log_dir)
+
+        def _manifest(self, version):
+            if version <= 0:  # the empty table before the first commit
+                return {"files": [], "tables": {}}
+            return read_manifest(self.log_dir, version)
 
         def _files(self, version):
-            import json
-
-            if version <= 0:
-                return []
-            with open(
-                os.path.join(self.log_dir, f"v{version}.json")
-            ) as fh:
-                return json.load(fh)["files"]
+            return self._manifest(version)["files"]
 
         def initialOffset(self):
-            # Same checkpoint-lost resume contract as BaseLogCDFReader:
-            # the state_dir cursor (0 when absent) is the start offset.
             return {"version": self._restored}
 
         def latestOffset(self):
@@ -2043,8 +2106,66 @@ def _snapshot_cdf_partitioned_datasource():
             # replayed checkpointed batches re-sync the cursor so the
             # NEXT latestOffset never falls below the engine's start
             self._last = max(self._last, end["version"])
+            return self._plan(start["version"], end["version"])
+
+        def commit(self, end):
+            import json
+
+            self._last = max(self._last, end["version"])
+            if self.state_dir:
+                os.makedirs(self.state_dir, exist_ok=True)
+                tmp = os.path.join(self.state_dir, ".tmp-last")
+                with open(tmp, "w") as fh:
+                    json.dump({"version": self._last}, fh)
+                os.replace(
+                    tmp, os.path.join(self.state_dir, "last_committed.json")
+                )
+
+    return CDFCursorReader
+
+
+def _snapshot_cdf_partitioned_datasource():
+    from pyspark.sql import types as T
+    from pyspark.sql.datasource import DataSource, InputPartition
+
+    class CDFFilePartition(InputPartition):
+        """One DELTA FILE of one commit — an ADDED file (change
+        'insert') or, with emit_deletes, a REMOVED file (change
+        'delete') — the unit of executor work. Must be picklable: it
+        ships to the Python worker that reads it."""
+
+        def __init__(self, version: int, path: str, change: str = "insert"):
+            self.version = version
+            self.path = path
+            self.change = change
+
+    class PartitionedCDFReader(_cdf_cursor_base()):
+        """The PRODUCTION form of the snapshot-log CDF source
+        (`stream_snapshot_cdf` documents the swap): the full
+        `DataSourceStreamReader` API, where `partitions(start, end)`
+        plans one `InputPartition` PER DELTA FILE on the driver (KB
+        manifest arithmetic only) and `read(partition)` executes ON THE
+        EXECUTORS — each Python worker opens exactly its own file, so
+        feed throughput scales with the cluster while the driver never
+        touches a data byte. Offsets, the one-commit-per-micro-batch
+        discipline and restart safety are the shared cursor's
+        (`_cdf_cursor_base`).
+
+        emit_deletes=true upgrades the feed to FULL CDF (r10 — this
+        retired the driver-side simple reader the r9 verdict marked
+        weak): a commit's REMOVED files are planned as their own
+        partitions and their rows stream as change_type='delete' events
+        next to the adds' 'insert' events, still read on executors."""
+
+        def __init__(self, options):
+            super().__init__(options)
+            self.emit_deletes = (
+                options.get("emit_deletes", "false").lower() == "true"
+            )
+
+        def _plan(self, start, end):
             parts = []
-            for v in range(start["version"] + 1, end["version"] + 1):
+            for v in range(start + 1, end + 1):
                 cur = set(self._files(v))
                 prev = set(self._files(v - 1))
                 if self.emit_deletes:
@@ -2081,19 +2202,6 @@ def _snapshot_cdf_partitioned_datasource():
                     yield (partition.version, partition.change, k, c)
                 else:
                     yield (partition.version, k, c)
-
-        def commit(self, end):
-            import json
-
-            self._last = max(self._last, end["version"])
-            if self.state_dir:
-                os.makedirs(self.state_dir, exist_ok=True)
-                tmp = os.path.join(self.state_dir, ".tmp-last")
-                with open(tmp, "w") as fh:
-                    json.dump({"version": self._last}, fh)
-                os.replace(
-                    tmp, os.path.join(self.state_dir, "last_committed.json")
-                )
 
     class PartitionedCDFSource(DataSource):
         @classmethod
@@ -2147,7 +2255,6 @@ def stream_snapshot_cdf_partitioned(
     and KB manifests. The restart/live-pickup protocol proofs live on
     the simple twin — this key owns the distribution proof."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -2170,9 +2277,9 @@ def stream_snapshot_cdf_partitioned(
             .write.mode("overwrite")
             .parquet(sdir)
         )
-        added = _data_files_of(sdir)
+        added = data_files_of(sdir)
         files_per_commit[i + 1] = len(added)
-        _commit_snapshot(log_dir, added)
+        commit_snapshot(log_dir, added)
 
     spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
 
@@ -2230,10 +2337,9 @@ def _log_cdf_reader_base():
     sequence-scoping machinery, so every planning fix — the r10
     strictly-lower-sequence rule, the r11 cross-encoding priors, the
     rewrite-op skip — had to be re-applied per copy, and two copies had
-    already missed the rewrite skip). One base class now owns:
+    already missed the rewrite skip). On top of the shared offset
+    cursor (`_cdf_cursor_base`) one base class owns:
 
-    - version offsets, one commit per micro-batch, with optional
-      `state_dir` cursor persistence across restarts;
     - the op=rewrite ZERO-EVENT skip (`rewrite_as_churn` keeps the
       negative-proof knob);
     - the per-file sequence scoping (a delete file applies only to
@@ -2243,112 +2349,53 @@ def _log_cdf_reader_base():
     - SAME-COMMIT ownership (r12 review fix): when ONE commit adds
       both a positional DV and an equality tombstone masking the same
       row, the DV owns it — the equality partitions carry the commit's
-      own new DVs in their prior list, so the row emits exactly once.
+      own new DVs in their prior list, so the row emits exactly once;
+    - the executor work unit (``PARTITION``) and the equality-key read
+      of tombstone files (``_keys_of`` on the ``KEY`` column).
 
-    Subclasses set ``PARTITION`` (their InputPartition class, with the
-    (version, kind, path, new_dels, prior_dels) constructor) and
-    implement ``read`` with their table's columns."""
-    from pyspark.sql.datasource import DataSourceStreamReader
+    Subclasses set ``KEY`` and implement ``read`` with their table's
+    columns. The file-class conventions are `sparkgraft.table`'s (the
+    sink keys write those paths)."""
+    from pyspark.sql.datasource import InputPartition
 
-    # the file-classification contract is OWNED by scans.py (the sink
-    # keys write these paths); import it so a rename there cannot
-    # silently desynchronize the reader — baked into the class at
-    # definition time, so the pickled executor copy carries the values
-    from sparkgraft.scans import (
-        _EXPIRED_SUFFIX,
-        _MOR_DELETE_CLASS,
-        _POS_DELETE_CLASS,
-        _seq_first_versions,
-    )
+    class LogCDFPartition(InputPartition):
+        """One executor work unit of one commit's change set: an added
+        data file ('insert'), a removed data file ('delete' — the COW
+        form), or one PRE-IMAGE data file to be masked by the commit's
+        new delete files ('mor_delete' for equality tombstones,
+        'pos_delete' for positional DVs — carries the KB-scale delete
+        path lists; the executor reads both sides)."""
 
-    _DEL_SEG = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}"
-    _POS_SEG = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}{_POS_DELETE_CLASS}{os.sep}"
+        def __init__(self, version, kind, path, new_dels=(), prior_dels=()):
+            self.version = version
+            self.kind = kind
+            self.path = path
+            self.new_dels = list(new_dels)
+            self.prior_dels = list(prior_dels)
 
-    class BaseLogCDFReader(DataSourceStreamReader):
-        PARTITION: type = None
+    class BaseLogCDFReader(_cdf_cursor_base()):
+        PARTITION: type = LogCDFPartition
+        KEY: str = "o_orderkey"
 
         def __init__(self, options):
-            import json
-
-            self.log_dir = options["log_dir"]
-            self.state_dir = options.get("state_dir")
+            super().__init__(options)
             self.rewrite_as_churn = (
                 str(options.get("rewrite_as_churn", "false")).lower()
                 == "true"
             )
-            self._last = 0
-            if self.state_dir:
-                p = os.path.join(self.state_dir, "last_committed.json")
-                if os.path.exists(p):
-                    with open(p) as fh:
-                        self._last = int(json.load(fh)["version"])
-            # immutable snapshot of the restored cursor: initialOffset
-            # must report it even after latestOffset has advanced _last
-            # (the engine may poll latestOffset first)
-            self._restored = self._last
 
-        def _versions(self):
-            return sorted(
-                int(f[1:-5])
-                for f in os.listdir(self.log_dir)
-                if f.startswith("v") and f.endswith(".json")
-            )
+        def _keys_of(self, paths):  # EXECUTOR-side
+            """The ``KEY`` values the given equality tombstones mask."""
+            import pyarrow.parquet as pq
 
-        def _manifest(self, version):
-            import json
-
-            if version <= 0:
-                return {"files": []}
-            with open(
-                os.path.join(self.log_dir, f"v{version}.json")
-            ) as fh:
-                return json.load(fh)
-
-        def _files(self, version):
-            return self._manifest(version)["files"]
-
-        @staticmethod
-        def _is_del(path):
-            return _DEL_SEG in path
-
-        @staticmethod
-        def _is_pos_del(path):
-            """Positional delete vectors land under deletes/pos/ —
-            (file_path, row_index) pairs, the OTHER delete encoding
-            (`sink_positional_delete_vector`); they must never be read
-            with the equality-tombstone schema."""
-            return _POS_SEG in path
-
-        def initialOffset(self):
-            # Consulted by Spark only when the stream checkpoint is
-            # absent; returning the state_dir-restored cursor (0 when
-            # no cursor exists) lets a checkpoint-lost restart resume
-            # instead of replaying 1.._last in ONE oversized batch —
-            # which would break the one-commit-per-batch contract and
-            # reset foreachBatch ids under the feed_batch-stamp dedup.
-            return {"version": self._restored}
-
-        def latestOffset(self):
-            head = self._versions()
-            if head and head[-1] > self._last:
-                self._last += 1  # one commit per micro-batch
-            return {"version": self._last}
-
-        def _vacuum_horizon(self):
-            """Newest version whose manifest was TOMBSTONED by snapshot
-            expiry (`_expire_snapshots` renames expired manifests to
-            v{N}.json.expired). Planning version v's delta reads
-            manifest v−1, so a cursor at or below this horizon has lost
-            the history it would stream — the feed must refuse loudly
-            (Delta raises the same way when startingVersion predates
-            the earliest available version), never silently emit a
-            partial replay. KB-scale listing, once per planning call."""
-            ex = [
-                int(f[1:].split(".", 1)[0])
-                for f in os.listdir(self.log_dir)
-                if f.startswith("v") and f.endswith(_EXPIRED_SUFFIX)
-            ]
-            return max(ex) if ex else 0
+            out = set()
+            for p in paths:
+                out |= set(
+                    pq.read_table(p, columns=[self.KEY])
+                    .column(self.KEY)
+                    .to_pylist()
+                )
+            return out
 
         def _first_versions(self, upto):
             """file -> first version referencing it — the SEQUENCE
@@ -2359,11 +2406,11 @@ def _log_cdf_reader_base():
             tombstoned) — the r13 review found a delete-bearing commit
             after vacuum crashed here with FileNotFoundError — so the
             walk seeds from the persisted sequence checkpoint
-            `_expire_snapshots` writes and covers only the retained
+            `expire_snapshots` writes and covers only the retained
             tail; a file first referenced before the horizon keeps its
             true pre-expiry sequence number from the checkpoint."""
             seen, start = {}, 1
-            horizon, persisted = _seq_first_versions(self.log_dir)
+            horizon, persisted = seq_first_versions(self.log_dir)
             if horizon:
                 seen = dict(persisted)
                 start = horizon + 1
@@ -2372,12 +2419,17 @@ def _log_cdf_reader_base():
                     seen.setdefault(f, v)
             return seen
 
-        def partitions(self, start, end):
-            self._last = max(self._last, end["version"])
-            horizon = self._vacuum_horizon()
-            if horizon and start["version"] <= horizon:
+        def _plan(self, start, end):
+            # VACUUM HORIZON: planning version v's delta reads manifest
+            # v−1, so a cursor at or below the newest EXPIRED manifest
+            # has lost the history it would stream — the feed refuses
+            # loudly (Delta raises the same way when startingVersion
+            # predates the earliest available version), never silently
+            # emitting a partial replay
+            horizon = expired_horizon(self.log_dir)
+            if horizon and start <= horizon:
                 raise RuntimeError(
-                    f"CDF start offset v{start['version']} predates the "
+                    f"CDF start offset v{start} predates the "
                     f"vacuum horizon: manifests <= v{horizon} expired, so "
                     f"versions <= v{horizon + 1} can no longer be planned "
                     "as deltas. Re-seed from a retained snapshot (batch "
@@ -2386,7 +2438,7 @@ def _log_cdf_reader_base():
                 )
             P = self.PARTITION
             parts = []
-            for v in range(start["version"] + 1, end["version"] + 1):
+            for v in range(start + 1, end + 1):
                 # COMPACTION AWARENESS (r10 verdict ask #1): a commit
                 # stamped op=rewrite changes file LAYOUT, not rows —
                 # the feed emits ZERO events for it (the label-confused
@@ -2399,24 +2451,24 @@ def _log_cdf_reader_base():
                 prev = set(self._files(v - 1))
                 added = cur - prev
                 new_dels_all = sorted(
-                    p for p in added if self._is_del(p)
+                    p for p in added if is_delete_file(p)
                 )
                 fv = self._first_versions(v) if new_dels_all else None
                 new_pos = [
-                    p for p in new_dels_all if self._is_pos_del(p)
+                    p for p in new_dels_all if is_pos_delete_file(p)
                 ]
                 new_eq = [
-                    p for p in new_dels_all if not self._is_pos_del(p)
+                    p for p in new_dels_all if not is_pos_delete_file(p)
                 ]
                 prev_data = sorted(
-                    p for p in prev if not self._is_del(p)
+                    p for p in prev if not is_delete_file(p)
                 )
                 for p in sorted(
-                    p for p in prev - cur if not self._is_del(p)
+                    p for p in prev - cur if not is_delete_file(p)
                 ):
                     parts.append(P(v, "delete", p))
                 # prior suppression gathers BOTH encodings (r11 ADVICE)
-                prior_all = [p for p in prev if self._is_del(p)]
+                prior_all = [p for p in prev if is_delete_file(p)]
                 if new_pos:
                     for p in prev_data:
                         prior_for_p = sorted(
@@ -2446,47 +2498,16 @@ def _log_cdf_reader_base():
                 parts.extend(
                     P(v, "insert", p)
                     for p in sorted(added)
-                    if not self._is_del(p)
+                    if not is_delete_file(p)
                 )
             return parts or [P(0, "insert", "")]
-
-        def commit(self, end):
-            import json
-
-            self._last = max(self._last, end["version"])
-            if self.state_dir:
-                os.makedirs(self.state_dir, exist_ok=True)
-                tmp = os.path.join(self.state_dir, ".tmp-last")
-                with open(tmp, "w") as fh:
-                    json.dump({"version": self._last}, fh)
-                os.replace(
-                    tmp,
-                    os.path.join(self.state_dir, "last_committed.json"),
-                )
 
     return BaseLogCDFReader
 
 
 def _mor_cdf_datasource():
     from pyspark.sql import types as T
-    from pyspark.sql.datasource import (
-        DataSource,
-        InputPartition,
-    )
-
-    class MORCDFPartition(InputPartition):
-        """One executor work unit of one commit's change set: an added
-        data file ('insert'), a removed data file ('delete' — the COW
-        form), or one PRE-IMAGE data file to be masked by the commit's
-        new equality-delete tombstones ('mor_delete' — carries the
-        KB-scale tombstone path lists; the executor reads both sides)."""
-
-        def __init__(self, version, kind, path, new_dels=(), prior_dels=()):
-            self.version = version
-            self.kind = kind
-            self.path = path
-            self.new_dels = list(new_dels)
-            self.prior_dels = list(prior_dels)
+    from pyspark.sql.datasource import DataSource
 
     class MORCDFReader(_log_cdf_reader_base()):
         """The snapshot-log CDF upgraded to MERGE-ON-READ awareness.
@@ -2519,23 +2540,12 @@ def _mor_cdf_datasource():
         # same-commit DV ownership, the op=rewrite skip and its
         # `rewrite_as_churn` negative-proof knob) lives in the shared
         # base — see `_log_cdf_reader_base`
-        PARTITION = MORCDFPartition
 
         def read(self, partition):  # EXECUTOR-side
             import pyarrow.parquet as pq
 
             if not partition.path:
                 return
-
-            def keys_of(paths):
-                out = set()
-                for p in paths:
-                    out |= set(
-                        pq.read_table(p, columns=["o_orderkey"])
-                        .column("o_orderkey")
-                        .to_pylist()
-                    )
-                return out
 
             def positions_of(paths):
                 """Row ordinals of ``partition.path`` masked by the
@@ -2565,16 +2575,16 @@ def _mor_cdf_datasource():
                 # suppressed if a prior equality tombstone covers its
                 # key OR a prior DV covers its ordinal — exactly-once
                 # delete emission across mixed-encoding histories
-                prior_keys = keys_of(
+                prior_keys = self._keys_of(
                     [t for t in partition.prior_dels
-                     if not self._is_pos_del(t)]
+                     if not is_pos_delete_file(t)]
                 )
                 prior_pos = positions_of(
                     [t for t in partition.prior_dels
-                     if self._is_pos_del(t)]
+                     if is_pos_delete_file(t)]
                 )
                 if partition.kind == "mor_delete":
-                    mask = keys_of(partition.new_dels)
+                    mask = self._keys_of(partition.new_dels)
                     for idx, (k, c) in enumerate(rows):
                         if (
                             k in mask
@@ -2687,7 +2697,6 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed pass over the pre-image, the price any equality-delete
     CDF pays inside retention."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -2708,10 +2717,10 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1: base table, two data files
     base_dir = os.path.join(root, "base")
     o.repartition(2).write.parquet(base_dir)
-    base_files = _data_files_of(base_dir)
+    base_files = data_files_of(base_dir)
     if len(base_files) != 2:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 2")
-    _commit_snapshot(log_dir, base_files)
+    commit_snapshot(log_dir, base_files)
 
     # v2: MOR equality-delete — one tombstone file, ADD-only commit
     t2_dir = os.path.join(root, "deletes", "t2")
@@ -2721,8 +2730,8 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(t2_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(t2_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(t2_dir), extra={"op": "mor-delete"}
     )
 
     # v3: MOR UPSERT — tombstone for the old rows + re-priced data file
@@ -2738,9 +2747,9 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(up_dir)
     )
-    _commit_snapshot(
+    commit_snapshot(
         log_dir,
-        _data_files_of(t3_dir) + _data_files_of(up_dir),
+        data_files_of(t3_dir) + data_files_of(up_dir),
         extra={"op": "mor-upsert"},
     )
 
@@ -2755,7 +2764,7 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(app_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(app_dir))
+    commit_snapshot(log_dir, data_files_of(app_dir))
 
     # planned executor work units per commit
     work_units = {1: 2, 2: len(base_files), 3: len(base_files) + 1, 4: 1}
@@ -2803,13 +2812,13 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # committed at a STRICTLY lower version (v1 here); the v3 upsert
     # file and the v4 append are never masked.
     tomb = spark.read.parquet(
-        *_data_files_of(t2_dir), *_data_files_of(t3_dir)
+        *data_files_of(t2_dir), *data_files_of(t3_dir)
     ).select("o_orderkey")
     head = (
         spark.read.parquet(*base_files)
         .join(F.broadcast(tomb), "o_orderkey", "left_anti")
-        .unionByName(spark.read.parquet(*_data_files_of(up_dir)))
-        .unionByName(spark.read.parquet(*_data_files_of(app_dir)))
+        .unionByName(spark.read.parquet(*data_files_of(up_dir)))
+        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("cents").cast("long").alias("cents"),
@@ -2906,7 +2915,6 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted region — at 100 TB with daily OPTIMIZE, the difference
     between a feed and a firehose."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -2927,10 +2935,10 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1: base table, two data files
     base_dir = os.path.join(root, "base")
     o.repartition(2).write.parquet(base_dir)
-    base_files = _data_files_of(base_dir)
+    base_files = data_files_of(base_dir)
     if len(base_files) != 2:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 2")
-    _commit_snapshot(log_dir, base_files)
+    commit_snapshot(log_dir, base_files)
 
     # v2: MOR equality-delete — one tombstone file, ADD-only commit
     t2_dir = os.path.join(root, "deletes", "t2")
@@ -2940,25 +2948,25 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(t2_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(t2_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(t2_dir), extra={"op": "mor-delete"}
     )
 
     # v3: COMPACTION — apply the tombstone into one clean file, retire
     # the fragmented base files AND the tombstone, stamp op=rewrite
     clean_dir = os.path.join(root, "compacted")
-    tomb2 = spark.read.parquet(*_data_files_of(t2_dir)).select("o_orderkey")
+    tomb2 = spark.read.parquet(*data_files_of(t2_dir)).select("o_orderkey")
     (
         spark.read.parquet(*base_files)
         .join(F.broadcast(tomb2), "o_orderkey", "left_anti")
         .coalesce(1)
         .write.parquet(clean_dir)
     )
-    clean_files = _data_files_of(clean_dir)
-    _commit_snapshot(
+    clean_files = data_files_of(clean_dir)
+    commit_snapshot(
         log_dir,
         clean_files,
-        remove_files=base_files + _data_files_of(t2_dir),
+        remove_files=base_files + data_files_of(t2_dir),
         extra={"op": "rewrite"},
     )
 
@@ -2975,9 +2983,9 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(up_dir)
     )
-    _commit_snapshot(
+    commit_snapshot(
         log_dir,
-        _data_files_of(t4_dir) + _data_files_of(up_dir),
+        data_files_of(t4_dir) + data_files_of(up_dir),
         extra={"op": "mor-upsert"},
     )
 
@@ -2992,7 +3000,7 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(app_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(app_dir))
+    commit_snapshot(log_dir, data_files_of(app_dir))
 
     spark.dataSource.register(_mor_cdf_datasource())
 
@@ -3067,12 +3075,12 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # head read: the compacted clean file masked by the v4 tombstone
     # (sequence 3 < 4, so it applies), plus the upsert + append files
-    tomb4 = spark.read.parquet(*_data_files_of(t4_dir)).select("o_orderkey")
+    tomb4 = spark.read.parquet(*data_files_of(t4_dir)).select("o_orderkey")
     head = (
         spark.read.parquet(*clean_files)
         .join(F.broadcast(tomb4), "o_orderkey", "left_anti")
-        .unionByName(spark.read.parquet(*_data_files_of(up_dir)))
-        .unionByName(spark.read.parquet(*_data_files_of(app_dir)))
+        .unionByName(spark.read.parquet(*data_files_of(up_dir)))
+        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
     )
     head_net = signed_net(head.withColumn("change_type", F.lit("insert")))
 
@@ -3174,7 +3182,6 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     task — the same posture as the equality form, and the DV path
     never carries values, only positions."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -3195,10 +3202,10 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1: base table, two data files
     base_dir = os.path.join(root, "base")
     o.repartition(2).write.parquet(base_dir)
-    base_files = _data_files_of(base_dir)
+    base_files = data_files_of(base_dir)
     if len(base_files) != 2:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 2")
-    _commit_snapshot(log_dir, base_files)
+    commit_snapshot(log_dir, base_files)
 
     def build_dv(mods: tuple, name: str) -> list[str]:
         """(file_path, row_index) pairs for base rows whose key hits
@@ -3220,15 +3227,15 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
             .coalesce(1)
             .write.parquet(d)
         )
-        return _data_files_of(d)
+        return data_files_of(d)
 
     # v2: positional DV for keys %10 == P1 (add-only commit)
-    _commit_snapshot(
+    commit_snapshot(
         log_dir, build_dv((_PCDF_P1,), "v2"), extra={"op": "pos-delete"}
     )
     # v3: positional DV covering BOTH predicates — the overlap with v2
     # is the prior-scoping trap
-    _commit_snapshot(
+    commit_snapshot(
         log_dir,
         build_dv((_PCDF_P1, _PCDF_P2), "v3"),
         extra={"op": "pos-delete"},
@@ -3244,7 +3251,7 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(app_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(app_dir))
+    commit_snapshot(log_dir, data_files_of(app_dir))
 
     spark.dataSource.register(_mor_cdf_datasource())
     work_units = {1: 2, 2: len(base_files), 3: len(base_files), 4: 1}
@@ -3300,7 +3307,7 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("row_index", F.col("_metadata.row_index"))
         .join(F.broadcast(dv_all), ["file_path", "row_index"], "left_anti")
         .select("o_orderkey", "cents")
-        .unionByName(spark.read.parquet(*_data_files_of(app_dir)))
+        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("cents").cast("long").alias("cents"),
@@ -3373,7 +3380,6 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds — one distributed pass over the pre-image per encoding, KB
     delete files per task."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -3394,10 +3400,10 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v1: base table, two data files
     base_dir = os.path.join(root, "base")
     o.repartition(2).write.parquet(base_dir)
-    base_files = _data_files_of(base_dir)
+    base_files = data_files_of(base_dir)
     if len(base_files) != 2:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 2")
-    _commit_snapshot(log_dir, base_files)
+    commit_snapshot(log_dir, base_files)
 
     # v2: ONE commit, BOTH encodings — equality tombstone + positional DV
     eq_dir = os.path.join(root, "deletes", "eq")
@@ -3422,9 +3428,9 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(pos_dir)
     )
-    _commit_snapshot(
+    commit_snapshot(
         log_dir,
-        _data_files_of(eq_dir) + _data_files_of(pos_dir),
+        data_files_of(eq_dir) + data_files_of(pos_dir),
         extra={"op": "mixed-delete"},
     )
 
@@ -3439,7 +3445,7 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(app_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(app_dir))
+    commit_snapshot(log_dir, data_files_of(app_dir))
 
     spark.dataSource.register(_mor_cdf_datasource())
     # v2 plans BOTH kinds: |pre-image| equality units + |pre-image| DV units
@@ -3483,10 +3489,10 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
 
     # head: base minus equality keys minus DV positions, plus the append
-    eq_keys = spark.read.parquet(*_data_files_of(eq_dir)).select(
+    eq_keys = spark.read.parquet(*data_files_of(eq_dir)).select(
         "o_orderkey"
     )
-    dv = spark.read.parquet(*_data_files_of(pos_dir))
+    dv = spark.read.parquet(*data_files_of(pos_dir))
     head = (
         spark.read.parquet(*base_files)
         .withColumn(
@@ -3497,7 +3503,7 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(eq_keys), "o_orderkey", "left_anti")
         .join(F.broadcast(dv), ["file_path", "row_index"], "left_anti")
         .select("o_orderkey", "cents")
-        .unionByName(spark.read.parquet(*_data_files_of(app_dir)))
+        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("cents").cast("long").alias("cents"),
@@ -3648,7 +3654,6 @@ def stream_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     how a 100 TB fact keeps a serving aggregate fresh at commit
     latency."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -3668,7 +3673,7 @@ def stream_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         o, F.col("o_orderkey") % 2, os.path.join(root, "halves")
     )
     even_f = halves[0]
-    _commit_snapshot(log_dir, even_f + halves[1])  # v1
+    commit_snapshot(log_dir, even_f + halves[1])  # v1
 
     rw_dir = os.path.join(root, "rewrite")  # v2: COW delete on even keys
     (
@@ -3677,7 +3682,7 @@ def stream_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(rw_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(rw_dir), remove_files=even_f)
+    commit_snapshot(log_dir, data_files_of(rw_dir), remove_files=even_f)
 
     app_dir = os.path.join(root, "append")  # v3: re-keyed append
     (
@@ -3689,7 +3694,7 @@ def stream_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(app_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(app_dir))
+    commit_snapshot(log_dir, data_files_of(app_dir))
 
     spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
     maintain, mv_read = _mv_maintainer(spark, mv_root)
@@ -3715,9 +3720,8 @@ def stream_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"MV wrote {n_versions} versions, wanted 3")
 
     mv = mv_read()
-    from sparkgraft.scans import _log_versions, _read_manifest
 
-    head_files = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
+    head_files = read_manifest(log_dir, head_version(log_dir))["files"]
     direct = (
         spark.read.parquet(*head_files)
         .groupBy(
@@ -3806,12 +3810,6 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from sparkgraft.catalog import load
-    from sparkgraft.scans import (
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-    )
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -3831,7 +3829,7 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         o, F.col("o_orderkey") % 2, os.path.join(root, "halves")
     )
     even_f = halves[0]
-    _commit_snapshot(log_dir, even_f + halves[1])  # v1
+    commit_snapshot(log_dir, even_f + halves[1])  # v1
     rw_dir = os.path.join(root, "rewrite")
     (
         spark.read.parquet(*even_f)
@@ -3839,7 +3837,7 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(rw_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(rw_dir), remove_files=even_f)
+    commit_snapshot(log_dir, data_files_of(rw_dir), remove_files=even_f)
     app_dir = os.path.join(root, "append")
     (
         o.filter(F.col("o_orderkey") % 1000 == 7)
@@ -3850,7 +3848,7 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(app_dir)
     )
-    _commit_snapshot(log_dir, _data_files_of(app_dir))
+    commit_snapshot(log_dir, data_files_of(app_dir))
 
     spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
     maintain, mv_read = _mv_maintainer(spark, mv_root, crash_after=1)
@@ -3904,7 +3902,7 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(f"MV wrote {n_versions} versions, wanted 3")
 
     mv = mv_read()
-    head_files = _read_manifest(log_dir, _log_versions(log_dir)[-1])["files"]
+    head_files = read_manifest(log_dir, head_version(log_dir))["files"]
     direct = (
         spark.read.parquet(*head_files)
         .groupBy(
@@ -4005,7 +4003,6 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     or version-stamped once. The oracle pins all four (eff_from,
     is_current) classes recomputed from source."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -4024,7 +4021,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base_dir = os.path.join(root, "base")
     o.repartition(2).write.parquet(base_dir)
-    _commit_snapshot(log_dir, _data_files_of(base_dir))  # v1
+    commit_snapshot(log_dir, data_files_of(base_dir))  # v1
 
     # the upsert slice feeds FOUR staged writes (2 tombstones + 2
     # re-price deltas); persist it once instead of re-scanning orders
@@ -4041,9 +4038,9 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .coalesce(1)
             .write.parquet(u_dir)
         )
-        _commit_snapshot(
+        commit_snapshot(
             log_dir,
-            _data_files_of(t_dir) + _data_files_of(u_dir),
+            data_files_of(t_dir) + data_files_of(u_dir),
             extra={"op": "mor-upsert"},
         )
     ups.unpersist()
@@ -4209,12 +4206,10 @@ def _head_event_schema(log_dir: str):
     behavior directly (a v1-head log must plan WITHOUT `channel`)."""
     from pyspark.sql import types as T
 
-    from sparkgraft.scans import _log_versions, _read_manifest
-
-    versions = _log_versions(log_dir)
+    versions = log_versions(log_dir)
     if not versions:
         raise RuntimeError(f"empty snapshot log: {log_dir}")
-    head = _read_manifest(log_dir, versions[-1])
+    head = read_manifest(log_dir, versions[-1])
     sv = head.get("schema_version")
     if sv is None:
         raise RuntimeError(
@@ -4233,18 +4228,7 @@ def _head_event_schema(log_dir: str):
 
 
 def _schema_evo_cdf_datasource():
-    from pyspark.sql.datasource import (
-        DataSource,
-        InputPartition,
-    )
-
-    class SECDFPartition(InputPartition):
-        def __init__(self, version, kind, path, new_dels=(), prior_dels=()):
-            self.version = version
-            self.kind = kind
-            self.path = path
-            self.new_dels = list(new_dels)
-            self.prior_dels = list(prior_dels)
+    from pyspark.sql.datasource import DataSource
 
     class SECDFReader(_log_cdf_reader_base()):
         """Snapshot-log CDF with SCHEMA-EVOLUTION awareness: the event
@@ -4264,8 +4248,6 @@ def _schema_evo_cdf_datasource():
         resolution adds ONE head-manifest read per stream start.
         Executor work is per-delta-file, and NULL projection is free
         (the column simply isn't read from old files)."""
-
-        PARTITION = SECDFPartition
 
         def __init__(self, options):
             super().__init__(options)
@@ -4315,16 +4297,6 @@ def _schema_evo_cdf_datasource():
                 )
                 return list(zip(keys, cents, chan))
 
-            def keys_of(paths):
-                out = set()
-                for p in paths:
-                    out |= set(
-                        pq.read_table(p, columns=["o_orderkey"])
-                        .column("o_orderkey")
-                        .to_pylist()
-                    )
-                return out
-
             def emit(change, rows):
                 if evolved:
                     for k, c, ch in rows:
@@ -4334,12 +4306,12 @@ def _schema_evo_cdf_datasource():
                         yield (partition.version, change, k, c)
 
             if partition.kind == "mor_delete":
-                if any(self._is_pos_del(t) for t in partition.prior_dels):
+                if any(is_pos_delete_file(t) for t in partition.prior_dels):
                     raise RuntimeError(
                         "positional priors are out of this feed's scope"
                     )
-                mask = keys_of(partition.new_dels)
-                prior = keys_of(partition.prior_dels)
+                mask = self._keys_of(partition.new_dels)
+                prior = self._keys_of(partition.prior_dels)
                 yield from emit(
                     "delete",
                     [
@@ -4443,7 +4415,6 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) metadata exactly as `sink_schema_evolution_commit` proves for
     batch; this key extends the contract to every downstream feed."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -4466,10 +4437,10 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.filter(F.col("o_orderkey") % 2 == 0).repartition(2).write.parquet(
         gen1_dir
     )
-    gen1_files = _data_files_of(gen1_dir)
+    gen1_files = data_files_of(gen1_dir)
     if len(gen1_files) != 2:
         raise RuntimeError(f"gen1 staged {len(gen1_files)} files, wanted 2")
-    _commit_snapshot(log_dir, gen1_files, extra={"schema_version": 1})
+    commit_snapshot(log_dir, gen1_files, extra={"schema_version": 1})
 
     # plan-time proof HALF 1: a v1-head log plans WITHOUT the column
     pre_schema, pre_sv = _head_event_schema(log_dir)
@@ -4480,7 +4451,7 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # v2: THE ADD-COLUMN COMMIT — metadata-only, zero file changes
-    _commit_snapshot(
+    commit_snapshot(
         log_dir, [], extra={"schema_version": 2, "op": "add-column"}
     )
 
@@ -4507,10 +4478,10 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(2)
         .write.parquet(gen2_dir)
     )
-    gen2_files = _data_files_of(gen2_dir)
+    gen2_files = data_files_of(gen2_dir)
     if len(gen2_files) != 2:
         raise RuntimeError(f"gen2 staged {len(gen2_files)} files, wanted 2")
-    _commit_snapshot(log_dir, gen2_files, extra={"schema_version": 2})
+    commit_snapshot(log_dir, gen2_files, extra={"schema_version": 2})
 
     # v4: equality-delete across BOTH generations (%5 hits both parities)
     t4_dir = os.path.join(root, "deletes", "t4")
@@ -4520,9 +4491,9 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
         .write.parquet(t4_dir)
     )
-    _commit_snapshot(
+    commit_snapshot(
         log_dir,
-        _data_files_of(t4_dir),
+        data_files_of(t4_dir),
         extra={"schema_version": 2, "op": "mor-delete"},
     )
 
@@ -4608,7 +4579,7 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     }
-    tomb = spark.read.parquet(*_data_files_of(t4_dir)).select("o_orderkey")
+    tomb = spark.read.parquet(*data_files_of(t4_dir)).select("o_orderkey")
     head = {
         r["channel"]: (r["n"], r["c"])
         for r in spark.read.option("mergeSchema", "true")
@@ -4637,6 +4608,67 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _payload_cdf_datasource(name, key, payload, payload_type, scope):
+    """A MOR-aware change feed over a (``key``, ``payload``) snapshot
+    log: the shared `_log_cdf_reader_base` planner and sequence scoping,
+    streaming (version, change_type, key, payload) events. Equality-only
+    — ``scope`` names why positional deletes are out of the feed."""
+    from pyspark.sql import types as T
+    from pyspark.sql.datasource import DataSource
+
+    class PayloadCDFReader(_log_cdf_reader_base()):
+        KEY = key
+
+        def read(self, partition):  # EXECUTOR-side
+            import pyarrow.parquet as pq
+
+            if not partition.path:
+                return
+            if partition.kind == "pos_delete" or any(
+                is_pos_delete_file(t) for t in partition.prior_dels
+            ):
+                raise RuntimeError(
+                    "positional delete vectors are out of this feed's "
+                    f"scope — {scope}"
+                )
+            t = pq.read_table(partition.path, columns=[key, payload])
+            rows = zip(
+                t.column(key).to_pylist(), t.column(payload).to_pylist()
+            )
+            if partition.kind == "mor_delete":
+                mask = self._keys_of(partition.new_dels)
+                prior = self._keys_of(partition.prior_dels)
+                for k, v in rows:
+                    if k in mask and k not in prior:
+                        yield (partition.version, "delete", k, v)
+            else:
+                change = (
+                    "insert" if partition.kind == "insert" else "delete"
+                )
+                for k, v in rows:
+                    yield (partition.version, change, k, v)
+
+    class PayloadCDFSource(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return name
+
+        def schema(self):
+            return T.StructType(
+                [
+                    T.StructField("version", T.IntegerType()),
+                    T.StructField("change_type", T.StringType()),
+                    T.StructField(key, T.LongType()),
+                    T.StructField(payload, payload_type),
+                ]
+            )
+
+        def streamReader(self, schema):
+            return PayloadCDFReader(self.options)
+
+    return PayloadCDFSource
+
+
 def _doc_cdf_datasource():
     """MOR-aware CDF over a DOCUMENTS snapshot log — the `_mor_cdf`
     reader's planning and sequence scoping applied to the (doc_id,
@@ -4645,82 +4677,11 @@ def _doc_cdf_datasource():
     delete retirements from a text corpus table. Kept equality-only:
     corpora delete by doc key."""
     from pyspark.sql import types as T
-    from pyspark.sql.datasource import (
-        DataSource,
-        InputPartition,
+
+    return _payload_cdf_datasource(
+        "sparkgraft_doc_cdf", "doc_id", "text", T.StringType(),
+        "corpora delete by doc key",
     )
-
-    class DocCDFPartition(InputPartition):
-        def __init__(self, version, kind, path, new_dels=(), prior_dels=()):
-            self.version = version
-            self.kind = kind
-            self.path = path
-            self.new_dels = list(new_dels)
-            self.prior_dels = list(prior_dels)
-
-    class DocCDFReader(_log_cdf_reader_base()):
-        PARTITION = DocCDFPartition
-
-        def read(self, partition):  # EXECUTOR-side
-            import pyarrow.parquet as pq
-
-            if not partition.path:
-                return
-            if partition.kind == "pos_delete" or any(
-                self._is_pos_del(t) for t in partition.prior_dels
-            ):
-                raise RuntimeError(
-                    "positional delete vectors are out of this feed's "
-                    "scope — corpora delete by doc key"
-                )
-
-            def keys_of(paths):
-                out = set()
-                for p in paths:
-                    out |= set(
-                        pq.read_table(p, columns=["doc_id"])
-                        .column("doc_id")
-                        .to_pylist()
-                    )
-                return out
-
-            t = pq.read_table(partition.path, columns=["doc_id", "text"])
-            rows = zip(
-                t.column("doc_id").to_pylist(),
-                t.column("text").to_pylist(),
-            )
-            if partition.kind == "mor_delete":
-                mask = keys_of(partition.new_dels)
-                prior = keys_of(partition.prior_dels)
-                for k, txt in rows:
-                    if k in mask and k not in prior:
-                        yield (partition.version, "delete", k, txt)
-            else:
-                change = (
-                    "insert" if partition.kind == "insert" else "delete"
-                )
-                for k, txt in rows:
-                    yield (partition.version, change, k, txt)
-
-    class DocCDFSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "sparkgraft_doc_cdf"
-
-        def schema(self):
-            return T.StructType(
-                [
-                    T.StructField("version", T.IntegerType()),
-                    T.StructField("change_type", T.StringType()),
-                    T.StructField("doc_id", T.LongType()),
-                    T.StructField("text", T.StringType()),
-                ]
-            )
-
-        def streamReader(self, schema):
-            return DocCDFReader(self.options)
-
-    return DocCDFSource
 
 
 # --- cross-table CDF from the transaction root (r12: the r11 verdict's
@@ -4730,11 +4691,7 @@ def _doc_cdf_datasource():
 
 def _txn_cdf_datasource():
     from pyspark.sql import types as T
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
+    from pyspark.sql.datasource import DataSource, InputPartition
 
     class XTPartition(InputPartition):
         def __init__(self, txn, table, kind, path):
@@ -4743,7 +4700,7 @@ def _txn_cdf_datasource():
             self.kind = kind
             self.path = path
 
-    class TxnCDFReader(DataSourceStreamReader):
+    class TxnCDFReader(_cdf_cursor_base()):
         """Change feed over the TRANSACTION ROOT: offsets are txn
         versions, one txn per micro-batch, and a txn's change set is
         the per-table file delta between its manifest's absolute
@@ -4754,65 +4711,19 @@ def _txn_cdf_datasource():
         read `sink_multi_table_publish` closes for batch readers,
         closed here for feeds). Added files stream as inserts, removed
         files as COW deletes; executors read each file with ITS
-        table's schema. The reader cursor persists to `state_dir` on
-        commit (the r10 restart discipline), so a restarted stream
-        resumes instead of re-announcing txn 0.
+        table's schema. Offsets and restart safety are the shared
+        cursor's (`_cdf_cursor_base`).
 
         Scale: planning is KB txn-manifest diffs on the driver;
         executor work is per-changed-file. The feed's atomicity unit
         is the txn, matching the write side's single-CAS publish."""
 
-        def __init__(self, options):
-            import json
-
-            self.log_dir = options["log_dir"]
-            self.state_dir = options.get("state_dir")
-            self._last = 0
-            if self.state_dir:
-                p = os.path.join(self.state_dir, "last_committed.json")
-                if os.path.exists(p):
-                    with open(p) as fh:
-                        self._last = int(json.load(fh)["version"])
-            # immutable snapshot of the restored cursor: initialOffset
-            # must report it even after latestOffset has advanced _last
-            # (the engine may poll latestOffset first)
-            self._restored = self._last
-
-        def _versions(self):
-            return sorted(
-                int(f[1:-5])
-                for f in os.listdir(self.log_dir)
-                if f.startswith("v") and f.endswith(".json")
-            )
-
-        def _manifest(self, version):
-            import json
-
-            if version <= 0:
-                return {"tables": {}}
-            with open(
-                os.path.join(self.log_dir, f"v{version}.json")
-            ) as fh:
-                return json.load(fh)
-
         def _tables(self, version):
             return self._manifest(version)["tables"]
 
-        def initialOffset(self):
-            # Same checkpoint-lost resume contract as BaseLogCDFReader:
-            # the state_dir cursor (0 when absent) is the start offset.
-            return {"version": self._restored}
-
-        def latestOffset(self):
-            head = self._versions()
-            if head and head[-1] > self._last:
-                self._last += 1  # one txn per micro-batch
-            return {"version": self._last}
-
-        def partitions(self, start, end):
-            self._last = max(self._last, end["version"])
+        def _plan(self, start, end):
             parts = []
-            for v in range(start["version"] + 1, end["version"] + 1):
+            for v in range(start + 1, end + 1):
                 man = self._manifest(v)
                 cur = man["tables"]
                 prev = self._tables(v - 1)
@@ -4864,19 +4775,6 @@ def _txn_cdf_datasource():
                     yield (
                         partition.txn, "dim", change, ck, ck, None, seg,
                     )
-
-        def commit(self, end):
-            import json
-
-            self._last = max(self._last, end["version"])
-            if self.state_dir:
-                os.makedirs(self.state_dir, exist_ok=True)
-                tmp = os.path.join(self.state_dir, ".tmp-last")
-                with open(tmp, "w") as fh:
-                    json.dump({"version": self._last}, fh)
-                os.replace(
-                    tmp, os.path.join(self.state_dir, "last_committed.json")
-                )
 
     class TxnCDFSource(DataSource):
         # exposed so the checkpoint-aware feed can SUBCLASS the reader
@@ -4970,12 +4868,6 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from sparkgraft.catalog import load
-    from sparkgraft.scans import (
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-        _txn_publish,
-    )
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -4998,7 +4890,7 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stage(df: DataFrame, name: str) -> list[str]:
         d = os.path.join(root, name)
         df.coalesce(1).write.mode("overwrite").parquet(d)
-        return _data_files_of(d)
+        return data_files_of(d)
 
     # fact thirds + dim halves staged in TWO partitioned writes (was 5
     # sequential filter+coalesce(1) jobs — _stage_slices docstring)
@@ -5021,11 +4913,11 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ZERO events for it (the single-table feeds' rewrite awareness,
     # extended to the txn root's per-table deltas)
     fc = stage(spark.read.parquet(*(f1p + f2 + f3)), "fact_compacted")
-    _txn_publish(txn_dir, 1, {"fact": f1, "dim": d1})
-    _txn_publish(txn_dir, 2, {"fact": f1 + f2, "dim": d1})
-    _txn_publish(txn_dir, 3, {"fact": f1 + f2 + f3, "dim": d1 + d2})
-    _txn_publish(txn_dir, 4, {"fact": f1p + f2 + f3, "dim": d1 + d2})
-    _txn_publish(
+    txn_publish(txn_dir, 1, {"fact": f1, "dim": d1})
+    txn_publish(txn_dir, 2, {"fact": f1 + f2, "dim": d1})
+    txn_publish(txn_dir, 3, {"fact": f1 + f2 + f3, "dim": d1 + d2})
+    txn_publish(txn_dir, 4, {"fact": f1p + f2 + f3, "dim": d1 + d2})
+    txn_publish(
         txn_dir, 5, {"fact": fc, "dim": d1 + d2}, ops={"fact": "rewrite"}
     )
 
@@ -5196,7 +5088,7 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # direct star recompute from the txn head (both tables at txn 4)
-    head_tables = _read_manifest(txn_dir, _log_versions(txn_dir)[-1])[
+    head_tables = read_manifest(txn_dir, head_version(txn_dir))[
         "tables"
     ]
     direct = (
@@ -5249,83 +5141,11 @@ def _emb_cdf_datasource():
     inserts AND equality-delete retirements. Equality-only: vector
     stores delete by id."""
     from pyspark.sql import types as T
-    from pyspark.sql.datasource import DataSource, InputPartition
 
-    class EmbCDFPartition(InputPartition):
-        def __init__(self, version, kind, path, new_dels=(), prior_dels=()):
-            self.version = version
-            self.kind = kind
-            self.path = path
-            self.new_dels = list(new_dels)
-            self.prior_dels = list(prior_dels)
-
-    class EmbCDFReader(_log_cdf_reader_base()):
-        PARTITION = EmbCDFPartition
-
-        def read(self, partition):  # EXECUTOR-side
-            import pyarrow.parquet as pq
-
-            if not partition.path:
-                return
-            if partition.kind == "pos_delete" or any(
-                self._is_pos_del(t) for t in partition.prior_dels
-            ):
-                raise RuntimeError(
-                    "positional delete vectors are out of this feed's "
-                    "scope — vector stores delete by id"
-                )
-
-            def keys_of(paths):
-                out = set()
-                for p in paths:
-                    out |= set(
-                        pq.read_table(p, columns=["vec_id"])
-                        .column("vec_id")
-                        .to_pylist()
-                    )
-                return out
-
-            t = pq.read_table(
-                partition.path, columns=["vec_id", "embedding"]
-            )
-            rows = zip(
-                t.column("vec_id").to_pylist(),
-                t.column("embedding").to_pylist(),
-            )
-            if partition.kind == "mor_delete":
-                mask = keys_of(partition.new_dels)
-                prior = keys_of(partition.prior_dels)
-                for k, emb in rows:
-                    if k in mask and k not in prior:
-                        yield (partition.version, "delete", k, emb)
-            else:
-                change = (
-                    "insert" if partition.kind == "insert" else "delete"
-                )
-                for k, emb in rows:
-                    yield (partition.version, change, k, emb)
-
-    class EmbCDFSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "sparkgraft_emb_cdf"
-
-        def schema(self):
-            return T.StructType(
-                [
-                    T.StructField("version", T.IntegerType()),
-                    T.StructField("change_type", T.StringType()),
-                    T.StructField("vec_id", T.LongType()),
-                    T.StructField(
-                        "embedding", T.ArrayType(T.FloatType())
-                    ),
-                ]
-            )
-
-        def streamReader(self, schema):
-            return EmbCDFReader(self.options)
-
-    return EmbCDFSource
+    return _payload_cdf_datasource(
+        "sparkgraft_emb_cdf", "vec_id", "embedding",
+        T.ArrayType(T.FloatType()), "vector stores delete by id",
+    )
 
 
 # --- vacuum × CDF contract (r13: the r12 verdict's ask #7 — what does
@@ -5380,7 +5200,7 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     History: v1 appends slice1 (o_orderkey%3==0, two files), v2
     COMPACTS it (op=rewrite — zero feed events by the r10 contract),
     v3 appends slice2 (%3==1), v4 appends slice3 (%3==2). Vacuum
-    (`_expire_snapshots`, the shared procedure) retains the last two
+    (`expire_snapshots`, the shared procedure) retains the last two
     snapshots: v1's files (exclusively referenced by expired
     manifests) are deleted from disk, manifests v1/v2 are tombstoned
     to .json.expired — the horizon is 2 — and the sequence checkpoint
@@ -5410,16 +5230,7 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     a backfill, or worse a silently short MV — is an operational
     incident; a planning-time refusal with the re-seed recipe is the
     contract every real lakehouse feed ships."""
-    import json
-
     from sparkgraft.catalog import load
-    from sparkgraft.scans import (
-        _MOR_DELETE_CLASS,
-        _commit_snapshot,
-        _data_files_of,
-        _expire_snapshots,
-        _read_manifest,
-    )
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -5437,7 +5248,7 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stage(df: DataFrame, name: str, n: int = 1) -> list[str]:
         d = os.path.join(root, name)
         df.repartition(n).write.mode("overwrite").parquet(d)
-        return _data_files_of(d)
+        return data_files_of(d)
 
     # all three thirds staged in ONE partitioned write (was 3
     # sequential jobs — _stage_slices docstring); s1 keeps its 2-file
@@ -5451,20 +5262,20 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(root, "slices"),
     )
     s1 = sorted(slices[0] + slices[1])
-    _commit_snapshot(log_dir, s1)  # v1
+    commit_snapshot(log_dir, s1)  # v1
     s1c = stage(spark.read.parquet(*s1), "s1_compacted")
-    _commit_snapshot(  # v2: layout-only rewrite of v1
+    commit_snapshot(  # v2: layout-only rewrite of v1
         log_dir, s1c, remove_files=s1, extra={"op": "rewrite"}
     )
     s2 = slices[2]
-    _commit_snapshot(log_dir, s2)  # v3
+    commit_snapshot(log_dir, s2)  # v3
     s3 = slices[3]
-    _commit_snapshot(log_dir, s3)  # v4
+    commit_snapshot(log_dir, s3)  # v4
 
     # EXPIRE through the shared procedure: retain the last 2
     # snapshots — orphan unlink + manifest tombstones + the persisted
     # sequence checkpoint
-    retained, expired, orphans = _expire_snapshots(log_dir, 2)
+    retained, expired, orphans = expire_snapshots(log_dir, 2)
     if sorted(orphans) != s1:
         raise RuntimeError(f"orphan set wrong: {sorted(orphans)}")
     horizon = expired[-1]
@@ -5474,18 +5285,19 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v5: the POST-VACUUM equality delete (the review's crash case —
     # its sequence scoping must ride the persisted checkpoint now that
     # the genesis manifests are tombstoned)
-    t5_dir = os.path.join(root, _MOR_DELETE_CLASS, "t5")
+    t5_dir = os.path.join(root, MOR_DELETE_CLASS, "t5")
     (
         o.select("o_orderkey")
         .filter(F.col("o_orderkey") % 10 == _SVH_DEL)
         .coalesce(1)
         .write.parquet(t5_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(t5_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(t5_dir), extra={"op": "mor-delete"}
     )  # v5
 
-    spark.dataSource.register(_mor_cdf_datasource())
+    mor_src = _mor_cdf_datasource()
+    spark.dataSource.register(mor_src)
     delivered: list[tuple[int, int]] = []  # (batch_id, n_rows)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -5503,12 +5315,10 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run_feed(tag: str, cursor: int | None) -> None:
         state = os.path.join(root, f"reader_state_{tag}")
-        if cursor is not None:
-            os.makedirs(state, exist_ok=True)
-            tmp = os.path.join(state, ".tmp-last")
-            with open(tmp, "w") as fh:
-                json.dump({"version": cursor}, fh)
-            os.replace(tmp, os.path.join(state, "last_committed.json"))
+        if cursor is not None:  # persisted exactly as the reader does
+            mor_src({"log_dir": log_dir, "state_dir": state}).streamReader(
+                None
+            ).commit({"version": cursor})
         q = (
             spark.readStream.format("sparkgraft_mor_cdf")
             .option("log_dir", log_dir)
@@ -5546,7 +5356,7 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     # POSITIVE: the documented recovery — seed from retained v3, then
     # stream from cursor 3: exactly TWO micro-batches, v4's inserts
     # then v5's post-vacuum deletes
-    seed_files = _read_manifest(log_dir, retained[0])["files"]
+    seed_files = read_manifest(log_dir, retained[0])["files"]
     seed = spark.read.parquet(*seed_files).agg(
         F.count("*").cast("long").alias("n"),
         F.sum("cents").cast("long").alias("cents"),
@@ -5597,11 +5407,8 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ckpt_txn_cdf_datasource():
-    # the checkpoint file conventions are OWNED by scans.py (the
-    # checkpointer writes them); import so a rename there cannot
-    # silently desynchronize this reader
-    from sparkgraft.scans import _TXN_CKPT_POINTER, _txn_ckpt_path
-
+    # the checkpoint file conventions (TXN_CKPT_POINTER, txn_ckpt_path)
+    # are sparkgraft.table's — the checkpointer writes them
     base_src = _txn_cdf_datasource()
 
     class CkptTxnCDFReader(base_src.READER):
@@ -5664,23 +5471,21 @@ def _ckpt_txn_cdf_datasource():
             if self._seed_resolved:
                 return
             self._seed_resolved = True
-            ptr = os.path.join(self.log_dir, _TXN_CKPT_POINTER)
+            ptr = os.path.join(self.log_dir, TXN_CKPT_POINTER)
             if self._restored == 0 and os.path.exists(ptr):
                 # fresh start against a checkpointed root: resolve the
                 # seed basis through the pointer — 2 opens, O(1) in
                 # the txn count
                 with self._recorded(ptr) as fh:
                     k = int(fh.read())
-                with self._recorded(_txn_ckpt_path(self.log_dir, k)) as fh:
+                with self._recorded(txn_ckpt_path(self.log_dir, k)) as fh:
                     self._seed = (k, json.load(fh)["tables"])
 
         def _manifest(self, version):
             # delta-form manifests (table_adds), every open RECORDED
             import json
 
-            with self._recorded(
-                os.path.join(self.log_dir, f"v{version}.json")
-            ) as fh:
+            with self._recorded(manifest_path(self.log_dir, version)) as fh:
                 return json.load(fh)
 
         def latestOffset(self):
@@ -5689,18 +5494,14 @@ def _ckpt_txn_cdf_datasource():
                 # batch 0 jumps 0 -> checkpoint txn (the seed)
                 self._last = self._seed[0]
                 return {"version": self._last}
-            head = self._versions()
-            if head and head[-1] > self._last:
-                self._last += 1  # one txn per micro-batch past the seed
-            return {"version": self._last}
+            return super().latestOffset()  # one txn per batch past the seed
 
-        def partitions(self, start, end):
+        def _plan(self, start, end):
             self._ensure_seed()
-            self._last = max(self._last, end["version"])
             P = base_src.PARTITION
             parts = []
-            v0 = start["version"]
-            if self._seed and v0 == 0 and end["version"] >= self._seed[0]:
+            v0 = start
+            if self._seed and v0 == 0 and end >= self._seed[0]:
                 k, tables = self._seed
                 for table in sorted(tables):
                     parts.extend(
@@ -5708,7 +5509,7 @@ def _ckpt_txn_cdf_datasource():
                         for f in sorted(tables[table])
                     )
                 v0 = k
-            for v in range(v0 + 1, end["version"] + 1):
+            for v in range(v0 + 1, end + 1):
                 adds = self._manifest(v)["table_adds"]
                 for table in sorted(adds):
                     parts.extend(
@@ -5717,7 +5518,7 @@ def _ckpt_txn_cdf_datasource():
                     )
             return parts or [P(0, "fact", "insert", "")]
 
-        # read(), commit(), initialOffset(), _versions(): inherited
+        # read(), commit(), initialOffset(), partitions(): inherited
 
     class CkptTxnCDFSource(base_src):
         @classmethod
@@ -5765,7 +5566,7 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CROSS-TABLE CDF OVER A CHECKPOINTED TXN ROOT (the r12 verdict's
     ask #3 — `scan_txn_checkpoint`'s O(tail) resolution composed into
     `stream_cdf_cross_table`'s feed): the delta-form txn root gets its
-    checkpoints (shared writer `_txn_write_checkpoint`, scans.py), and
+    checkpoints (shared writer `txn_write_checkpoint`, table.py), and
     the feed resolves offsets the way the batch reader does — with the
     opens COUNTED through an open log the reader appends every
     metadata read to:
@@ -5804,13 +5605,6 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
 
     from sparkgraft.catalog import load
-    from sparkgraft.scans import (
-        _data_files_of,
-        _read_manifest,
-        _try_publish,
-        _txn_delta_merge,
-        _txn_write_checkpoint,
-    )
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -5841,24 +5635,23 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         adds = {"fact": fact_slices[i]}
         if txn in _CTX_DIM_AT:
             adds["dim"] = dim_slices[_CTX_DIM_AT[txn]]
-        if not _try_publish(txn_dir, txn, [], extra={"table_adds": adds}):
+        if not try_publish(txn_dir, txn, [], extra={"table_adds": adds}):
             raise RuntimeError(f"single-writer CAS lost txn {txn}")
         if txn in _CTX_CKPTS:
-            _txn_write_checkpoint(txn_dir, txn)
+            txn_write_checkpoint(txn_dir, txn)
 
-    spark.dataSource.register(_ckpt_txn_cdf_datasource())
+    ckpt_src = _ckpt_txn_cdf_datasource()
+    spark.dataSource.register(ckpt_src)
 
     def run_feed(tag: str, cursor: int | None) -> tuple[list, str]:
         """Run the feed to exhaustion; returns ([(batch_id, txns,
         tables)], open_log_path). ``cursor`` pre-seeds the reader's
         persisted state (the restarted-consumer case)."""
         state = os.path.join(root, f"reader_state_{tag}")
-        if cursor is not None:
-            os.makedirs(state, exist_ok=True)
-            tmp = os.path.join(state, ".tmp-last")
-            with open(tmp, "w") as fh:
-                json.dump({"version": cursor}, fh)
-            os.replace(tmp, os.path.join(state, "last_committed.json"))
+        if cursor is not None:  # persisted exactly as the reader does
+            ckpt_src({"log_dir": txn_dir, "state_dir": state}).streamReader(
+                None
+            ).commit({"version": cursor})
         open_log = os.path.join(root, f"opens_{tag}.log")
         batches: list = []
 
@@ -5934,7 +5727,7 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_fresh = spark.read.parquet(os.path.join(root, "out_fresh", "b*"))
 
     # seed == batch read of the checkpoint's file map, row-identical
-    with open(os.path.join(txn_dir, f"ckpt-v{seed_v}.json")) as fh:
+    with open(txn_ckpt_path(txn_dir, seed_v)) as fh:
         ck_tables = json.load(fh)["tables"]
     seed_ev = ev_fresh.filter(F.col("change_type") == "seed")
     if seed_ev.filter(F.col("txn") != seed_v).limit(1).count():
@@ -5985,7 +5778,7 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dying) + the streamed deltas
     prefix: dict = {}
     for v in range(1, _CTX_RESTART + 1):
-        _txn_delta_merge(prefix, _read_manifest(txn_dir, v)["table_adds"])
+        txn_delta_merge(prefix, read_manifest(txn_dir, v)["table_adds"])
     ev_re = spark.read.parquet(os.path.join(root, "out_restart", "b*"))
     pre_fact = spark.read.parquet(*sorted(prefix["fact"])).select(
         F.col("o_custkey").alias("custkey"), "cents"
@@ -5999,7 +5792,7 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # direct star recompute inputs, from the txn head
     head: dict = {}
     for v in range(1, _CTX_N + 1):
-        _txn_delta_merge(head, _read_manifest(txn_dir, v)["table_adds"])
+        txn_delta_merge(head, read_manifest(txn_dir, v)["table_adds"])
 
     # r14: the three MV digests (fresh feed, restarted feed, direct
     # head recompute) used to be three sequential star-join collects;
@@ -6097,12 +5890,12 @@ def stream_cdf_rebase_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     commit exactly once). The race is real, not narrated:
 
     - v1: base commit (fact F1 = even orderkeys, dim D1 = even
-      custkeys) through `_txn_commit`.
+      custkeys) through `txn_commit`.
     - Writers A and B both read head v1. A stages fact adds F2 (odd
       orderkeys) and wins v2. B stages dim adds D2 (odd custkeys) and
       FIRST attempts the publish at the version it believed was next —
       a stale absolute map {fact: F1, dim: D1+D2} at v2 — which LOSES
-      the CAS to A (asserted). B then rebases through `_txn_commit`
+      the CAS to A (asserted). B then rebases through `txn_commit`
       (overlay only the tables B writes onto A's head) and lands v3.
 
     What the feed must and must not see — all asserted in-key:
@@ -6129,13 +5922,6 @@ def stream_cdf_rebase_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     re-read per retry, and the feed never re-reads data files it
     already streamed."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import (
-        _data_files_of,
-        _read_manifest,
-        _try_publish,
-        _txn_commit,
-        _txn_head_tables,
-    )
 
     root = os.path.join(
         tempfile.gettempdir(),
@@ -6162,22 +5948,22 @@ def stream_cdf_rebase_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     )
     f1, f2 = fact_slices[0], fact_slices[1]
     d1, d2 = dim_slices[0], dim_slices[1]
-    v1, _, _ = _txn_commit(txn_dir, {"fact": f1, "dim": d1}, read_at=0)
+    v1, _, _ = txn_commit(txn_dir, {"fact": f1, "dim": d1}, read_at=0)
 
     # A and B race from the same read snapshot v1 (A appends the odd
     # fact half f2, B the odd dim half d2 — staged above)
-    v2, a_retries, _ = _txn_commit(
+    v2, a_retries, _ = txn_commit(
         txn_dir, {"fact": f1 + f2}, read_at=v1
     )
     if (v2, a_retries) != (2, 0):
         raise RuntimeError(f"A should win cleanly: v{v2}, {a_retries}")
     stale_map = {"fact": f1, "dim": d1 + d2}  # B's first-attempt view
-    race_happened = not _try_publish(
+    race_happened = not try_publish(
         txn_dir, 2, [], extra={"tables": stale_map}
     )
     if not race_happened:
         raise RuntimeError("B's stale publish must lose the CAS to A")
-    v3, _, _ = _txn_commit(txn_dir, {"dim": d1 + d2}, read_at=v1)
+    v3, _, _ = txn_commit(txn_dir, {"dim": d1 + d2}, read_at=v1)
     if v3 != 3:
         raise RuntimeError(f"B's rebase landed at v{v3}, wanted 3")
 
@@ -6185,7 +5971,7 @@ def stream_cdf_rebase_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     # delta from B's stale map instead of the rebased manifest would
     # retract A's files — phantom deletes of every F2 row
     would_delete = sorted(
-        set(_read_manifest(txn_dir, 2)["tables"]["fact"])
+        set(read_manifest(txn_dir, 2)["tables"]["fact"])
         - set(stale_map["fact"])
     )
     stale_would_retract = would_delete == sorted(f2)
@@ -6239,7 +6025,7 @@ def stream_cdf_rebase_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
         raise RuntimeError("duplicate events — a commit streamed twice")
 
     # event-built tables == head tables (exact frame equality per table)
-    head, tables = _txn_head_tables(txn_dir)
+    head, tables = txn_head_tables(txn_dir)
     ev_fact = ev.filter(F.col("table") == "fact").select(
         "key", "custkey", "cents"
     )

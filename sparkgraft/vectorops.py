@@ -33,6 +33,17 @@ from pyspark.sql import functions as F
 from .catalog import load
 from .proofs import multisets_equal
 from .registry import query
+from .table import (
+    MOR_DELETE_CLASS,
+    commit_snapshot,
+    data_files_of,
+    empty_log,
+    head_version,
+    log_versions,
+    mor_read,
+    read_manifest,
+    split_head_files,
+)
 
 _DIM = 64  # fixed embedding width (FIXTURES.md: embeddings.embedding)
 
@@ -3544,14 +3555,7 @@ def sim_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. The corpus files are never re-read (plan-asserted)."""
     import os
 
-    from sparkgraft.scans import (
-        _MOR_DELETE_CLASS,
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-        _scratch,
-    )
+    from sparkgraft.scans import _scratch
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # index build (pre-delete): frozen full-corpus centroids + code table
@@ -3560,18 +3564,16 @@ def sim_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch(sf_dir, "ivf_index_table")
     log_dir = os.path.join(root, "log")
-    os.makedirs(log_dir, exist_ok=True)
-    for v in os.listdir(log_dir):
-        os.unlink(os.path.join(log_dir, v))
+    empty_log(log_dir)
 
     idx_dir = os.path.join(root, "codes")
     codes.repartition(4, "vec_id").write.mode("overwrite").parquet(idx_dir)
-    _commit_snapshot(
-        log_dir, _data_files_of(idx_dir), extra={"op": "index-build"}
+    commit_snapshot(
+        log_dir, data_files_of(idx_dir), extra={"op": "index-build"}
     )
 
     # v2: the MOR equality-delete — an add-only KB tombstone commit
-    t_dir = os.path.join(root, _MOR_DELETE_CLASS, "t2")
+    t_dir = os.path.join(root, MOR_DELETE_CLASS, "t2")
     (
         e.select("vec_id")
         .filter(F.col("vec_id") % _IVFDEL_MOD == _IVFDEL_REM)
@@ -3579,15 +3581,13 @@ def sim_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(t_dir)
     )
-    _commit_snapshot(
-        log_dir, _data_files_of(t_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        log_dir, data_files_of(t_dir), extra={"op": "mor-delete"}
     )
 
     # THE MAINTENANCE: head manifest -> committed code table ⟕̸ tombstone
-    head = _read_manifest(log_dir, _log_versions(log_dir)[-1])
-    del_seg = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}"
-    data_files = [f for f in head["files"] if del_seg not in f]
-    tomb_files = [f for f in head["files"] if del_seg in f]
+    head = read_manifest(log_dir, head_version(log_dir))
+    data_files, tomb_files = split_head_files(head["files"])
     if not data_files or not tomb_files:
         raise RuntimeError("head manifest lost a file class")
     committed = spark.read.parquet(*data_files)
@@ -3738,7 +3738,7 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids trained on — v2 delta append, v3 equality tombstone for
     vec_id %{_IVFDEL_MOD}=={_IVFDEL_REM}); an embeddings-schema CDF
     streams it, and the maintainer commits ONE index version per
-    micro-batch through `_commit_snapshot`:
+    micro-batch through `commit_snapshot`:
 
     - insert events -> quantized assignment against the FROZEN
       base-trained centroids, over THAT BATCH'S vectors only (asserted:
@@ -3765,14 +3765,10 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from sparkgraft.scans import (
-        _MOR_DELETE_CLASS,
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
+    from sparkgraft.streaming import (
+        _emb_cdf_datasource,
+        _index_feed_maintainer,
     )
-    from sparkgraft.streaming import _emb_cdf_datasource
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     max_id = e.agg(F.max("vec_id")).collect()[0][0]  # bounded scalar
@@ -3791,7 +3787,6 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_root = os.path.join(root, "idx")
     for d in (emb_log, idx_log, idx_root):
         os.makedirs(d)
-    del_seg = f"{os.sep}{_MOR_DELETE_CLASS}{os.sep}"
 
     # base/delta staged in ONE partitioned write (was 2 sequential
     # filter+coalesce(1) scans of embeddings — _stage_slices docstring,
@@ -3803,70 +3798,27 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") >= cut).cast("int"),
         os.path.join(root, "slices"),
     )
-    _commit_snapshot(emb_log, emb_slices[0])  # v1
-    _commit_snapshot(emb_log, emb_slices[1])  # v2
-    t3_dir = os.path.join(root, _MOR_DELETE_CLASS, "t3")
+    commit_snapshot(emb_log, emb_slices[0])  # v1
+    commit_snapshot(emb_log, emb_slices[1])  # v2
+    t3_dir = os.path.join(root, MOR_DELETE_CLASS, "t3")
     (
         e.select("vec_id")
         .filter(F.col("vec_id") % _IVFDEL_MOD == _IVFDEL_REM)
         .coalesce(1)
         .write.parquet(t3_dir)
     )
-    _commit_snapshot(
-        emb_log, _data_files_of(t3_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        emb_log, data_files_of(t3_dir), extra={"op": "mor-delete"}
     )  # v3
 
     # delta row count from the staged slice's parquet footer (metadata
     # count-star) instead of a second filter scan of embeddings
     n_delta = int(spark.read.parquet(*emb_slices[1]).count())
 
-    def _applied_feed_batches() -> set:
-        out = set()
-        for v in _log_versions(idx_log):
-            fb = _read_manifest(idx_log, v).get("feed_batch")
-            if fb is not None:
-                out.add(int(fb))
-        return out
-
-    def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in _applied_feed_batches():
-            return  # redelivered batch: its commit already landed
-        # one source scan per batch (probes + writes share the cache)
-        batch_df.persist()
-        try:
-            # r14: ONE event-kind probe job replaces the two
-            # per-class limit-count jobs (it also materializes the
-            # cache the writes below re-read)
-            kinds = {
-                r["change_type"]
-                for r in batch_df.select("change_type")
-                .distinct()
-                .collect()
-            }
-            adds: list[str] = []
-            if "insert" in kinds:
-                ins = batch_df.filter(
-                    F.col("change_type") == "insert"
-                ).select("vec_id", "embedding")
-                add_dir = os.path.join(idx_root, f"add_b{batch_id:05d}")
-                _ivfq_assign(spark, ins, cq).coalesce(1).write.parquet(
-                    add_dir
-                )
-                adds += _data_files_of(add_dir)
-            if "delete" in kinds:
-                dels = batch_df.filter(
-                    F.col("change_type") == "delete"
-                ).select("vec_id")
-                t_dir = os.path.join(
-                    idx_root, _MOR_DELETE_CLASS, f"b{batch_id:05d}"
-                )
-                dels.coalesce(1).write.parquet(t_dir)
-                adds += _data_files_of(t_dir)
-            if not adds:
-                raise RuntimeError(f"feed batch {batch_id} carried no events")
-            _commit_snapshot(idx_log, adds, extra={"feed_batch": batch_id})
-        finally:
-            batch_df.unpersist()
+    maintain = _index_feed_maintainer(
+        idx_log, idx_root, "vec_id",
+        lambda ins: _ivfq_assign(spark, ins, cq), "feed_batch",
+    )
 
     spark.dataSource.register(_emb_cdf_datasource())
     q = (
@@ -3882,11 +3834,11 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
 
-    if _log_versions(idx_log) != [1, 2, 3]:
-        raise RuntimeError(f"index log wrong: {_log_versions(idx_log)}")
+    if log_versions(idx_log) != [1, 2, 3]:
+        raise RuntimeError(f"index log wrong: {log_versions(idx_log)}")
     # the incremental contract: the delta batch assigned |delta| rows
-    v2_adds = set(_read_manifest(idx_log, 2)["files"]) - set(
-        _read_manifest(idx_log, 1)["files"]
+    v2_adds = set(read_manifest(idx_log, 2)["files"]) - set(
+        read_manifest(idx_log, 1)["files"]
     )
     n_assigned = spark.read.parquet(*sorted(v2_adds)).count()
     if n_assigned != n_delta or n_delta == 0:
@@ -3894,9 +3846,8 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"delta batch assigned {n_assigned} rows, delta has {n_delta}"
         )
 
-    head = _read_manifest(idx_log, _log_versions(idx_log)[-1])["files"]
-    idx_data = [f for f in head if del_seg not in f]
-    idx_tombs = [f for f in head if del_seg in f]
+    head = read_manifest(idx_log, head_version(idx_log))["files"]
+    idx_data, idx_tombs = split_head_files(head)
     if not idx_data or not idx_tombs:
         raise RuntimeError("index head lost a file class")
     committed = spark.read.parquet(*idx_data)
@@ -4051,7 +4002,7 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict's ask #5, ANN half — `dedup_index_asof`'s version-travel
     binding applied to `sim_ivf_index_feed`'s index): every code-table
     commit is STAMPED with the embeddings version whose feed batch
-    produced it (``emb_version`` on `_commit_snapshot`), and AS-OF
+    produced it (``emb_version`` on `commit_snapshot`), and AS-OF
     embeddings-version k resolves the code table as the newest commit
     stamped ≤ k — so a consumer can reproduce yesterday's retrieval:
     the same (vec_id, cell) routing the index served at k, including
@@ -4080,15 +4031,10 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from sparkgraft.scans import (
-        _MOR_DELETE_CLASS,
-        _commit_snapshot,
-        _data_files_of,
-        _log_versions,
-        _mor_read,
-        _read_manifest,
+    from sparkgraft.streaming import (
+        _emb_cdf_datasource,
+        _index_feed_maintainer,
     )
-    from sparkgraft.streaming import _emb_cdf_datasource
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     max_id = e.agg(F.max("vec_id")).collect()[0][0]  # bounded scalar
@@ -4118,75 +4064,27 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") >= cut).cast("int"),
         os.path.join(root, "slices"),
     )
-    _commit_snapshot(emb_log, emb_slices[0])  # v1
-    _commit_snapshot(emb_log, emb_slices[1])  # v2
-    t3_dir = os.path.join(root, _MOR_DELETE_CLASS, "t3")
+    commit_snapshot(emb_log, emb_slices[0])  # v1
+    commit_snapshot(emb_log, emb_slices[1])  # v2
+    t3_dir = os.path.join(root, MOR_DELETE_CLASS, "t3")
     (
         e.select("vec_id")
         .filter(F.col("vec_id") % _IVFDEL_MOD == _IVFDEL_REM)
         .coalesce(1)
         .write.parquet(t3_dir)
     )
-    _commit_snapshot(
-        emb_log, _data_files_of(t3_dir), extra={"op": "mor-delete"}
+    commit_snapshot(
+        emb_log, data_files_of(t3_dir), extra={"op": "mor-delete"}
     )  # v3
 
     # the stamp and the idempotency key are the batch's SOURCE version,
-    # read from its own event rows — never the foreachBatch id, which
-    # resets to 0 on a checkpoint-lost restart while the reader's
-    # state_dir cursor survives (r13 review; the dedup_index_asof
-    # discipline applied to the vector index)
-    def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        # one source scan per batch (probes + writes share the cache)
-        batch_df.persist()
-        try:
-            _maintain_cached(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _maintain_cached(batch_df: DataFrame, batch_id: int) -> None:
-        # r14: ONE probe job over (version, change_type) replaces the
-        # version distinct-collect plus the two per-class limit-count
-        # jobs (it also materializes the cache the writes re-read)
-        probe = (
-            batch_df.select("version", "change_type").distinct().collect()
-        )
-        src_vs = sorted({r["version"] for r in probe})
-        if len(src_vs) != 1:
-            raise RuntimeError(
-                f"batch {batch_id} spans emb versions {sorted(src_vs)} "
-                "— one-commit-per-batch contract broken"
-            )
-        src_v = int(src_vs[0])
-        kinds = {r["change_type"] for r in probe}
-        stamped = {
-            _read_manifest(idx_log, v).get("emb_version")
-            for v in _log_versions(idx_log)
-        }
-        if src_v in stamped:
-            return  # redelivered batch: its stamped commit already landed
-        adds: list[str] = []
-        if "insert" in kinds:
-            ins = batch_df.filter(F.col("change_type") == "insert").select(
-                "vec_id", "embedding"
-            )
-            add_dir = os.path.join(idx_root, f"add_b{batch_id:05d}")
-            _ivfq_assign(spark, ins, cq).coalesce(1).write.parquet(
-                add_dir
-            )
-            adds += _data_files_of(add_dir)
-        if "delete" in kinds:
-            dels = batch_df.filter(F.col("change_type") == "delete").select(
-                "vec_id"
-            )
-            t_dir = os.path.join(
-                idx_root, _MOR_DELETE_CLASS, f"b{batch_id:05d}"
-            )
-            dels.coalesce(1).write.parquet(t_dir)
-            adds += _data_files_of(t_dir)
-        if not adds:
-            raise RuntimeError(f"feed batch {batch_id} carried no events")
-        _commit_snapshot(idx_log, adds, extra={"emb_version": src_v})
+    # read from its own event rows — never the foreachBatch id (r13
+    # review; the dedup_index_asof discipline applied to the vector
+    # index)
+    maintain = _index_feed_maintainer(
+        idx_log, idx_root, "vec_id",
+        lambda ins: _ivfq_assign(spark, ins, cq), "emb_version",
+    )
 
     spark.dataSource.register(_emb_cdf_datasource())
     q = (
@@ -4202,9 +4100,9 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
 
-    idx_versions = _log_versions(idx_log)
+    idx_versions = log_versions(idx_log)
     stamps = [
-        _read_manifest(idx_log, v).get("emb_version") for v in idx_versions
+        read_manifest(idx_log, v).get("emb_version") for v in idx_versions
     ]
     # None guard FIRST (sorted() on a None-bearing list raises the
     # wrong error), then STRICTLY increasing
@@ -4220,15 +4118,15 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = max(
             v
             for v in idx_versions
-            if _read_manifest(idx_log, v)["emb_version"] <= k
+            if read_manifest(idx_log, v)["emb_version"] <= k
         )
-        return _mor_read(
-            spark, _read_manifest(idx_log, v)["files"], "vec_id"
+        return mor_read(
+            spark, read_manifest(idx_log, v)["files"], "vec_id"
         ).localCheckpoint()
 
     def emb_asof(k: int) -> DataFrame:
-        return _mor_read(
-            spark, _read_manifest(emb_log, k)["files"], "vec_id"
+        return mor_read(
+            spark, read_manifest(emb_log, k)["files"], "vec_id"
         )
 
     asof = {k: idx_asof(k) for k in (2, 3)}

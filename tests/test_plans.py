@@ -1350,12 +1350,12 @@ def test_mor_delete_read_is_broadcast_anti_join(spark):
 
     from pyspark.sql import functions as F
 
-    from sparkgraft.scans import (
-        _log_versions,
-        _read_manifest,
-        _scratch,
-        _split_head_files,
+    from sparkgraft.table import (
+        log_versions as _log_versions,
+        read_manifest as _read_manifest,
+        split_head_files as _split_head_files,
     )
+    from sparkgraft.scans import _scratch
 
     sparkgraft.QUERIES["sink_merge_on_read_delete"](spark, SF_DIR).collect()
     log_dir = os.path.join(_scratch(SF_DIR, "mor_delete_table"), "log")

@@ -91,8 +91,10 @@ def test_lazy_init_registry_complete():
 def test_lazy_init_submodule_import_is_light():
     """Importing one submodule must NOT pull in the whole engine (the
     r14 point of the lazy __init__: short-lived Python workers pay only
-    for what the pickled object references)."""
-    code = (
+    for what the pickled object references). `sparkgraft.table` — the
+    table format a worker imports when it unpickles a change-feed
+    reader — must load no operator module at all."""
+    proofs_code = (
         "import sys\n"
         "import sparkgraft.proofs\n"
         "loaded = [m for m in sys.modules if m.startswith('sparkgraft')]\n"
@@ -101,14 +103,73 @@ def test_lazy_init_submodule_import_is_light():
         "assert not heavy, heavy\n"
         "print('OK')\n"
     )
+    table_code = (
+        "import sys\n"
+        "import sparkgraft.table\n"
+        "import sparkgraft\n"
+        "ops = {f'sparkgraft.{m}' for m in sparkgraft._OPERATOR_MODULES}\n"
+        "heavy = [m for m in sys.modules\n"
+        "         if any(m == op or m.startswith(op + '.') for op in ops)]\n"
+        "assert not heavy, heavy\n"
+        "print('OK')\n"
+    )
     env = dict(os.environ)
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
-    res = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        env=env,
-        timeout=120,
+    for code in (proofs_code, table_code):
+        res = subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True,
+            text=True,
+            env=env,
+            timeout=120,
+        )
+        assert res.returncode == 0, res.stderr
+
+
+def test_lazy_getattr_missing_submodule_is_attribute_error():
+    """`sparkgraft.<name>` for a submodule that does not exist stays an
+    AttributeError (what hasattr/getattr callers expect)."""
+    import pytest
+
+    import sparkgraft
+
+    with pytest.raises(AttributeError, match="no_such_module"):
+        sparkgraft.no_such_module
+    assert not hasattr(sparkgraft, "no_such_module")
+
+
+def test_lazy_getattr_surfaces_missing_dependency(tmp_path, monkeypatch):
+    """A submodule that EXISTS but fails on a missing third-party
+    package must surface that ModuleNotFoundError, not be masked as
+    'module sparkgraft has no attribute ...'."""
+    import pytest
+
+    import sparkgraft
+
+    (tmp_path / "needs_missing_dep.py").write_text(
+        "import sparkgraft_no_such_dependency  # noqa: F401\n"
     )
-    assert res.returncode == 0, res.stderr
+    # the submodule lives in a temp dir appended to the package path
+    monkeypatch.setattr(
+        sparkgraft, "__path__", [*sparkgraft.__path__, str(tmp_path)]
+    )
+    with pytest.raises(ModuleNotFoundError) as exc:
+        sparkgraft.needs_missing_dep
+    assert exc.value.name == "sparkgraft_no_such_dependency"
+
+
+def test_write_with_probe_rejects_null_probe(spark):
+    """`collect_set` skips NULLs, so a change row with a NULL version
+    would pass the single-commit guard unseen; the observed write
+    counts NULL probe values on the same pass and raises."""
+    import pytest
+
+    from sparkgraft.streaming import _write_with_probe
+
+    df = spark.createDataFrame(
+        [(1, 10), (None, 20)], "version int, cents long"
+    )
+    out = os.path.join(tempfile.mkdtemp(), "null_probe")
+    with pytest.raises(RuntimeError, match="NULL probe"):
+        _write_with_probe(df, out, "version")

@@ -62,12 +62,12 @@ def test_rewrite_data_files_retires_both_delete_encodings(spark):
     """After the key runs, its log must show: 4 linear commits, a head
     with zero delete-class files and exactly 2 data files, and both
     delete structures live at v3 (equality + positional)."""
-    from sparkgraft.scans import (
-        _log_versions,
-        _read_manifest,
-        _scratch,
-        _split_head_files,
+    from sparkgraft.table import (
+        log_versions as _log_versions,
+        read_manifest as _read_manifest,
+        split_head_files as _split_head_files,
     )
+    from sparkgraft.scans import _scratch
 
     sparkgraft.QUERIES["sink_rewrite_data_files"](spark, SF_DIR)
     log_dir = os.path.join(_scratch(SF_DIR, "rdf_table"), "log")
@@ -86,11 +86,11 @@ def test_rewrite_data_files_digest_matches_predicates(spark):
     """The compacted head must equal the doubly-filtered base: neither
     delete encoding leaked a row through, in either direction."""
     from sparkgraft.catalog import load
-    from sparkgraft.scans import (
-        _read_manifest,
-        _scratch,
-        _split_head_files,
+    from sparkgraft.table import (
+        read_manifest as _read_manifest,
+        split_head_files as _split_head_files,
     )
+    from sparkgraft.scans import _scratch
 
     sparkgraft.QUERIES["sink_rewrite_data_files"](spark, SF_DIR)
     log_dir = os.path.join(_scratch(SF_DIR, "rdf_table"), "log")
@@ -193,12 +193,12 @@ def test_multi_table_publish_crash_protocol(spark):
     the on-disk txn log afterwards: exactly two txn manifests, the head
     binding both tables, and the crashed-then-restaged fact2 files all
     referenced by txn2 and none by txn1."""
-    from sparkgraft.scans import (
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-        _scratch,
+    from sparkgraft.table import (
+        data_files_of as _data_files_of,
+        log_versions as _log_versions,
+        read_manifest as _read_manifest,
     )
+    from sparkgraft.scans import _scratch
 
     sparkgraft.QUERIES["sink_multi_table_publish"](spark, SF_DIR)
     root = _scratch(SF_DIR, "mtp_txn")
@@ -236,13 +236,13 @@ def test_rewrite_delete_race_log_shape(spark):
     """After the key runs: 4 linear commits, the two tombstone commits
     stamped mor-delete, the final commit a rewrite with a delete-free
     head — and the stale staged files still on disk as orphans."""
-    from sparkgraft.scans import (
-        _data_files_of,
-        _log_versions,
-        _read_manifest,
-        _scratch,
-        _split_head_files,
+    from sparkgraft.table import (
+        data_files_of as _data_files_of,
+        log_versions as _log_versions,
+        read_manifest as _read_manifest,
+        split_head_files as _split_head_files,
     )
+    from sparkgraft.scans import _scratch
 
     sparkgraft.QUERIES["sink_rewrite_delete_race"](spark, SF_DIR)
     root = _scratch(SF_DIR, "rdr_table")
@@ -308,7 +308,11 @@ def test_multi_table_conflict_log_merge(spark):
     """After the key runs: three txn manifests; v2 overlays only the
     fact (dim unchanged from v1), v3 overlays only the dim (fact
     carried from v2) — the rebase semantics, checked on disk."""
-    from sparkgraft.scans import _log_versions, _read_manifest, _scratch
+    from sparkgraft.table import (
+        log_versions as _log_versions,
+        read_manifest as _read_manifest,
+    )
+    from sparkgraft.scans import _scratch
 
     sparkgraft.QUERIES["sink_multi_table_conflict"](spark, SF_DIR)
     txn_dir = os.path.join(_scratch(SF_DIR, "mtc_txn"), "txnlog")
@@ -324,7 +328,11 @@ def test_multi_table_vacuum_classes(spark):
     """After the key runs: the crashed staging and txn1's replaced dim
     files are gone from disk; every retained-txn file survives; the
     txn log itself is untouched (3 manifests)."""
-    from sparkgraft.scans import _log_versions, _read_manifest, _scratch
+    from sparkgraft.table import (
+        log_versions as _log_versions,
+        read_manifest as _read_manifest,
+    )
+    from sparkgraft.scans import _scratch
 
     sparkgraft.QUERIES["sink_multi_table_vacuum"](spark, SF_DIR)
     root = _scratch(SF_DIR, "mtv_txn")
@@ -354,12 +362,12 @@ def test_commit_rewrite_validation_and_rebase(spark, tmp_path):
     these cases pin the validation itself."""
     import json
 
-    from sparkgraft.scans import (
+    from sparkgraft.table import (
         CommitConflict,
-        _commit_rewrite,
-        _commit_snapshot,
-        _log_versions,
-        _read_manifest,
+        commit_rewrite as _commit_rewrite,
+        commit_snapshot as _commit_snapshot,
+        log_versions as _log_versions,
+        read_manifest as _read_manifest,
     )
 
     def mklog(name):
@@ -426,7 +434,11 @@ def test_commit_rewrite_validation_and_rebase(spark, tmp_path):
 def test_txn_commit_rebase_and_same_table_conflict(spark, tmp_path):
     """Protocol-level coverage of `_txn_commit`: a disjoint-table racer
     rebases (winner's update survives), a same-table racer aborts."""
-    from sparkgraft.scans import CommitConflict, _txn_commit, _txn_publish
+    from sparkgraft.table import (
+        CommitConflict,
+        txn_commit as _txn_commit,
+        txn_publish as _txn_publish,
+    )
 
     txn = str(tmp_path / "txn")
     import os as _os
@@ -439,7 +451,7 @@ def test_txn_commit_rebase_and_same_table_conflict(spark, tmp_path):
     # B read v1 and writes the DIM: disjoint -> rebases onto A's head
     v3, _, _ = _txn_commit(txn, {"dim": ["d1", "d2"]}, read_at=1)
     assert v3 == 3
-    from sparkgraft.scans import _read_manifest
+    from sparkgraft.table import read_manifest as _read_manifest
 
     head = _read_manifest(txn, 3)["tables"]
     assert head == {"fact": ["f1", "f2"], "dim": ["d1", "d2"]}
@@ -463,7 +475,10 @@ def test_cdf_full_matrix_composition(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from sparkgraft.catalog import load
-    from sparkgraft.scans import _commit_snapshot, _data_files_of
+    from sparkgraft.table import (
+        commit_snapshot as _commit_snapshot,
+        data_files_of as _data_files_of,
+    )
     from sparkgraft.streaming import _mor_cdf_datasource
 
     root = str(tmp_path / "matrix")

@@ -7,11 +7,11 @@ import json
 import os
 import threading
 
-from sparkgraft.scans import (
-    _commit_snapshot,
-    _log_versions,
-    _read_manifest,
-    _try_publish,
+from sparkgraft.table import (
+    commit_snapshot as _commit_snapshot,
+    log_versions as _log_versions,
+    read_manifest as _read_manifest,
+    try_publish as _try_publish,
 )
 
 
@@ -106,7 +106,7 @@ def test_conflicting_rewrites_abort_instead_of_retrying(tmp_path):
     re-publish — re-applying the removes would resurrect rewritten data."""
     import pytest
 
-    from sparkgraft.scans import CommitConflict
+    from sparkgraft.table import CommitConflict
 
     log = tmp_path / "log"
     log.mkdir()

@@ -20,12 +20,12 @@ from pyspark.sql import functions as F
 import sparkgraft
 from conftest import SF_DIR
 from sparkgraft.catalog import load
-from sparkgraft.scans import (
-    _commit_snapshot,
-    _data_files_of,
-    _log_versions,
-    _read_manifest,
-    _split_head_files,
+from sparkgraft.table import (
+    commit_snapshot as _commit_snapshot,
+    data_files_of as _data_files_of,
+    log_versions as _log_versions,
+    read_manifest as _read_manifest,
+    split_head_files as _split_head_files,
 )
 
 SF_DIR_BIG = "/root/testdata/sf0.1"

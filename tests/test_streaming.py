@@ -314,7 +314,10 @@ def test_acid_append_skips_replayed_commit(spark):
     import os
     import tempfile
 
-    from sparkgraft.scans import _log_versions, _read_manifest
+    from sparkgraft.table import (
+        log_versions as _log_versions,
+        read_manifest as _read_manifest,
+    )
 
     out = sparkgraft.QUERIES["stream_acid_append"](spark, SF_DIR)
     got = {(r.window_start, r.event_type, r.n) for r in out.collect()}
