@@ -2644,22 +2644,17 @@ def sink_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     if v1_read.filter(F.expr(_MOR_PRED_SQL)).limit(1).count() == 0:
         raise RuntimeError("v1 lost the deleted rows — time travel broken")
 
-    def mor_read() -> DataFrame:
-        keys = spark.read.parquet(*dels_v2).select("o_orderkey")
-        return spark.read.parquet(*data_v2).join(
-            F.broadcast(keys), "o_orderkey", "left_anti"
-        )
-
     digest = [
         F.count("*").cast("long").alias("n_rows"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .cast("long")
         .alias("cents"),
     ]
-    mor_row = mor_read().agg(*digest).collect()[0]
+    mor = mor_read(spark, head_v2, "o_orderkey")
+    mor_row = mor.agg(*digest).collect()[0]
 
     # v3: the FOLD — rewrite data applying the vector, retire everything.
-    mor_read().coalesce(2).write.mode("overwrite").parquet(fold_dir)
+    mor.coalesce(2).write.mode("overwrite").parquet(fold_dir)
     commit_snapshot(
         log_dir,
         data_files_of(fold_dir),
@@ -4717,7 +4712,7 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{len(dels_pre)} delete files"
         )
 
-    def mor_read() -> DataFrame:
+    def _mor_read() -> DataFrame:
         eq_keys = spark.read.parquet(*data_files_of(eq_dir)).select(
             "o_orderkey"
         )
@@ -4731,7 +4726,7 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("file_path", "row_index")
         )
 
-    mor = mor_read()
+    mor = _mor_read()
     mor_plan = mor._jdf.queryExecution().optimizedPlan().toString()
     if mor_plan.count("LeftAnti") != 2:
         raise RuntimeError(
@@ -4751,7 +4746,7 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file count (a host whose bin-packing reads the base as one scan
     # partition would emit 1 file and silently break the oracle's
     # files_after=2), the sink_auto_compaction precedent
-    mor_read().repartition(2).write.mode("overwrite").parquet(clean_dir)
+    _mor_read().repartition(2).write.mode("overwrite").parquet(clean_dir)
     clean_files = data_files_of(clean_dir)
     if len(clean_files) != 2:
         raise RuntimeError(

@@ -1169,8 +1169,6 @@ def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
     ``redelivery`` names how a batch whose commit already landed is
     recognised and skipped:
 
-    - ``"head_count"``: batch b's commit IS index version b+1 (only
-      this feed writes the log, one commit per batch);
     - ``"feed_batch"``: every commit stamps ``feed_batch=b`` — survives
       other writers (compaction) interleaving commits;
     - any other name is a SOURCE-VERSION stamp: every commit stamps
@@ -1184,7 +1182,7 @@ def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
     Scale: per-batch cost is the batch's delta rows through
     ``transform`` plus a KB commit; the stamp check is a KB manifest
     walk."""
-    by_source = redelivery not in ("head_count", "feed_batch")
+    by_source = redelivery != "feed_batch"
 
     def stamps(field: str) -> set:
         return {
@@ -1193,9 +1191,7 @@ def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
         }
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        if redelivery == "head_count" and head_version(idx_log) > batch_id:
-            return  # redelivered batch: the commit already landed
-        if redelivery == "feed_batch" and batch_id in stamps("feed_batch"):
+        if not by_source and batch_id in stamps("feed_batch"):
             return  # redelivered batch: its commit already landed
         batch_df.persist()
         try:
@@ -1209,9 +1205,7 @@ def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
                 .collect()
             )
             kinds = {r["change_type"] for r in probe}
-            stamp = None
-            if redelivery == "feed_batch":
-                stamp = {"feed_batch": batch_id}
+            stamp = {"feed_batch": batch_id}
             if by_source:
                 src_vs = sorted({r["version"] for r in probe})
                 if len(src_vs) > 1:
@@ -1219,6 +1213,11 @@ def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
                         f"batch {batch_id} spans source versions {src_vs} "
                         "— one-commit-per-batch contract broken"
                     )
+                # An empty batch is a metadata-only source commit
+                # (`dedup_index_schema_evolution`'s add-column). A batch
+                # LOST upstream also arrives empty; the as-of keys catch
+                # it after the stream by requiring exactly 3 strictly
+                # increasing stamps in the index log.
                 if not src_vs or src_vs[0] in stamps(redelivery):
                     return  # metadata-only commit, or redelivered
                 stamp = {redelivery: int(src_vs[0])}
@@ -4608,11 +4607,11 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _payload_cdf_datasource(name, key, payload, payload_type, scope):
+def _payload_cdf_datasource(name, key, payload, payload_type):
     """A MOR-aware change feed over a (``key``, ``payload``) snapshot
     log: the shared `_log_cdf_reader_base` planner and sequence scoping,
-    streaming (version, change_type, key, payload) events. Equality-only
-    — ``scope`` names why positional deletes are out of the feed."""
+    streaming (version, change_type, key, payload) events. Equality-only:
+    positional deletes raise."""
     from pyspark.sql import types as T
     from pyspark.sql.datasource import DataSource
 
@@ -4628,8 +4627,8 @@ def _payload_cdf_datasource(name, key, payload, payload_type, scope):
                 is_pos_delete_file(t) for t in partition.prior_dels
             ):
                 raise RuntimeError(
-                    "positional delete vectors are out of this feed's "
-                    f"scope — {scope}"
+                    "positional delete vectors are out of this "
+                    "equality-only feed's scope"
                 )
             t = pq.read_table(partition.path, columns=[key, payload])
             rows = zip(
@@ -4679,8 +4678,7 @@ def _doc_cdf_datasource():
     from pyspark.sql import types as T
 
     return _payload_cdf_datasource(
-        "sparkgraft_doc_cdf", "doc_id", "text", T.StringType(),
-        "corpora delete by doc key",
+        "sparkgraft_doc_cdf", "doc_id", "text", T.StringType()
     )
 
 
@@ -5144,7 +5142,7 @@ def _emb_cdf_datasource():
 
     return _payload_cdf_datasource(
         "sparkgraft_emb_cdf", "vec_id", "embedding",
-        T.ArrayType(T.FloatType()), "vector stores delete by id",
+        T.ArrayType(T.FloatType()),
     )
 
 

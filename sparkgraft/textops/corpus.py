@@ -2031,10 +2031,10 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
       band-key files anti-joined against the union of tombstones —
       retirement is O(deleted), never a re-shingle.
 
-    Exactly-once: the maintainer skips a redelivered batch when the
-    index log head already covers it (index version N+1 == feed batch
-    N — the `stream_acid_append` txn-id discipline; Spark checkpoints
-    AFTER foreachBatch, so replays must be no-ops, not double-commits).
+    Exactly-once: every index commit stamps ``feed_batch`` and the
+    maintainer skips a redelivered batch a manifest already covers (the
+    `stream_acid_append` txn-id discipline; Spark checkpoints AFTER
+    foreachBatch, so replays must be no-ops, not double-commits).
 
     THE PROOF the ask names: index-after-feed == index-rebuilt-from-
     head, exact frame equality on (doc_id, band, band_key) across the
@@ -2102,7 +2102,7 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # THE MAINTAINER: one index-table commit per feed micro-batch
     maintain = _index_feed_maintainer(
         idx_log, idx_root, "doc_id",
-        lambda ins: band_keys(minhash_signatures(ins)), "head_count",
+        lambda ins: band_keys(minhash_signatures(ins)), "feed_batch",
     )
 
     spark.dataSource.register(_doc_cdf_datasource())
@@ -2257,8 +2257,8 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed batches 1:1 once maintenance commits interleave, so the
     maintainer stamps ``feed_batch`` INTO each index commit and skips
     any batch a manifest already covers — the txn-id discipline that
-    version arithmetic (`dedup_index_maintain`'s simpler check) cannot
-    provide once other writers touch the log.
+    version arithmetic cannot provide once other writers touch the
+    log.
 
     Final proof: head index read (tombstone-free) == index rebuilt
     from the docs head's live rows, exact frame equality.
