@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load
-from .registry import query
+from .registry import key_root, query
 
 _MAGIC = b"Obj\x01"
 _BLOCK_ROWS = 1000
@@ -454,15 +454,7 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle restates over the source table, proving the binary round-trip
     lost nothing. Java-Avro interop for the written files is pinned in
     tests/test_round6_ops.py via the reference avro-1.12.1 reader."""
-    import shutil
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-avro-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = key_root(sf_dir, "avro")
     spark.dataSource.register(_avro_datasource())
     (
         load(spark, sf_dir, "orders")
@@ -524,15 +516,7 @@ def scan_avro_deflate_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_round7_ops.py. Scale: same one-part-file-per-task
     write / partition-per-file read as the null-codec key; deflate adds
     CPU per block, never a driver touch."""
-    import shutil
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-avro-defl-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = key_root(sf_dir, "avro-defl")
     spark.dataSource.register(_avro_datasource())
     (
         load(spark, sf_dir, "events")

@@ -12,6 +12,9 @@ weaker rows-only check.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,3 +37,32 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+_SCRATCH = os.path.join(tempfile.gettempdir(), "sparkgraft_sinks")
+
+
+def _scratch(sf_dir: str, name: str) -> str:
+    # Per-process token: every _scratch consumer writes then reads back
+    # within one invocation, so pid isolation makes concurrent bench +
+    # preflight runs on the same sf_dir race-free (same fix the bucketed
+    # join warehouse got).
+    tag = sf_dir.strip("/").replace("/", "_")
+    return os.path.join(_SCRATCH, f"{tag}_pid{os.getpid()}", name)
+
+
+def key_root(sf_dir: str, tag: str) -> str:
+    """A key's private scratch root, emptied and created anew.
+
+    One directory per (tag, sf dir, process): concurrent bench, preflight
+    and test runs on the same sf dir never share or clear each other's
+    logs, checkpoints or sink output, and a rerun in the same process
+    starts from nothing. Tests rebuild this path to inspect what a key
+    left behind, so its layout is part of the key's contract."""
+    root = os.path.join(
+        tempfile.gettempdir(),
+        f"sg-{tag}-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
+    )
+    shutil.rmtree(root, ignore_errors=True)
+    os.makedirs(root)
+    return root

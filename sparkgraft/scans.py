@@ -9,13 +9,12 @@ from __future__ import annotations
 
 import functools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import TABLES, load
-from .registry import query
+from .registry import _SCRATCH, _scratch, query
 from .table import (
     CommitConflict,
     EXPIRED_SUFFIX,
@@ -30,6 +29,7 @@ from .table import (
     log_versions,
     manifest_path,
     mor_read,
+    publish_checkpoint,
     read_manifest,
     split_head_files,
     tree_files,
@@ -41,17 +41,6 @@ from .table import (
     txn_publish,
     txn_write_checkpoint,
 )
-
-_SCRATCH = os.path.join(tempfile.gettempdir(), "sparkgraft_sinks")
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    # Per-process token: every _scratch consumer writes then reads back
-    # within one invocation, so pid isolation makes concurrent bench +
-    # preflight runs on the same sf_dir race-free (same fix the bucketed
-    # join warehouse got).
-    tag = sf_dir.strip("/").replace("/", "_")
-    return os.path.join(_SCRATCH, f"{tag}_pid{os.getpid()}", name)
 
 
 @query(
@@ -3141,19 +3130,9 @@ def scan_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         if i + 1 == ckpt_at:
             # checkpointer pays the full replay ONCE, then readers don't
             state = _replay(ckpt_at, [])
-            tmp = os.path.join(log_dir, f".ckpt-tmp-{os.getpid()}")
-            with open(tmp, "w") as fh:
-                json.dump({"version": ckpt_at, "files": sorted(state)}, fh)
-            try:
-                os.link(tmp, txn_ckpt_path(log_dir, ckpt_at))
-            except FileExistsError:
-                pass
-            finally:
-                os.unlink(tmp)
-            ptmp = os.path.join(log_dir, f".lastckpt-tmp-{os.getpid()}")
-            with open(ptmp, "w") as fh:
-                fh.write(str(ckpt_at))
-            os.replace(ptmp, os.path.join(log_dir, TXN_CKPT_POINTER))
+            publish_checkpoint(
+                log_dir, ckpt_at, {"version": ckpt_at, "files": sorted(state)}
+            )
 
     # Checkpoint-based head resolution: pointer -> checkpoint -> tail.
     opened: list[str] = []
@@ -5762,7 +5741,7 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
     tomb = spark.read.parquet(*dels_pre).select("o_orderkey")
     digest = [
         F.count("*").cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("cents"),
+        F.coalesce(F.sum("cents"), F.lit(0)).cast("long").alias("cents"),
     ]
 
     # v4: THE REWRITE — per generation, under that generation's spec.
@@ -5780,6 +5759,8 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
     rw2 = os.path.join(root, "rw_gen2")
     g1_files = [f for f in data_pre if f.startswith(gen1_dir)]
     g2_files = [f for f in data_pre if f.startswith(gen2_dir)]
+    if set(g1_files) | set(g2_files) != set(data_pre):
+        raise RuntimeError("pre head holds a file of neither generation")
     obs1, obs2 = Observation(), Observation()
     (
         spark.read.parquet(*g1_files)
@@ -5866,7 +5847,11 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     # 3. THE FEED: zero events for the rewrite commit, replay == head
-    from sparkgraft.streaming import _mor_cdf_datasource
+    from sparkgraft.streaming import (
+        _drain_feed,
+        _mor_cdf_datasource,
+        _signed_net,
+    )
 
     out = os.path.join(root, "feed_out")
     ckpt = os.path.join(root, "feed_ckpt")
@@ -5878,18 +5863,7 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
             os.path.join(out, f"b{batch_id:05d}")
         )
 
-    q = (
-        spark.readStream.format("sparkgraft_mor_cdf")
-        .option("log_dir", log_dir)
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_feed(spark, "sparkgraft_mor_cdf", sink, ckpt, log_dir=log_dir)
 
     feed = spark.read.parquet(os.path.join(out, "b*"))
     vs = {r["version"] for r in feed.select("version").distinct().collect()}
@@ -5897,15 +5871,11 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
         raise RuntimeError("the rewrite commit streamed events")
     if vs != {1, 2, 3}:
         raise RuntimeError(f"feed saw versions {sorted(vs)}, wanted 1-3")
-    sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
-    net = feed.agg(
-        F.sum(sign).cast("long").alias("n"),
-        F.sum(sign * F.col("cents")).cast("long").alias("cents"),
-    ).collect()[0]
-    if (net["n"], net["cents"]) != (post_row["n"], post_row["cents"]):
+    net = _signed_net(feed)
+    if net != (post_row["n"], post_row["cents"]):
         raise RuntimeError(
             f"signed feed replay diverged from compacted head: "
-            f"{tuple(net)} vs {tuple(post_row)}"
+            f"{net} vs {tuple(post_row)}"
         )
 
     return spark.range(1).select(

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load
-from .registry import query
+from .registry import _scratch, query
 
 #: aggregate name -> (phase-1 partial, phase-2 merge builder)
 _ALGEBRAIC = {"count", "sum", "min", "max", "avg"}
@@ -306,21 +306,13 @@ def join_aqe_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips the split to preserve the join's output partitioning for the
     downstream exchange."""
     global _LAST_AQE_SKEW_PLAN
-    import os
-    import tempfile
-
     # defaultless confs (adaptive.autoBroadcastJoinThreshold) read as
     # None and must be UNSET on restore, not set-to-None
     saved = {k: spark.conf.get(k, None) for k in _AQE_SKEW_CONFS}
     for k, v in _AQE_SKEW_CONFS.items():
         spark.conf.set(k, v)
     try:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            "sparkgraft_sinks",
-            f"{sf_dir.strip('/').replace('/', '_')}_pid{os.getpid()}",
-            "aqe_skew_fact",
-        )
+        out = _scratch(sf_dir, "aqe_skew_fact")
         (
             load(spark, sf_dir, "lineitem")
             .select(

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import load
-from .registry import query
+from .registry import key_root, query
 
 # Fixed-width layout for the custom-source file: the classic mainframe/
 # log-processing record shape a Hadoop InputFormat would parse.
@@ -279,15 +279,8 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     and both must equal the source count the oracle states. Per-pid
     scratch dir — concurrent runs on the same sf_dir can't cross-read."""
     import os
-    import shutil
-    import tempfile
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-pysink-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = key_root(sf_dir, "pysink")
     spark.dataSource.register(_roundtrip_sink())
     (
         load(spark, sf_dir, "events")

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkgraft.proofs import multisets_equal
-from sparkgraft.registry import query
+from sparkgraft.registry import key_root, query
 from sparkgraft.table import (
     MOR_DELETE_CLASS,
     TXN_CKPT_POINTER,
@@ -401,11 +401,7 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet directory (the production path for arbitrary sinks), then the
     written data is read back and summarized — proving the sink saw every
     row exactly once."""
-    # pid token: concurrent preflight/test runs on the same sf_dir must
-    # not rmtree each other's sink output (same fix as scans._scratch).
-    out = _staging_root(sf_dir, f"foreach-out-pid{os.getpid()}")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = key_root(sf_dir, "foreach-out")
 
     src = _events_stream(spark, _stage_events(sf_dir))
 
@@ -590,9 +586,7 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_cdc_latest's SQL)."""
     from pyspark.sql import Window
 
-    base = _staging_root(sf_dir, f"cdc-state-pid{os.getpid()}")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
+    base = key_root(sf_dir, "cdc-state")
     version = {"n": 0}
 
     cols = ["user_id", "event_type", "event_id", "ts", "value"]
@@ -1021,16 +1015,8 @@ def stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate. Per-pid output dir; money as int64 cents in the sink
     protocol itself."""
     import os
-    import shutil
-    import tempfile
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-streamsink-{os.path.basename(sf_dir.rstrip('/'))}"
-        f"-pid{os.getpid()}",
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = key_root(sf_dir, "streamsink")
     spark.dataSource.register(_stream_sink_source())
     src = _events_stream(spark, _stage_events(sf_dir), max_files=1)
     q = (
@@ -1157,6 +1143,67 @@ def _write_with_probe(batch_df: DataFrame, path: str, probe_col) -> list:
     return obs.get["p"]
 
 
+def _drain_feed(
+    spark: SparkSession, source: str, sink, checkpoint: str, **options
+) -> None:
+    """Run the registered feed ``source`` (with reader ``options``) into
+    the foreachBatch ``sink`` until every available commit is delivered,
+    then stop the query. A sink that raises fails the drain:
+    ``processAllAvailable`` re-raises it as a ``StreamingQueryException``
+    carrying the sink's message, which crash-injection callers catch."""
+    q = (
+        spark.readStream.format(source)
+        .options(**options)
+        .load()
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _one_commit_sink(out: str, planned: dict[int, int]):
+    """The foreachBatch sink of a feed whose every micro-batch is exactly
+    one commit read as ``planned[version]`` partitions: it writes batch
+    ``id`` to ``out/b{id:05d}`` and raises on a batch that spans several
+    versions or ran a different partition count than planned. The count
+    is probed BEFORE the action, so it reflects the source's per-file
+    planning; the version probe then rides the write as an observed
+    metric — one job per batch."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        nparts = batch_df.rdd.getNumPartitions()
+        vs = sorted(
+            _write_with_probe(
+                batch_df, os.path.join(out, f"b{batch_id:05d}"), "version"
+            )
+        )
+        if len(vs) != 1:
+            raise RuntimeError(f"batch {batch_id} spans versions {vs}")
+        if nparts != planned[vs[0]]:
+            raise RuntimeError(
+                f"batch {batch_id} (v{vs[0]}) ran {nparts} partitions, "
+                f"planned {planned[vs[0]]} work units"
+            )
+
+    return sink
+
+
+def _signed_net(feed: DataFrame) -> tuple[int, int]:
+    """Replay a change feed as signed events (delete = -1, else +1):
+    the net row count and net ``cents`` it leaves, which must equal the
+    head read's count and sum."""
+    sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
+    r = feed.agg(
+        F.sum(sign).cast("long").alias("n"),
+        F.sum(sign * F.col("cents")).cast("long").alias("cents"),
+    ).collect()[0]
+    return (r["n"], r["cents"])
+
+
 def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
     """The foreachBatch sink that maintains an INDEX TABLE (a snapshot
     log under ``idx_log``) from a keyed change feed
@@ -1278,11 +1325,7 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of corpus size; the sink writes only per-batch UPDATE
     rows (changed keys), never snapshots."""
     staged = _stage_events_quartiles(sf_dir)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-restart-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "restart")
     src = os.path.join(root, "src")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
@@ -1429,11 +1472,7 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch regardless of history; nothing here is corpus-sized
     driver state."""
     staged = _stage_events_quartiles(sf_dir)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-e1sink-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "e1sink")
     src = os.path.join(root, "src")
     ckpt = os.path.join(root, "ckpt")
     data = os.path.join(root, "data")
@@ -1553,11 +1592,7 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     real format checkpoints the log — same contract); concurrent batch
     writers to OTHER tables never contend."""
     staged = _stage_events_quartiles(sf_dir)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-acidapp-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "acidapp")
     src = os.path.join(root, "src")
     ckpt = os.path.join(root, "ckpt")
     data = os.path.join(root, "data")
@@ -1774,11 +1809,7 @@ def stream_snapshot_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributes file reads without touching the offset protocol."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdf-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdf")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
@@ -1932,11 +1963,7 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB incremental-view pattern."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfdel-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfdel")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
@@ -1968,39 +1995,12 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # partition-count probe BEFORE the action so it still reflects
-        # the source's per-delta-file planning; the version probe then
-        # rides the write as an observed metric — one job per batch
-        nparts = batch_df.rdd.getNumPartitions()
-        vs = sorted(
-            _write_with_probe(
-                batch_df, os.path.join(out, f"b{batch_id:05d}"), "version"
-            )
-        )
-        if len(vs) != 1:
-            raise RuntimeError(f"batch {batch_id} spans versions {vs}")
-        if nparts != delta_files[vs[0]]:
-            raise RuntimeError(
-                f"batch {batch_id} (v{vs[0]}) ran {nparts} partitions, "
-                f"commit's delta is {delta_files[vs[0]]} files — "
-                "reads are not per-delta-file"
-            )
-
-    q = (
-        spark.readStream.format("sparkgraft_snapshot_cdf_partitioned")
-        .option("log_dir", log_dir)
-        .option("emit_deletes", "true")
-        .option("state_dir", os.path.join(root, "reader_state"))
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
+    _drain_feed(
+        spark, "sparkgraft_snapshot_cdf_partitioned",
+        _one_commit_sink(out, delta_files), ckpt,
+        log_dir=log_dir, emit_deletes="true",
+        state_dir=os.path.join(root, "reader_state"),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     feed = spark.read.parquet(os.path.join(out, "b*"))
     # ADVICE vacuity guard: the COW commit must actually delete rows —
@@ -2017,11 +2017,7 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"COW delete is vacuous: v2 events {v2_counts} — the delete "
             "count must strictly exceed the rewrite's insert count"
         )
-    sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
-    net = feed.agg(
-        F.sum(sign).cast("long").alias("n"),
-        F.sum(sign * F.col("cents")).cast("long").alias("cents"),
-    ).collect()[0]
+    net = _signed_net(feed)
 
     head_files = read_manifest(log_dir, head_version(log_dir))["files"]
     head = spark.read.parquet(*head_files).agg(
@@ -2030,7 +2026,7 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     ).collect()[0]
-    if (net["n"], net["cents"]) != (head["n"], head["cents"]):
+    if net != (head["n"], head["cents"]):
         raise RuntimeError(
             f"signed feed replay diverged from head: {net} vs {head}"
         )
@@ -2255,11 +2251,7 @@ def stream_snapshot_cdf_partitioned(
     the simple twin — this key owns the distribution proof."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfpart-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfpart")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
@@ -2282,36 +2274,10 @@ def stream_snapshot_cdf_partitioned(
 
     spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # nparts probed pre-action (plan shape); the version probe
-        # rides the write as an observed metric — one job per batch
-        nparts = batch_df.rdd.getNumPartitions()
-        vs = sorted(
-            _write_with_probe(
-                batch_df, os.path.join(out, f"b{batch_id:05d}"), "version"
-            )
-        )
-        if len(vs) != 1:
-            raise RuntimeError(f"batch {batch_id} spans versions {vs}")
-        want = files_per_commit[vs[0]]
-        if nparts != want:
-            raise RuntimeError(
-                f"batch {batch_id} (v{vs[0]}) ran {nparts} partitions, "
-                f"commit added {want} files — reads are not per-file"
-            )
-
-    q = (
-        spark.readStream.format("sparkgraft_snapshot_cdf_partitioned")
-        .option("log_dir", log_dir)
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
+    _drain_feed(
+        spark, "sparkgraft_snapshot_cdf_partitioned",
+        _one_commit_sink(out, files_per_commit), ckpt, log_dir=log_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     return (
         spark.read.parquet(os.path.join(out, "b*"))
@@ -2697,11 +2663,7 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     CDF pays inside retention."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfmor-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfmor")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
@@ -2770,42 +2732,13 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(_mor_cdf_datasource())
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # nparts probed pre-action (plan shape); the version probe
-        # rides the write as an observed metric — one job per batch
-        nparts = batch_df.rdd.getNumPartitions()
-        vs = sorted(
-            _write_with_probe(
-                batch_df, os.path.join(out, f"b{batch_id:05d}"), "version"
-            )
-        )
-        if len(vs) != 1:
-            raise RuntimeError(f"batch {batch_id} spans versions {vs}")
-        if nparts != work_units[vs[0]]:
-            raise RuntimeError(
-                f"batch {batch_id} (v{vs[0]}) ran {nparts} partitions, "
-                f"planned {work_units[vs[0]]} work units"
-            )
-
-    q = (
-        spark.readStream.format("sparkgraft_mor_cdf")
-        .option("log_dir", log_dir)
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
+    _drain_feed(
+        spark, "sparkgraft_mor_cdf", _one_commit_sink(out, work_units), ckpt,
+        log_dir=log_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     feed = spark.read.parquet(os.path.join(out, "b*"))
-    sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
-    net = feed.agg(
-        F.sum(sign).cast("long").alias("n"),
-        F.sum(sign * F.col("cents")).cast("long").alias("cents"),
-    ).collect()[0]
+    net = _signed_net(feed)
 
     # head MOR read, sequence-scoped: tombstones mask only data files
     # committed at a STRICTLY lower version (v1 here); the v3 upsert
@@ -2824,10 +2757,10 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]
     )
-    if (net["n"], net["cents"]) != (head["n"], head["cents"]):
+    if net != (head["n"], head["cents"]):
         raise RuntimeError(
             f"signed feed replay diverged from head MOR read: "
-            f"{tuple(net)} vs {tuple(head)}"
+            f"{net} vs {tuple(head)}"
         )
 
     return (
@@ -2915,11 +2848,7 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     between a feed and a firehose."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfcompact-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfcompact")
     log_dir = os.path.join(root, "log")
     out = os.path.join(root, "out")
     out_churn = os.path.join(root, "out_churn")
@@ -3041,19 +2970,10 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
                         f"planned {work_units[v]} work units"
                     )
 
-        q = (
-            spark.readStream.format("sparkgraft_mor_cdf")
-            .option("log_dir", log_dir)
-            .option("rewrite_as_churn", str(churn).lower())
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
+        _drain_feed(
+            spark, "sparkgraft_mor_cdf", sink, ckpt, log_dir=log_dir,
+            rewrite_as_churn=str(churn).lower(),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
         if not churn and not any(
             vs == [] for vs in batch_versions.values()
         ):
@@ -3062,15 +2982,6 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feed = run_feed(out, churn=False)
     confused = run_feed(out_churn, churn=True)
-
-    sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
-
-    def signed_net(df: DataFrame):
-        r = df.agg(
-            F.sum(sign).cast("long").alias("n"),
-            F.sum(sign * F.col("cents")).cast("long").alias("cents"),
-        ).collect()[0]
-        return (r["n"], r["cents"])
 
     # head read: the compacted clean file masked by the v4 tombstone
     # (sequence 3 < 4, so it applies), plus the upsert + append files
@@ -3081,9 +2992,9 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(spark.read.parquet(*data_files_of(up_dir)))
         .unionByName(spark.read.parquet(*data_files_of(app_dir)))
     )
-    head_net = signed_net(head.withColumn("change_type", F.lit("insert")))
+    head_net = _signed_net(head.withColumn("change_type", F.lit("insert")))
 
-    net = signed_net(feed)
+    net = _signed_net(feed)
     if net != head_net:
         raise RuntimeError(
             f"signed feed replay diverged from head: {net} vs {head_net}"
@@ -3092,7 +3003,7 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the NEGATIVE proof: the label-confused replay must break equality,
     # and by EXACTLY the v2 masked digest (its churn deletes the v2
     # rows a second time, then re-inserts only the survivors)
-    churn_net = signed_net(confused)
+    churn_net = _signed_net(confused)
     if churn_net == head_net:
         raise RuntimeError(
             "label-confused reader replayed to the head digest — the "
@@ -3182,11 +3093,7 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     never carries values, only positions."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfpos-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfpos")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
@@ -3255,42 +3162,13 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(_mor_cdf_datasource())
     work_units = {1: 2, 2: len(base_files), 3: len(base_files), 4: 1}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # nparts probed pre-action (plan shape); the version probe
-        # rides the write as an observed metric — one job per batch
-        nparts = batch_df.rdd.getNumPartitions()
-        vs = sorted(
-            _write_with_probe(
-                batch_df, os.path.join(out, f"b{batch_id:05d}"), "version"
-            )
-        )
-        if len(vs) != 1:
-            raise RuntimeError(f"batch {batch_id} spans versions {vs}")
-        if nparts != work_units[vs[0]]:
-            raise RuntimeError(
-                f"batch {batch_id} (v{vs[0]}) ran {nparts} partitions, "
-                f"planned {work_units[vs[0]]} work units"
-            )
-
-    q = (
-        spark.readStream.format("sparkgraft_mor_cdf")
-        .option("log_dir", log_dir)
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
+    _drain_feed(
+        spark, "sparkgraft_mor_cdf", _one_commit_sink(out, work_units), ckpt,
+        log_dir=log_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     feed = spark.read.parquet(os.path.join(out, "b*"))
-    sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
-    net = feed.agg(
-        F.sum(sign).cast("long").alias("n"),
-        F.sum(sign * F.col("cents")).cast("long").alias("cents"),
-    ).collect()[0]
+    net = _signed_net(feed)
 
     # head read: base rows minus ALL DV-masked positions, plus the append
     dv_all = spark.read.parquet(
@@ -3313,10 +3191,10 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]
     )
-    if (net["n"], net["cents"]) != (head["n"], head["cents"]):
+    if net != (head["n"], head["cents"]):
         raise RuntimeError(
             f"signed feed replay diverged from position-masked head: "
-            f"{tuple(net)} vs {tuple(head)}"
+            f"{net} vs {tuple(head)}"
         )
 
     return (
@@ -3380,11 +3258,7 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete files per task."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfmixed-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfmixed")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
@@ -3450,42 +3324,13 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v2 plans BOTH kinds: |pre-image| equality units + |pre-image| DV units
     work_units = {1: 2, 2: 2 * len(base_files), 3: 1}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # nparts probed pre-action (plan shape); the version probe
-        # rides the write as an observed metric — one job per batch
-        nparts = batch_df.rdd.getNumPartitions()
-        vs = sorted(
-            _write_with_probe(
-                batch_df, os.path.join(out, f"b{batch_id:05d}"), "version"
-            )
-        )
-        if len(vs) != 1:
-            raise RuntimeError(f"batch {batch_id} spans versions {vs}")
-        if nparts != work_units[vs[0]]:
-            raise RuntimeError(
-                f"batch {batch_id} (v{vs[0]}) ran {nparts} partitions, "
-                f"planned {work_units[vs[0]]} work units"
-            )
-
-    q = (
-        spark.readStream.format("sparkgraft_mor_cdf")
-        .option("log_dir", log_dir)
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
+    _drain_feed(
+        spark, "sparkgraft_mor_cdf", _one_commit_sink(out, work_units), ckpt,
+        log_dir=log_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     feed = spark.read.parquet(os.path.join(out, "b*"))
-    sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
-    net = feed.agg(
-        F.sum(sign).cast("long").alias("n"),
-        F.sum(sign * F.col("cents")).cast("long").alias("cents"),
-    ).collect()[0]
+    net = _signed_net(feed)
 
     # head: base minus equality keys minus DV positions, plus the append
     eq_keys = spark.read.parquet(*data_files_of(eq_dir)).select(
@@ -3509,10 +3354,10 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]
     )
-    if (net["n"], net["cents"]) != (head["n"], head["cents"]):
+    if net != (head["n"], head["cents"]):
         raise RuntimeError(
             f"signed feed replay diverged from doubly-masked head: "
-            f"{tuple(net)} vs {tuple(head)}"
+            f"{net} vs {tuple(head)}"
         )
 
     return (
@@ -3654,11 +3499,7 @@ def stream_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     latency."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfmv-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfmv")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     mv_root = os.path.join(root, "mv")
@@ -3698,19 +3539,10 @@ def stream_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
     maintain, mv_read = _mv_maintainer(spark, mv_root)
 
-    q = (
-        spark.readStream.format("sparkgraft_snapshot_cdf_partitioned")
-        .option("log_dir", log_dir)
-        .option("emit_deletes", "true")
-        .load()
-        .writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", ckpt)
-        .start()
+    _drain_feed(
+        spark, "sparkgraft_snapshot_cdf_partitioned", maintain, ckpt,
+        log_dir=log_dir, emit_deletes="true",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     n_versions = len(
         [d for d in os.listdir(mv_root) if d.startswith("v")]
@@ -3810,11 +3642,7 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-mvxo-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "mvxo")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     mv_root = os.path.join(root, "mv")
@@ -3858,23 +3686,11 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         maintain(batch_df, batch_id)
 
     def run_phase() -> None:
-        q = (
-            spark.readStream.format("sparkgraft_snapshot_cdf_partitioned")
-            .option("log_dir", log_dir)
-            .option("emit_deletes", "true")
-            .option("state_dir", os.path.join(root, "reader_state"))
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
+        _drain_feed(
+            spark, "sparkgraft_snapshot_cdf_partitioned", sink, ckpt,
+            log_dir=log_dir, emit_deletes="true",
+            state_dir=os.path.join(root, "reader_state"),
         )
-        try:
-            q.processAllAvailable()
-            ex = q.exception()
-            if ex is not None:
-                raise ex
-        finally:
-            q.stop()
 
     try:
         run_phase()
@@ -4003,11 +3819,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_current) classes recomputed from source."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-scd2m-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "scd2m")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     st_root = os.path.join(root, "scd2")
@@ -4111,18 +3923,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             fh.write(state_dir(batch_id))
         os.replace(tmp, pointer)
 
-    q = (
-        spark.readStream.format("sparkgraft_mor_cdf")
-        .option("log_dir", log_dir)
-        .load()
-        .writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_feed(spark, "sparkgraft_mor_cdf", maintain, ckpt, log_dir=log_dir)
 
     with open(pointer) as fh:
         scd2 = spark.read.parquet(fh.read().strip())
@@ -4415,11 +4216,7 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch; this key extends the contract to every downstream feed."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfevo-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfevo")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
@@ -4526,18 +4323,9 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"partitions, planned {work_units[expected_v]} work units"
             )
 
-    q = (
-        spark.readStream.format("sparkgraft_schema_evo_cdf")
-        .option("log_dir", log_dir)
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
+    _drain_feed(
+        spark, "sparkgraft_schema_evo_cdf", sink, ckpt, log_dir=log_dir
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     feed = spark.read.parquet(os.path.join(out, "b*"))
     if "channel" not in feed.columns:
@@ -4867,11 +4655,7 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfxt-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfxt")
     txn_dir = os.path.join(root, "txnlog")
     ckpt = os.path.join(root, "ckpt")
     mv_root = os.path.join(root, "mv")
@@ -5028,22 +4812,10 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(_txn_cdf_datasource())
 
     def run_phase() -> None:
-        q = (
-            spark.readStream.format("sparkgraft_txn_cdf")
-            .option("log_dir", txn_dir)
-            .option("state_dir", os.path.join(root, "reader_state"))
-            .load()
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .start()
+        _drain_feed(
+            spark, "sparkgraft_txn_cdf", maintain, ckpt, log_dir=txn_dir,
+            state_dir=os.path.join(root, "reader_state"),
         )
-        try:
-            q.processAllAvailable()
-            ex = q.exception()
-            if ex is not None:
-                raise ex
-        finally:
-            q.stop()
 
     try:
         run_phase()
@@ -5230,11 +5002,7 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract every real lakehouse feed ships."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfvac-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfvac")
     log_dir = os.path.join(root, "log")
     os.makedirs(log_dir)
 
@@ -5317,24 +5085,11 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
             mor_src({"log_dir": log_dir, "state_dir": state}).streamReader(
                 None
             ).commit({"version": cursor})
-        q = (
-            spark.readStream.format("sparkgraft_mor_cdf")
-            .option("log_dir", log_dir)
-            .option("state_dir", state)
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation", os.path.join(root, f"ckpt_{tag}")
-            )
-            .start()
+        _drain_feed(
+            spark, "sparkgraft_mor_cdf", sink,
+            os.path.join(root, f"ckpt_{tag}"), log_dir=log_dir,
+            state_dir=state,
         )
-        try:
-            q.processAllAvailable()
-            ex = q.exception()
-            if ex is not None:
-                raise ex
-        finally:
-            q.stop()
 
     # NEGATIVE: cursor 0 predates the horizon -> loud planning-time
     # refusal, nothing delivered
@@ -5377,11 +5132,7 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_del_events = feed.filter(F.col("change_type") == "delete").count()
     if n_del_events == 0:
         raise RuntimeError("the post-vacuum delete commit streamed nothing")
-    sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
-    delta = feed.agg(
-        F.sum(sign).cast("long").alias("n"),
-        F.sum(sign * F.col("cents")).cast("long").alias("cents"),
-    ).collect()[0]
+    d_n, d_cents = _signed_net(feed)
 
     return spark.range(1).select(
         F.lit(stale_raised).alias("stale_cursor_raises"),
@@ -5392,10 +5143,8 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(n_del_events).cast("long").alias("delete_events"),
         F.lit(seed["n"]).cast("long").alias("seed_rows"),
         F.lit(seed["cents"]).cast("long").alias("seed_cents"),
-        F.lit(seed["n"] + delta["n"]).cast("long").alias("head_rows"),
-        F.lit(seed["cents"] + delta["cents"]).cast("long").alias(
-            "head_cents"
-        ),
+        F.lit(seed["n"] + d_n).cast("long").alias("head_rows"),
+        F.lit(seed["cents"] + d_cents).cast("long").alias("head_cents"),
     )
 
 
@@ -5604,11 +5353,7 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdftc-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdftc")
     txn_dir = os.path.join(root, "txnlog")
     os.makedirs(txn_dir)
 
@@ -5669,25 +5414,11 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        q = (
-            spark.readStream.format("sparkgraft_ckpt_txn_cdf")
-            .option("log_dir", txn_dir)
-            .option("state_dir", state)
-            .option("open_log", open_log)
-            .load()
-            .writeStream.foreachBatch(sink)
-            .option(
-                "checkpointLocation", os.path.join(root, f"ckpt_{tag}")
-            )
-            .start()
+        _drain_feed(
+            spark, "sparkgraft_ckpt_txn_cdf", sink,
+            os.path.join(root, f"ckpt_{tag}"), log_dir=txn_dir,
+            state_dir=state, open_log=open_log,
         )
-        try:
-            q.processAllAvailable()
-            ex = q.exception()
-            if ex is not None:
-                raise ex
-        finally:
-            q.stop()
         return batches, open_log
 
     def opens_of(open_log: str) -> list[str]:
@@ -5921,11 +5652,7 @@ def stream_cdf_rebase_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     already streamed."""
     from sparkgraft.catalog import load
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-cdfro-{os.path.basename(sf_dir.rstrip('/'))}-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "cdfro")
     txn_dir = os.path.join(root, "txnlog")
     os.makedirs(txn_dir)
 
@@ -5991,21 +5718,10 @@ def stream_cdf_rebase_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
         )
         batches.append((int(batch_id), txns))
 
-    q = (
-        spark.readStream.format("sparkgraft_txn_cdf")
-        .option("log_dir", txn_dir)
-        .load()
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .start()
+    _drain_feed(
+        spark, "sparkgraft_txn_cdf", sink, os.path.join(root, "ckpt"),
+        log_dir=txn_dir,
     )
-    try:
-        q.processAllAvailable()
-        ex = q.exception()
-        if ex is not None:
-            raise ex
-    finally:
-        q.stop()
 
     if [b[1] for b in batches] != [[1], [2], [3]]:
         raise RuntimeError(f"batch txns wrong: {batches}")

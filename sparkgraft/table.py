@@ -455,31 +455,35 @@ def txn_delta_merge(state: dict, adds: dict) -> None:
         state.setdefault(t, set()).update(fl)
 
 
-def txn_write_checkpoint(txn_dir: str, at: int) -> None:
-    """Materialize the cumulative {table -> files} map at txn ``at``
-    (the checkpointer pays the genesis walk ONCE) as a put-if-absent
-    checkpoint file, then advance the `_last_checkpoint` pointer via
-    os.replace — racing checkpointers write identical bytes, so the
-    link(2) collision is benign."""
-    state: dict = {}
-    for v in range(1, at + 1):
-        txn_delta_merge(state, read_manifest(txn_dir, v)["table_adds"])
-    tmp = os.path.join(txn_dir, f".ckpt-tmp-{os.getpid()}")
+def publish_checkpoint(log_dir: str, at: int, payload: dict) -> None:
+    """Publish ``payload`` as the put-if-absent checkpoint of version
+    ``at`` (write-temp + link(2)), then advance the `_last_checkpoint`
+    pointer via os.replace. Racing checkpointers write identical bytes,
+    so the link collision is benign."""
+    tmp = os.path.join(log_dir, f".ckpt-tmp-{os.getpid()}")
     with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "version": at,
-                "tables": {t: sorted(fl) for t, fl in state.items()},
-            },
-            fh,
-        )
+        json.dump(payload, fh)
     try:
-        os.link(tmp, txn_ckpt_path(txn_dir, at))
+        os.link(tmp, txn_ckpt_path(log_dir, at))
     except FileExistsError:
         pass  # racing checkpointers write identical bytes
     finally:
         os.unlink(tmp)
-    ptmp = os.path.join(txn_dir, f".lastckpt-tmp-{os.getpid()}")
+    ptmp = os.path.join(log_dir, f".lastckpt-tmp-{os.getpid()}")
     with open(ptmp, "w") as fh:
         fh.write(str(at))
-    os.replace(ptmp, os.path.join(txn_dir, TXN_CKPT_POINTER))
+    os.replace(ptmp, os.path.join(log_dir, TXN_CKPT_POINTER))
+
+
+def txn_write_checkpoint(txn_dir: str, at: int) -> None:
+    """Materialize the cumulative {table -> files} map at txn ``at``
+    (the checkpointer pays the genesis walk ONCE) and publish it as the
+    checkpoint of ``at``."""
+    state: dict = {}
+    for v in range(1, at + 1):
+        txn_delta_merge(state, read_manifest(txn_dir, v)["table_adds"])
+    publish_checkpoint(
+        txn_dir,
+        at,
+        {"version": at, "tables": {t: sorted(fl) for t, fl in state.items()}},
+    )

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..proofs import multisets_equal
-from ..registry import query
+from ..registry import key_root, query
 from ..table import (
     MOR_DELETE_CLASS,
     commit_snapshot,
@@ -2050,24 +2050,19 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance path. Compaction of accumulated index tombstones is
     `sink_rewrite_data_files`'s job, unchanged."""
     import os
-    import shutil
-    import tempfile
 
     from sparkgraft.streaming import (
         _doc_cdf_datasource,
+        _drain_feed,
         _index_feed_maintainer,
+        _stage_slices,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]  # bounded scalar
     cut = (int(max_id) + 1) * _DIX_NUM // _DIX_DEN
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-dedupidx-{os.path.basename(sf_dir.rstrip('/'))}"
-        f"-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "dedupidx")
     doc_log = os.path.join(root, "doclog")
     idx_log = os.path.join(root, "idxlog")
     ckpt = os.path.join(root, "ckpt")
@@ -2079,8 +2074,6 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base/delta staged in ONE partitioned write (was 2 sequential
     # filter+coalesce(1) scans of documents — _stage_slices docstring,
     # guide §1.2 step 1)
-    from sparkgraft.streaming import _stage_slices
-
     doc_slices = _stage_slices(
         docs,
         (F.col("doc_id") >= cut).cast("int"),
@@ -2106,18 +2099,7 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.dataSource.register(_doc_cdf_datasource())
-    q = (
-        spark.readStream.format("sparkgraft_doc_cdf")
-        .option("log_dir", doc_log)
-        .load()
-        .writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_feed(spark, "sparkgraft_doc_cdf", maintain, ckpt, log_dir=doc_log)
 
     idx_versions = log_versions(idx_log)
     if len(idx_versions) != 3:  # one commit per feed batch, no rebuilds
@@ -2269,12 +2251,12 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged; the feed never replays history to survive a compaction
     it didn't cause (asserted by the single post-restart commit)."""
     import os
-    import shutil
-    import tempfile
 
     from sparkgraft.streaming import (
         _doc_cdf_datasource,
+        _drain_feed,
         _index_feed_maintainer,
+        _stage_slices,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2282,12 +2264,7 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = (int(max_id) + 1) * _DIC_N1 // _DIC_DEN
     c2 = (int(max_id) + 1) * _DIC_N2 // _DIC_DEN
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-dedupidxc-{os.path.basename(sf_dir.rstrip('/'))}"
-        f"-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "dedupidxc")
     doc_log = os.path.join(root, "doclog")
     idx_log = os.path.join(root, "idxlog")
     ckpt = os.path.join(root, "ckpt")
@@ -2306,8 +2283,6 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the post-compaction phase below; staging a file early and
     # committing it later is exactly the snapshot-log contract (a file
     # is invisible until a manifest references it).
-    from sparkgraft.streaming import _stage_slices
-
     doc_slices = _stage_slices(
         docs,
         F.when(F.col("doc_id") < c1, 0)
@@ -2336,19 +2311,10 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(_doc_cdf_datasource())
 
     def run_feed() -> None:
-        q = (
-            spark.readStream.format("sparkgraft_doc_cdf")
-            .option("log_dir", doc_log)
-            .option("state_dir", os.path.join(root, "reader_state"))
-            .load()
-            .writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", ckpt)
-            .start()
+        _drain_feed(
+            spark, "sparkgraft_doc_cdf", maintain, ckpt, log_dir=doc_log,
+            state_dir=os.path.join(root, "reader_state"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
     run_feed()  # phase 1: doc v1-v3 -> index commits 1-3
     if log_versions(idx_log) != [1, 2, 3]:
@@ -2518,24 +2484,19 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer per index commit; the rebuild here is the verification
     twin, never the serving path."""
     import os
-    import shutil
-    import tempfile
 
     from sparkgraft.streaming import (
         _doc_cdf_datasource,
+        _drain_feed,
         _index_feed_maintainer,
+        _stage_slices,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]  # bounded scalar
     cut = (int(max_id) + 1) * _DIX_NUM // _DIX_DEN
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-idxasof-{os.path.basename(sf_dir.rstrip('/'))}"
-        f"-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "idxasof")
     doc_log = os.path.join(root, "doclog")
     idx_log = os.path.join(root, "idxlog")
     ckpt = os.path.join(root, "ckpt")
@@ -2547,8 +2508,6 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base/delta staged in ONE partitioned write (was 2 sequential
     # filter+coalesce(1) scans of documents — _stage_slices docstring,
     # guide §1.2 step 1)
-    from sparkgraft.streaming import _stage_slices
-
     doc_slices = _stage_slices(
         docs,
         (F.col("doc_id") >= cut).cast("int"),
@@ -2577,18 +2536,7 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.dataSource.register(_doc_cdf_datasource())
-    q = (
-        spark.readStream.format("sparkgraft_doc_cdf")
-        .option("log_dir", doc_log)
-        .load()
-        .writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_feed(spark, "sparkgraft_doc_cdf", maintain, ckpt, log_dir=doc_log)
 
     idx_versions = log_versions(idx_log)
     stamps = [
@@ -2773,11 +2721,10 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged because the projected read never touches the evolved
     column. The stamp check is a KB manifest walk per batch."""
     import os
-    import shutil
-    import tempfile
 
     from sparkgraft.streaming import (
         _doc_cdf_datasource,
+        _drain_feed,
         _index_feed_maintainer,
     )
 
@@ -2785,12 +2732,7 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]  # bounded scalar
     cut = (int(max_id) + 1) * _DIX_NUM // _DIX_DEN
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-idxevo-{os.path.basename(sf_dir.rstrip('/'))}"
-        f"-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "idxevo")
     doc_log = os.path.join(root, "doclog")
     idx_log = os.path.join(root, "idxlog")
     ckpt = os.path.join(root, "ckpt")
@@ -2845,18 +2787,7 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         delivered.append((int(batch_id), len(log_versions(idx_log))))
 
     spark.dataSource.register(_doc_cdf_datasource())
-    q = (
-        spark.readStream.format("sparkgraft_doc_cdf")
-        .option("log_dir", doc_log)
-        .load()
-        .writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_feed(spark, "sparkgraft_doc_cdf", maintain, ckpt, log_dir=doc_log)
 
     if [b[0] for b in delivered] != [0, 1, 2, 3]:
         raise RuntimeError(f"feed batches wrong: {delivered}")

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from .catalog import load
 from .proofs import multisets_equal
-from .registry import query
+from .registry import _scratch, key_root, query
 from .table import (
     MOR_DELETE_CLASS,
     commit_snapshot,
@@ -3555,8 +3555,6 @@ def sim_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. The corpus files are never re-read (plan-asserted)."""
     import os
 
-    from sparkgraft.scans import _scratch
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # index build (pre-delete): frozen full-corpus centroids + code table
     cq = _ivfq_centroids(spark, sf_dir)
@@ -3762,12 +3760,12 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the delta payloads); occupancy/drift arithmetic is the
     ≤C-row frame."""
     import os
-    import shutil
-    import tempfile
 
     from sparkgraft.streaming import (
         _emb_cdf_datasource,
+        _drain_feed,
         _index_feed_maintainer,
+        _stage_slices,
     )
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -3775,12 +3773,7 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = (int(max_id) + 1) * _IVF_APPEND_NUM // _IVF_APPEND_DEN
     cq = _ivfq_centroids(spark, sf_dir, base_max=cut)  # frozen, cached
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-ivffeed-{os.path.basename(sf_dir.rstrip('/'))}"
-        f"-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "ivffeed")
     emb_log = os.path.join(root, "emblog")
     idx_log = os.path.join(root, "idxlog")
     ckpt = os.path.join(root, "ckpt")
@@ -3791,8 +3784,6 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base/delta staged in ONE partitioned write (was 2 sequential
     # filter+coalesce(1) scans of embeddings — _stage_slices docstring,
     # guide §1.2 step 1)
-    from sparkgraft.streaming import _stage_slices
-
     emb_slices = _stage_slices(
         e,
         (F.col("vec_id") >= cut).cast("int"),
@@ -3821,18 +3812,7 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.dataSource.register(_emb_cdf_datasource())
-    q = (
-        spark.readStream.format("sparkgraft_emb_cdf")
-        .option("log_dir", emb_log)
-        .load()
-        .writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_feed(spark, "sparkgraft_emb_cdf", maintain, ckpt, log_dir=emb_log)
 
     if log_versions(idx_log) != [1, 2, 3]:
         raise RuntimeError(f"index log wrong: {log_versions(idx_log)}")
@@ -4028,12 +4008,12 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned k routes probes with the same ≤C×dim centroid constant, so
     time-travel retrieval costs what head retrieval costs."""
     import os
-    import shutil
-    import tempfile
 
     from sparkgraft.streaming import (
         _emb_cdf_datasource,
+        _drain_feed,
         _index_feed_maintainer,
+        _stage_slices,
     )
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -4041,12 +4021,7 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = (int(max_id) + 1) * _IVF_APPEND_NUM // _IVF_APPEND_DEN
     cq = _ivfq_centroids(spark, sf_dir, base_max=cut)  # frozen, cached
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sg-ivfasof-{os.path.basename(sf_dir.rstrip('/'))}"
-        f"-pid{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = key_root(sf_dir, "ivfasof")
     emb_log = os.path.join(root, "emblog")
     idx_log = os.path.join(root, "idxlog")
     ckpt = os.path.join(root, "ckpt")
@@ -4057,8 +4032,6 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base/delta staged in ONE partitioned write (was 2 sequential
     # filter+coalesce(1) scans of embeddings — _stage_slices docstring,
     # guide §1.2 step 1)
-    from sparkgraft.streaming import _stage_slices
-
     emb_slices = _stage_slices(
         e,
         (F.col("vec_id") >= cut).cast("int"),
@@ -4087,18 +4060,7 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.dataSource.register(_emb_cdf_datasource())
-    q = (
-        spark.readStream.format("sparkgraft_emb_cdf")
-        .option("log_dir", emb_log)
-        .load()
-        .writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain_feed(spark, "sparkgraft_emb_cdf", maintain, ckpt, log_dir=emb_log)
 
     idx_versions = log_versions(idx_log)
     stamps = [
