@@ -37,6 +37,7 @@ import os
 import shutil
 import tempfile
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1121,8 +1122,9 @@ def _write_with_probe(batch_df: DataFrame, path: str, probe_col) -> list:
     also counts NULL probe values and raises on any: a change row with
     no version must fail the single-commit guard, not slip past it.
     Asserts on the returned values now run after the write, which only
-    matters on the failure path (the stream dies either way and the
-    orphan batch dir lives in the key's scratch root)."""
+    matters on the failure path: the stream dies either way, so the key
+    raises before anything reads its out dir, and the orphan batch dir
+    lives in the key's ``key_root``, which the next invocation clears."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -1163,6 +1165,109 @@ def _drain_feed(
         q.processAllAvailable()
     finally:
         q.stop()
+
+
+def _drain_events(spark: SparkSession, src: str, sink, checkpoint: str) -> None:
+    """Run the staged event files under ``src`` into the foreachBatch
+    ``sink``, one file per micro-batch (``ts``, ``event_type`` only),
+    until the directory is drained (``availableNow``). A sink that
+    raises fails the run as a ``StreamingQueryException``."""
+    (
+        _events_stream(spark, src, max_files=1)
+        .select("ts", "event_type")
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _crash_once(batch: int | None):
+    """The one-shot crash of an exactly-once proof: the returned
+    ``fire(batch_id, where)`` raises ``RuntimeError(f"injected crash
+    {where}")`` the first time it sees ``batch`` and never again, so the
+    restart's redelivery of that batch runs through. ``batch=None``
+    never fires."""
+    pending = {batch}
+
+    def fire(batch_id: int, where: str) -> None:
+        if int(batch_id) in pending:
+            pending.clear()
+            raise RuntimeError(f"injected crash {where}")
+
+    return fire
+
+
+def _expect_injected_crash(run_phase) -> None:
+    """Run phase 1 of a crash-injection proof. Return only when it dies
+    of a `_crash_once` crash (re-raised by the query as a
+    ``StreamingQueryException`` carrying "injected crash"); re-raise
+    any other error, and raise if the phase completes."""
+    try:
+        run_phase()
+    except StreamingQueryException as ex:
+        if "injected crash" not in str(ex):
+            raise
+        return
+    raise RuntimeError("phase 1 did not crash — injection never fired")
+
+
+class _BatchState:
+    """The batch-keyed state versions of a foreachBatch maintainer:
+    batch N publishes ``root/v{N:05d}`` (one ``coalesce(1)`` parquet
+    dir, ``mode("overwrite")``) and then atomically repoints
+    ``root/CURRENT`` at it (write-temp + ``os.replace``: readers swap,
+    never block).
+
+    EXACTLY-ONCE discipline: batch N's input state is v{N-1}, keyed by
+    BATCH ID, never by the CURRENT pointer — Spark checkpoints a batch
+    AFTER foreachBatch returns, so a crash between the publish and the
+    checkpoint REDELIVERS the batch; a maintainer that read the pointer
+    would re-apply the delta onto the already-advanced state and
+    double-count (the same txn-id argument as `stream_acid_append`,
+    applied to view maintenance). Replays instead recompute v{N} from
+    the same immutable v{N-1} and CONVERGE. ``crash_after``: optional
+    one-shot batch id — raise AFTER publishing that batch, BEFORE
+    Spark's checkpoint commit, to stage exactly that failure."""
+
+    def __init__(self, spark: SparkSession, root: str, crash_after=None):
+        self.spark = spark
+        self.root = root
+        self._pointer = os.path.join(root, "CURRENT")
+        self._crash = _crash_once(crash_after)
+        os.makedirs(root, exist_ok=True)
+
+    def _version(self, batch_id: int) -> str:
+        return os.path.join(self.root, f"v{batch_id:05d}")
+
+    def prev(self, batch_id: int) -> DataFrame | None:
+        """The state batch ``batch_id`` derives from: None at batch 0,
+        else v{batch_id-1}, which must exist."""
+        if batch_id == 0:
+            return None
+        prev_dir = self._version(batch_id - 1)
+        if not os.path.exists(prev_dir):
+            raise RuntimeError(
+                f"state gap: batch {batch_id} has no v{batch_id - 1:05d}"
+            )
+        return self.spark.read.parquet(prev_dir)
+
+    def publish(self, df: DataFrame, batch_id: int) -> None:
+        vdir = self._version(batch_id)
+        df.coalesce(1).write.mode("overwrite").parquet(vdir)
+        tmp = self._pointer + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(vdir)
+        os.replace(tmp, self._pointer)
+        self._crash(batch_id, "after MV publish, before checkpoint")
+
+    def current(self) -> DataFrame:
+        with open(self._pointer) as fh:
+            return self.spark.read.parquet(fh.read().strip())
+
+    def n_versions(self) -> int:
+        return len([d for d in os.listdir(self.root) if d.startswith("v")])
 
 
 def _one_commit_sink(out: str, planned: dict[int, int]):
@@ -1482,7 +1587,7 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in staged:
         shutil.copy2(p, src)
 
-    crash_armed = {"on": True}
+    crash = _crash_once(1)
     delivered: list[int] = []
 
     def committed_ids() -> list[int]:
@@ -1501,9 +1606,7 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         bdir = os.path.join(data, f"b{batch_id:05d}")
         # phase A: the data write (overwrite => replays converge)
         batch_df.write.mode("overwrite").parquet(bdir)
-        if int(batch_id) == 1 and crash_armed["on"]:
-            crash_armed["on"] = False
-            raise RuntimeError("injected crash between data write and commit")
+        crash(batch_id, "between data write and commit")
         # phase B: the atomic ledger commit (write-temp + link, the
         # sink_concurrent_commit put-if-absent primitive)
         tmp = os.path.join(ledger, f".tmp-b{batch_id}")
@@ -1512,25 +1615,7 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.link(tmp, os.path.join(ledger, f"b{batch_id:05d}.json"))
         os.unlink(tmp)
 
-    def run_phase() -> None:
-        q = (
-            _events_stream(spark, src, max_files=1)
-            .select("ts", "event_type")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    try:
-        run_phase()
-        raise RuntimeError("phase 1 did not crash — injection never fired")
-    except StreamingQueryException as ex:
-        if "injected crash" not in str(ex):
-            raise
+    _expect_injected_crash(lambda: _drain_events(spark, src, sink, ckpt))
     # the orphan: batch 1's data landed, its ledger commit did not
     if not os.path.isdir(os.path.join(data, "b00001")):
         raise RuntimeError("crashed batch wrote no data — wrong kill point")
@@ -1538,7 +1623,7 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("crashed batch reached the ledger — not a crash")
     phase1_deliveries = list(delivered)
 
-    run_phase()  # restart from the same checkpoint
+    _drain_events(spark, src, sink, ckpt)  # restart, same checkpoint
     phase2 = delivered[len(phase1_deliveries):]
     if not phase2 or phase2[0] != 1:
         raise RuntimeError(
@@ -1602,7 +1687,7 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in staged:
         shutil.copy2(p, src)
 
-    crash_armed = {"on": True}
+    crash = _crash_once(1)
     delivered: list[int] = []
 
     def committed_batches() -> set[int]:
@@ -1620,31 +1705,9 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit_snapshot(
             log_dir, data_files_of(bdir), extra={"batch_id": int(batch_id)}
         )
-        if int(batch_id) == 1 and crash_armed["on"]:
-            crash_armed["on"] = False
-            raise RuntimeError(
-                "injected crash after commit, before checkpoint"
-            )
+        crash(batch_id, "after commit, before checkpoint")
 
-    def run_phase() -> None:
-        q = (
-            _events_stream(spark, src, max_files=1)
-            .select("ts", "event_type")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    try:
-        run_phase()
-        raise RuntimeError("phase 1 did not crash — injection never fired")
-    except StreamingQueryException as ex:
-        if "injected crash" not in str(ex):
-            raise
+    _expect_injected_crash(lambda: _drain_events(spark, src, sink, ckpt))
     if 1 not in committed_batches():
         raise RuntimeError("crashed batch's commit is missing — wrong kill point")
     n_before = len(log_versions(log_dir))
@@ -1653,7 +1716,7 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # phase-1 delivery whenever the restart delivered out of order, so
     # the first-redelivery assert could never fire)
 
-    run_phase()  # restart: batch 1 re-delivered, must be SKIPPED
+    _drain_events(spark, src, sink, ckpt)  # restart: batch 1 must be SKIPPED
     phase2 = delivered[n_phase1:]
     if not phase2 or phase2[0] != 1:
         raise RuntimeError(f"batch 1 was not re-delivered first: {delivered}")
@@ -3373,31 +3436,12 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MV_BUCKETS = 8  # MV key space: o_orderkey % 8
 
 
-def _mv_maintainer(spark: SparkSession, mv_root: str, crash_after=None):
-    """(maintain, mv_read) pair for the CDF-fed materialized view.
-
-    EXACTLY-ONCE discipline: the previous state is keyed by BATCH ID
-    (v{{N-1}}), never by the CURRENT pointer — Spark checkpoints a
-    batch AFTER foreachBatch returns, so a crash between our publish
-    and the checkpoint REDELIVERS the batch; a maintainer that read the
-    pointer would re-apply the delta onto the already-advanced state
-    and double-count (the same txn-id argument as `stream_acid_append`,
-    applied to view maintenance). Replays instead recompute v{{N}} from
-    the same immutable v{{N-1}} and CONVERGE (mode=overwrite + atomic
-    pointer replace). `crash_after`: optional one-shot batch id — raise
-    AFTER publishing that batch, BEFORE Spark's checkpoint commit, to
-    stage exactly that failure."""
-    pointer = os.path.join(mv_root, "CURRENT")
-    armed = {"batch": crash_after}
-
-    def state_dir(batch_id: int) -> str:
-        return os.path.join(mv_root, f"v{batch_id:05d}")
-
-    def mv_read() -> DataFrame | None:
-        if not os.path.exists(pointer):
-            return None
-        with open(pointer) as fh:
-            return spark.read.parquet(fh.read().strip())
+def _mv_maintainer(state: _BatchState):
+    """The foreachBatch sink of the CDF-fed bucket MV: each batch's
+    events fold into per-bucket SIGNED deltas (insert = +1/+cents,
+    delete = −1/−cents) that full-outer-merge with the previous state
+    version into the batch's own version — ``state`` carries the
+    exactly-once discipline (`_BatchState`)."""
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
         sign = F.when(F.col("change_type") == "delete", -1).otherwise(1)
@@ -3407,21 +3451,16 @@ def _mv_maintainer(spark: SparkSession, mv_root: str, crash_after=None):
             F.sum(sign).cast("long").alias("d_n"),
             F.sum(sign * F.col("cents")).cast("long").alias("d_cents"),
         )
-        if batch_id == 0:
+        prev = state.prev(batch_id)
+        if prev is None:
             merged = delta.select(
                 "bucket",
                 F.col("d_n").alias("n_rows"),
                 F.col("d_cents").alias("cents"),
             )
         else:
-            prev_dir = state_dir(batch_id - 1)
-            if not os.path.exists(prev_dir):
-                raise RuntimeError(
-                    f"MV state gap: batch {batch_id} has no v{batch_id - 1}"
-                )
             merged = (
-                spark.read.parquet(prev_dir)
-                .join(delta, "bucket", "full_outer")
+                prev.join(delta, "bucket", "full_outer")
                 .select(
                     "bucket",
                     (
@@ -3435,19 +3474,70 @@ def _mv_maintainer(spark: SparkSession, mv_root: str, crash_after=None):
                 )
                 .filter(F.col("n_rows") > 0)
             )
-        vdir = state_dir(batch_id)
-        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(vdir)
-        os.replace(tmp, pointer)  # readers swap atomically, never block
-        if armed["batch"] == batch_id:
-            armed["batch"] = None
-            raise RuntimeError(
-                "injected crash after MV publish, before checkpoint"
-            )
+        state.publish(merged, batch_id)
 
-    return maintain, mv_read
+    return maintain
+
+
+def _mv_history(spark: SparkSession, sf_dir: str, root: str) -> str:
+    """Stage the MV keys' orders history as a snapshot log at
+    ``root/log`` (returned) and register the partitioned CDF that feeds
+    the MV: v1 = base (2 files, the even/odd halves), v2 = COW delete of
+    the even-key ``%10 == _CDF_DEL_PRED`` rows, v3 = re-keyed append —
+    inserts, genuine row deletes, and growth of the key space."""
+    from sparkgraft.catalog import load
+
+    log_dir = os.path.join(root, "log")
+    os.makedirs(log_dir)
+    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    # even/odd halves staged in ONE partitioned write (was 2 sequential
+    # filter+coalesce(1) jobs — _stage_slices docstring)
+    halves = _stage_slices(
+        o, F.col("o_orderkey") % 2, os.path.join(root, "halves")
+    )
+    even_f = halves[0]
+    commit_snapshot(log_dir, even_f + halves[1])  # v1
+
+    rw_dir = os.path.join(root, "rewrite")  # v2: COW delete on even keys
+    (
+        spark.read.parquet(*even_f)
+        .filter(~(F.col("o_orderkey") % 10 == _CDF_DEL_PRED))
+        .coalesce(1)
+        .write.parquet(rw_dir)
+    )
+    commit_snapshot(log_dir, data_files_of(rw_dir), remove_files=even_f)
+
+    app_dir = os.path.join(root, "append")  # v3: re-keyed append
+    (
+        o.filter(F.col("o_orderkey") % 1000 == 7)
+        .select(
+            (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
+            "o_totalprice",
+        )
+        .coalesce(1)
+        .write.parquet(app_dir)
+    )
+    commit_snapshot(log_dir, data_files_of(app_dir))
+    spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
+    return log_dir
+
+
+def _mv_direct(spark: SparkSession, log_dir: str) -> DataFrame:
+    """The bucket MV recomputed directly from the log's head snapshot —
+    the independent reference the maintained MV must equal."""
+    head_files = read_manifest(log_dir, head_version(log_dir))["files"]
+    return (
+        spark.read.parquet(*head_files)
+        .groupBy(
+            (F.col("o_orderkey") % _MV_BUCKETS).cast("int").alias("bucket")
+        )
+        .agg(
+            F.count("*").cast("long").alias("n_rows"),
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+            .cast("long")
+            .alias("cents"),
+        )
+    )
 
 
 @query(
@@ -3497,100 +3587,24 @@ def stream_cdf_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     |buckets|-row merge — the table is never re-read after v0; this is
     how a 100 TB fact keeps a serving aggregate fresh at commit
     latency."""
-    from sparkgraft.catalog import load
-
     root = key_root(sf_dir, "cdfmv")
-    log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
-    mv_root = os.path.join(root, "mv")
-    for d in (log_dir, mv_root):
-        os.makedirs(d)
-
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    # even/odd halves staged in ONE partitioned write (was 2 sequential
-    # filter+coalesce(1) jobs — _stage_slices docstring)
-    halves = _stage_slices(
-        o, F.col("o_orderkey") % 2, os.path.join(root, "halves")
-    )
-    even_f = halves[0]
-    commit_snapshot(log_dir, even_f + halves[1])  # v1
-
-    rw_dir = os.path.join(root, "rewrite")  # v2: COW delete on even keys
-    (
-        spark.read.parquet(*even_f)
-        .filter(~(F.col("o_orderkey") % 10 == _CDF_DEL_PRED))
-        .coalesce(1)
-        .write.parquet(rw_dir)
-    )
-    commit_snapshot(log_dir, data_files_of(rw_dir), remove_files=even_f)
-
-    app_dir = os.path.join(root, "append")  # v3: re-keyed append
-    (
-        o.filter(F.col("o_orderkey") % 1000 == 7)
-        .select(
-            (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
-            "o_totalprice",
-        )
-        .coalesce(1)
-        .write.parquet(app_dir)
-    )
-    commit_snapshot(log_dir, data_files_of(app_dir))
-
-    spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
-    maintain, mv_read = _mv_maintainer(spark, mv_root)
-
+    log_dir = _mv_history(spark, sf_dir, root)
+    state = _BatchState(spark, os.path.join(root, "mv"))
     _drain_feed(
-        spark, "sparkgraft_snapshot_cdf_partitioned", maintain, ckpt,
-        log_dir=log_dir, emit_deletes="true",
+        spark, "sparkgraft_snapshot_cdf_partitioned", _mv_maintainer(state),
+        ckpt, log_dir=log_dir, emit_deletes="true",
     )
 
-    n_versions = len(
-        [d for d in os.listdir(mv_root) if d.startswith("v")]
-    )
+    n_versions = state.n_versions()
     if n_versions != 3:  # one MV version per commit — never a rebuild
         raise RuntimeError(f"MV wrote {n_versions} versions, wanted 3")
 
-    mv = mv_read()
-
-    head_files = read_manifest(log_dir, head_version(log_dir))["files"]
-    direct = (
-        spark.read.parquet(*head_files)
-        .groupBy(
-            (F.col("o_orderkey") % _MV_BUCKETS).cast("int").alias("bucket")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
-    # r14: MV read and direct recompute collected in ONE tagged-union
-    # job (they were two sequential collects; per-side dicts of a
-    # tagged union equal the separate collects exactly)
-    both = (
-        mv.select(F.lit("mv").alias("side"), "bucket", "n_rows", "cents")
-        .unionByName(
-            direct.select(
-                F.lit("direct").alias("side"), "bucket", "n_rows", "cents"
-            )
-        )
-        .collect()
-    )
-    mv_rows = {
-        r["bucket"]: (r["n_rows"], r["cents"]) for r in both
-        if r["side"] == "mv"
-    }
-    direct_rows = {
-        r["bucket"]: (r["n_rows"], r["cents"]) for r in both
-        if r["side"] == "direct"
-    }
-    if mv_rows != direct_rows:
+    mv = state.current()
+    if not multisets_equal(mv, _mv_direct(spark, log_dir)):
         raise RuntimeError(
-            f"incrementally maintained MV diverged from recompute: "
-            f"{mv_rows} vs {direct_rows}"
+            "incrementally maintained MV diverged from recompute"
         )
-
     return mv.orderBy("bucket")
 
 
@@ -3638,47 +3652,12 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the recovery contract is what lets 1000 maintainers run
     unattended — a redelivered batch costs one |buckets|-row recompute,
     never a divergent view or a full rebuild."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from sparkgraft.catalog import load
-
     root = key_root(sf_dir, "mvxo")
-    log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
     mv_root = os.path.join(root, "mv")
-    for d in (log_dir, mv_root):
-        os.makedirs(d)
-
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    # even/odd halves staged in ONE partitioned write (was 2 sequential
-    # filter+coalesce(1) jobs — _stage_slices docstring)
-    halves = _stage_slices(
-        o, F.col("o_orderkey") % 2, os.path.join(root, "halves")
-    )
-    even_f = halves[0]
-    commit_snapshot(log_dir, even_f + halves[1])  # v1
-    rw_dir = os.path.join(root, "rewrite")
-    (
-        spark.read.parquet(*even_f)
-        .filter(~(F.col("o_orderkey") % 10 == _CDF_DEL_PRED))
-        .coalesce(1)
-        .write.parquet(rw_dir)
-    )
-    commit_snapshot(log_dir, data_files_of(rw_dir), remove_files=even_f)
-    app_dir = os.path.join(root, "append")
-    (
-        o.filter(F.col("o_orderkey") % 1000 == 7)
-        .select(
-            (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
-            "o_totalprice",
-        )
-        .coalesce(1)
-        .write.parquet(app_dir)
-    )
-    commit_snapshot(log_dir, data_files_of(app_dir))
-
-    spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
-    maintain, mv_read = _mv_maintainer(spark, mv_root, crash_after=1)
+    log_dir = _mv_history(spark, sf_dir, root)
+    state = _BatchState(spark, mv_root, crash_after=1)
+    maintain = _mv_maintainer(state)
     delivered: list[int] = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -3692,17 +3671,11 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_dir=os.path.join(root, "reader_state"),
         )
 
-    try:
-        run_phase()
-        raise RuntimeError("phase 1 did not crash — injection never fired")
-    except StreamingQueryException as ex:
-        if "injected crash" not in str(ex):
-            raise
+    _expect_injected_crash(run_phase)
     if delivered != [0, 1]:
         raise RuntimeError(f"phase 1 delivered {delivered}, wanted [0, 1]")
     # the crash window is real: batch 1's state IS published already
-    v1_dir = os.path.join(mv_root, "v00001")
-    if not os.path.exists(v1_dir):
+    if not os.path.exists(os.path.join(mv_root, "v00001")):
         raise RuntimeError("crash landed before the publish — wrong window")
 
     run_phase()  # restart: batch 1 REDELIVERED, replay must converge
@@ -3712,47 +3685,14 @@ def stream_mv_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(batch 1 redelivered once, then batch 2)"
         )
 
-    n_versions = len([d for d in os.listdir(mv_root) if d.startswith("v")])
+    n_versions = state.n_versions()
     if n_versions != 3:
         raise RuntimeError(f"MV wrote {n_versions} versions, wanted 3")
 
-    mv = mv_read()
-    head_files = read_manifest(log_dir, head_version(log_dir))["files"]
-    direct = (
-        spark.read.parquet(*head_files)
-        .groupBy(
-            (F.col("o_orderkey") % _MV_BUCKETS).cast("int").alias("bucket")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
-    # r14: MV read and direct recompute collected in ONE tagged-union
-    # job (two sequential collects before)
-    both = (
-        mv.select(F.lit("mv").alias("side"), "bucket", "n_rows", "cents")
-        .unionByName(
-            direct.select(
-                F.lit("direct").alias("side"), "bucket", "n_rows", "cents"
-            )
-        )
-        .collect()
-    )
-    mv_rows = {
-        r["bucket"]: (r["n_rows"], r["cents"]) for r in both
-        if r["side"] == "mv"
-    }
-    direct_rows = {
-        r["bucket"]: (r["n_rows"], r["cents"]) for r in both
-        if r["side"] == "direct"
-    }
-    if mv_rows != direct_rows:
+    mv = state.current()
+    if not multisets_equal(mv, _mv_direct(spark, log_dir)):
         raise RuntimeError(
-            f"replayed MV diverged from recompute (double-applied delta?): "
-            f"{mv_rows} vs {direct_rows}"
+            "replayed MV diverged from recompute (double-applied delta?)"
         )
     return mv.orderBy("bucket")
 
@@ -3822,9 +3762,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = key_root(sf_dir, "scd2m")
     log_dir = os.path.join(root, "log")
     ckpt = os.path.join(root, "ckpt")
-    st_root = os.path.join(root, "scd2")
-    for d in (log_dir, st_root):
-        os.makedirs(d)
+    os.makedirs(log_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -3857,10 +3795,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ups.unpersist()
 
     spark.dataSource.register(_mor_cdf_datasource())
-    pointer = os.path.join(st_root, "CURRENT")
-
-    def state_dir(batch_id: int) -> str:
-        return os.path.join(st_root, f"v{batch_id:05d}")
+    state = _BatchState(spark, os.path.join(root, "scd2"))
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
         # one source scan feeds the version probe AND the state merge
@@ -3885,10 +3820,10 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("int").alias("eff_to"),
             F.lit(True).alias("is_current"),
         )
-        if batch_id == 0:
+        prev = state.prev(batch_id)
+        if prev is None:
             new_state = opens
         else:
-            prev = spark.read.parquet(state_dir(batch_id - 1))
             del_keys = (
                 batch_df.filter(F.col("change_type") == "delete")
                 .select("o_orderkey")
@@ -3915,18 +3850,11 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.col("is_current"))
                 .alias("is_current"),
             ).unionByName(opens)
-        new_state.coalesce(1).write.mode("overwrite").parquet(
-            state_dir(batch_id)
-        )
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(state_dir(batch_id))
-        os.replace(tmp, pointer)
+        state.publish(new_state, batch_id)
 
     _drain_feed(spark, "sparkgraft_mor_cdf", maintain, ckpt, log_dir=log_dir)
 
-    with open(pointer) as fh:
-        scd2 = spark.read.parquet(fh.read().strip())
+    scd2 = state.current()
     scd2.cache()
 
     # chain integrity: every closed row's eff_to is the eff_from of a
@@ -4651,16 +4579,13 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     are never re-read after their events stream; txn atomicity costs
     nothing extra — the cut points fall out of the root's single-CAS
     manifests."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
     from sparkgraft.catalog import load
 
     root = key_root(sf_dir, "cdfxt")
     txn_dir = os.path.join(root, "txnlog")
     ckpt = os.path.join(root, "ckpt")
     mv_root = os.path.join(root, "mv")
-    for d in (txn_dir, mv_root):
-        os.makedirs(d)
+    os.makedirs(txn_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -4703,13 +4628,9 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_dir, 5, {"fact": fc, "dim": d1 + d2}, ops={"fact": "rewrite"}
     )
 
-    pointer = os.path.join(mv_root, "CURRENT")
+    state = _BatchState(spark, mv_root, crash_after=1)  # after v1's publish
     delivered: list[int] = []
     batch_tables: dict[int, set] = {}
-    armed = {"batch": 1}  # inject the crash after batch 1's publish
-
-    def state_dir(batch_id: int) -> str:
-        return os.path.join(mv_root, f"v{batch_id:05d}")
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
         # one source scan per batch: cache the batch, and fold the txn
@@ -4764,7 +4685,8 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("custkey", F.col("segment").alias("d_segment"))
         )
         delta = fdelta.join(ddelta, "custkey", "full_outer")
-        if batch_id == 0:
+        prev = state.prev(batch_id)
+        if prev is None:
             merged = delta.select(
                 "custkey",
                 F.coalesce("d_n", F.lit(0)).cast("long").alias("n"),
@@ -4772,14 +4694,8 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("d_segment").alias("segment"),
             )
         else:
-            prev_dir = state_dir(batch_id - 1)
-            if not os.path.exists(prev_dir):
-                raise RuntimeError(
-                    f"MV state gap: batch {batch_id} has no v{batch_id - 1}"
-                )
             merged = (
-                spark.read.parquet(prev_dir)
-                .join(delta, "custkey", "full_outer")
+                prev.join(delta, "custkey", "full_outer")
                 .select(
                     "custkey",
                     (
@@ -4796,18 +4712,7 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.col("n") != 0) | F.col("segment").isNotNull()
                 )
             )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            state_dir(batch_id)
-        )
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(state_dir(batch_id))
-        os.replace(tmp, pointer)
-        if armed["batch"] == batch_id:
-            armed["batch"] = None
-            raise RuntimeError(
-                "injected crash after MV publish, before checkpoint"
-            )
+        state.publish(merged, batch_id)
 
     spark.dataSource.register(_txn_cdf_datasource())
 
@@ -4817,15 +4722,10 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_dir=os.path.join(root, "reader_state"),
         )
 
-    try:
-        run_phase()
-        raise RuntimeError("phase 1 did not crash — injection never fired")
-    except StreamingQueryException as ex:
-        if "injected crash" not in str(ex):
-            raise
+    _expect_injected_crash(run_phase)
     if delivered != [0, 1]:
         raise RuntimeError(f"phase 1 delivered {delivered}, wanted [0, 1]")
-    if not os.path.exists(state_dir(1)):
+    if not os.path.exists(os.path.join(mv_root, "v00001")):
         raise RuntimeError("crash landed before the publish — wrong window")
 
     run_phase()  # restart: batch 1 REDELIVERED, replay must converge
@@ -4833,7 +4733,7 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"restart delivered {delivered}, wanted [0, 1, 1, 2, 3, 4]"
         )
-    n_versions = len([d for d in os.listdir(mv_root) if d.startswith("v")])
+    n_versions = state.n_versions()
     if n_versions != 5:
         raise RuntimeError(f"MV wrote {n_versions} versions, wanted 5")
     if batch_tables[2] != {"fact", "dim"}:
@@ -4846,10 +4746,9 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"the rewrite txn streamed events for {batch_tables[4]}"
         )
 
-    with open(pointer) as fh:
-        state = spark.read.parquet(fh.read().strip())
     mv = (
-        state.filter(F.col("segment").isNotNull() & (F.col("n") > 0))
+        state.current()
+        .filter(F.col("segment").isNotNull() & (F.col("n") > 0))
         .groupBy("segment")
         .agg(
             F.sum("n").cast("long").alias("n_rows"),
@@ -4878,29 +4777,8 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").cast("long").alias("cents"),
         )
     )
-    # r14: MV read and star recompute collected in ONE tagged-union job
-    both = (
-        mv.select(F.lit("mv").alias("side"), "segment", "n_rows", "cents")
-        .unionByName(
-            direct.select(
-                F.lit("direct").alias("side"), "segment", "n_rows", "cents"
-            )
-        )
-        .collect()
-    )
-    mv_rows = {
-        r["segment"]: (r["n_rows"], r["cents"]) for r in both
-        if r["side"] == "mv"
-    }
-    direct_rows = {
-        r["segment"]: (r["n_rows"], r["cents"]) for r in both
-        if r["side"] == "direct"
-    }
-    if mv_rows != direct_rows:
-        raise RuntimeError(
-            f"cross-table MV diverged from star recompute: "
-            f"{mv_rows} vs {direct_rows}"
-        )
+    if not multisets_equal(mv, direct):
+        raise RuntimeError("cross-table MV diverged from star recompute")
     return mv.orderBy("segment")
 
 
