@@ -3,8 +3,11 @@
 Ground truth is FIXTURES.md (pyarrow inspection of the driver testdata).
 Schemas are declared, never inferred — the driver's oracle compares result
 schemas, so the engine must be deterministic about types from the scan up
-(SURVEY.md §1.1). At 100 TB the same discipline avoids a schema-inference
-pass over the whole dataset.
+(SURVEY.md §1.1). ``TABLES`` is exactly what ``load()`` returns, and every
+scan reads through it, so no load starts a Spark job: an inferred read runs
+one footer-inference job per table, and at 100 TB a pass over the whole
+dataset. The one column whose read type comes from the file is
+``events.ts`` (see ``load``).
 """
 
 from __future__ import annotations
@@ -48,7 +51,7 @@ TABLES: dict[str, T.StructType] = {
         T.StructField("o_custkey", T.LongType()),
         T.StructField("o_orderstatus", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-        T.StructField("o_orderdate", T.TimestampType()),
+        T.StructField("o_orderdate", T.TimestampNTZType()),
         T.StructField("o_orderpriority", T.StringType()),
     ]),
     "lineitem": T.StructType([
@@ -62,7 +65,7 @@ TABLES: dict[str, T.StructType] = {
         T.StructField("l_tax", T.DoubleType()),
         T.StructField("l_returnflag", T.StringType()),
         T.StructField("l_linestatus", T.StringType()),
-        T.StructField("l_shipdate", T.TimestampType()),
+        T.StructField("l_shipdate", T.TimestampNTZType()),
     ]),
     "events": T.StructType([
         T.StructField("event_id", T.LongType()),
@@ -96,16 +99,47 @@ def path_for(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one catalog table. Parquet scan + Catalyst gives predicate
-    pushdown and column pruning downstream for free.
+def _events_read(path: str):
+    """The schema ``events`` is read with, whose ``ts`` type is keyed on the
+    file's parquet footer, and the column that turns that ``ts`` into
+    ``TABLES["events"]``'s µs timestamp (``None``: already one). pyarrow
+    reads the footer on the driver, so no Spark job starts."""
+    import json
 
-    ``events.ts`` is TIMESTAMP(NANOS) in parquet, which Spark's vectorized
-    reader rejects outright; we read it as a nanos long (legacy conf) and
-    convert to a µs timestamp. Integer division is mandatory — the nanos
-    magnitude (~1.7e18) exceeds double's 2^53 exact range. Sub-µs bits are
-    all zero in this corpus (verified), so the conversion is lossless.
-    Trade-off noted for scale: ts predicates no longer push into the
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    footer = pq.read_metadata(path).schema
+    logical = json.loads(footer.column(footer.names.index("ts")).logical_type.to_json())
+    if logical.get("timeUnit") == "nanoseconds":
+        ts_read, to_timestamp = T.LongType(), F.timestamp_micros(F.expr("ts DIV 1000"))
+    elif logical.get("Type") == "Timestamp" and not logical["isAdjustedToUTC"]:
+        ts_read, to_timestamp = T.TimestampNTZType(), F.col("ts").cast("timestamp")
+    else:  # UTC-adjusted, or INT96 (no logical type), which Spark writes by default
+        ts_read, to_timestamp = T.TimestampType(), None
+    schema = T.StructType([
+        T.StructField("ts", ts_read) if f.name == "ts" else f for f in TABLES["events"]
+    ])
+    return schema, to_timestamp
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one catalog table with its declared schema; the scan starts no
+    Spark job. Parquet scan + Catalyst gives predicate pushdown and column
+    pruning downstream for free.
+
+    The result schema is ``TABLES[name]``. Every column reads as declared
+    except ``events.ts``, whose read type comes from the file's footer:
+
+    - TIMESTAMP(NANOS), which Spark's vectorized reader rejects outright,
+      reads as a nanos long (legacy conf) and converts to a µs timestamp.
+      Integer division is mandatory — the nanos magnitude (~1.7e18)
+      exceeds double's 2^53 exact range. Sub-µs bits are dropped.
+    - MILLIS/MICROS without a time zone read as TIMESTAMP_NTZ and cast to
+      a session-UTC timestamp.
+    - A UTC-adjusted timestamp reads as a timestamp.
+
+    Trade-off noted for scale: cast ts predicates no longer push into the
     parquet scan; a production layout would partition by date instead.
     """
     if name not in TABLES:
@@ -115,24 +149,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # sees UTC-naive timestamps, and every date_trunc/window/cast must
     # render identically regardless of the host session's timezone.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        from pyspark.sql import functions as F
-
-        # Spark builds differ in how they surface parquet TIMESTAMP(NANOS):
-        # with the legacy conf honored the column reads as a nanos BIGINT;
-        # newer readers return TIMESTAMP_NTZ (already µs-truncated). Branch
-        # on the actual read dtype so both shapes land on the same µs
-        # TimestampType the rest of the engine (and the DuckDB oracle's
-        # UTC-naive view) expects.
+    path = path_for(sf_dir, name)
+    if name != "events":
+        return spark.read.schema(TABLES[name]).parquet(path)
+    schema, to_timestamp = _events_read(path)
+    if schema["ts"].dataType == T.LongType():
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path_for(sf_dir, name))
-        ts_type = df.schema["ts"].dataType.typeName()
-        if ts_type == "long":
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        if ts_type == "timestamp_ntz":
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path_for(sf_dir, name))
+    df = spark.read.schema(schema).parquet(path)
+    return df if to_timestamp is None else df.withColumn("ts", to_timestamp)
 
 
 def register_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
