@@ -152,10 +152,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = path_for(sf_dir, name)
     if name != "events":
         return spark.read.schema(TABLES[name]).parquet(path)
-    schema, to_timestamp = _events_read(path)
+    return read_events(spark, spark.read, path, path)
+
+
+def read_events(spark: SparkSession, reader, path: str, footer_path: str) -> DataFrame:
+    """``events`` at ``path`` through ``reader`` (``spark.read`` or
+    ``spark.readStream``), read and converted by the ``ts`` rule of
+    `load`, keyed on the footer of the parquet file ``footer_path``."""
+    schema, to_timestamp = _events_read(footer_path)
     if schema["ts"].dataType == T.LongType():
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.schema(schema).parquet(path)
+    df = reader.schema(schema).parquet(path)
     return df if to_timestamp is None else df.withColumn("ts", to_timestamp)
 
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkgraft.catalog import read_events
 from sparkgraft.proofs import multisets_equal
 from sparkgraft.registry import key_root, query
 from sparkgraft.table import (
@@ -66,20 +67,6 @@ from sparkgraft.table import (
     txn_publish,
     txn_write_checkpoint,
 )
-
-# Parquet stores events.ts as TIMESTAMP(NANOS). This reader build surfaces
-# it as TIMESTAMP_NTZ (µs-truncated — sub-µs bits are zero in this corpus,
-# see catalog.load); declaring a LongType here instead would silently hand
-# over MICROsecond longs, so the schema pins NTZ and the source casts to a
-# session-UTC timestamp.
-_EVENTS_RAW_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.TimestampNTZType()),
-    T.StructField("user_id", T.LongType()),
-    T.StructField("event_type", T.StringType()),
-    T.StructField("value", T.DoubleType()),
-    T.StructField("props", T.StringType()),
-])
 
 # Fixed split point for the watermark-late scenario: recent half replayed
 # first, old half second (and therefore dropped as late).
@@ -154,14 +141,19 @@ def _stage_events_split(sf_dir: str) -> str:
 
 
 def _events_stream(spark: SparkSession, path: str, max_files: int | None = None) -> DataFrame:
+    """The staged ``events`` files under ``path`` as a file-source stream,
+    read by `catalog.load`'s ``ts`` rule (ns, ms/µs, UTC-adjusted) keyed
+    on the footer of the first staged file, so a stream and its batch
+    twin see the same ``ts``. The sf0.001–sf0.1 files hold INT64
+    TIMESTAMP(MICROS, isAdjustedToUTC=false)."""
     # Same session pinning as catalog.load — the driver's session is not
     # ours, and window()/date_trunc semantics must match the UTC oracle.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    reader = spark.readStream.schema(_EVENTS_RAW_SCHEMA)
+    staged = min(n for n in os.listdir(path) if n.endswith(".parquet"))
+    reader = spark.readStream
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", max_files)
-    df = reader.parquet(path)
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return read_events(spark, reader, path, os.path.join(path, staged))
 
 
 def _run_to_table(df: DataFrame, key: str, mode: str) -> DataFrame:

@@ -75,6 +75,22 @@ def test_declared_schema_matches_benchmark_tables(spark, perfbench_dir, name):
 
 _BASE = datetime.datetime(2024, 1, 3, 4, 5, 6)
 _US = [0, 1_000, 123_000, 86_399_999_000]  # whole ms, so every unit holds them
+_EXPECTED = [_BASE + datetime.timedelta(microseconds=us) for us in _US]
+
+
+def _write_events(path: str, arrow_type) -> None:
+    """Write ``events`` with ``ts`` as ``arrow_type``, rows ``_EXPECTED``."""
+    n = len(_US)
+    table = pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array(_EXPECTED, pa.timestamp("us")).cast(arrow_type),
+        "user_id": pa.array([7] * n, pa.int64()),
+        "event_type": ["click"] * n,
+        "value": [1.5] * n,
+        "props": ['{"k": 1}'] * n,
+    })
+    # version 2.6 keeps TIMESTAMP(NANOS) instead of coercing it to µs.
+    pq.write_table(table, path, version="2.6")
 
 
 @pytest.mark.parametrize(
@@ -88,18 +104,7 @@ _US = [0, 1_000, 123_000, 86_399_999_000]  # whole ms, so every unit holds them
     ids=["ns", "us", "ms", "us_utc"],
 )
 def test_events_ts_unit_branches(spark, tmp_path, arrow_type, footer):
-    n = len(_US)
-    expected = [_BASE + datetime.timedelta(microseconds=us) for us in _US]
-    table = pa.table({
-        "event_id": pa.array(range(n), pa.int64()),
-        "ts": pa.array(expected, pa.timestamp("us")).cast(arrow_type),
-        "user_id": pa.array([7] * n, pa.int64()),
-        "event_type": ["click"] * n,
-        "value": [1.5] * n,
-        "props": ['{"k": 1}'] * n,
-    })
-    # version 2.6 keeps TIMESTAMP(NANOS) instead of coercing it to µs.
-    pq.write_table(table, path_for(str(tmp_path), "events"), version="2.6")
+    _write_events(path_for(str(tmp_path), "events"), arrow_type)
     ts_column = pq.read_metadata(path_for(str(tmp_path), "events")).schema.column(1)
     assert footer in str(ts_column.logical_type)
 
@@ -108,4 +113,22 @@ def test_events_ts_unit_branches(spark, tmp_path, arrow_type, footer):
     assert df.schema == TABLES["events"]
     got = df.selectExpr("event_id", "unix_micros(ts) AS us").orderBy("event_id").collect()
     epoch = datetime.datetime(1970, 1, 1)
-    assert [r.us for r in got] == [(t - epoch) // datetime.timedelta(microseconds=1) for t in expected]
+    assert [r.us for r in got] == [(t - epoch) // datetime.timedelta(microseconds=1) for t in _EXPECTED]
+
+
+@pytest.mark.parametrize(
+    "arrow_type", [pa.timestamp("ns"), pa.timestamp("us", tz="UTC")], ids=["ns", "us_utc"]
+)
+def test_events_stream_reads_like_load(spark, tmp_path, arrow_type):
+    """The file-source stream keys read ``events`` by ``load``'s rule."""
+    from sparkgraft.streaming import _events_stream, _run_to_table
+
+    staged = tmp_path / "staged"
+    staged.mkdir()
+    _write_events(str(staged / "000-events.parquet"), arrow_type)
+    _write_events(path_for(str(tmp_path), "events"), arrow_type)
+
+    streamed = _run_to_table(_events_stream(spark, str(staged)), "catalog_events", "append")
+    batch = load(spark, str(tmp_path), "events")
+    assert streamed.schema == batch.schema == TABLES["events"]
+    assert sorted(streamed.collect()) == sorted(batch.collect())

@@ -1,0 +1,188 @@
+"""The driver JVM's class-data-sharing start (`session._cds_launch`) and the
+default heap.
+
+The unit tests drive the archive decision against a temporary cache and
+a fake Spark home; they start no JVM. The subprocess tests start fresh
+sessions against a temporary ``XDG_CACHE_HOME`` and ask the JVM itself,
+through its class-load log, where its classes came from.
+"""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+from sparkgraft import session
+
+ROOT = Path(__file__).resolve().parents[1]
+
+
+@pytest.fixture
+def launch(tmp_path, monkeypatch):
+    """A template-only conf dir, an empty cache and a capturing
+    ``atexit.register``; returns ``(run, cds_dir, hooks)``."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf.template").write_text("# spark.master local\n")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    for name in session._CLASSPATH_ENV:
+        monkeypatch.delenv(name, raising=False)
+    hooks = []
+    monkeypatch.setattr(session.atexit, "register", lambda *a: hooks.append(a))
+    return (lambda: session._cds_launch("2g")), tmp_path / "cache" / "sparkgraft" / "cds", hooks
+
+
+def _key(heap: str = "2g") -> str:
+    return session._archive_key(session._java(), session._find_spark_home(), heap)
+
+
+def test_no_archive_dumps_to_a_temp_path(launch):
+    run, cds, hooks = launch
+    options = run()
+    dump = cds / f"{_key()}.{os.getpid()}.dump"
+    assert options == f"-XX:ArchiveClassesAtExit={dump} -Xlog:cds*=off"
+    assert os.environ["SPARK_CONF_DIR"] == str(cds / "conf")
+    assert os.listdir(cds / "conf") == []
+    assert hooks == [(session._promote_dump, str(dump))]
+
+
+def test_complete_archive_maps(launch):
+    run, cds, hooks = launch
+    cds.mkdir(parents=True)
+    body = session._CDS_MAGIC + b"\0" * 60
+    archive = cds / f"{_key()}.{len(body)}.jsa"
+    archive.write_bytes(body)
+    assert run() == f"-XX:SharedArchiveFile={archive} -Xlog:cds*=off"
+    assert os.environ["SPARK_CONF_DIR"] == str(cds / "conf")
+    assert hooks == []
+
+
+@pytest.mark.parametrize("damage", ["truncated", "no_header"])
+def test_damaged_archive_is_removed_and_redumped(launch, damage):
+    run, cds, hooks = launch
+    cds.mkdir(parents=True)
+    body = session._CDS_MAGIC + b"\0" * 60
+    archive = cds / f"{_key()}.{len(body)}.jsa"
+    archive.write_bytes(body[:30] if damage == "truncated" else b"\0" * len(body))
+    assert "-XX:ArchiveClassesAtExit=" in run()
+    assert not archive.exists()
+    assert len(hooks) == 1
+
+
+def test_dump_of_a_gone_process_is_removed(launch):
+    run, cds, _ = launch
+    cds.mkdir(parents=True)
+    gone = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True)
+    stale = cds / f"{_key()}.{int(gone.stdout)}.dump"
+    live = cds / f"{_key('4g')}.{os.getppid()}.dump"
+    stale.write_bytes(b"\0")
+    live.write_bytes(b"\0")
+    run()
+    assert not stale.exists() and live.exists()
+
+
+def test_real_conf_file_leaves_the_start_unchanged(launch):
+    run, cds, hooks = launch
+    (Path(os.environ["SPARK_CONF_DIR"]) / "spark-defaults.conf").write_text("spark.foo bar\n")
+    before = dict(os.environ)
+    assert run() is None
+    assert dict(os.environ) == before
+    assert hooks == [] and not cds.exists()
+
+
+def test_extra_classpath_dir_leaves_the_start_unchanged(launch, monkeypatch):
+    run, _, hooks = launch
+    monkeypatch.setenv("HADOOP_CONF_DIR", "/etc/hadoop")
+    before = dict(os.environ)
+    assert run() is None
+    assert dict(os.environ) == before and hooks == []
+
+
+def test_key_differs_across_heaps_and_jar_sets(tmp_path):
+    java = session._java()
+    jars = tmp_path / "jars"
+    jars.mkdir()
+    (jars / "a.jar").write_bytes(b"a")
+    home = str(tmp_path)
+    base = session._archive_key(java, home, "2g")
+    assert session._archive_key(java, home, "2g") == base
+    assert session._archive_key(java, home, "32g") != base
+    (jars / "b.jar").write_bytes(b"b")
+    added = session._archive_key(java, home, "2g")
+    assert added != base
+    os.utime(jars / "b.jar", ns=(1, 1))
+    assert session._archive_key(java, home, "2g") != added
+
+
+def test_default_heap_is_a_quarter_of_ram_at_least_2g():
+    with open("/proc/meminfo") as f:
+        total_mib = int(f.readline().split()[1]) // 1024
+    heap = session._default_driver_memory()
+    assert heap == f"{max(2048, total_mib // 4)}m"
+    assert int(heap[:-1]) >= 2048
+
+
+# One fresh session per process: start, one query through a Python worker
+# (which opens the accumulator connection), exit without stopping.
+_SESSION = ("import sparkgraft; s = sparkgraft.get_session('cds-test'); "
+            "print(s.range(1000).rdd.map(lambda r: r[0]).sum())")
+
+
+def _fresh_session(cache: Path, extra_opts: str = "") -> subprocess.CompletedProcess:
+    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_GRAFT_DRIVER_MEM="1g",
+               SPARK_GRAFT_CPUS="2", PYTHONPATH=str(ROOT))
+    env.pop("SPARK_CONF_DIR", None)  # the test session's own JVM may have set it
+    env["SPARK_SUBMIT_OPTS"] = f"{env.get('SPARK_SUBMIT_OPTS', '')} {extra_opts}".strip()
+    return subprocess.run([sys.executable, "-c", _SESSION], env=env, cwd=str(cache.parent),
+                          capture_output=True, text=True, timeout=300)
+
+
+def _archives(cache: Path) -> list[Path]:
+    return sorted((cache / "sparkgraft" / "cds").glob("*.jsa"))
+
+
+@pytest.fixture(scope="module")
+def dumped(tmp_path_factory):
+    """A cache in which one fresh session has dumped its archive."""
+    cache = tmp_path_factory.mktemp("cds") / "cache"
+    first = _fresh_session(cache)
+    assert first.returncode == 0, first.stderr[-2000:]
+    assert first.stdout == "499500\n"  # the dump's CDS log lines are silenced
+    assert "[cds" not in first.stderr and "Exception" not in first.stderr
+    return cache
+
+
+def test_second_session_maps_the_archive(dumped, tmp_path):
+    [archive] = _archives(dumped)
+    assert archive.stat().st_size == session._middle(archive.name)
+    log = tmp_path / "class-load.log"
+    second = _fresh_session(dumped, f"-Xlog:class+load=info:file={log}")
+    assert second.returncode == 0, second.stderr[-2000:]
+    assert second.stdout == "499500\n"
+    # "(top)" is the dynamic archive stacked on the JDK's base archive.
+    loaded = [ln for ln in log.read_text().splitlines()
+              if " org.apache.spark.SparkContext " in ln]
+    assert loaded and loaded[0].endswith("source: shared objects file (top)")
+    assert _archives(dumped) == [archive]
+
+
+def test_truncated_archive_still_starts(dumped, tmp_path):
+    [archive] = _archives(dumped)
+    # Replace, never truncate in place: a lingering JVM may still map it.
+    part = archive.with_suffix(".part")
+    with open(archive, "rb") as src, open(part, "wb") as dst:
+        dst.write(src.read(archive.stat().st_size // 2))
+    os.replace(part, archive)
+    third = _fresh_session(dumped)
+    assert third.returncode == 0, third.stderr[-2000:]
+    assert third.stdout == "499500\n"
+    assert not list(dumped.parent.glob("hs_err_pid*.log"))
+    # The damaged archive is gone and this session's exit dumped a new one.
+    [fresh] = _archives(dumped)
+    assert fresh.stat().st_size == session._middle(fresh.name)
