@@ -294,6 +294,15 @@ GROUP13 = [
     "sim_ivf_index_asof",
 ]
 
+# The groups after the headline, in run order. Group N reports as
+# "group{N}_total" on stdout, "g{N}" in "normalized_totals" and
+# "group{N}_queries" / "group{N}_runs" in BENCH_trace.json.
+GROUPS = {
+    2: GROUP2, 3: GROUP3, 4: GROUP4, 5: GROUP5, 6: GROUP6, 7: GROUP7,
+    8: GROUP8, 9: GROUP9, 10: GROUP10, 11: GROUP11, 12: GROUP12,
+    13: GROUP13,
+}
+
 # Host-drift normalization (r8, the r7 verdict's ask #7): BENCH artifacts
 # compare raw seconds across rounds on a host with documented ambient
 # drift (BENCH_r07 read a uniform 1.1-1.4x over identical r6 plans). The
@@ -428,60 +437,23 @@ def main() -> int:
         the full per-key samples ride in the trace)."""
         return round(os.getloadavg()[0], 2)
 
+    def _registered(keys: list[str]) -> list[str]:
+        return [k for k in keys if k in sparkgraft.QUERIES]
+
     bound_loads: list[float] = [_bound()]
     timings, traces = _time_group(
-        spark, sf_dir, [k for k in HEADLINE if k in sparkgraft.QUERIES], loadavg_samples
+        spark, sf_dir, _registered(HEADLINE), loadavg_samples
     )
     bound_loads.append(_bound())
     probe_start = _probe(spark, sf_dir)  # bracket probe 1 (post-headline)
-    timings2, traces2 = _time_group(
-        spark, sf_dir, [k for k in GROUP2 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings3, traces3 = _time_group(
-        spark, sf_dir, [k for k in GROUP3 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings4, traces4 = _time_group(
-        spark, sf_dir, [k for k in GROUP4 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings5, traces5 = _time_group(
-        spark, sf_dir, [k for k in GROUP5 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings6, traces6 = _time_group(
-        spark, sf_dir, [k for k in GROUP6 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings7, traces7 = _time_group(
-        spark, sf_dir, [k for k in GROUP7 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings8, traces8 = _time_group(
-        spark, sf_dir, [k for k in GROUP8 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings9, traces9 = _time_group(
-        spark, sf_dir, [k for k in GROUP9 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings10, traces10 = _time_group(
-        spark, sf_dir, [k for k in GROUP10 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings11, traces11 = _time_group(
-        spark, sf_dir, [k for k in GROUP11 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings12, traces12 = _time_group(
-        spark, sf_dir, [k for k in GROUP12 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
-    timings13, traces13 = _time_group(
-        spark, sf_dir, [k for k in GROUP13 if k in sparkgraft.QUERIES], loadavg_samples
-    )
-    bound_loads.append(_bound())
+    group_timings: dict[int, dict[str, float]] = {}
+    group_traces: dict[int, dict[str, list[float]]] = {}
+    for n, keys in GROUPS.items():
+        group_timings[n], group_traces[n] = _time_group(
+            spark, sf_dir, _registered(keys), loadavg_samples
+        )
+        bound_loads.append(_bound())
+    group_totals = {n: sum(t.values()) for n, t in group_timings.items()}
 
     probe_end = _probe(spark, sf_dir)
     host_probe = min(probe_start, probe_end)
@@ -511,18 +483,7 @@ def main() -> int:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "stat": f"min_of_{TIMED_REPS}",
-        "group2_total": round(sum(timings2.values()), 4),
-        "group3_total": round(sum(timings3.values()), 4),
-        "group4_total": round(sum(timings4.values()), 4),
-        "group5_total": round(sum(timings5.values()), 4),
-        "group6_total": round(sum(timings6.values()), 4),
-        "group7_total": round(sum(timings7.values()), 4),
-        "group8_total": round(sum(timings8.values()), 4),
-        "group9_total": round(sum(timings9.values()), 4),
-        "group10_total": round(sum(timings10.values()), 4),
-        "group11_total": round(sum(timings11.values()), 4),
-        "group12_total": round(sum(timings12.values()), 4),
-        "group13_total": round(sum(timings13.values()), 4),
+        **{f"group{n}_total": round(t, 4) for n, t in group_totals.items()},
         # r9 (the r8 verdict's ask #7): the load adjudication data rides
         # in the GRADED stdout line, not just the side trace — the 1-min
         # loadavg at start and at every group boundary, plus a loud gate
@@ -545,38 +506,18 @@ def main() -> int:
             name: round(total * scale, 2)
             for name, total in [
                 ("headline", headline_total),
-                ("g2", sum(timings2.values())),
-                ("g3", sum(timings3.values())),
-                ("g4", sum(timings4.values())),
-                ("g5", sum(timings5.values())),
-                ("g6", sum(timings6.values())),
-                ("g7", sum(timings7.values())),
-                ("g8", sum(timings8.values())),
-                ("g9", sum(timings9.values())),
-                ("g10", sum(timings10.values())),
-                ("g11", sum(timings11.values())),
-                ("g12", sum(timings12.values())),
-                ("g13", sum(timings13.values())),
+                *((f"g{n}", t) for n, t in group_totals.items()),
             ]
         },
         "trace_file": "BENCH_trace.json",
     }
-    trace = dict(result)
-    trace.update(
-        {"group2_queries": timings2, "group3_queries": timings3,
-         "group4_queries": timings4, "group5_queries": timings5,
-         "group6_queries": timings6, "group7_queries": timings7,
-         "group8_queries": timings8, "group9_queries": timings9,
-         "group10_queries": timings10, "group11_queries": timings11,
-         "group12_queries": timings12, "group13_queries": timings13,
-         "runs": traces, "group2_runs": traces2, "group3_runs": traces3,
-         "group4_runs": traces4, "group5_runs": traces5,
-         "group6_runs": traces6, "group7_runs": traces7,
-         "group8_runs": traces8, "group9_runs": traces9,
-         "group10_runs": traces10, "group11_runs": traces11,
-         "group12_runs": traces12, "group13_runs": traces13,
-         "loadavg": loadavg_samples}
-    )
+    trace = {
+        **result,
+        **{f"group{n}_queries": t for n, t in group_timings.items()},
+        "runs": traces,
+        **{f"group{n}_runs": t for n, t in group_traces.items()},
+        "loadavg": loadavg_samples,
+    }
     trace_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                               "BENCH_trace.json")
     try:

@@ -17,21 +17,28 @@ from .catalog import TABLES, load
 from .registry import _SCRATCH, _scratch, query
 from .table import (
     CommitConflict,
-    EXPIRED_SUFFIX,
     MOR_DELETE_CLASS,
     TXN_CKPT_POINTER,
+    ckpt_versions,
     commit_rewrite,
     commit_snapshot,
     data_files_of,
+    drop_ref,
     empty_log,
     expire_snapshots,
+    get_ref,
+    head_files,
     head_version,
     log_versions,
     manifest_path,
     mor_read,
     publish_checkpoint,
     read_manifest,
+    ref_files,
+    set_ref,
     split_head_files,
+    stage,
+    tombstone_manifest,
     tree_files,
     try_publish,
     txn_ckpt_path,
@@ -1309,16 +1316,11 @@ def scan_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = _scratch(sf_dir, "tt_manifest")
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_TT_CUTOFF).cast("timestamp")
-    o.filter(F.col("o_orderdate") < cutoff).write.mode("overwrite").parquet(
-        snap1_dir
-    )
-    o.filter(F.col("o_orderdate") >= cutoff).write.mode("overwrite").parquet(
-        snap2_dir
-    )
+    snap1_files = stage(o.filter(F.col("o_orderdate") < cutoff), snap1_dir)
+    snap2_files = stage(o.filter(F.col("o_orderdate") >= cutoff), snap2_dir)
 
-    snap1_files = data_files_of(snap1_dir)
     log = spark.createDataFrame(
-        [(1, snap1_files), (2, snap1_files + data_files_of(snap2_dir))],
+        [(1, snap1_files), (2, snap1_files + snap2_files)],
         "snapshot int, files array<string>",
     )
     log.write.mode("overwrite").json(manifest)
@@ -1540,15 +1542,8 @@ def scan_snapshot_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap2_dir = _scratch(sf_dir, "inc_snap2")
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_TT_CUTOFF).cast("timestamp")
-    o.filter(F.col("o_orderdate") < cutoff).write.mode("overwrite").parquet(
-        snap1_dir
-    )
-    o.filter(F.col("o_orderdate") >= cutoff).write.mode("overwrite").parquet(
-        snap2_dir
-    )
-
-    v1 = data_files_of(snap1_dir)
-    v2 = v1 + data_files_of(snap2_dir)
+    v1 = stage(o.filter(F.col("o_orderdate") < cutoff), snap1_dir)
+    v2 = v1 + stage(o.filter(F.col("o_orderdate") >= cutoff), snap2_dir)
     delta = sorted(set(v2) - set(v1))  # manifest diff, KB-scale metadata
     return spark.read.parquet(*delta).agg(
         F.count("*").cast("long").alias("n_rows"),
@@ -1610,18 +1605,12 @@ def sink_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_dir = os.path.join(root, "base")
     a_dir = os.path.join(root, "writer_a")
     b_dir = os.path.join(root, "writer_b")
-    o.filter(F.col("o_orderdate") < cutoff).write.mode("overwrite").parquet(
-        base_dir
-    )
+    base_files = stage(o.filter(F.col("o_orderdate") < cutoff), base_dir)
     rest = o.filter(F.col("o_orderdate") >= cutoff)
-    rest.filter(F.col("o_orderkey") % 2 == 0).write.mode(
-        "overwrite"
-    ).parquet(a_dir)
-    rest.filter(F.col("o_orderkey") % 2 == 1).write.mode(
-        "overwrite"
-    ).parquet(b_dir)
+    a_files = stage(rest.filter(F.col("o_orderkey") % 2 == 0), a_dir)
+    b_files = stage(rest.filter(F.col("o_orderkey") % 2 == 1), b_dir)
 
-    v1, r1 = commit_snapshot(log_dir, data_files_of(base_dir))
+    v1, r1 = commit_snapshot(log_dir, base_files)
     if (v1, r1) != (1, 0):
         raise RuntimeError(f"base commit not v1/clean: {(v1, r1)}")
 
@@ -1629,14 +1618,14 @@ def sink_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     head_a = head_version(log_dir)
     parent_a = read_manifest(log_dir, head_a)["files"]
     # ... B publishes first and wins v2 ...
-    v2, r2 = commit_snapshot(log_dir, data_files_of(b_dir))
+    v2, r2 = commit_snapshot(log_dir, b_files)
     if (v2, r2) != (2, 0):
         raise RuntimeError(f"writer B did not win v2 cleanly: {(v2, r2)}")
     # ... A's stale CAS must LOSE, then rebase onto v2 and land v3
-    if try_publish(log_dir, head_a + 1, parent_a + data_files_of(a_dir)):
+    if try_publish(log_dir, head_a + 1, parent_a + a_files):
         raise RuntimeError("stale CAS won against a committed version")
     n_retries = 1
-    v3, r3 = commit_snapshot(log_dir, data_files_of(a_dir))
+    v3, r3 = commit_snapshot(log_dir, a_files)
     if (v3, r3) != (3, 0):
         raise RuntimeError(f"writer A's rebase did not land v3: {(v3, r3)}")
 
@@ -1707,21 +1696,15 @@ def sink_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_dir = os.path.join(root, "base")
     compact_dir = os.path.join(root, "compact")
     rest_dir = os.path.join(root, "rest")
-    base.write.mode("overwrite").parquet(base_dir)
-    base_files = data_files_of(base_dir)  # pinned BEFORE vacuum unlinks
+    base_files = stage(base, base_dir)  # pinned BEFORE vacuum unlinks
     commit_snapshot(log_dir, base_files)  # v1
-    spark.read.parquet(*base_files).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(compact_dir)
     commit_snapshot(  # v2: compaction = remove the inputs, add the rewrite
         log_dir,
-        data_files_of(compact_dir),
+        stage(spark.read.parquet(*base_files).coalesce(1), compact_dir),
         remove_files=base_files,
     )
-    o.filter(F.col("o_orderdate") >= cutoff).write.mode("overwrite").parquet(
-        rest_dir
-    )
-    commit_snapshot(log_dir, data_files_of(rest_dir))  # v3
+    rest = o.filter(F.col("o_orderdate") >= cutoff)
+    commit_snapshot(log_dir, stage(rest, rest_dir))  # v3
 
     retained, expired, orphans = expire_snapshots(log_dir, retain_last=2)
     if set(orphans) != set(base_files):
@@ -1877,18 +1860,15 @@ def scan_snapshot_as_of_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         ("c2", o.filter(F.col("o_orderdate") >= cutoff)),
     ]
     for name, df in slices:
-        d = os.path.join(root, name)
-        df.write.mode("overwrite").parquet(d)
+        files = stage(df, os.path.join(root, name))
         wm = (
-            spark.read.parquet(*data_files_of(d))
+            spark.read.parquet(*files)
             .agg(F.max(F.to_date("o_orderdate")).cast("string"))
             .collect()[0][0]
         )
         # the watermark rides IN the commit record (manifests are
         # immutable once published — no post-publish patching)
-        commit_snapshot(
-            log_dir, data_files_of(d), extra={"watermark": wm}
-        )
+        commit_snapshot(log_dir, files, extra={"watermark": wm})
 
     def resolve(as_of: str) -> dict:
         best = None
@@ -1967,13 +1947,7 @@ def sink_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.abs(F.xxhash64("o_orderkey")) % 4
     for i in range(4):  # four ingestion commits, 4 files each
         d = os.path.join(root, f"ingest{i}")
-        (
-            o.filter(q == i)
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-        commit_snapshot(log_dir, data_files_of(d))
+        commit_snapshot(log_dir, stage(o.filter(q == i).repartition(4), d))
 
     head = head_version(log_dir)
     before = read_manifest(log_dir, head)["files"]
@@ -1982,29 +1956,25 @@ def sink_auto_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"ingestion debris missing: only {len(before)} files"
         )
     # the policy fires: rewrite the whole table as a remove/add delta
-    cdir = os.path.join(root, "compacted")
-    (
-        spark.read.parquet(*before)
-        .repartition(_COMPACT_TARGET_FILES)
-        .write.mode("overwrite")
-        .parquet(cdir)
+    after_files = stage(
+        spark.read.parquet(*before).repartition(_COMPACT_TARGET_FILES),
+        os.path.join(root, "compacted"),
     )
-    after_files = data_files_of(cdir)
     commit_snapshot(log_dir, after_files, remove_files=before)
 
     versions = log_versions(log_dir)
-    head_files = read_manifest(log_dir, versions[-1])["files"]
+    head_list = read_manifest(log_dir, versions[-1])["files"]
     if versions != [1, 2, 3, 4, 5]:
         raise RuntimeError(f"log not linear: {versions}")
-    if sorted(head_files) != sorted(after_files):
+    if sorted(head_list) != sorted(after_files):
         raise RuntimeError("head is not exactly the compacted rewrite")
     if not all(os.path.exists(f) for f in before):
         raise RuntimeError(
             "compaction deleted data files — that is vacuum's job"
         )
-    return spark.read.parquet(*head_files).agg(
+    return spark.read.parquet(*head_list).agg(
         F.lit(len(before)).cast("int").alias("files_before"),
-        F.lit(len(head_files)).cast("int").alias("files_after"),
+        F.lit(len(head_list)).cast("int").alias("files_after"),
         F.lit(len(versions)).cast("int").alias("n_snapshots"),
         F.count("*").cast("long").alias("n_rows"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
@@ -2068,19 +2038,15 @@ def sink_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected = [f for f in all_files if f"{os.sep}o_year=1997{os.sep}" in f]
     if len(affected) != 1:
         raise RuntimeError(f"expected one 1997 file, got {affected}")
-    rewrite_dir = os.path.join(root, "rewrite_1997")
-    (
+    rewrite = stage(
         spark.read.parquet(*affected)
         .filter(~(F.col("o_orderkey") % 2 == 0))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(rewrite_dir)
+        .coalesce(1),
+        os.path.join(root, "rewrite_1997"),
     )
-    commit_snapshot(
-        log_dir, data_files_of(rewrite_dir), remove_files=affected
-    )  # v2: the COW delete
+    commit_snapshot(log_dir, rewrite, remove_files=affected)  # v2: COW delete
 
-    head = read_manifest(log_dir, head_version(log_dir))["files"]
+    head = head_files(log_dir)
     untouched = set(all_files) - set(affected)
     if not untouched <= set(head):
         raise RuntimeError("COW delete disturbed non-matching files")
@@ -2142,13 +2108,14 @@ def sink_schema_evolution_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
     v1_dir = os.path.join(root, "gen1")
     v2_dir = os.path.join(root, "gen2")
-    o.filter(F.col("o_orderdate") < cutoff).select(
-        "o_orderkey", "o_totalprice"
-    ).write.mode("overwrite").parquet(v1_dir)
-    commit_snapshot(
-        log_dir, data_files_of(v1_dir), extra={"schema_version": 1}
+    v1_files = stage(
+        o.filter(F.col("o_orderdate") < cutoff).select(
+            "o_orderkey", "o_totalprice"
+        ),
+        v1_dir,
     )
-    (
+    commit_snapshot(log_dir, v1_files, extra={"schema_version": 1})
+    v2_files = stage(
         o.filter(F.col("o_orderdate") >= cutoff)
         .select(
             "o_orderkey",
@@ -2157,19 +2124,16 @@ def sink_schema_evolution_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array(F.lit("web"), F.lit("store"), F.lit("b2b")),
                 (F.col("o_orderkey") % 3 + 1).cast("int"),
             ).alias("channel"),
-        )
-        .write.mode("overwrite")
-        .parquet(v2_dir)
+        ),
+        v2_dir,
     )
-    commit_snapshot(
-        log_dir, data_files_of(v2_dir), extra={"schema_version": 2}
-    )
+    commit_snapshot(log_dir, v2_files, extra={"schema_version": 2})
 
     versions = log_versions(log_dir)
     head = read_manifest(log_dir, versions[-1])
     if head.get("schema_version") != 2:
         raise RuntimeError("head manifest lost the schema bump")
-    if not set(data_files_of(v1_dir)) <= set(head["files"]):
+    if not set(v1_files) <= set(head["files"]):
         raise RuntimeError("evolution rewrote history — old files replaced")
     merged = spark.read.option("mergeSchema", "true").parquet(*head["files"])
     return (
@@ -2257,8 +2221,7 @@ def sink_acid_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected = [f for f in all_files if f"{os.sep}o_year=1996{os.sep}" in f]
     if len(affected) != 1:
         raise RuntimeError(f"expected one 1996 file, got {affected}")
-    rewrite_dir = os.path.join(root, "rewrite")
-    (
+    adds = stage(
         spark.read.parquet(*affected)
         .withColumn(
             "cents",
@@ -2266,26 +2229,21 @@ def sink_acid_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("o_orderkey") % 5 == 0, F.col("cents") + 500
             ).otherwise(F.col("cents")),
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(rewrite_dir)
-    )
-    insert_dir = os.path.join(root, "inserts")
-    (
+        .coalesce(1),
+        os.path.join(root, "rewrite"),
+    ) + stage(
         o.filter(F.col("o_orderkey") % 1000 == 7)
         .select(
             (F.col("o_orderkey") + F.lit(1_000_000_000)).alias("o_orderkey"),
             F.lit("2002-01-01").cast("timestamp").alias("o_orderdate"),
             (F.col("cents") + 123).alias("cents"),
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(insert_dir)
+        .coalesce(1),
+        os.path.join(root, "inserts"),
     )
-    adds = data_files_of(rewrite_dir) + data_files_of(insert_dir)
     commit_snapshot(log_dir, adds, remove_files=affected)  # v2: the MERGE
 
-    head = read_manifest(log_dir, head_version(log_dir))["files"]
+    head = head_files(log_dir)
     if set(affected) & set(head):
         raise RuntimeError("merged-away file still referenced")
     if not (set(all_files) - set(affected)) <= set(head):
@@ -2347,68 +2305,48 @@ def scan_branch_tag_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "refs_table")
     log_dir = os.path.join(root, "log")
     refs_dir = os.path.join(root, "refs")
-    os.makedirs(log_dir, exist_ok=True)
-    os.makedirs(refs_dir, exist_ok=True)
-    for d in (log_dir, refs_dir):
-        for v in os.listdir(d):
-            os.unlink(os.path.join(d, v))
-
-    def set_ref(name: str, version: int) -> None:
-        tmp = os.path.join(refs_dir, f".tmp-{name}")
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, os.path.join(refs_dir, name))
-
-    def get_ref(name: str) -> int:
-        with open(os.path.join(refs_dir, name)) as fh:
-            return int(fh.read())
+    empty_log(log_dir)
+    empty_log(refs_dir)
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
     base_dir = os.path.join(root, "base")
     even_dir = os.path.join(root, "even")
     odd_dir = os.path.join(root, "odd")
-    o.filter(F.col("o_orderdate") < cutoff).write.mode("overwrite").parquet(
-        base_dir
-    )
     rest = o.filter(F.col("o_orderdate") >= cutoff)
-    rest.filter(F.col("o_orderkey") % 2 == 0).write.mode(
-        "overwrite"
-    ).parquet(even_dir)
-    rest.filter(F.col("o_orderkey") % 2 == 1).write.mode(
-        "overwrite"
-    ).parquet(odd_dir)
+    base = stage(o.filter(F.col("o_orderdate") < cutoff), base_dir)
+    even = stage(rest.filter(F.col("o_orderkey") % 2 == 0), even_dir)
+    odd = stage(rest.filter(F.col("o_orderkey") % 2 == 1), odd_dir)
 
-    v1, _ = commit_snapshot(log_dir, data_files_of(base_dir))
-    set_ref("tag_baseline", v1)  # frozen pointer
-    set_ref("branch_main", v1)
-    set_ref("branch_audit", v1)  # branch = cheap pointer copy, zero data
+    v1, _ = commit_snapshot(log_dir, base)
+    set_ref(refs_dir, "tag_baseline", v1)  # frozen pointer
+    set_ref(refs_dir, "branch_main", v1)
+    # branch = cheap pointer copy, zero data
+    set_ref(refs_dir, "branch_audit", v1)
 
     # main advances: child of main's head (v1) + even files
-    base_files = read_manifest(log_dir, get_ref("branch_main"))["files"]
-    v2, _ = commit_snapshot(log_dir, data_files_of(even_dir))
-    set_ref("branch_main", v2)
+    base_files = ref_files(log_dir, refs_dir, "branch_main")
+    v2, _ = commit_snapshot(log_dir, even)
+    set_ref(refs_dir, "branch_main", v2)
     # audit advances INDEPENDENTLY from ITS head (v1) + odd files; the
     # log is shared and linear, the branch structure lives in the refs —
     # v3's parent-by-ref is v1, so build its file list from v1, not head
     if not try_publish(
         log_dir,
         v2 + 1,
-        base_files + data_files_of(odd_dir),
+        base_files + odd,
     ):
         raise RuntimeError("branch commit lost an uncontended CAS")
-    set_ref("branch_audit", v2 + 1)
+    set_ref(refs_dir, "branch_audit", v2 + 1)
 
-    main_files = set(read_manifest(log_dir, get_ref("branch_main"))["files"])
-    audit_files = set(
-        read_manifest(log_dir, get_ref("branch_audit"))["files"]
-    )
+    main_files = set(ref_files(log_dir, refs_dir, "branch_main"))
+    audit_files = set(ref_files(log_dir, refs_dir, "branch_audit"))
     shared = set(base_files)
     if not (shared <= main_files and shared <= audit_files):
         raise RuntimeError("branches do not share the v1 files")
     if (main_files - shared) & (audit_files - shared):
         raise RuntimeError("branch deltas are not disjoint")
-    if get_ref("tag_baseline") != v1:
+    if get_ref(refs_dir, "tag_baseline") != v1:
         raise RuntimeError("tag moved — tags are frozen")
 
     per = []
@@ -2417,7 +2355,7 @@ def scan_branch_tag_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("branch:main", "branch_main"),
         ("tag:baseline", "tag_baseline"),
     ]:
-        files = read_manifest(log_dir, get_ref(name))["files"]
+        files = ref_files(log_dir, refs_dir, name)
         per.append(
             spark.read.parquet(*files).agg(
                 F.lit(ref).alias("ref"),
@@ -2475,10 +2413,7 @@ def scan_distcp_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = os.path.join(root, "src")
     dst_dir = os.path.join(root, "dst")
     os.makedirs(dst_dir, exist_ok=True)
-    load(spark, sf_dir, "orders").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    src_files = data_files_of(src_dir)
+    src_files = stage(load(spark, sf_dir, "orders").repartition(4), src_dir)
 
     files = (
         spark.read.format("binaryFile")
@@ -2609,20 +2544,18 @@ def sink_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_snapshot(log_dir, v1_files)  # v1: the base table
 
     # v2: the DELETE — one equality-delete file, ADD-only commit.
-    (
+    tombstones = stage(
         spark.read.parquet(*v1_files)
         .filter(F.expr(_MOR_PRED_SQL))
         .select("o_orderkey")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(del_dir)
+        .coalesce(1),
+        del_dir,
     )
-    tombstones = data_files_of(del_dir)
     if len(tombstones) != 1:
         raise RuntimeError(f"expected one tombstone file, got {tombstones}")
     commit_snapshot(log_dir, tombstones, extra={"op": "mor-delete"})
 
-    head_v2 = read_manifest(log_dir, head_version(log_dir))["files"]
+    head_v2 = head_files(log_dir)
     data_v2, dels_v2 = split_head_files(head_v2)
     if sorted(data_v2) != v1_files:
         raise RuntimeError("MOR delete disturbed data files — must be add-only")
@@ -2643,14 +2576,13 @@ def sink_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     mor_row = mor.agg(*digest).collect()[0]
 
     # v3: the FOLD — rewrite data applying the vector, retire everything.
-    mor.coalesce(2).write.mode("overwrite").parquet(fold_dir)
     commit_snapshot(
         log_dir,
-        data_files_of(fold_dir),
+        stage(mor.coalesce(2), fold_dir),
         remove_files=head_v2,
         extra={"op": "mor-fold"},
     )
-    head_v3 = read_manifest(log_dir, head_version(log_dir))["files"]
+    head_v3 = head_files(log_dir)
     data_v3, dels_v3 = split_head_files(head_v3)
     if dels_v3:
         raise RuntimeError(f"fold left tombstones in the head: {dels_v3}")
@@ -2751,7 +2683,7 @@ def sink_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         extra={"spec": ["o_year", "o_quarter"], "spec_id": 2},
     )  # v2: the EVOLUTION — add-only, nothing rewritten
 
-    head = read_manifest(log_dir, head_version(log_dir))["files"]
+    head = head_files(log_dir)
     if sorted(f for f in head if f.startswith(gen1_dir)) != gen1_files:
         raise RuntimeError("evolution disturbed generation-1 files")
 
@@ -2852,15 +2784,9 @@ def sink_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.abs(F.xxhash64("o_orderkey")) % 4
     for i in range(4):  # four ingestion commits, 4 hash-scattered files each
         d = os.path.join(root, f"ingest{i}")
-        (
-            o.filter(q == i)
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-        commit_snapshot(log_dir, data_files_of(d))
+        commit_snapshot(log_dir, stage(o.filter(q == i).repartition(4), d))
 
-    before = read_manifest(log_dir, head_version(log_dir))["files"]
+    before = head_files(log_dir)
     if len(before) != 16:
         raise RuntimeError(f"ingestion debris wrong: {len(before)} files")
 
@@ -2901,36 +2827,33 @@ def sink_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # The OPTIMIZE ZORDER commit: re-cluster the whole head on z.
-    zdir = os.path.join(root, "optimized")
     head_df = spark.read.parquet(*before)
-    (
+    after_files = stage(
         head_df.withColumn("zval", _orders_zval(head_df))
         .repartitionByRange(_OPTZ_TARGET_FILES, "zval")
         .sortWithinPartitions("zval")
-        .drop("zval")
-        .write.mode("overwrite")
-        .parquet(zdir)
+        .drop("zval"),
+        os.path.join(root, "optimized"),
     )
-    after_files = data_files_of(zdir)
     commit_snapshot(
         log_dir, after_files, remove_files=before, extra={"op": "optimize-zorder"}
     )
 
     versions = log_versions(log_dir)
-    head_files = read_manifest(log_dir, versions[-1])["files"]
+    head_list = read_manifest(log_dir, versions[-1])["files"]
     if versions != [1, 2, 3, 4, 5]:
         raise RuntimeError(f"log not linear: {versions}")
-    if sorted(head_files) != sorted(after_files):
+    if sorted(head_list) != sorted(after_files):
         raise RuntimeError("head is not exactly the OPTIMIZE rewrite")
-    post_c, post_d = _mean_fractions(head_files)
+    post_c, post_d = _mean_fractions(head_list)
     if post_c >= 0.7 or post_d >= 0.8:
         raise RuntimeError(
             f"rewrite is not z-clustered: fractions {post_c:.2f}/{post_d:.2f}"
         )
 
-    return spark.read.parquet(*head_files).agg(
+    return spark.read.parquet(*head_list).agg(
         F.lit(len(before)).cast("int").alias("files_before"),
-        F.lit(len(head_files)).cast("int").alias("files_after"),
+        F.lit(len(head_list)).cast("int").alias("files_after"),
         F.lit(len(versions)).cast("int").alias("n_snapshots"),
         F.lit(True).alias("zorder_clustered"),
         F.count("*").cast("long").alias("n_rows"),
@@ -3005,9 +2928,9 @@ def sink_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     matched = F.col("o_orderkey") % 5 == 0
     base = spark.read.parquet(*v1_files)
-    base.filter(matched).select("o_orderkey").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(del_dir)
+    adds = stage(
+        base.filter(matched).select("o_orderkey").coalesce(1), del_dir
+    )
     updates = base.filter(matched).withColumn(
         "cents", F.col("cents") + 500
     ).select("o_orderkey", "o_orderdate", "cents")
@@ -3016,15 +2939,12 @@ def sink_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("2002-01-01").cast("timestamp").alias("o_orderdate"),
         (F.col("cents") + 123).alias("cents"),
     )
-    updates.unionByName(inserts).coalesce(1).write.mode("overwrite").parquet(
-        up_dir
-    )
-    adds = data_files_of(del_dir) + data_files_of(up_dir)
+    adds += stage(updates.unionByName(inserts).coalesce(1), up_dir)
     if len(adds) != 2:
         raise RuntimeError(f"MOR merge must add exactly 2 files: {adds}")
     commit_snapshot(log_dir, adds, extra={"op": "mor-merge"})  # v2
 
-    head = read_manifest(log_dir, head_version(log_dir))["files"]
+    head = head_files(log_dir)
     data_files, tombstones = split_head_files(head)
     if not set(v1_files) <= set(data_files):
         raise RuntimeError("MOR merge disturbed base files — must be add-only")
@@ -3117,15 +3037,10 @@ def scan_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         return state
 
     for i in range(n_commits):  # one small append commit per slice
-        d = os.path.join(root, f"ingest{i}")
-        (
-            o.filter(F.col("o_orderkey") % n_commits == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(d)
-        )
+        part = o.filter(F.col("o_orderkey") % n_commits == i).coalesce(1)
+        adds = stage(part, os.path.join(root, f"ingest{i}"))
         # delta-form manifest: this commit's ADDS only
-        if not try_publish(log_dir, i + 1, data_files_of(d)):
+        if not try_publish(log_dir, i + 1, adds):
             raise RuntimeError(f"single-writer CAS lost v{i + 1}")
         if i + 1 == ckpt_at:
             # checkpointer pays the full replay ONCE, then readers don't
@@ -3224,24 +3139,8 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "wap_table")
     log_dir = os.path.join(root, "log")
     refs_dir = os.path.join(root, "refs")
-    os.makedirs(log_dir, exist_ok=True)
-    os.makedirs(refs_dir, exist_ok=True)
-    for d in (log_dir, refs_dir):
-        for v in os.listdir(d):
-            os.unlink(os.path.join(d, v))
-
-    def set_ref(name: str, version: int) -> None:
-        tmp = os.path.join(refs_dir, f".tmp-{name}")
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, os.path.join(refs_dir, name))
-
-    def get_ref(name: str) -> int:
-        with open(os.path.join(refs_dir, name)) as fh:
-            return int(fh.read())
-
-    def ref_files(name: str) -> list[str]:
-        return read_manifest(log_dir, get_ref(name))["files"]
+    empty_log(log_dir)
+    empty_log(refs_dir)
 
     def audit(files: list[str]) -> int:
         """DQ gate on a staged snapshot: violating-row count (negative
@@ -3257,67 +3156,61 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    base_dir = os.path.join(root, "base")
-    o.repartition(2).write.mode("overwrite").parquet(base_dir)
-    v1, _ = commit_snapshot(log_dir, data_files_of(base_dir))
-    set_ref("main", v1)
+    base_files = stage(o.repartition(2), os.path.join(root, "base"))
+    v1, _ = commit_snapshot(log_dir, base_files)
+    set_ref(refs_dir, "main", v1)
 
     # Batch 1 (POISONED): re-keyed rows with negated cents — every row
     # violates, so the gate must fire at ANY corpus size (a %100 slice
     # keeps the batch non-empty even at sf0.001's 1,500 orders).
-    bad_dir = os.path.join(root, "bad_batch")
-    (
+    bad_files = stage(
         o.filter(F.col("o_orderkey") % 100 == 13)
         .select(
             (F.col("o_orderkey") + F.lit(2_000_000_000)).alias("o_orderkey"),
             (-F.col("cents")).alias("cents"),
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(bad_dir)
+        .coalesce(1),
+        os.path.join(root, "bad_batch"),
     )
-    bad_files = data_files_of(bad_dir)
     if spark.read.parquet(*bad_files).limit(1).count() == 0:
         raise RuntimeError("staged poisoned batch is empty — vacuous gate")
     v2, _ = commit_snapshot(log_dir, bad_files)  # stage commit
-    set_ref("wap_batch1", v2)
-    if audit(ref_files("wap_batch1")) == 0:
+    set_ref(refs_dir, "wap_batch1", v2)
+    if audit(ref_files(log_dir, refs_dir, "wap_batch1")) == 0:
         raise RuntimeError("poisoned batch passed the audit — gate broken")
     # REJECT: main is simply never advanced.
-    if get_ref("main") != v1:
+    if get_ref(refs_dir, "main") != v1:
         raise RuntimeError("main moved without a passing audit")
-    if audit(ref_files("main")) != 0:
+    if audit(ref_files(log_dir, refs_dir, "main")) != 0:
         raise RuntimeError("main reader sees unaudited poisoned rows")
-    if set(bad_files) & set(ref_files("main")):
+    if set(bad_files) & set(ref_files(log_dir, refs_dir, "main")):
         raise RuntimeError("bad batch's files referenced by main")
 
     # Batch 2 (CLEAN): staged FROM MAIN'S HEAD — the rejected branch is
     # abandoned, not repaired (WAP semantics).
-    good_dir = os.path.join(root, "good_batch")
-    (
+    good_files = stage(
         o.filter(F.col("o_orderkey") % 1000 == 7)
         .select(
             (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
             F.col("cents"),
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(good_dir)
+        .coalesce(1),
+        os.path.join(root, "good_batch"),
     )
     if not try_publish(
-        log_dir,
-        v2 + 1,
-        ref_files("main") + data_files_of(good_dir),
+        log_dir, v2 + 1, ref_files(log_dir, refs_dir, "main") + good_files
     ):
         raise RuntimeError("stage commit lost an uncontended CAS")
-    set_ref("wap_batch2", v2 + 1)
-    if audit(ref_files("wap_batch2")) != 0:
+    set_ref(refs_dir, "wap_batch2", v2 + 1)
+    if audit(ref_files(log_dir, refs_dir, "wap_batch2")) != 0:
         raise RuntimeError("clean batch failed the audit")
-    set_ref("main", get_ref("wap_batch2"))  # PUBLISH: O(1) fast-forward
+    # PUBLISH: O(1) fast-forward
+    set_ref(refs_dir, "main", get_ref(refs_dir, "wap_batch2"))
 
-    if get_ref("main") != 3:
-        raise RuntimeError(f"main at v{get_ref('main')}, expected v3")
-    main_files = ref_files("main")
+    if get_ref(refs_dir, "main") != 3:
+        main_v = get_ref(refs_dir, "main")
+        raise RuntimeError(f"main at v{main_v}, expected v3")
+    main_files = ref_files(log_dir, refs_dir, "main")
     if set(bad_files) & set(main_files):
         raise RuntimeError("published main references the rejected batch")
 
@@ -3377,16 +3270,11 @@ def dq_snapshot_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
-    base_dir = os.path.join(root, "base")
-    delta_dir = os.path.join(root, "delta")
-    o.filter(F.col("o_orderdate") < cutoff).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(base_dir)
-    o.filter(F.col("o_orderdate") >= cutoff).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(delta_dir)
-    commit_snapshot(log_dir, data_files_of(base_dir))  # v1
-    commit_snapshot(log_dir, data_files_of(delta_dir))  # v2 append
+    base = o.filter(F.col("o_orderdate") < cutoff).repartition(2)
+    delta = o.filter(F.col("o_orderdate") >= cutoff).repartition(2)
+    commit_snapshot(log_dir, stage(base, os.path.join(root, "base")))  # v1
+    # v2 append
+    commit_snapshot(log_dir, stage(delta, os.path.join(root, "delta")))
 
     v1_files = read_manifest(log_dir, 1)["files"]
     v2_files = read_manifest(log_dir, 2)["files"]
@@ -3510,81 +3398,58 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "vacuum_refs_table")
     log_dir = os.path.join(root, "log")
     refs_dir = os.path.join(root, "refs")
-    os.makedirs(log_dir, exist_ok=True)
-    os.makedirs(refs_dir, exist_ok=True)
-    for d in (log_dir, refs_dir):
-        for v in os.listdir(d):
-            os.unlink(os.path.join(d, v))
-
-    def set_ref(name: str, version: int) -> None:
-        tmp = os.path.join(refs_dir, f".tmp-{name}")
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, os.path.join(refs_dir, name))
-
-    def get_ref(name: str) -> int:
-        with open(os.path.join(refs_dir, name)) as fh:
-            return int(fh.read())
+    empty_log(log_dir)
+    empty_log(refs_dir)
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
-    base_dir = os.path.join(root, "base")
-    bad_dir = os.path.join(root, "bad_batch")
-    compact_dir = os.path.join(root, "compact")
-    rest_dir = os.path.join(root, "rest")
-
     # v1: base = pre-cutoff orders; tag + branch pin it
-    o.filter(F.col("o_orderdate") < cutoff).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(base_dir)
-    base_files = data_files_of(base_dir)
+    base_files = stage(
+        o.filter(F.col("o_orderdate") < cutoff).repartition(2),
+        os.path.join(root, "base"),
+    )
     v1, _ = commit_snapshot(log_dir, base_files)
-    set_ref("tag_baseline", v1)
-    set_ref("branch_main", v1)
+    set_ref(refs_dir, "tag_baseline", v1)
+    set_ref(refs_dir, "branch_main", v1)
 
     # v2: poisoned staging batch (WAP shape) — rejected, ref deleted
-    (
+    bad_files = stage(
         o.filter(F.col("o_orderkey") % 100 == 13)
         .select(
             (F.col("o_orderkey") + F.lit(2_000_000_000)).alias("o_orderkey"),
             (-F.round(F.col("o_totalprice") * 100)).cast("long").alias("cents"),
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(bad_dir)
+        .coalesce(1),
+        os.path.join(root, "bad_batch"),
     )
-    bad_files = data_files_of(bad_dir)
     v2, _ = commit_snapshot(log_dir, bad_files)
-    set_ref("wap_reject", v2)
+    set_ref(refs_dir, "wap_reject", v2)
     n_bad = (
         spark.read.parquet(*bad_files).filter(F.col("cents") < 0).count()
     )
     if n_bad == 0:
         raise RuntimeError("staged poisoned batch has no violations")
-    os.unlink(os.path.join(refs_dir, "wap_reject"))  # REJECT: drop the ref
+    drop_ref(refs_dir, "wap_reject")  # REJECT: drop the ref
 
     # v3: compaction of MAIN (child of v1 by ref, not of the log head)
-    spark.read.parquet(*base_files).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(compact_dir)
-    if not try_publish(log_dir, v2 + 1, data_files_of(compact_dir)):
-        raise RuntimeError("compaction commit lost an uncontended CAS")
-    set_ref("branch_main", v2 + 1)
-    # v4: main appends the remaining orders
-    o.filter(F.col("o_orderdate") >= cutoff).write.mode("overwrite").parquet(
-        rest_dir
+    compact = stage(
+        spark.read.parquet(*base_files).coalesce(1),
+        os.path.join(root, "compact"),
     )
-    v4_files = (
-        read_manifest(log_dir, get_ref("branch_main"))["files"]
-        + data_files_of(rest_dir)
+    if not try_publish(log_dir, v2 + 1, compact):
+        raise RuntimeError("compaction commit lost an uncontended CAS")
+    set_ref(refs_dir, "branch_main", v2 + 1)
+    # v4: main appends the remaining orders
+    v4_files = ref_files(log_dir, refs_dir, "branch_main") + stage(
+        o.filter(F.col("o_orderdate") >= cutoff), os.path.join(root, "rest")
     )
     if not try_publish(log_dir, v2 + 2, v4_files):
         raise RuntimeError("append commit lost an uncontended CAS")
-    set_ref("branch_main", v2 + 2)
+    set_ref(refs_dir, "branch_main", v2 + 2)
 
     versions = log_versions(log_dir)
     window = set(versions[-2:])  # retain_last = 2
-    ref_pinned = {get_ref(name) for name in os.listdir(refs_dir)}
+    ref_pinned = {get_ref(refs_dir, name) for name in os.listdir(refs_dir)}
     retained = sorted(window | ref_pinned)
     expired = [v for v in versions if v not in retained]
     if expired != [v2]:
@@ -3614,10 +3479,7 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     for f in sorted(orphans):
         os.unlink(f)
     for v in expired:
-        os.rename(
-            manifest_path(log_dir, v),
-            os.path.join(log_dir, f"v{v}{EXPIRED_SUFFIX}"),
-        )
+        tombstone_manifest(log_dir, v)
     if any(os.path.exists(f) for f in orphans):
         raise RuntimeError("rejected batch's files survived the vacuum")
     if not all(os.path.exists(f) for f in live):
@@ -3638,7 +3500,7 @@ def sink_vacuum_refs_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("branch:main", "branch_main"),
         ("tag:baseline", "tag_baseline"),
     ]:
-        files = read_manifest(log_dir, get_ref(name))["files"]
+        files = ref_files(log_dir, refs_dir, name)
         per.append(
             spark.read.parquet(*files).agg(
                 F.lit(ref).alias("ref"),
@@ -3696,24 +3558,20 @@ def scan_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    base_dir = os.path.join(root, "base")
-    bad_dir = os.path.join(root, "bad")
-    good_dir = os.path.join(root, "good")
-    o.repartition(2).write.mode("overwrite").parquet(base_dir)
-    v1, _ = commit_snapshot(log_dir, data_files_of(base_dir))
+    v1, _ = commit_snapshot(
+        log_dir, stage(o.repartition(2), os.path.join(root, "base"))
+    )
     v1_files = read_manifest(log_dir, v1)["files"]
 
-    (
+    bad_files = stage(
         o.filter(F.col("o_orderkey") % 100 == 13)
         .select(
             (F.col("o_orderkey") + F.lit(2_000_000_000)).alias("o_orderkey"),
             (-F.col("cents")).alias("cents"),
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(bad_dir)
+        .coalesce(1),
+        os.path.join(root, "bad"),
     )
-    bad_files = data_files_of(bad_dir)
     v2, _ = commit_snapshot(log_dir, bad_files)
     if (
         spark.read.parquet(*read_manifest(log_dir, v2)["files"])
@@ -3753,17 +3611,15 @@ def scan_snapshot_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         raise RuntimeError("restored head still shows poisoned rows")
 
-    (
+    good = (
         o.filter(F.col("o_orderkey") % 1000 == 7)
         .select(
             (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
             F.col("cents"),
         )
         .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(good_dir)
     )
-    commit_snapshot(log_dir, data_files_of(good_dir))
+    commit_snapshot(log_dir, stage(good, os.path.join(root, "good")))
     versions = log_versions(log_dir)
     if versions != [1, 2, 3, 4]:
         raise RuntimeError(f"history not linear: {versions}")
@@ -3818,29 +3674,13 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "cherry_table")
     log_dir = os.path.join(root, "log")
     refs_dir = os.path.join(root, "refs")
-    os.makedirs(log_dir, exist_ok=True)
-    os.makedirs(refs_dir, exist_ok=True)
-    for d in (log_dir, refs_dir):
-        for v in os.listdir(d):
-            os.unlink(os.path.join(d, v))
-
-    def set_ref(name: str, version: int) -> None:
-        tmp = os.path.join(refs_dir, f".tmp-{name}")
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, os.path.join(refs_dir, name))
-
-    def get_ref(name: str) -> int:
-        with open(os.path.join(refs_dir, name)) as fh:
-            return int(fh.read())
-
-    def ref_files(name: str) -> list[str]:
-        return read_manifest(log_dir, get_ref(name))["files"]
+    empty_log(log_dir)
+    empty_log(refs_dir)
 
     def cherry_pick(target: str, adds: list[str], removes: list[str]) -> int:
         """Re-apply a commit's remove/add delta onto the target ref —
         the cross-ref form of `commit_snapshot`'s conflict rule."""
-        parent = ref_files(target)
+        parent = ref_files(log_dir, refs_dir, target)
         if not set(removes) <= set(parent):
             raise CommitConflict(
                 f"cherry-pick removes files absent from {target}: "
@@ -3850,68 +3690,62 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
         version = head_version(log_dir) + 1
         if not try_publish(log_dir, version, child):
             raise RuntimeError("cherry-pick lost an uncontended CAS")
-        set_ref(target, version)
+        set_ref(refs_dir, target, version)
         return version
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
-    base_dir = os.path.join(root, "base")
-    a1_dir = os.path.join(root, "a1")
-    a2_dir = os.path.join(root, "a2")
-    o.filter(F.col("o_orderdate") < cutoff).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(base_dir)
-    base_files = data_files_of(base_dir)
+    base_files = stage(
+        o.filter(F.col("o_orderdate") < cutoff).repartition(2),
+        os.path.join(root, "base"),
+    )
     v1, _ = commit_snapshot(log_dir, base_files)
-    set_ref("branch_main", v1)
-    set_ref("branch_audit", v1)
+    set_ref(refs_dir, "branch_main", v1)
+    set_ref(refs_dir, "branch_audit", v1)
 
     rest = o.filter(F.col("o_orderdate") >= cutoff)
-    rest.filter(F.col("o_orderkey") % 10 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(a1_dir)
-    rest.filter(F.col("o_orderkey") % 10 == 2).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(a2_dir)
+    a1 = stage(
+        rest.filter(F.col("o_orderkey") % 10 == 1).coalesce(1),
+        os.path.join(root, "a1"),
+    )
+    a2 = stage(
+        rest.filter(F.col("o_orderkey") % 10 == 2).coalesce(1),
+        os.path.join(root, "a2"),
+    )
 
     # audit lands A1 (v2) then A2 (v3), each a child of ITS OWN head
     if not try_publish(
-        log_dir, v1 + 1, ref_files("branch_audit") + data_files_of(a1_dir)
+        log_dir, v1 + 1, ref_files(log_dir, refs_dir, "branch_audit") + a1
     ):
         raise RuntimeError("A1 commit lost an uncontended CAS")
-    set_ref("branch_audit", v1 + 1)
-    v2_files = ref_files("branch_audit")
-    if not try_publish(
-        log_dir, v1 + 2, v2_files + data_files_of(a2_dir)
-    ):
+    set_ref(refs_dir, "branch_audit", v1 + 1)
+    v2_files = ref_files(log_dir, refs_dir, "branch_audit")
+    if not try_publish(log_dir, v1 + 2, v2_files + a2):
         raise RuntimeError("A2 commit lost an uncontended CAS")
-    set_ref("branch_audit", v1 + 2)
+    set_ref(refs_dir, "branch_audit", v1 + 2)
 
     # cherry-pick A2 only: the delta between the branch's v3 and v2
-    a2_delta_add = sorted(set(ref_files("branch_audit")) - set(v2_files))
-    if a2_delta_add != data_files_of(a2_dir):
+    a2_delta_add = sorted(
+        set(ref_files(log_dir, refs_dir, "branch_audit")) - set(v2_files)
+    )
+    if a2_delta_add != a2:
         raise RuntimeError(f"A2 delta wrong: {a2_delta_add}")
     cherry_pick("branch_main", a2_delta_add, [])
-    main_files = set(ref_files("branch_main"))
+    main_files = set(ref_files(log_dir, refs_dir, "branch_main"))
     if main_files != set(base_files) | set(a2_delta_add):
         raise RuntimeError(f"main after cherry-pick: {sorted(main_files)}")
-    if main_files & set(data_files_of(a1_dir)):
+    if main_files & set(a1):
         raise RuntimeError("cherry-pick leaked A1 files onto main")
 
     # main compacts the base away; the branch's competing compaction
     # delta now removes files main no longer has -> MUST conflict
-    mc_dir = os.path.join(root, "main_compact")
-    spark.read.parquet(*base_files).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(mc_dir)
-    cherry_pick("branch_main", data_files_of(mc_dir), base_files)
-    ac_dir = os.path.join(root, "audit_compact")
-    spark.read.parquet(*base_files).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(ac_dir)
+    compact = spark.read.parquet(*base_files).coalesce(1)
+    mc = stage(compact, os.path.join(root, "main_compact"))
+    cherry_pick("branch_main", mc, base_files)
+    ac = stage(compact, os.path.join(root, "audit_compact"))
     conflict_detected = False
     try:
-        cherry_pick("branch_main", data_files_of(ac_dir), base_files)
+        cherry_pick("branch_main", ac, base_files)
     except CommitConflict:
         conflict_detected = True
     if not conflict_detected:
@@ -3919,7 +3753,8 @@ def sink_branch_cherry_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
             "conflicting cherry-pick (stale removes) was accepted"
         )
 
-    return spark.read.parquet(*ref_files("branch_main")).agg(
+    main = ref_files(log_dir, refs_dir, "branch_main")
+    return spark.read.parquet(*main).agg(
         F.lit(True).alias("cherry_picked"),
         F.lit(True).alias("a1_excluded"),
         F.lit(bool(conflict_detected)).alias("conflict_detected"),
@@ -3970,55 +3805,39 @@ def scan_branch_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _scratch(sf_dir, "branch_diff_table")
     log_dir = os.path.join(root, "log")
     refs_dir = os.path.join(root, "refs")
-    os.makedirs(log_dir, exist_ok=True)
-    os.makedirs(refs_dir, exist_ok=True)
-    for d in (log_dir, refs_dir):
-        for v in os.listdir(d):
-            os.unlink(os.path.join(d, v))
-
-    def set_ref(name: str, version: int) -> None:
-        tmp = os.path.join(refs_dir, f".tmp-{name}")
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, os.path.join(refs_dir, name))
-
-    def get_ref(name: str) -> int:
-        with open(os.path.join(refs_dir, name)) as fh:
-            return int(fh.read())
+    empty_log(log_dir)
+    empty_log(refs_dir)
 
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit(_CC_CUTOFF).cast("timestamp")
-    base_dir = os.path.join(root, "base")
-    even_dir = os.path.join(root, "even")
-    odd_dir = os.path.join(root, "odd")
-    o.filter(F.col("o_orderdate") < cutoff).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(base_dir)
     rest = o.filter(F.col("o_orderdate") >= cutoff)
-    rest.filter(F.col("o_orderkey") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(even_dir)
-    rest.filter(F.col("o_orderkey") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(odd_dir)
+    base_files = stage(
+        o.filter(F.col("o_orderdate") < cutoff).repartition(2),
+        os.path.join(root, "base"),
+    )
+    even = stage(
+        rest.filter(F.col("o_orderkey") % 2 == 0).coalesce(1),
+        os.path.join(root, "even"),
+    )
+    odd = stage(
+        rest.filter(F.col("o_orderkey") % 2 == 1).coalesce(1),
+        os.path.join(root, "odd"),
+    )
 
-    base_files = data_files_of(base_dir)
     v1, _ = commit_snapshot(log_dir, base_files)
-    set_ref("branch_main", v1)
-    set_ref("branch_audit", v1)
-    if not try_publish(log_dir, v1 + 1, base_files + data_files_of(even_dir)):
+    set_ref(refs_dir, "branch_main", v1)
+    set_ref(refs_dir, "branch_audit", v1)
+    if not try_publish(log_dir, v1 + 1, base_files + even):
         raise RuntimeError("main commit lost an uncontended CAS")
-    set_ref("branch_main", v1 + 1)
-    if not try_publish(log_dir, v1 + 2, base_files + data_files_of(odd_dir)):
+    set_ref(refs_dir, "branch_main", v1 + 1)
+    if not try_publish(log_dir, v1 + 2, base_files + odd):
         raise RuntimeError("audit commit lost an uncontended CAS")
-    set_ref("branch_audit", v1 + 2)
+    set_ref(refs_dir, "branch_audit", v1 + 2)
 
     main_files = set(
-        read_manifest(log_dir, get_ref("branch_main"))["files"]
+        ref_files(log_dir, refs_dir, "branch_main")
     )
-    audit_files = set(
-        read_manifest(log_dir, get_ref("branch_audit"))["files"]
-    )
+    audit_files = set(ref_files(log_dir, refs_dir, "branch_audit"))
     shared = sorted(main_files & audit_files)
     main_only = sorted(main_files - audit_files)
     audit_only = sorted(audit_files - main_files)
@@ -4636,37 +4455,31 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     concurrent rewrite of the same files aborts as CommitConflict."""
     root = _scratch(sf_dir, "rdf_table")
     log_dir = os.path.join(root, "log")
-    data_dir = os.path.join(root, "data")
-    eq_dir = os.path.join(root, MOR_DELETE_CLASS, "eq")
-    dv_dir = os.path.join(root, MOR_DELETE_CLASS, "pos")
-    clean_dir = os.path.join(root, "rewritten")
     empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    o.repartition(4, "o_orderkey").write.mode("overwrite").parquet(data_dir)
-    base_files = data_files_of(data_dir)
+    base_files = stage(
+        o.repartition(4, "o_orderkey"), os.path.join(root, "data")
+    )
     if len(base_files) != 4:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 4")
     commit_snapshot(log_dir, base_files)  # v1
 
     # v2: equality tombstone (values, not positions), ADD-only
-    (
+    eq_files = stage(
         spark.read.parquet(*base_files)
         .filter(F.col("o_orderkey") % 10 == _RDF_EQ_MOD)
         .select("o_orderkey")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(eq_dir)
+        .coalesce(1),
+        os.path.join(root, MOR_DELETE_CLASS, "eq"),
     )
-    commit_snapshot(
-        log_dir, data_files_of(eq_dir), extra={"op": "mor-delete"}
-    )
+    commit_snapshot(log_dir, eq_files, extra={"op": "mor-delete"})
 
     # v3: positional delete vector (positions, not values), ADD-only
-    (
+    dv_files = stage(
         spark.read.parquet(*base_files)
         .select(
             "o_orderkey",
@@ -4675,15 +4488,12 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("o_orderkey") % 10 == _RDF_POS_MOD)
         .select("file_path", "row_index")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(dv_dir)
+        .coalesce(1),
+        os.path.join(root, MOR_DELETE_CLASS, "pos"),
     )
-    commit_snapshot(
-        log_dir, data_files_of(dv_dir), extra={"op": "pos-delete"}
-    )
+    commit_snapshot(log_dir, dv_files, extra={"op": "pos-delete"})
 
-    head_pre = read_manifest(log_dir, head_version(log_dir))["files"]
+    head_pre = head_files(log_dir)
     data_pre, dels_pre = split_head_files(head_pre)
     if sorted(data_pre) != base_files or len(dels_pre) != 2:
         raise RuntimeError(
@@ -4692,10 +4502,8 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _mor_read() -> DataFrame:
-        eq_keys = spark.read.parquet(*data_files_of(eq_dir)).select(
-            "o_orderkey"
-        )
-        dv = spark.read.parquet(*data_files_of(dv_dir))
+        eq_keys = spark.read.parquet(*eq_files).select("o_orderkey")
+        dv = spark.read.parquet(*dv_files)
         return (
             spark.read.parquet(*data_pre)
             .withColumn("file_path", F.col("_metadata.file_path"))
@@ -4725,8 +4533,9 @@ def sink_rewrite_data_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file count (a host whose bin-packing reads the base as one scan
     # partition would emit 1 file and silently break the oracle's
     # files_after=2), the sink_auto_compaction precedent
-    _mor_read().repartition(2).write.mode("overwrite").parquet(clean_dir)
-    clean_files = data_files_of(clean_dir)
+    clean_files = stage(
+        _mor_read().repartition(2), os.path.join(root, "rewritten")
+    )
     if len(clean_files) != 2:
         raise RuntimeError(
             f"rewrite landed {len(clean_files)} files, oracle assumes 2"
@@ -4851,14 +4660,13 @@ def sink_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cutoff = F.lit(_MTP_CUTOFF).cast("date")
 
-    def stage(df: DataFrame, name: str) -> list[str]:
-        d = os.path.join(root, name)
-        df.repartition(2).write.mode("overwrite").parquet(d)
-        return data_files_of(d)
-
     # txn1: the initial consistent star (old fact slice + even-key dims)
-    fact1 = stage(o.filter(F.col("o_orderdate") < cutoff), "fact1")
-    dim1 = stage(c.filter(F.col("c_custkey") % _MTP_DIM_MOD == 0), "dim1")
+    old = o.filter(F.col("o_orderdate") < cutoff)
+    fact1 = stage(old.repartition(2), os.path.join(root, "fact1"))
+    dim1 = stage(
+        c.filter(F.col("c_custkey") % _MTP_DIM_MOD == 0).repartition(2),
+        os.path.join(root, "dim1"),
+    )
     txn_publish(txn_dir, 1, {"fact": fact1, "dim": dim1})
 
     def read_table(name: str) -> DataFrame:
@@ -4875,11 +4683,15 @@ def sink_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # txn2 attempt #1: stage the fact delta, then DIE before the dim
     # staging and before the txn commit
     def publish_txn2(crash_after_fact: bool) -> None:
-        fact2 = stage(o.filter(F.col("o_orderdate") >= cutoff), "fact2")
+        fact2 = stage(
+            o.filter(F.col("o_orderdate") >= cutoff).repartition(2),
+            os.path.join(root, "fact2"),
+        )
         if crash_after_fact:
             raise _InjectedCrash("publisher died after staging the fact")
         dim2 = stage(
-            c.filter(F.col("c_custkey") % _MTP_DIM_MOD != 0), "dim2"
+            c.filter(F.col("c_custkey") % _MTP_DIM_MOD != 0).repartition(2),
+            os.path.join(root, "dim2"),
         )
         txn_publish(
             txn_dir, 2, {"fact": fact1 + fact2, "dim": dim1 + dim2}
@@ -4991,31 +4803,27 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-planning the rewrite, never corruption."""
     root = _scratch(sf_dir, "rdr_table")
     log_dir = os.path.join(root, "log")
-    data_dir = os.path.join(root, "data")
     t1_dir = os.path.join(root, MOR_DELETE_CLASS, "t1")
     t2_dir = os.path.join(root, MOR_DELETE_CLASS, "t2")
-    stale_dir = os.path.join(root, "stale_rewrite")
-    clean_dir = os.path.join(root, "clean_rewrite")
     empty_log(log_dir)
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    o.repartition(4, "o_orderkey").write.mode("overwrite").parquet(data_dir)
-    base_files = data_files_of(data_dir)
+    base_files = stage(
+        o.repartition(4, "o_orderkey"), os.path.join(root, "data")
+    )
     commit_snapshot(log_dir, base_files)  # v1
 
     def land_tombstone(mod: int, d: str) -> list[str]:
-        (
+        files = stage(
             spark.read.parquet(*base_files)
             .filter(F.col("o_orderkey") % 10 == mod)
             .select("o_orderkey")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(d)
+            .coalesce(1),
+            d,
         )
-        files = data_files_of(d)
         commit_snapshot(log_dir, files, extra={"op": "mor-delete"})
         return files
 
@@ -5025,12 +4833,11 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     planned_at = head_version(log_dir)
     head_at_plan = read_manifest(log_dir, planned_at)["files"]
     keys1 = spark.read.parquet(*t1).select("o_orderkey")
-    (
+    stale = stage(
         spark.read.parquet(*base_files)
         .join(F.broadcast(keys1), "o_orderkey", "left_anti")
-        .coalesce(2)
-        .write.mode("overwrite")
-        .parquet(stale_dir)
+        .coalesce(2),
+        os.path.join(root, "stale_rewrite"),
     )
 
     t2 = land_tombstone(_RDR_EQ2, t2_dir)  # v3: THE RACER
@@ -5040,7 +4847,7 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         commit_rewrite(
             log_dir,
-            data_files_of(stale_dir),
+            stale,
             remove_files=head_at_plan,
             planned_at=planned_at,
         )
@@ -5055,7 +4862,7 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measure the counterfactual: the staged files DO contain exactly
     # the racer's deleted rows (what a blind commit would resurrect)
     resurrect = (
-        spark.read.parquet(*data_files_of(stale_dir))
+        spark.read.parquet(*stale)
         .filter(F.col("o_orderkey") % 10 == _RDR_EQ2)
         .count()
     )
@@ -5070,16 +4877,14 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     replanned_at = head_version(log_dir)
     head_now = read_manifest(log_dir, replanned_at)["files"]
     keys12 = spark.read.parquet(*t1, *t2).select("o_orderkey")
-    (
-        spark.read.parquet(*base_files)
-        .join(F.broadcast(keys12), "o_orderkey", "left_anti")
-        .coalesce(2)
-        .write.mode("overwrite")
-        .parquet(clean_dir)
-    )
     commit_rewrite(
         log_dir,
-        data_files_of(clean_dir),
+        stage(
+            spark.read.parquet(*base_files)
+            .join(F.broadcast(keys12), "o_orderkey", "left_anti")
+            .coalesce(2),
+            os.path.join(root, "clean_rewrite"),
+        ),
         remove_files=head_now,
         planned_at=replanned_at,
     )  # v4: the clean, re-planned rewrite
@@ -5087,12 +4892,12 @@ def sink_rewrite_delete_race(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions = log_versions(log_dir)
     if versions != [1, 2, 3, 4]:
         raise RuntimeError(f"log not linear: {versions}")
-    head_files = read_manifest(log_dir, 4)["files"]
-    _, dels = split_head_files(head_files)
+    head_list = read_manifest(log_dir, 4)["files"]
+    _, dels = split_head_files(head_list)
     if dels:
         raise RuntimeError(f"re-planned rewrite left tombstones: {dels}")
 
-    return spark.read.parquet(*head_files).agg(
+    return spark.read.parquet(*head_list).agg(
         F.lit(True).alias("race_detected"),
         F.lit(True).alias("blind_commit_would_resurrect"),
         F.lit(len(versions)).cast("int").alias("n_snapshots"),
@@ -5153,23 +4958,22 @@ def sink_multi_table_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cutoff = F.lit(_MTP_CUTOFF).cast("date")
 
-    def stage(df: DataFrame, name: str) -> list[str]:
-        d = os.path.join(root, name)
-        df.repartition(2).write.mode("overwrite").parquet(d)
-        return data_files_of(d)
-
-    fact1 = stage(o.filter(F.col("o_orderdate") < cutoff), "fact1")
+    old = o.filter(F.col("o_orderdate") < cutoff)
+    fact1 = stage(old.repartition(2), os.path.join(root, "fact1"))
     dim1 = stage(
-        c.filter(F.col("c_custkey") % _MTP_DIM_MOD == 0), "dim1"
+        c.filter(F.col("c_custkey") % _MTP_DIM_MOD == 0).repartition(2),
+        os.path.join(root, "dim1"),
     )
     v1, _, _ = txn_commit(
         txn_dir, {"fact": fact1, "dim": dim1}, read_at=0
     )
 
     # A and B both read head v1, stage disjoint-table updates
-    fact2 = stage(o.filter(F.col("o_orderdate") >= cutoff), "fact2_A")
+    new = o.filter(F.col("o_orderdate") >= cutoff)
+    fact2 = stage(new.repartition(2), os.path.join(root, "fact2_A"))
     dim2 = stage(
-        c.filter(F.col("c_custkey") % _MTP_DIM_MOD != 0), "dim2_B"
+        c.filter(F.col("c_custkey") % _MTP_DIM_MOD != 0).repartition(2),
+        os.path.join(root, "dim2_B"),
     )
     # A commits first (wins)
     v2, a_retries, _ = txn_commit(
@@ -5199,7 +5003,7 @@ def sink_multi_table_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the negative path: C also read v1 and writes the FACT — same-table
     # race, must abort (blind overlay would drop A's files)
     fact_c = stage(
-        o.filter(F.col("o_orderdate") >= cutoff).limit(10), "fact2_C"
+        new.limit(10).repartition(2), os.path.join(root, "fact2_C")
     )
     c_aborted = False
     try:
@@ -5285,50 +5089,52 @@ def sink_multi_table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     cutoff = F.lit(_MTP_CUTOFF).cast("date")
 
-    def stage(df: DataFrame, name: str, pinned: int | None = None) -> list[str]:
-        d = os.path.join(root, "staging", name)
-        df.repartition(2).write.mode("overwrite").parquet(d)
-        files = data_files_of(d)
-        # LOUD layout guard (r11 ADVICE): for the stagings whose FILE
-        # COUNT the oracle pins (dim_v1 -> n_collected_expired, the
-        # crashed staging -> n_collected_orphans), repartition(2) must
-        # land exactly 2 non-empty partitions — Spark writes files only
-        # for non-empty partitions, so an empty partition would surface
-        # as an opaque oracle hash mismatch instead of this layout
-        # error. (fact slices are NOT pinned: at small SFs a date slice
-        # can be legitimately empty — sf0.01's orders all post-date the
-        # cutoff — and the oracle derives fact numbers from row
-        # digests, not file counts.)
-        if pinned is not None and len(files) != pinned:
-            raise RuntimeError(
-                f"staging layout assumption broken: {name} produced "
-                f"{len(files)} parquet files, oracle pins {pinned}"
-            )
-        return files
+    staging = os.path.join(root, "staging")
+    old = o.filter(F.col("o_orderdate") < cutoff).repartition(2)
+    new = o.filter(F.col("o_orderdate") >= cutoff).repartition(2)
 
     # txn1: fact slice + the dim build that txn2 will REPLACE
-    fact1 = stage(o.filter(F.col("o_orderdate") < cutoff), "fact1")
-    dim_v1 = stage(c.filter(F.col("c_custkey") % 2 == 0), "dim_v1", pinned=2)
+    fact1 = stage(old, os.path.join(staging, "fact1"))
+    dim_v1 = stage(
+        c.filter(F.col("c_custkey") % 2 == 0).repartition(2),
+        os.path.join(staging, "dim_v1"),
+    )
     txn_publish(txn_dir, 1, {"fact": fact1, "dim": dim_v1})
 
     # a publisher stages and CRASHES: referenced by no txn, ever
-    orphan = stage(
-        o.filter(F.col("o_orderdate") >= cutoff), "fact2_crash", pinned=2
-    )
+    orphan = stage(new, os.path.join(staging, "fact2_crash"))
+
+    # LOUD layout guard (r11 ADVICE): for the stagings whose FILE COUNT
+    # the oracle pins (dim_v1 -> n_collected_expired, the crashed
+    # staging -> n_collected_orphans), repartition(2) must land exactly
+    # 2 non-empty partitions — Spark writes files only for non-empty
+    # partitions, so an empty partition would surface as an opaque
+    # oracle hash mismatch instead of this layout error. (fact slices
+    # are NOT pinned: at small SFs a date slice can be legitimately
+    # empty — sf0.01's orders all post-date the cutoff — and the oracle
+    # derives fact numbers from row digests, not file counts.)
+    for name, files in (("dim_v1", dim_v1), ("fact2_crash", orphan)):
+        if len(files) != 2:
+            raise RuntimeError(
+                f"staging layout assumption broken: {name} produced "
+                f"{len(files)} parquet files, oracle pins 2"
+            )
 
     # txn2: fact grows (fresh staging), dim REWRITTEN in full
-    fact2 = stage(o.filter(F.col("o_orderdate") >= cutoff), "fact2")
-    dim_v2 = stage(c, "dim_v2")
+    fact2 = stage(new, os.path.join(staging, "fact2"))
+    dim_v2 = stage(c.repartition(2), os.path.join(staging, "dim_v2"))
     txn_publish(txn_dir, 2, {"fact": fact1 + fact2, "dim": dim_v2})
 
     # txn3: a fact append (re-keyed slice, lands after the head probe)
     fact3 = stage(
-        o.filter(F.col("o_orderkey") % 1000 == 13).select(
+        o.filter(F.col("o_orderkey") % 1000 == 13)
+        .select(
             (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
             F.lit(None).cast("date").alias("o_orderdate"),
             "cents",
-        ),
-        "fact3",
+        )
+        .repartition(2),
+        os.path.join(staging, "fact3"),
     )
     txn_publish(
         txn_dir, 3, {"fact": fact1 + fact2 + fact3, "dim": dim_v2}
@@ -5493,39 +5299,22 @@ def scan_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # advance the dim — both tables always land through ONE manifest
     for i in range(_TXC_N):
         txn = i + 1
-        d = os.path.join(root, f"fact{txn:02d}")
-        (
-            o.filter(F.col("o_orderkey") % _TXC_N == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(d)
-        )
-        adds = {"fact": data_files_of(d)}
+        fact = o.filter(F.col("o_orderkey") % _TXC_N == i).coalesce(1)
+        adds = {"fact": stage(fact, os.path.join(root, f"fact{txn:02d}"))}
         if txn in _TXC_DIM_AT:
-            dd = os.path.join(root, f"dim{txn:02d}")
-            (
-                c.filter(F.col("c_custkey") % 3 == _TXC_DIM_AT[txn])
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(dd)
+            dim = c.filter(F.col("c_custkey") % 3 == _TXC_DIM_AT[txn])
+            adds["dim"] = stage(
+                dim.coalesce(1), os.path.join(root, f"dim{txn:02d}")
             )
-            adds["dim"] = data_files_of(dd)
         if not try_publish(txn_dir, txn, [], extra={"table_adds": adds}):
             raise RuntimeError(f"single-writer CAS lost txn {txn}")
         if txn in _TXC_CKPTS:
             _write_ckpt(txn)
 
-    def _ckpt_versions() -> list[int]:
-        return sorted(
-            int(f[6:-5])
-            for f in os.listdir(txn_dir)
-            if f.startswith("ckpt-v") and f.endswith(".json")
-        )
-
     def _resolve(at: int) -> tuple[dict, int]:
         """State at txn ``at`` via the newest checkpoint ≤ at + tail
         deltas; returns (state, tail manifests opened)."""
-        older = [v for v in _ckpt_versions() if v <= at]
+        older = [v for v in ckpt_versions(txn_dir) if v <= at]
         state: dict = {}
         base = 0
         if older:
@@ -5724,19 +5513,13 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     # v3: equality tombstone masking keys of BOTH generations
-    (
-        o.filter(F.col("o_orderkey") % 10 == _RPE_DEL)
-        .select("o_orderkey")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(eq_dir)
-    )
+    tomb = o.filter(F.col("o_orderkey") % 10 == _RPE_DEL).select("o_orderkey")
     commit_snapshot(
-        log_dir, data_files_of(eq_dir), extra={"op": "mor-delete"}
+        log_dir, stage(tomb.coalesce(1), eq_dir), extra={"op": "mor-delete"}
     )
     o.unpersist()
 
-    head_pre = read_manifest(log_dir, head_version(log_dir))["files"]
+    head_pre = head_files(log_dir)
     data_pre, dels_pre = split_head_files(head_pre)
     tomb = spark.read.parquet(*dels_pre).select("o_orderkey")
     digest = [
@@ -5794,7 +5577,7 @@ def sink_rewrite_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFr
         extra={"op": "rewrite", "specs": {"1": ["o_year"], "2": ["o_year", "o_quarter"]}},
     )
 
-    head_post = read_manifest(log_dir, head_version(log_dir))["files"]
+    head_post = head_files(log_dir)
     data_post, dels_post = split_head_files(head_post)
     if dels_post:
         raise RuntimeError(f"rewrite left delete files live: {dels_post}")

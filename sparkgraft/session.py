@@ -70,6 +70,7 @@ _DUMP_SUFFIX = ".dump"
 _DUMP_WAIT_S = 120.0  # a dump at JVM exit took 6-12 s on 4 cores
 # Silences the JVM's CDS log lines (a dump warns once per skipped class).
 _CDS_QUIET = "-Xlog:cds*=off"
+_MAP_OPT = "-XX:SharedArchiveFile="
 
 
 def _java() -> str | None:
@@ -134,7 +135,8 @@ def _cds_launch(heap: str) -> str | None:
       complete dump, so one whose size or header is off is damaged and is
       removed: JDK 17 dies of SIGBUS on a truncated dynamic archive
       instead of starting without it. The JVM checks the rest (its own
-      build, the classpath) and starts without a mismatched archive.
+      build, the classpath) and starts without a mismatched archive;
+      `_drop_if_declined` then removes it.
     - ``<key>.<pid>.dump``: without an archive, ``-XX:ArchiveClassesAtExit``
       makes this JVM's exit dump one there. An exit hook (`_promote_dump`)
       waits for the JVM and renames a complete dump to an archive name,
@@ -180,7 +182,7 @@ def _cds_launch(heap: str) -> str | None:
         return None
     os.environ["SPARK_CONF_DIR"] = empty_conf
     if archive:
-        return f"-XX:SharedArchiveFile={archive} {_CDS_QUIET}"
+        return f"{_MAP_OPT}{archive} {_CDS_QUIET}"
     dump = os.path.join(cds, f"{key}.{os.getpid()}{_DUMP_SUFFIX}")
     atexit.register(_promote_dump, dump)
     return f"-XX:ArchiveClassesAtExit={dump} {_CDS_QUIET}"
@@ -214,6 +216,24 @@ def _promote_dump(dump: str) -> None:
         pass
 
 
+def _drop_if_declined(spark: SparkSession, archive: str) -> None:
+    """Remove ``archive`` if the driver JVM started without it.
+
+    A JVM that declines an archive (a build or classpath mismatch that
+    `_archive_key` misses) starts without CDS and says nothing, and the
+    archive would stay for every later start of the key. A mapped
+    archive shows in the JVM's memory map; one missing there is removed,
+    so the next start dumps a new one."""
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    try:
+        with open(f"/proc/{pid}/maps") as f:
+            mapped = os.path.realpath(archive) in f.read()
+        if not mapped:
+            os.remove(archive)
+    except OSError:
+        pass
+
+
 def get_session(app_name: str = "sparkgraft", master: str | None = None) -> SparkSession:
     """Return the process-wide SparkSession, creating it on first call.
 
@@ -229,6 +249,7 @@ def get_session(app_name: str = "sparkgraft", master: str | None = None) -> Spar
     builder = SparkSession.builder.appName(app_name).master(master)
     for key, value in {"spark.driver.memory": heap, **_DEFAULTS}.items():
         builder = builder.config(key, value)
+    java_options = None
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         # this call starts the driver JVM
         java_options = _cds_launch(heap)
@@ -236,4 +257,6 @@ def get_session(app_name: str = "sparkgraft", master: str | None = None) -> Spar
             builder = builder.config("spark.driver.extraJavaOptions", java_options)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if java_options and java_options.startswith(_MAP_OPT):
+        _drop_if_declined(spark, java_options.split()[0][len(_MAP_OPT):])
     return spark

@@ -49,9 +49,9 @@ from sparkgraft.table import (
     MOR_DELETE_CLASS,
     TXN_CKPT_POINTER,
     commit_snapshot,
-    data_files_of,
     expire_snapshots,
     expired_horizon,
+    head_files,
     head_version,
     is_delete_file,
     is_pos_delete_file,
@@ -59,6 +59,8 @@ from sparkgraft.table import (
     manifest_path,
     read_manifest,
     seq_first_versions,
+    stage,
+    stage_slices,
     try_publish,
     txn_ckpt_path,
     txn_commit,
@@ -1071,31 +1073,6 @@ def _stage_events_quartiles(sf_dir: str) -> list[str]:
     return paths
 
 
-def _stage_slices(df: DataFrame, slice_expr, out_dir: str) -> dict[int, list[str]]:
-    """Stage every integer slice of ``df`` in ONE shuffled partitioned
-    write (dirs ``sgs=<k>/``, exactly one data file per slice — a
-    slice's rows hash to a single write task) instead of one filter +
-    coalesce(1) write job per slice. The staged files carry exactly
-    ``df``'s columns (the slice key becomes the directory name, not a
-    stored column), so readers of the returned per-slice file lists see
-    the same frames the per-slice jobs produced. Guide §1.2 step 1 /
-    §2.4: N full scans of the source collapse into one scan + one
-    shuffle of the same bytes; r13 measured the N-scan staging loops as
-    the second-largest cost inside the CDF protocol keys."""
-    (
-        df.withColumn("sgs", slice_expr.cast("int"))
-        .repartition("sgs")
-        .write.mode("overwrite")
-        .partitionBy("sgs")
-        .parquet(out_dir)
-    )
-    return {
-        int(d.split("=", 1)[1]): data_files_of(os.path.join(out_dir, d))
-        for d in os.listdir(out_dir)
-        if d.startswith("sgs=")
-    }
-
-
 def _write_with_probe(batch_df: DataFrame, path: str, probe_col) -> list:
     """ONE action per micro-batch: write the batch to ``path`` and
     collect the distinct values of ``probe_col`` through an Observation
@@ -1371,15 +1348,13 @@ def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
                     F.col("change_type") == "insert"
                 ).drop("version", "change_type")
                 add_dir = os.path.join(idx_root, f"add_b{batch_id:05d}")
-                transform(ins).coalesce(1).write.parquet(add_dir)
-                adds += data_files_of(add_dir)
+                adds += stage(transform(ins).coalesce(1), add_dir)
             if "delete" in kinds:
                 dels = batch_df.filter(F.col("change_type") == "delete")
                 t_dir = os.path.join(
                     idx_root, MOR_DELETE_CLASS, f"b{batch_id:05d}"
                 )
-                dels.select(key).coalesce(1).write.parquet(t_dir)
-                adds += data_files_of(t_dir)
+                adds += stage(dels.select(key).coalesce(1), t_dir)
             if not adds:
                 raise RuntimeError(f"feed batch {batch_id} carried no events")
             commit_snapshot(idx_log, adds, extra=stamp)
@@ -1387,6 +1362,29 @@ def _index_feed_maintainer(idx_log, idx_root, key, transform, redelivery):
             batch_df.unpersist()
 
     return maintain
+
+
+def _index_source_history(
+    src: DataFrame, key: str, cut: int, mod: int, rem: int,
+    root: str, log_dir: str,
+) -> tuple[dict[int, list[str]], list[str]]:
+    """The source table history an incremental-index key maintains its
+    index from: v1 the rows with ``key`` < ``cut``, v2 the rest, v3 an
+    equality tombstone (``deletes/t3``) on the keys with ``key % mod ==
+    rem``. Base and delta are staged in ONE partitioned write
+    (`stage_slices`). Returns the staged slices {0: base, 1: delta}
+    and the tombstone's files."""
+    slices = stage_slices(
+        src, (F.col(key) >= cut).cast("int"), os.path.join(root, "slices")
+    )
+    commit_snapshot(log_dir, slices[0])  # v1
+    commit_snapshot(log_dir, slices[1])  # v2
+    tomb = stage(
+        src.select(key).filter(F.col(key) % mod == rem).coalesce(1),
+        os.path.join(root, MOR_DELETE_CLASS, "t3"),
+    )
+    commit_snapshot(log_dir, tomb, extra={"op": "mor-delete"})  # v3
+    return slices, tomb
 
 
 @query(
@@ -1693,9 +1691,8 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         if int(batch_id) in committed_batches():
             return  # txn-idempotent skip: this batch already committed
         bdir = os.path.join(data, f"b{batch_id:05d}")
-        batch_df.write.mode("overwrite").parquet(bdir)
         commit_snapshot(
-            log_dir, data_files_of(bdir), extra={"batch_id": int(batch_id)}
+            log_dir, stage(batch_df, bdir), extra={"batch_id": int(batch_id)}
         )
         crash(batch_id, "after commit, before checkpoint")
 
@@ -1717,12 +1714,12 @@ def stream_acid_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"replay double-committed: {n_before} -> {len(versions)}"
         )
-    head_files = read_manifest(log_dir, versions[-1])["files"]
-    if len(head_files) != len(set(head_files)):
+    head_list = read_manifest(log_dir, versions[-1])["files"]
+    if len(head_list) != len(set(head_list)):
         raise RuntimeError("head snapshot carries duplicate files")
 
     return (
-        spark.read.parquet(*head_files)
+        spark.read.parquet(*head_list)
         .groupBy(
             F.date_trunc("hour", F.col("ts")).alias("window_start"),
             "event_type",
@@ -1875,13 +1872,8 @@ def stream_snapshot_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def land_commit(slice_idx: int) -> None:
         sdir = os.path.join(root, f"slice{slice_idx}")
-        (
-            o.filter(F.col("o_orderkey") % 4 == slice_idx)
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(sdir)
-        )
-        commit_snapshot(log_dir, data_files_of(sdir))
+        part = o.filter(F.col("o_orderkey") % 4 == slice_idx)
+        commit_snapshot(log_dir, stage(part.repartition(2), sdir))
 
     land_commit(0)  # v1
     land_commit(1)  # v2
@@ -2027,22 +2019,21 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     # even/odd halves staged in ONE partitioned write (was 2 sequential
-    # filter+coalesce(1) jobs — _stage_slices docstring)
-    halves = _stage_slices(
+    # filter+coalesce(1) jobs — stage_slices docstring)
+    halves = stage_slices(
         o, F.col("o_orderkey") % 2, os.path.join(root, "halves")
     )
     even_f = halves[0]
     commit_snapshot(log_dir, even_f + halves[1])  # v1
 
     # v2: COW delete — rewrite the even file without orderkey%10=4 rows
-    rw_dir = os.path.join(root, "rewrite")
-    (
+    rewrite = stage(
         spark.read.parquet(*even_f)
         .filter(~(F.col("o_orderkey") % 10 == _CDF_DEL_PRED))
-        .coalesce(1)
-        .write.parquet(rw_dir)
+        .coalesce(1),
+        os.path.join(root, "rewrite"),
     )
-    commit_snapshot(log_dir, data_files_of(rw_dir), remove_files=even_f)
+    commit_snapshot(log_dir, rewrite, remove_files=even_f)
     # delta file counts per version: v1 adds both base files; v2 removes
     # the even file and adds its rewrite — each delta file is one
     # executor partition below
@@ -2074,8 +2065,8 @@ def stream_cdf_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     net = _signed_net(feed)
 
-    head_files = read_manifest(log_dir, head_version(log_dir))["files"]
-    head = spark.read.parquet(*head_files).agg(
+    head_list = head_files(log_dir)
+    head = spark.read.parquet(*head_list).agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
         .cast("long")
@@ -2316,14 +2307,8 @@ def stream_snapshot_cdf_partitioned(
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     files_per_commit: dict[int, int] = {}
     for i in range(3):
-        sdir = os.path.join(root, f"slice{i}")
-        (
-            o.filter(F.col("o_orderkey") % 3 == i)
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(sdir)
-        )
-        added = data_files_of(sdir)
+        part = o.filter(F.col("o_orderkey") % 3 == i).repartition(2)
+        added = stage(part, os.path.join(root, f"slice{i}"))
         files_per_commit[i + 1] = len(added)
         commit_snapshot(log_dir, added)
 
@@ -2731,56 +2716,46 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # v1: base table, two data files
-    base_dir = os.path.join(root, "base")
-    o.repartition(2).write.parquet(base_dir)
-    base_files = data_files_of(base_dir)
+    base_files = stage(o.repartition(2), os.path.join(root, "base"))
     if len(base_files) != 2:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 2")
     commit_snapshot(log_dir, base_files)
 
     # v2: MOR equality-delete — one tombstone file, ADD-only commit
-    t2_dir = os.path.join(root, "deletes", "t2")
-    (
+    t2 = stage(
         o.filter(F.col("o_orderkey") % 10 == _MORCDF_DEL)
         .select("o_orderkey")
-        .coalesce(1)
-        .write.parquet(t2_dir)
+        .coalesce(1),
+        os.path.join(root, "deletes", "t2"),
     )
-    commit_snapshot(
-        log_dir, data_files_of(t2_dir), extra={"op": "mor-delete"}
-    )
+    commit_snapshot(log_dir, t2, extra={"op": "mor-delete"})
 
     # v3: MOR UPSERT — tombstone for the old rows + re-priced data file
-    t3_dir = os.path.join(root, "deletes", "t3")
-    up_dir = os.path.join(root, "upsert")
     ups = o.filter(F.col("o_orderkey") % 10 == _MORCDF_UPS)
-    ups.select("o_orderkey").coalesce(1).write.parquet(t3_dir)
-    (
+    t3 = stage(
+        ups.select("o_orderkey").coalesce(1),
+        os.path.join(root, "deletes", "t3"),
+    )
+    up = stage(
         ups.select(
             "o_orderkey",
             (F.col("cents") + F.lit(_MORCDF_BUMP)).alias("cents"),
-        )
-        .coalesce(1)
-        .write.parquet(up_dir)
+        ).coalesce(1),
+        os.path.join(root, "upsert"),
     )
-    commit_snapshot(
-        log_dir,
-        data_files_of(t3_dir) + data_files_of(up_dir),
-        extra={"op": "mor-upsert"},
-    )
+    commit_snapshot(log_dir, t3 + up, extra={"op": "mor-upsert"})
 
     # v4: plain append (re-keyed so keys never collide with the base)
-    app_dir = os.path.join(root, "append")
-    (
+    app = stage(
         o.filter(F.col("o_orderkey") % 1000 == 7)
         .select(
             (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
             "cents",
         )
-        .coalesce(1)
-        .write.parquet(app_dir)
+        .coalesce(1),
+        os.path.join(root, "append"),
     )
-    commit_snapshot(log_dir, data_files_of(app_dir))
+    commit_snapshot(log_dir, app)
 
     # planned executor work units per commit
     work_units = {1: 2, 2: len(base_files), 3: len(base_files) + 1, 4: 1}
@@ -2798,14 +2773,12 @@ def stream_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # head MOR read, sequence-scoped: tombstones mask only data files
     # committed at a STRICTLY lower version (v1 here); the v3 upsert
     # file and the v4 append are never masked.
-    tomb = spark.read.parquet(
-        *data_files_of(t2_dir), *data_files_of(t3_dir)
-    ).select("o_orderkey")
+    tomb = spark.read.parquet(*t2, *t3).select("o_orderkey")
     head = (
         spark.read.parquet(*base_files)
         .join(F.broadcast(tomb), "o_orderkey", "left_anti")
-        .unionByName(spark.read.parquet(*data_files_of(up_dir)))
-        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
+        .unionByName(spark.read.parquet(*up))
+        .unionByName(spark.read.parquet(*app))
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("cents").cast("long").alias("cents"),
@@ -2916,74 +2889,62 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # v1: base table, two data files
-    base_dir = os.path.join(root, "base")
-    o.repartition(2).write.parquet(base_dir)
-    base_files = data_files_of(base_dir)
+    base_files = stage(o.repartition(2), os.path.join(root, "base"))
     if len(base_files) != 2:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 2")
     commit_snapshot(log_dir, base_files)
 
     # v2: MOR equality-delete — one tombstone file, ADD-only commit
-    t2_dir = os.path.join(root, "deletes", "t2")
-    (
+    t2 = stage(
         o.filter(F.col("o_orderkey") % 10 == _CACDF_DEL)
         .select("o_orderkey")
-        .coalesce(1)
-        .write.parquet(t2_dir)
+        .coalesce(1),
+        os.path.join(root, "deletes", "t2"),
     )
-    commit_snapshot(
-        log_dir, data_files_of(t2_dir), extra={"op": "mor-delete"}
-    )
+    commit_snapshot(log_dir, t2, extra={"op": "mor-delete"})
 
     # v3: COMPACTION — apply the tombstone into one clean file, retire
     # the fragmented base files AND the tombstone, stamp op=rewrite
-    clean_dir = os.path.join(root, "compacted")
-    tomb2 = spark.read.parquet(*data_files_of(t2_dir)).select("o_orderkey")
-    (
+    tomb2 = spark.read.parquet(*t2).select("o_orderkey")
+    clean_files = stage(
         spark.read.parquet(*base_files)
         .join(F.broadcast(tomb2), "o_orderkey", "left_anti")
-        .coalesce(1)
-        .write.parquet(clean_dir)
+        .coalesce(1),
+        os.path.join(root, "compacted"),
     )
-    clean_files = data_files_of(clean_dir)
     commit_snapshot(
         log_dir,
         clean_files,
-        remove_files=base_files + data_files_of(t2_dir),
+        remove_files=base_files + t2,
         extra={"op": "rewrite"},
     )
 
     # v4: MOR UPSERT — tombstone for the old rows + re-priced data file
-    t4_dir = os.path.join(root, "deletes", "t4")
-    up_dir = os.path.join(root, "upsert")
     ups = o.filter(F.col("o_orderkey") % 10 == _CACDF_UPS)
-    ups.select("o_orderkey").coalesce(1).write.parquet(t4_dir)
-    (
+    t4 = stage(
+        ups.select("o_orderkey").coalesce(1),
+        os.path.join(root, "deletes", "t4"),
+    )
+    up = stage(
         ups.select(
             "o_orderkey",
             (F.col("cents") + F.lit(_CACDF_BUMP)).alias("cents"),
-        )
-        .coalesce(1)
-        .write.parquet(up_dir)
+        ).coalesce(1),
+        os.path.join(root, "upsert"),
     )
-    commit_snapshot(
-        log_dir,
-        data_files_of(t4_dir) + data_files_of(up_dir),
-        extra={"op": "mor-upsert"},
-    )
+    commit_snapshot(log_dir, t4 + up, extra={"op": "mor-upsert"})
 
     # v5: plain append (re-keyed so keys never collide with the base)
-    app_dir = os.path.join(root, "append")
-    (
+    app = stage(
         o.filter(F.col("o_orderkey") % 1000 == 3)
         .select(
             (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
             "cents",
         )
-        .coalesce(1)
-        .write.parquet(app_dir)
+        .coalesce(1),
+        os.path.join(root, "append"),
     )
-    commit_snapshot(log_dir, data_files_of(app_dir))
+    commit_snapshot(log_dir, app)
 
     spark.dataSource.register(_mor_cdf_datasource())
 
@@ -3040,12 +3001,12 @@ def stream_cdf_compaction_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # head read: the compacted clean file masked by the v4 tombstone
     # (sequence 3 < 4, so it applies), plus the upsert + append files
-    tomb4 = spark.read.parquet(*data_files_of(t4_dir)).select("o_orderkey")
+    tomb4 = spark.read.parquet(*t4).select("o_orderkey")
     head = (
         spark.read.parquet(*clean_files)
         .join(F.broadcast(tomb4), "o_orderkey", "left_anti")
-        .unionByName(spark.read.parquet(*data_files_of(up_dir)))
-        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
+        .unionByName(spark.read.parquet(*up))
+        .unionByName(spark.read.parquet(*app))
     )
     head_net = _signed_net(head.withColumn("change_type", F.lit("insert")))
 
@@ -3161,9 +3122,7 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # v1: base table, two data files
-    base_dir = os.path.join(root, "base")
-    o.repartition(2).write.parquet(base_dir)
-    base_files = data_files_of(base_dir)
+    base_files = stage(o.repartition(2), os.path.join(root, "base"))
     if len(base_files) != 2:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 2")
     commit_snapshot(log_dir, base_files)
@@ -3173,8 +3132,7 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         any of ``mods`` — REAL parquet positions via _metadata, paths
         normalized to plain filesystem form so executors can compare
         them to manifest entries."""
-        d = os.path.join(root, "deletes", "pos", name)
-        (
+        return stage(
             spark.read.parquet(*base_files)
             .select(
                 "o_orderkey",
@@ -3185,10 +3143,9 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter((F.col("o_orderkey") % 10).isin(*mods))
             .select("file_path", "row_index")
-            .coalesce(1)
-            .write.parquet(d)
+            .coalesce(1),
+            os.path.join(root, "deletes", "pos", name),
         )
-        return data_files_of(d)
 
     # v2: positional DV for keys %10 == P1 (add-only commit)
     commit_snapshot(
@@ -3202,17 +3159,16 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         extra={"op": "pos-delete"},
     )
     # v4: plain append (re-keyed so keys never collide with the base)
-    app_dir = os.path.join(root, "append")
-    (
+    app = stage(
         o.filter(F.col("o_orderkey") % 1000 == 9)
         .select(
             (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
             "cents",
         )
-        .coalesce(1)
-        .write.parquet(app_dir)
+        .coalesce(1),
+        os.path.join(root, "append"),
     )
-    commit_snapshot(log_dir, data_files_of(app_dir))
+    commit_snapshot(log_dir, app)
 
     spark.dataSource.register(_mor_cdf_datasource())
     work_units = {1: 2, 2: len(base_files), 3: len(base_files), 4: 1}
@@ -3239,7 +3195,7 @@ def stream_cdf_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("row_index", F.col("_metadata.row_index"))
         .join(F.broadcast(dv_all), ["file_path", "row_index"], "left_anti")
         .select("o_orderkey", "cents")
-        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
+        .unionByName(spark.read.parquet(*app))
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("cents").cast("long").alias("cents"),
@@ -3326,23 +3282,19 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # v1: base table, two data files
-    base_dir = os.path.join(root, "base")
-    o.repartition(2).write.parquet(base_dir)
-    base_files = data_files_of(base_dir)
+    base_files = stage(o.repartition(2), os.path.join(root, "base"))
     if len(base_files) != 2:
         raise RuntimeError(f"base staged {len(base_files)} files, wanted 2")
     commit_snapshot(log_dir, base_files)
 
     # v2: ONE commit, BOTH encodings — equality tombstone + positional DV
-    eq_dir = os.path.join(root, "deletes", "eq")
-    (
+    eq = stage(
         o.filter(F.col("o_orderkey") % 10 == _MXD_EQ)
         .select("o_orderkey")
-        .coalesce(1)
-        .write.parquet(eq_dir)
+        .coalesce(1),
+        os.path.join(root, "deletes", "eq"),
     )
-    pos_dir = os.path.join(root, "deletes", "pos", "v2")
-    (
+    pos = stage(
         spark.read.parquet(*base_files)
         .select(
             "o_orderkey",
@@ -3353,27 +3305,22 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("o_orderkey") % 10 == _MXD_POS)
         .select("file_path", "row_index")
-        .coalesce(1)
-        .write.parquet(pos_dir)
+        .coalesce(1),
+        os.path.join(root, "deletes", "pos", "v2"),
     )
-    commit_snapshot(
-        log_dir,
-        data_files_of(eq_dir) + data_files_of(pos_dir),
-        extra={"op": "mixed-delete"},
-    )
+    commit_snapshot(log_dir, eq + pos, extra={"op": "mixed-delete"})
 
     # v3: plain append (re-keyed)
-    app_dir = os.path.join(root, "append")
-    (
+    app = stage(
         o.filter(F.col("o_orderkey") % 1000 == 11)
         .select(
             (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
             "cents",
         )
-        .coalesce(1)
-        .write.parquet(app_dir)
+        .coalesce(1),
+        os.path.join(root, "append"),
     )
-    commit_snapshot(log_dir, data_files_of(app_dir))
+    commit_snapshot(log_dir, app)
 
     spark.dataSource.register(_mor_cdf_datasource())
     # v2 plans BOTH kinds: |pre-image| equality units + |pre-image| DV units
@@ -3388,10 +3335,8 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     net = _signed_net(feed)
 
     # head: base minus equality keys minus DV positions, plus the append
-    eq_keys = spark.read.parquet(*data_files_of(eq_dir)).select(
-        "o_orderkey"
-    )
-    dv = spark.read.parquet(*data_files_of(pos_dir))
+    eq_keys = spark.read.parquet(*eq).select("o_orderkey")
+    dv = spark.read.parquet(*pos)
     head = (
         spark.read.parquet(*base_files)
         .withColumn(
@@ -3402,7 +3347,7 @@ def stream_cdf_mixed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(eq_keys), "o_orderkey", "left_anti")
         .join(F.broadcast(dv), ["file_path", "row_index"], "left_anti")
         .select("o_orderkey", "cents")
-        .unionByName(spark.read.parquet(*data_files_of(app_dir)))
+        .unionByName(spark.read.parquet(*app))
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum("cents").cast("long").alias("cents"),
@@ -3483,33 +3428,31 @@ def _mv_history(spark: SparkSession, sf_dir: str, root: str) -> str:
     os.makedirs(log_dir)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     # even/odd halves staged in ONE partitioned write (was 2 sequential
-    # filter+coalesce(1) jobs — _stage_slices docstring)
-    halves = _stage_slices(
+    # filter+coalesce(1) jobs — stage_slices docstring)
+    halves = stage_slices(
         o, F.col("o_orderkey") % 2, os.path.join(root, "halves")
     )
     even_f = halves[0]
     commit_snapshot(log_dir, even_f + halves[1])  # v1
 
-    rw_dir = os.path.join(root, "rewrite")  # v2: COW delete on even keys
-    (
+    rewrite = stage(  # v2: COW delete on even keys
         spark.read.parquet(*even_f)
         .filter(~(F.col("o_orderkey") % 10 == _CDF_DEL_PRED))
-        .coalesce(1)
-        .write.parquet(rw_dir)
+        .coalesce(1),
+        os.path.join(root, "rewrite"),
     )
-    commit_snapshot(log_dir, data_files_of(rw_dir), remove_files=even_f)
+    commit_snapshot(log_dir, rewrite, remove_files=even_f)
 
-    app_dir = os.path.join(root, "append")  # v3: re-keyed append
-    (
+    app = stage(  # v3: re-keyed append
         o.filter(F.col("o_orderkey") % 1000 == 7)
         .select(
             (F.col("o_orderkey") + F.lit(3_000_000_000)).alias("o_orderkey"),
             "o_totalprice",
         )
-        .coalesce(1)
-        .write.parquet(app_dir)
+        .coalesce(1),
+        os.path.join(root, "append"),
     )
-    commit_snapshot(log_dir, data_files_of(app_dir))
+    commit_snapshot(log_dir, app)
     spark.dataSource.register(_snapshot_cdf_partitioned_datasource())
     return log_dir
 
@@ -3517,9 +3460,9 @@ def _mv_history(spark: SparkSession, sf_dir: str, root: str) -> str:
 def _mv_direct(spark: SparkSession, log_dir: str) -> DataFrame:
     """The bucket MV recomputed directly from the log's head snapshot —
     the independent reference the maintained MV must equal."""
-    head_files = read_manifest(log_dir, head_version(log_dir))["files"]
+    head_list = head_files(log_dir)
     return (
-        spark.read.parquet(*head_files)
+        spark.read.parquet(*head_list)
         .groupBy(
             (F.col("o_orderkey") % _MV_BUCKETS).cast("int").alias("bucket")
         )
@@ -3760,30 +3703,25 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    base_dir = os.path.join(root, "base")
-    o.repartition(2).write.parquet(base_dir)
-    commit_snapshot(log_dir, data_files_of(base_dir))  # v1
+    base = stage(o.repartition(2), os.path.join(root, "base"))
+    commit_snapshot(log_dir, base)  # v1
 
     # the upsert slice feeds FOUR staged writes (2 tombstones + 2
     # re-price deltas); persist it once instead of re-scanning orders
     # per write (guide §5 caching: reused AND recompute > cache cost)
     ups = o.filter(F.col("o_orderkey") % 10 == _SCD2_UPS).persist()
     for i, bump in ((2, _SCD2_B1), (3, _SCD2_B2)):
-        t_dir = os.path.join(root, "deletes", f"t{i}")
-        u_dir = os.path.join(root, f"u{i}")
-        ups.select("o_orderkey").coalesce(1).write.parquet(t_dir)
-        (
+        t = stage(
+            ups.select("o_orderkey").coalesce(1),
+            os.path.join(root, "deletes", f"t{i}"),
+        )
+        u = stage(
             ups.select(
                 "o_orderkey", (F.col("cents") + F.lit(bump)).alias("cents")
-            )
-            .coalesce(1)
-            .write.parquet(u_dir)
+            ).coalesce(1),
+            os.path.join(root, f"u{i}"),
         )
-        commit_snapshot(
-            log_dir,
-            data_files_of(t_dir) + data_files_of(u_dir),
-            extra={"op": "mor-upsert"},
-        )
+        commit_snapshot(log_dir, t + u, extra={"op": "mor-upsert"})
     ups.unpersist()
 
     spark.dataSource.register(_mor_cdf_datasource())
@@ -3880,7 +3818,7 @@ def stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(root, "deletes", "t3"),
     ).select("o_orderkey").distinct()
     head = (
-        spark.read.parquet(base_dir)
+        spark.read.parquet(*base)
         .join(F.broadcast(t2k), "o_orderkey", "left_anti")
         .unionByName(spark.read.parquet(os.path.join(root, "u3")))
         .agg(
@@ -4149,11 +4087,10 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # v1: pre-evolution generation — EVEN keys, original schema
-    gen1_dir = os.path.join(root, "gen1")
-    o.filter(F.col("o_orderkey") % 2 == 0).repartition(2).write.parquet(
-        gen1_dir
+    gen1_files = stage(
+        o.filter(F.col("o_orderkey") % 2 == 0).repartition(2),
+        os.path.join(root, "gen1"),
     )
-    gen1_files = data_files_of(gen1_dir)
     if len(gen1_files) != 2:
         raise RuntimeError(f"gen1 staged {len(gen1_files)} files, wanted 2")
     commit_snapshot(log_dir, gen1_files, extra={"schema_version": 1})
@@ -4180,8 +4117,7 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # v3: post-evolution generation — ODD keys, WITH channel
-    gen2_dir = os.path.join(root, "gen2")
-    (
+    gen2_files = stage(
         o.filter(F.col("o_orderkey") % 2 == 1)
         .select(
             "o_orderkey",
@@ -4191,26 +4127,22 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("o_orderkey") % 3 + 1).cast("int"),
             ).alias("channel"),
         )
-        .repartition(2)
-        .write.parquet(gen2_dir)
+        .repartition(2),
+        os.path.join(root, "gen2"),
     )
-    gen2_files = data_files_of(gen2_dir)
     if len(gen2_files) != 2:
         raise RuntimeError(f"gen2 staged {len(gen2_files)} files, wanted 2")
     commit_snapshot(log_dir, gen2_files, extra={"schema_version": 2})
 
     # v4: equality-delete across BOTH generations (%5 hits both parities)
-    t4_dir = os.path.join(root, "deletes", "t4")
-    (
+    t4 = stage(
         o.filter(F.col("o_orderkey") % 5 == _SECDF_DEL)
         .select("o_orderkey")
-        .coalesce(1)
-        .write.parquet(t4_dir)
+        .coalesce(1),
+        os.path.join(root, "deletes", "t4"),
     )
     commit_snapshot(
-        log_dir,
-        data_files_of(t4_dir),
-        extra={"schema_version": 2, "op": "mor-delete"},
+        log_dir, t4, extra={"schema_version": 2, "op": "mor-delete"}
     )
 
     # planned executor work units per commit: v2 is metadata-only and
@@ -4286,7 +4218,7 @@ def stream_cdf_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()
     }
-    tomb = spark.read.parquet(*data_files_of(t4_dir)).select("o_orderkey")
+    tomb = spark.read.parquet(*t4).select("o_orderkey")
     head = {
         r["channel"]: (r["n"], r["c"])
         for r in spark.read.option("mergeSchema", "true")
@@ -4586,32 +4518,30 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
 
-    def stage(df: DataFrame, name: str) -> list[str]:
-        d = os.path.join(root, name)
-        df.coalesce(1).write.mode("overwrite").parquet(d)
-        return data_files_of(d)
-
     # fact thirds + dim halves staged in TWO partitioned writes (was 5
-    # sequential filter+coalesce(1) jobs — _stage_slices docstring)
-    fact_slices = _stage_slices(
+    # sequential filter+coalesce(1) jobs — stage_slices docstring)
+    fact_slices = stage_slices(
         o, F.col("o_orderkey") % 3, os.path.join(root, "fact_slices")
     )
-    dim_slices = _stage_slices(
+    dim_slices = stage_slices(
         c, F.col("c_custkey") % 2, os.path.join(root, "dim_slices")
     )
     f1, f2, f3 = fact_slices[0], fact_slices[1], fact_slices[2]
     d1, d2 = dim_slices[0], dim_slices[1]
     f1p = stage(  # txn4's COW rewrite of F1: the delete
-        spark.read.parquet(*f1).filter(
-            ~(F.col("o_orderkey") % 10 == _XT_DEL)
-        ),
-        "f1_rewritten",
+        spark.read.parquet(*f1)
+        .filter(~(F.col("o_orderkey") % 10 == _XT_DEL))
+        .coalesce(1),
+        os.path.join(root, "f1_rewritten"),
     )
     # txn5: a MAINTENANCE COMPACTION of the fact (layout only, rows
     # identical) — stamped per-table op=rewrite so the feed must emit
     # ZERO events for it (the single-table feeds' rewrite awareness,
     # extended to the txn root's per-table deltas)
-    fc = stage(spark.read.parquet(*(f1p + f2 + f3)), "fact_compacted")
+    fc = stage(
+        spark.read.parquet(*(f1p + f2 + f3)).coalesce(1),
+        os.path.join(root, "fact_compacted"),
+    )
     txn_publish(txn_dir, 1, {"fact": f1, "dim": d1})
     txn_publish(txn_dir, 2, {"fact": f1 + f2, "dim": d1})
     txn_publish(txn_dir, 3, {"fact": f1 + f2 + f3, "dim": d1 + d2})
@@ -4749,9 +4679,7 @@ def stream_cdf_cross_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # direct star recompute from the txn head (both tables at txn 4)
-    head_tables = read_manifest(txn_dir, head_version(txn_dir))[
-        "tables"
-    ]
+    _, head_tables = txn_head_tables(txn_dir)
     direct = (
         spark.read.parquet(*head_tables["fact"])
         .join(
@@ -4881,16 +4809,11 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
 
-    def stage(df: DataFrame, name: str, n: int = 1) -> list[str]:
-        d = os.path.join(root, name)
-        df.repartition(n).write.mode("overwrite").parquet(d)
-        return data_files_of(d)
-
     # all three thirds staged in ONE partitioned write (was 3
-    # sequential jobs — _stage_slices docstring); s1 keeps its 2-file
+    # sequential jobs — stage_slices docstring); s1 keeps its 2-file
     # layout by splitting the %3==0 third into %6 sub-slices 0/1
     third = F.col("o_orderkey") % 3
-    slices = _stage_slices(
+    slices = stage_slices(
         o,
         F.when(third == 0, (F.col("o_orderkey") % 6) / 3).otherwise(
             third + 1
@@ -4899,7 +4822,10 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s1 = sorted(slices[0] + slices[1])
     commit_snapshot(log_dir, s1)  # v1
-    s1c = stage(spark.read.parquet(*s1), "s1_compacted")
+    s1c = stage(
+        spark.read.parquet(*s1).repartition(1),
+        os.path.join(root, "s1_compacted"),
+    )
     commit_snapshot(  # v2: layout-only rewrite of v1
         log_dir, s1c, remove_files=s1, extra={"op": "rewrite"}
     )
@@ -4921,16 +4847,13 @@ def stream_cdf_vacuum_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     # v5: the POST-VACUUM equality delete (the review's crash case —
     # its sequence scoping must ride the persisted checkpoint now that
     # the genesis manifests are tombstoned)
-    t5_dir = os.path.join(root, MOR_DELETE_CLASS, "t5")
-    (
+    t5 = stage(
         o.select("o_orderkey")
         .filter(F.col("o_orderkey") % 10 == _SVH_DEL)
-        .coalesce(1)
-        .write.parquet(t5_dir)
+        .coalesce(1),
+        os.path.join(root, MOR_DELETE_CLASS, "t5"),
     )
-    commit_snapshot(
-        log_dir, data_files_of(t5_dir), extra={"op": "mor-delete"}
-    )  # v5
+    commit_snapshot(log_dir, t5, extra={"op": "mor-delete"})  # v5
 
     mor_src = _mor_cdf_datasource()
     spark.dataSource.register(mor_src)
@@ -5236,11 +5159,11 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stage all 12 fact slices + both dim halves in TWO partitioned
     # writes (was 14 sequential filter+coalesce(1) jobs, each a full
-    # re-scan of its source — _stage_slices docstring, guide §1.2)
-    fact_slices = _stage_slices(
+    # re-scan of its source — stage_slices docstring, guide §1.2)
+    fact_slices = stage_slices(
         o, F.col("o_orderkey") % _CTX_N, os.path.join(root, "fact_slices")
     )
-    dim_slices = _stage_slices(
+    dim_slices = stage_slices(
         c, F.col("c_custkey") % 2, os.path.join(root, "dim_slices")
     )
     for i in range(_CTX_N):
@@ -5293,15 +5216,16 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def opens_of(open_log: str) -> list[str]:
         with open(open_log) as fh:
-            return [os.path.basename(ln.strip()) for ln in fh if ln.strip()]
+            return [ln.strip() for ln in fh if ln.strip()]
 
     seed_v = _CTX_CKPTS[-1]
+    pointer = os.path.join(txn_dir, TXN_CKPT_POINTER)
 
     # FRESH consumer: pointer -> checkpoint seed -> tail deltas
     fresh_batches, fresh_log = run_feed("fresh", cursor=None)
     fresh_opens = opens_of(fresh_log)
-    want_fresh = ["_last_checkpoint", f"ckpt-v{seed_v}.json"] + [
-        f"v{v}.json" for v in range(seed_v + 1, _CTX_N + 1)
+    want_fresh = [pointer, txn_ckpt_path(txn_dir, seed_v)] + [
+        manifest_path(txn_dir, v) for v in range(seed_v + 1, _CTX_N + 1)
     ]
     if fresh_opens != want_fresh:
         raise RuntimeError(f"fresh opens {fresh_opens} != {want_fresh}")
@@ -5314,11 +5238,13 @@ def stream_cdf_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delta-manifest resumption, pointer/checkpoints never consulted
     re_batches, re_log = run_feed("restart", cursor=_CTX_RESTART)
     re_opens = opens_of(re_log)
-    want_re = [f"v{v}.json" for v in range(_CTX_RESTART + 1, _CTX_N + 1)]
+    want_re = [
+        manifest_path(txn_dir, v) for v in range(_CTX_RESTART + 1, _CTX_N + 1)
+    ]
     if re_opens != want_re:
         raise RuntimeError(f"restart opens {re_opens} != {want_re}")
-    restart_skips_pointer = not any("ckpt" in p or p == "_last_checkpoint"
-                                    for p in re_opens)
+    ckpt_files = {pointer} | {txn_ckpt_path(txn_dir, k) for k in _CTX_CKPTS}
+    restart_skips_pointer = not ckpt_files & set(re_opens)
     txn6 = next(b for b in re_batches if b[1] == [6])
     if txn6[2] != ["dim", "fact"]:
         raise RuntimeError(f"txn6 batch spans {txn6[2]}, not both tables")
@@ -5534,11 +5460,11 @@ def stream_cdf_rebase_exactly_once(spark: SparkSession, sf_dir: str) -> DataFram
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
 
     # fact/dim halves staged in TWO partitioned writes (was 4
-    # sequential filter+coalesce(1) jobs — _stage_slices docstring)
-    fact_slices = _stage_slices(
+    # sequential filter+coalesce(1) jobs — stage_slices docstring)
+    fact_slices = stage_slices(
         o, F.col("o_orderkey") % 2, os.path.join(root, "fact_slices")
     )
-    dim_slices = _stage_slices(
+    dim_slices = stage_slices(
         c, F.col("c_custkey") % 2, os.path.join(root, "dim_slices")
     )
     f1, f2 = fact_slices[0], fact_slices[1]

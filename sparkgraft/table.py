@@ -7,13 +7,19 @@ set (``files``) plus optional stamps (``op``, ``schema_version``,
 ``feed_batch``, ...). Conventions owned here:
 
 - versions: listing the log (`log_versions`), opening one manifest
-  (`read_manifest`, `manifest_path`);
+  (`read_manifest`, `manifest_path`) or the head's file list
+  (`head_files`);
+- staging: writing a DataFrame's parquet files before a commit names
+  them (`stage`, `stage_slices`);
 - commits: the link(2) compare-and-swap (`try_publish`), the
   optimistic rebase loop (`commit_snapshot`, `commit_rewrite`) and its
   conflict (`CommitConflict`);
 - file classes: delete files live under a ``deletes/`` path segment,
   positional delete vectors under ``deletes/pos/`` (`split_head_files`,
   `mor_read`);
+- refs: a branch or tag is one file ``{refs_dir}/{name}`` holding the
+  version it points at (`set_ref`, `get_ref`, `drop_ref`,
+  `ref_files`);
 - expiry: expired manifests are renamed ``v{N}.json.expired`` and the
   sequence numbers they owned persist in ``seq-v{horizon}.json``
   (`expire_snapshots`, `seq_first_versions`);
@@ -23,7 +29,8 @@ set (``files``) plus optional stamps (``op``, ``schema_version``,
   ``_last_checkpoint`` pointer (`txn_write_checkpoint`).
 
 Standard library only at import time: Python workers that unpickle a
-feed reader import this module, so it must stay small.
+feed reader import this module, so it must stay small; the helpers
+that take a DataFrame only call its methods or import pyspark inside.
 """
 
 from __future__ import annotations
@@ -39,6 +46,7 @@ MOR_DELETE_CLASS = "deletes"  # path segment classifying tombstone files
 POS_DELETE_CLASS = "pos"  # sub-segment for POSITIONAL delete vectors
 EXPIRED_SUFFIX = ".json.expired"
 _SEQ_CKPT_PREFIX = "seq-v"
+_CKPT_PREFIX = "ckpt-v"
 TXN_CKPT_POINTER = "_last_checkpoint"
 
 
@@ -76,6 +84,11 @@ def read_manifest(log_dir: str, version: int) -> dict:
         return json.load(fh)
 
 
+def head_files(log_dir: str) -> list[str]:
+    """The head snapshot's complete file list."""
+    return read_manifest(log_dir, head_version(log_dir))["files"]
+
+
 def data_files_of(d: str) -> list[str]:
     """The parquet files directly under ``d``, sorted."""
     return sorted(
@@ -91,6 +104,45 @@ def tree_files(d: str) -> list[str]:
         for f in fs
         if f.endswith(".parquet")
     )
+
+
+# --- staging ---
+
+
+def stage(df: DataFrame, d: str) -> list[str]:
+    """Write ``df`` to ``d`` as parquet (overwrite) and return its data
+    files. A staged file is invisible until a manifest names it. The
+    caller fixes the file layout (``coalesce``/``repartition``) first:
+    some oracle digests count files."""
+    df.write.mode("overwrite").parquet(d)
+    return data_files_of(d)
+
+
+def stage_slices(
+    df: DataFrame, slice_expr, out_dir: str
+) -> dict[int, list[str]]:
+    """Stage every integer slice of ``df`` in ONE shuffled partitioned
+    write (dirs ``sgs=<k>/``, exactly one data file per slice — a
+    slice's rows hash to a single write task) instead of one filter +
+    coalesce(1) write job per slice. The staged files carry exactly
+    ``df``'s columns (the slice key becomes the directory name, not a
+    stored column), so readers of the returned per-slice file lists see
+    the same frames the per-slice jobs produced. Guide §1.2 step 1 /
+    §2.4: N full scans of the source collapse into one scan + one
+    shuffle of the same bytes; r13 measured the N-scan staging loops as
+    the second-largest cost inside the CDF protocol keys."""
+    (
+        df.withColumn("sgs", slice_expr.cast("int"))
+        .repartition("sgs")
+        .write.mode("overwrite")
+        .partitionBy("sgs")
+        .parquet(out_dir)
+    )
+    return {
+        int(d.split("=", 1)[1]): data_files_of(os.path.join(out_dir, d))
+        for d in os.listdir(out_dir)
+        if d.startswith("sgs=")
+    }
 
 
 # --- commits ---
@@ -282,6 +334,33 @@ def mor_read(spark: SparkSession, files: list, key: str) -> DataFrame:
     return df
 
 
+# --- refs: branches and tags ---
+
+
+def set_ref(refs_dir: str, name: str, version: int) -> None:
+    """Point ref ``name`` at ``version``: write a temp file, then
+    os.replace it over the ref, so a reader sees the old or the new
+    version and never a torn one."""
+    tmp = os.path.join(refs_dir, f".tmp-{name}")
+    with open(tmp, "w") as fh:
+        fh.write(str(version))
+    os.replace(tmp, os.path.join(refs_dir, name))
+
+
+def get_ref(refs_dir: str, name: str) -> int:
+    with open(os.path.join(refs_dir, name)) as fh:
+        return int(fh.read())
+
+
+def drop_ref(refs_dir: str, name: str) -> None:
+    os.unlink(os.path.join(refs_dir, name))
+
+
+def ref_files(log_dir: str, refs_dir: str, name: str) -> list[str]:
+    """The file list of the snapshot ref ``name`` points at."""
+    return read_manifest(log_dir, get_ref(refs_dir, name))["files"]
+
+
 # --- snapshot expiry ---
 
 
@@ -318,6 +397,15 @@ def expired_horizon(log_dir: str) -> int:
         if f.startswith("v") and f.endswith(EXPIRED_SUFFIX)
     ]
     return max(ex) if ex else 0
+
+
+def tombstone_manifest(log_dir: str, version: int) -> None:
+    """Rename manifest ``version`` to ``v{N}.json.expired``: it leaves
+    the log, and time travel to it fails fast."""
+    os.rename(
+        manifest_path(log_dir, version),
+        os.path.join(log_dir, f"v{version}{EXPIRED_SUFFIX}"),
+    )
 
 
 def expire_snapshots(
@@ -374,10 +462,7 @@ def expire_snapshots(
     for f in sorted(orphans):
         os.unlink(f)
     for v in expired:
-        os.rename(
-            manifest_path(log_dir, v),
-            os.path.join(log_dir, f"v{v}{EXPIRED_SUFFIX}"),
-        )
+        tombstone_manifest(log_dir, v)
     return retained, expired, sorted(orphans)
 
 
@@ -445,7 +530,16 @@ def txn_commit(
 
 
 def txn_ckpt_path(txn_dir: str, at: int) -> str:
-    return os.path.join(txn_dir, f"ckpt-v{at}.json")
+    return os.path.join(txn_dir, f"{_CKPT_PREFIX}{at}.json")
+
+
+def ckpt_versions(log_dir: str) -> list[int]:
+    """The versions that have a published checkpoint, ascending."""
+    return sorted(
+        int(f[len(_CKPT_PREFIX):-5])
+        for f in os.listdir(log_dir)
+        if f.startswith(_CKPT_PREFIX) and f.endswith(".json")
+    )
 
 
 def txn_delta_merge(state: dict, adds: dict) -> None:

@@ -12,13 +12,14 @@ from ..registry import key_root, query
 from ..table import (
     MOR_DELETE_CLASS,
     commit_snapshot,
-    data_files_of,
-    head_version,
+    head_files,
     is_delete_file,
     log_versions,
     mor_read,
     read_manifest,
     split_head_files,
+    stage,
+    stage_slices,
 )
 
 
@@ -2055,7 +2056,7 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         _doc_cdf_datasource,
         _drain_feed,
         _index_feed_maintainer,
-        _stage_slices,
+        _index_source_history,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2071,26 +2072,9 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.makedirs(d)
 
     # the documents table's history
-    # base/delta staged in ONE partitioned write (was 2 sequential
-    # filter+coalesce(1) scans of documents — _stage_slices docstring,
-    # guide §1.2 step 1)
-    doc_slices = _stage_slices(
-        docs,
-        (F.col("doc_id") >= cut).cast("int"),
-        os.path.join(root, "slices"),
+    _index_source_history(
+        docs, "doc_id", cut, _DIX_MOD, _DIX_REM, root, doc_log
     )
-    commit_snapshot(doc_log, doc_slices[0])  # v1
-    commit_snapshot(doc_log, doc_slices[1])  # v2
-    t3_dir = os.path.join(root, MOR_DELETE_CLASS, "t3")
-    (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") % _DIX_MOD == _DIX_REM)
-        .coalesce(1)
-        .write.parquet(t3_dir)
-    )
-    commit_snapshot(
-        doc_log, data_files_of(t3_dir), extra={"op": "mor-delete"}
-    )  # v3
 
     # THE MAINTAINER: one index-table commit per feed micro-batch
     maintain = _index_feed_maintainer(
@@ -2131,7 +2115,7 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # THE PROOF: index-after-feed == index-rebuilt-from-head (the docs
     # table's MOR read), exact frame equality across the delete commit
-    doc_head = read_manifest(doc_log, head_version(doc_log))["files"]
+    doc_head = head_files(doc_log)
     live_docs = mor_read(spark, doc_head, "doc_id")
     rebuilt = band_keys(minhash_signatures(live_docs))
     if not multisets_equal(maintained, rebuilt):
@@ -2256,7 +2240,6 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         _doc_cdf_datasource,
         _drain_feed,
         _index_feed_maintainer,
-        _stage_slices,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2272,18 +2255,13 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (doc_log, idx_log, idx_root):
         os.makedirs(d)
 
-    def stage_docs(df: DataFrame, name: str) -> list[str]:
-        d = os.path.join(root, name)
-        df.coalesce(1).write.parquet(d)
-        return data_files_of(d)
-
     # base/delta1/delta2 staged in ONE partitioned write (was 3
-    # sequential filter+coalesce(1) scans of documents — _stage_slices
+    # sequential filter+coalesce(1) scans of documents — stage_slices
     # docstring, guide §1.2 step 1). delta2 (slice 2) is committed only
     # in the post-compaction phase below; staging a file early and
     # committing it later is exactly the snapshot-log contract (a file
     # is invisible until a manifest references it).
-    doc_slices = _stage_slices(
+    doc_slices = stage_slices(
         docs,
         F.when(F.col("doc_id") < c1, 0)
         .when(F.col("doc_id") < c2, 1)
@@ -2294,11 +2272,11 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_snapshot(doc_log, doc_slices[1])  # v2
     commit_snapshot(
         doc_log,
-        stage_docs(
-            docs.select("doc_id").filter(
-                F.col("doc_id") % _DIX_MOD == _DIX_REM
-            ),
-            os.path.join(MOR_DELETE_CLASS, "t3"),
+        stage(
+            docs.select("doc_id")
+            .filter(F.col("doc_id") % _DIX_MOD == _DIX_REM)
+            .coalesce(1),
+            os.path.join(root, MOR_DELETE_CLASS, "t3"),
         ),
         extra={"op": "mor-delete"},
     )  # v3
@@ -2327,11 +2305,9 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not split_head_files(head_pre)[1]:
         raise RuntimeError("phase 1 left no index tombstone to compact")
     pre_mor = mor_read(spark, head_pre, "doc_id").localCheckpoint()
-    clean_dir = os.path.join(idx_root, "compacted")
-    pre_mor.coalesce(1).write.parquet(clean_dir)
     commit_snapshot(
         idx_log,
-        data_files_of(clean_dir),
+        stage(pre_mor.coalesce(1), os.path.join(idx_root, "compacted")),
         remove_files=head_pre,
         extra={"op": "rewrite"},
     )  # index v4
@@ -2362,7 +2338,7 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- final: head index == rebuild from the docs head's LIVE rows
     maintained = spark.read.parquet(*v5["files"]).localCheckpoint()
-    doc_head = read_manifest(doc_log, head_version(doc_log))["files"]
+    doc_head = head_files(doc_log)
     live_docs = (
         spark.read.parquet(*split_head_files(doc_head)[0])
         # sequence scoping: the v3 tombstone masks only docs committed
@@ -2489,7 +2465,7 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         _doc_cdf_datasource,
         _drain_feed,
         _index_feed_maintainer,
-        _stage_slices,
+        _index_source_history,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2504,27 +2480,10 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (doc_log, idx_log, idx_root):
         os.makedirs(d)
 
-
-    # base/delta staged in ONE partitioned write (was 2 sequential
-    # filter+coalesce(1) scans of documents — _stage_slices docstring,
-    # guide §1.2 step 1)
-    doc_slices = _stage_slices(
-        docs,
-        (F.col("doc_id") >= cut).cast("int"),
-        os.path.join(root, "slices"),
+    # the documents table's history
+    _, t3 = _index_source_history(
+        docs, "doc_id", cut, _DIX_MOD, _DIX_REM, root, doc_log
     )
-    commit_snapshot(doc_log, doc_slices[0])  # v1
-    commit_snapshot(doc_log, doc_slices[1])  # v2
-    t3_dir = os.path.join(root, MOR_DELETE_CLASS, "t3")
-    (
-        docs.select("doc_id")
-        .filter(F.col("doc_id") % _DIX_MOD == _DIX_REM)
-        .coalesce(1)
-        .write.parquet(t3_dir)
-    )
-    commit_snapshot(
-        doc_log, data_files_of(t3_dir), extra={"op": "mor-delete"}
-    )  # v3
 
     # the maintainer, stamping each index commit with its docs version
     # — derived from the BATCH'S OWN event rows, never from the
@@ -2598,7 +2557,7 @@ def dedup_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2, n3 = asof[2].count(), asof[3].count()
     # tombstone cardinality from the staged tombstone file's footer
     # (metadata count-star) instead of re-filtering documents
-    n_del = int(spark.read.parquet(t3_dir).count())
+    n_del = int(spark.read.parquet(*t3).count())
     retired = n_del * _MINHASH_BANDS
     if n2 - n3 != retired or retired == 0:
         raise RuntimeError(
@@ -2740,15 +2699,12 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (doc_log, idx_log, idx_root):
         os.makedirs(d)
 
-
-    base_dir = os.path.join(root, "base")
-    docs.filter(F.col("doc_id") < cut).coalesce(1).write.parquet(base_dir)
-    commit_snapshot(doc_log, data_files_of(base_dir))  # v1
+    base = docs.filter(F.col("doc_id") < cut).coalesce(1)
+    commit_snapshot(doc_log, stage(base, os.path.join(root, "base")))  # v1
     # v2: the METADATA-ONLY add-column commit — zero file delta
     commit_snapshot(doc_log, [], extra={"schema_version": 2})
     # v3: post-evolution append, files CARRY the evolved column
-    delta_dir = os.path.join(root, "delta")
-    (
+    delta = stage(
         docs.filter(F.col("doc_id") >= cut)
         .withColumn(
             "lang",
@@ -2756,21 +2712,18 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("de")
             ),
         )
-        .coalesce(1)
-        .write.parquet(delta_dir)
+        .coalesce(1),
+        os.path.join(root, "delta"),
     )
-    commit_snapshot(doc_log, data_files_of(delta_dir))
+    commit_snapshot(doc_log, delta)
     # v4: cross-generation equality tombstone
-    t4_dir = os.path.join(root, MOR_DELETE_CLASS, "t4")
-    (
+    t4 = stage(
         docs.select("doc_id")
         .filter(F.col("doc_id") % _DIX_MOD == _DIX_REM)
-        .coalesce(1)
-        .write.parquet(t4_dir)
+        .coalesce(1),
+        os.path.join(root, MOR_DELETE_CLASS, "t4"),
     )
-    commit_snapshot(
-        doc_log, data_files_of(t4_dir), extra={"op": "mor-delete"}
-    )
+    commit_snapshot(doc_log, t4, extra={"op": "mor-delete"})
 
     delivered: list[tuple[int, int]] = []  # (batch_id, n_index_commits)
     # the stamp and the idempotency key are the batch's SOURCE version
@@ -2820,7 +2773,7 @@ def dedup_index_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # capstone: maintained == rebuild from the head's live docs
-    doc_head = read_manifest(doc_log, head_version(doc_log))["files"]
+    doc_head = head_files(doc_log)
     live_docs = mor_read(spark, doc_head, "doc_id").select(
         "doc_id", "text"
     )

@@ -36,13 +36,13 @@ from .registry import _scratch, key_root, query
 from .table import (
     MOR_DELETE_CLASS,
     commit_snapshot,
-    data_files_of,
     empty_log,
-    head_version,
+    head_files,
     log_versions,
     mor_read,
     read_manifest,
     split_head_files,
+    stage,
 )
 
 _DIM = 64  # fixed embedding width (FIXTURES.md: embeddings.embedding)
@@ -3564,28 +3564,22 @@ def sim_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = os.path.join(root, "log")
     empty_log(log_dir)
 
-    idx_dir = os.path.join(root, "codes")
-    codes.repartition(4, "vec_id").write.mode("overwrite").parquet(idx_dir)
-    commit_snapshot(
-        log_dir, data_files_of(idx_dir), extra={"op": "index-build"}
+    built = stage(
+        codes.repartition(4, "vec_id"), os.path.join(root, "codes")
     )
+    commit_snapshot(log_dir, built, extra={"op": "index-build"})
 
     # v2: the MOR equality-delete — an add-only KB tombstone commit
-    t_dir = os.path.join(root, MOR_DELETE_CLASS, "t2")
-    (
+    t2 = stage(
         e.select("vec_id")
         .filter(F.col("vec_id") % _IVFDEL_MOD == _IVFDEL_REM)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(t_dir)
+        .coalesce(1),
+        os.path.join(root, MOR_DELETE_CLASS, "t2"),
     )
-    commit_snapshot(
-        log_dir, data_files_of(t_dir), extra={"op": "mor-delete"}
-    )
+    commit_snapshot(log_dir, t2, extra={"op": "mor-delete"})
 
     # THE MAINTENANCE: head manifest -> committed code table ⟕̸ tombstone
-    head = read_manifest(log_dir, head_version(log_dir))
-    data_files, tomb_files = split_head_files(head["files"])
+    data_files, tomb_files = split_head_files(head_files(log_dir))
     if not data_files or not tomb_files:
         raise RuntimeError("head manifest lost a file class")
     committed = spark.read.parquet(*data_files)
@@ -3765,7 +3759,7 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb_cdf_datasource,
         _drain_feed,
         _index_feed_maintainer,
-        _stage_slices,
+        _index_source_history,
     )
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -3781,26 +3775,9 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (emb_log, idx_log, idx_root):
         os.makedirs(d)
 
-    # base/delta staged in ONE partitioned write (was 2 sequential
-    # filter+coalesce(1) scans of embeddings — _stage_slices docstring,
-    # guide §1.2 step 1)
-    emb_slices = _stage_slices(
-        e,
-        (F.col("vec_id") >= cut).cast("int"),
-        os.path.join(root, "slices"),
+    emb_slices, _ = _index_source_history(
+        e, "vec_id", cut, _IVFDEL_MOD, _IVFDEL_REM, root, emb_log
     )
-    commit_snapshot(emb_log, emb_slices[0])  # v1
-    commit_snapshot(emb_log, emb_slices[1])  # v2
-    t3_dir = os.path.join(root, MOR_DELETE_CLASS, "t3")
-    (
-        e.select("vec_id")
-        .filter(F.col("vec_id") % _IVFDEL_MOD == _IVFDEL_REM)
-        .coalesce(1)
-        .write.parquet(t3_dir)
-    )
-    commit_snapshot(
-        emb_log, data_files_of(t3_dir), extra={"op": "mor-delete"}
-    )  # v3
 
     # delta row count from the staged slice's parquet footer (metadata
     # count-star) instead of a second filter scan of embeddings
@@ -3826,7 +3803,7 @@ def sim_ivf_index_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"delta batch assigned {n_assigned} rows, delta has {n_delta}"
         )
 
-    head = read_manifest(idx_log, head_version(idx_log))["files"]
+    head = head_files(idx_log)
     idx_data, idx_tombs = split_head_files(head)
     if not idx_data or not idx_tombs:
         raise RuntimeError("index head lost a file class")
@@ -4013,7 +3990,7 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb_cdf_datasource,
         _drain_feed,
         _index_feed_maintainer,
-        _stage_slices,
+        _index_source_history,
     )
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -4029,26 +4006,9 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in (emb_log, idx_log, idx_root):
         os.makedirs(d)
 
-    # base/delta staged in ONE partitioned write (was 2 sequential
-    # filter+coalesce(1) scans of embeddings — _stage_slices docstring,
-    # guide §1.2 step 1)
-    emb_slices = _stage_slices(
-        e,
-        (F.col("vec_id") >= cut).cast("int"),
-        os.path.join(root, "slices"),
+    _, t3 = _index_source_history(
+        e, "vec_id", cut, _IVFDEL_MOD, _IVFDEL_REM, root, emb_log
     )
-    commit_snapshot(emb_log, emb_slices[0])  # v1
-    commit_snapshot(emb_log, emb_slices[1])  # v2
-    t3_dir = os.path.join(root, MOR_DELETE_CLASS, "t3")
-    (
-        e.select("vec_id")
-        .filter(F.col("vec_id") % _IVFDEL_MOD == _IVFDEL_REM)
-        .coalesce(1)
-        .write.parquet(t3_dir)
-    )
-    commit_snapshot(
-        emb_log, data_files_of(t3_dir), extra={"op": "mor-delete"}
-    )  # v3
 
     # the stamp and the idempotency key are the batch's SOURCE version,
     # read from its own event rows — never the foreachBatch id (r13
@@ -4119,7 +4079,7 @@ def sim_ivf_index_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2, n3 = asof[2].count(), asof[3].count()
     # tombstone cardinality from the staged tombstone file's footer
     # (metadata count-star) instead of re-filtering embeddings
-    retired = int(spark.read.parquet(t3_dir).count())
+    retired = int(spark.read.parquet(*t3).count())
     if n2 - n3 != retired or retired == 0:
         raise RuntimeError(
             f"AS-OF diff {n2 - n3} != retired codes {retired}"

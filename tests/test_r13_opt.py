@@ -1,8 +1,8 @@
 """Focused tests for the r13 optimization round's shared helpers.
 
 `multisets_equal` (sparkgraft/proofs.py) replaced the double-exceptAll
-frame-equality probe inside the index/feed protocol keys; `_stage_slices`
-(sparkgraft/streaming.py) replaced N sequential filter+coalesce(1) staging
+frame-equality probe inside the index/feed protocol keys; `stage_slices`
+(sparkgraft/table.py) replaced N sequential filter+coalesce(1) staging
 jobs with one partitioned write. Both must be SEMANTICALLY identical to
 what they replaced — these tests pin that, independent of the protocol
 keys that use them.
@@ -66,7 +66,7 @@ def test_multisets_equal_null_and_nan(spark):
 def test_stage_slices_matches_per_slice_filters(spark):
     """Each staged slice dir holds exactly the rows the per-slice filter
     job used to write, with df's columns and ONE data file per slice."""
-    from sparkgraft.streaming import _stage_slices
+    from sparkgraft.table import stage_slices
 
     df = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") * 7 % 100).alias("v")
@@ -74,7 +74,7 @@ def test_stage_slices_matches_per_slice_filters(spark):
     out = os.path.join(
         tempfile.gettempdir(), f"sg-test-stageslices-{os.getpid()}"
     )
-    slices = _stage_slices(df, F.col("k") % 3, out)
+    slices = stage_slices(df, F.col("k") % 3, out)
     assert sorted(slices) == [0, 1, 2]
     for s, files in slices.items():
         assert len(files) == 1  # one data file per slice

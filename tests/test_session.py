@@ -134,8 +134,9 @@ _SESSION = ("import sparkgraft; s = sparkgraft.get_session('cds-test'); "
             "print(s.range(1000).rdd.map(lambda r: r[0]).sum())")
 
 
-def _fresh_session(cache: Path, extra_opts: str = "") -> subprocess.CompletedProcess:
-    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_GRAFT_DRIVER_MEM="1g",
+def _fresh_session(cache: Path, extra_opts: str = "",
+                   heap: str = "1g") -> subprocess.CompletedProcess:
+    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_GRAFT_DRIVER_MEM=heap,
                SPARK_GRAFT_CPUS="2", PYTHONPATH=str(ROOT))
     env.pop("SPARK_CONF_DIR", None)  # the test session's own JVM may have set it
     env["SPARK_SUBMIT_OPTS"] = f"{env.get('SPARK_SUBMIT_OPTS', '')} {extra_opts}".strip()
@@ -186,3 +187,18 @@ def test_truncated_archive_still_starts(dumped, tmp_path):
     # The damaged archive is gone and this session's exit dumped a new one.
     [fresh] = _archives(dumped)
     assert fresh.stat().st_size == session._middle(fresh.name)
+
+
+def test_declined_archive_is_removed(dumped, tmp_path):
+    # The 1g archive planted under the 40g key: from 32g on the JVM runs
+    # without compressed oops, so it declines the archive and starts plain.
+    [archive] = _archives(dumped)
+    cds = tmp_path / "cache" / "sparkgraft" / "cds"
+    cds.mkdir(parents=True)
+    planted = cds / f"{_key('40g')}.{archive.stat().st_size}.jsa"
+    planted.write_bytes(archive.read_bytes())
+    run = _fresh_session(tmp_path / "cache", heap="40g")
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout == "499500\n"
+    assert not planted.exists()
+    assert not list(tmp_path.glob("hs_err_pid*.log"))

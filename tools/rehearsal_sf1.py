@@ -24,19 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import sparkgraft
-
-HEADLINE = [
-    "agg_groupby_hash",
-    "join_multiway_star",
-    "topk_limit",
-    "agg_count_distinct",
-    "sort_global",
-    "join_asof",
-    "win_row_number_topn",
-    "dedup_exact_docs",
-    "sim_cosine_topk",
-    "text_wordcount",
-]
+from bench import HEADLINE
 
 HEAVY = [
     "dedup_ngram_jaccard",
