@@ -10,15 +10,22 @@ builder works — only `master` and memory sizing change.
 A process cannot keep a warm JVM, but it can skip re-loading the same
 classes on every start: the driver JVM starts from a JDK dynamic
 class-data-sharing (AppCDS) archive in the per-user cache (`_cds_launch`).
+Likewise every Python worker Spark starts imports pyspark from a compiled
+copy of Spark's ``pyspark.zip`` in that cache (`_pyspark_launch`).
 """
 
 from __future__ import annotations
 
 import atexit
+import compileall
 import hashlib
 import os
+import re
+import shlex
 import shutil
 import subprocess
+import sys
+import zipfile
 
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
@@ -71,6 +78,33 @@ _DUMP_WAIT_S = 120.0  # a dump at JVM exit took 6-12 s on 4 cores
 # Silences the JVM's CDS log lines (a dump warns once per skipped class).
 _CDS_QUIET = "-Xlog:cds*=off"
 _MAP_OPT = "-XX:SharedArchiveFile="
+# Modules under a tests/ directory are extracted but not compiled: no
+# worker imports them, and they are two thirds of Spark's pyspark.zip.
+_UNCOMPILED = re.compile(r"/tests/")
+# Spark's Python worker through a compiled copy of pyspark.zip: the zip's
+# entry of PYTHONPATH becomes the copy, every other entry stays in order.
+_LAUNCHER = """#!/bin/sh
+zip={zip}
+tree={tree}
+case ":$PYTHONPATH:" in
+*:"$zip":*)
+  rest=$PYTHONPATH:
+  PYTHONPATH=
+  while [ -n "$rest" ]; do
+    entry=${{rest%%:*}}
+    rest=${{rest#*:}}
+    [ "$entry" = "$zip" ] && entry=$tree
+    PYTHONPATH=$PYTHONPATH$entry:
+  done
+  PYTHONPATH=${{PYTHONPATH%:}} ;;
+esac
+exec {python} "$@"
+"""
+
+
+def _cache_dir(name: str) -> str:
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(cache, "sparkgraft", name)
 
 
 def _java() -> str | None:
@@ -106,13 +140,14 @@ def _is_complete(path: str) -> bool:
 
 
 def _middle(name: str) -> int | None:
-    """The number in ``<key>.<n>.<ext>``: a dump's pid, an archive's size."""
+    """The number in ``<key>.<n>.<ext>``: a dump's or a ``.tmp`` build's
+    pid, an archive's size."""
     parts = name.split(".")
     return int(parts[1]) if len(parts) == 3 and parts[1].isdigit() else None
 
 
-def _owner_alive(dump: str) -> bool:
-    pid = _middle(dump)
+def _owner_alive(name: str) -> bool:
+    pid = _middle(name)
     if not pid:
         return False
     try:
@@ -160,8 +195,7 @@ def _cds_launch(heap: str) -> str | None:
     if (java is None or any(os.environ.get(v) for v in _CLASSPATH_ENV)
             or not all(n.endswith(".template") for n in names)):
         return None
-    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
-    cds = os.path.join(cache, "sparkgraft", "cds")
+    cds = _cache_dir("cds")
     empty_conf = os.path.join(cds, "conf")
     archive = None
     try:
@@ -234,6 +268,93 @@ def _drop_if_declined(spark: SparkSession, archive: str) -> None:
         pass
 
 
+def _tree_key(zip_path: str) -> str:
+    """Name a compiled copy by what makes it valid: the zip (real path,
+    size, mtime) and the bytecode format (``cache_tag``)."""
+    real = os.path.realpath(zip_path)
+    st = os.stat(real)
+    key = f"{real}\0{st.st_size}\0{st.st_mtime_ns}\0{sys.implementation.cache_tag}"
+    return hashlib.sha256(key.encode()).hexdigest()[:20]
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path)
+    else:
+        os.remove(path)
+
+
+def _compiled_tree(root: str, zip_path: str) -> str:
+    """The compiled copy of ``zip_path`` in ``root``, built if missing.
+
+    It is extracted into ``<key>.<pid>.tmp``, compiled (`py_compile`
+    writes ``.pyc`` files even under ``PYTHONDONTWRITEBYTECODE``) and
+    renamed to ``<key>``, so no worker sees a half-built tree. A process
+    that loses the rename to another discards its own; a ``.tmp`` whose
+    process has gone is removed."""
+    key = _tree_key(zip_path)
+    tree = os.path.join(root, key)
+    for name in os.listdir(root):
+        if name.endswith(".tmp") and not _owner_alive(name):
+            _remove(os.path.join(root, name))
+    if os.path.isdir(tree):
+        return tree
+    tmp = os.path.join(root, f"{key}.{os.getpid()}.tmp")
+    with zipfile.ZipFile(zip_path) as z:
+        z.extractall(tmp)
+    compileall.compile_dir(tmp, ddir=tree, rx=_UNCOMPILED, quiet=2)
+    try:
+        os.rename(tmp, tree)
+    except OSError:
+        if not os.path.isdir(tree):
+            raise
+        _remove(tmp)
+    return tree
+
+
+def _write_launcher(root: str, zip_path: str, tree: str, python: str) -> str:
+    """A ``/bin/sh`` launcher in ``root`` that runs ``python`` with ``tree``
+    in place of ``zip_path`` on ``PYTHONPATH``; named by its content."""
+    body = _LAUNCHER.format(zip=shlex.quote(zip_path), tree=shlex.quote(tree),
+                            python=shlex.quote(python))
+    path = os.path.join(root, f"python-{hashlib.sha256(body.encode()).hexdigest()[:16]}")
+    if not os.path.isfile(path):
+        tmp = f"{path}.{os.getpid()}.tmp"
+        with open(tmp, "w") as f:
+            f.write(body)
+        os.chmod(tmp, 0o755)
+        os.replace(tmp, path)
+    return path
+
+
+def _pyspark_launch() -> None:
+    """Make every Python worker Spark starts import pyspark from a compiled
+    copy of ``$SPARK_HOME/python/lib/pyspark.zip``.
+
+    Spark puts that zip on each worker's ``PYTHONPATH``. It holds no
+    ``.pyc``, so every interpreter (the task daemon, each planner daemon
+    and their forked children) compiles the pyspark modules it imports
+    from source. The copy (`_compiled_tree`, in the per-user cache) holds
+    the same files byte for byte, compiled once per zip, and
+    ``PYSPARK_PYTHON``, which both pyspark and the JVM's planner runners
+    read, is set to a launcher that swaps it in (`_write_launcher`) and
+    runs the interpreter Spark would have run. A ``PYSPARK_PYTHON`` that
+    already is such a launcher (a child of a process that set it) is kept.
+    A missing zip, or any ``OSError``, leaves ``os.environ`` as it is.
+    """
+    zip_path = os.path.join(_find_spark_home(), "python", "lib", "pyspark.zip")
+    root = _cache_dir("pyspark")
+    python = os.environ.get("PYSPARK_PYTHON") or "python3"
+    if os.path.dirname(python) == root or not os.path.isfile(zip_path):
+        return
+    try:
+        os.makedirs(root, exist_ok=True)
+        launcher = _write_launcher(root, zip_path, _compiled_tree(root, zip_path), python)
+    except (OSError, zipfile.BadZipFile):
+        return
+    os.environ["PYSPARK_PYTHON"] = launcher
+
+
 def get_session(app_name: str = "sparkgraft", master: str | None = None) -> SparkSession:
     """Return the process-wide SparkSession, creating it on first call.
 
@@ -252,6 +373,7 @@ def get_session(app_name: str = "sparkgraft", master: str | None = None) -> Spar
     java_options = None
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         # this call starts the driver JVM
+        _pyspark_launch()
         java_options = _cds_launch(heap)
         if java_options:
             builder = builder.config("spark.driver.extraJavaOptions", java_options)

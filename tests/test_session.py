@@ -1,17 +1,23 @@
-"""The driver JVM's class-data-sharing start (`session._cds_launch`) and the
+"""The driver JVM's class-data-sharing start (`session._cds_launch`), the
+Python workers' compiled pyspark (`session._pyspark_launch`) and the
 default heap.
 
-The unit tests drive the archive decision against a temporary cache and
-a fake Spark home; they start no JVM. The subprocess tests start fresh
-sessions against a temporary ``XDG_CACHE_HOME`` and ask the JVM itself,
-through its class-load log, where its classes came from.
+The unit tests drive the archive decision and the compiled copy against
+a temporary cache and a fake Spark home; they start no JVM. The
+subprocess tests start fresh sessions against a temporary
+``XDG_CACHE_HOME`` and ask the JVM itself, through its class-load log,
+where its classes came from, and the Python workers where their pyspark
+came from.
 """
 
 from __future__ import annotations
 
+import importlib.util
+import json
 import os
 import subprocess
 import sys
+import zipfile
 from pathlib import Path
 
 import pytest
@@ -134,13 +140,13 @@ _SESSION = ("import sparkgraft; s = sparkgraft.get_session('cds-test'); "
             "print(s.range(1000).rdd.map(lambda r: r[0]).sum())")
 
 
-def _fresh_session(cache: Path, extra_opts: str = "",
-                   heap: str = "1g") -> subprocess.CompletedProcess:
+def _fresh_session(cache: Path, extra_opts: str = "", heap: str = "1g",
+                   script: str = _SESSION) -> subprocess.CompletedProcess:
     env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_GRAFT_DRIVER_MEM=heap,
                SPARK_GRAFT_CPUS="2", PYTHONPATH=str(ROOT))
     env.pop("SPARK_CONF_DIR", None)  # the test session's own JVM may have set it
     env["SPARK_SUBMIT_OPTS"] = f"{env.get('SPARK_SUBMIT_OPTS', '')} {extra_opts}".strip()
-    return subprocess.run([sys.executable, "-c", _SESSION], env=env, cwd=str(cache.parent),
+    return subprocess.run([sys.executable, "-c", script], env=env, cwd=str(cache.parent),
                           capture_output=True, text=True, timeout=300)
 
 
@@ -202,3 +208,171 @@ def test_declined_archive_is_removed(dumped, tmp_path):
     assert run.stdout == "499500\n"
     assert not planted.exists()
     assert not list(tmp_path.glob("hs_err_pid*.log"))
+
+
+# -- the Python workers' compiled pyspark ------------------------------------
+
+# A stand-in interpreter: prints the PYTHONPATH it was started with, then its
+# arguments, one a line.
+_ECHO = "#!/bin/sh\nprintf '%s\\n' \"$PYTHONPATH\" \"$@\"\n"
+_ZIP_FILES = {
+    "pyspark/__init__.py": b"VERSION = 'x'\n",
+    "pyspark/sql/worker/plan.py": b"def plan():\n    return 1\n",
+    "pyspark/python/pyspark/shell.py": b"",
+    "pyspark/tests/test_a.py": b"def test_a():\n    pass\n",
+    "pyspark/sql/tests/test_b.py": b"def test_b():\n    pass\n",
+    "pyspark/py.typed": b"",
+}
+
+
+@pytest.fixture
+def pyzip(tmp_path, monkeypatch):
+    """A fake Spark home whose pyspark.zip holds ``_ZIP_FILES``, an empty
+    cache and a stand-in ``PYSPARK_PYTHON``; returns ``(zip, root, bin)``."""
+    home = tmp_path / "spark"
+    lib = home / "python" / "lib"
+    lib.mkdir(parents=True)
+    zip_path = lib / "pyspark.zip"
+    with zipfile.ZipFile(zip_path, "w") as z:
+        for name, data in _ZIP_FILES.items():
+            z.writestr(name, data)
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    for name in ("echo-python", "python3"):
+        (bin_dir / name).write_text(_ECHO)
+        (bin_dir / name).chmod(0o755)
+    monkeypatch.setattr(session, "_find_spark_home", lambda: str(home))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    monkeypatch.setenv("PYSPARK_PYTHON", str(bin_dir / "echo-python"))
+    return zip_path, tmp_path / "cache" / "sparkgraft" / "pyspark", bin_dir
+
+
+def _launch(path_var: str, bin_dir: Path) -> list[str]:
+    env = dict(os.environ, PYTHONPATH=path_var, PATH=f"{bin_dir}:{os.environ['PATH']}")
+    out = subprocess.run([os.environ["PYSPARK_PYTHON"], "-m", "pyspark.daemon"],
+                         env=env, capture_output=True, text=True, check=True)
+    return out.stdout.splitlines()
+
+
+@pytest.mark.parametrize("previous", ["echo-python", None])
+def test_launcher_swaps_exactly_the_zip_entry(pyzip, monkeypatch, previous):
+    zip_path, root, bin_dir = pyzip
+    if previous is None:  # Spark's default interpreter, found on PATH
+        monkeypatch.delenv("PYSPARK_PYTHON")
+    session._pyspark_launch()
+    tree = root / session._tree_key(str(zip_path))
+    launcher = Path(os.environ["PYSPARK_PYTHON"])
+    assert launcher.parent == root
+    python = bin_dir / previous if previous else "python3"
+    assert launcher.read_text().endswith(f'exec {python} "$@"\n')
+    assert _launch(f"/a::{zip_path}:/b/c.zip:", bin_dir) == [
+        f"/a::{tree}:/b/c.zip:", "-m", "pyspark.daemon"]
+    # an entry that only contains the zip's path is not the zip's entry
+    assert _launch(f"/a:{zip_path}.x:/{zip_path}", bin_dir)[0] == f"/a:{zip_path}.x:/{zip_path}"
+    assert _launch("/a", bin_dir)[0] == "/a"
+
+
+def test_tree_holds_the_zip_compiled(pyzip, monkeypatch):
+    zip_path, root, _ = pyzip
+    monkeypatch.setattr(sys, "dont_write_bytecode", True)  # PYTHONDONTWRITEBYTECODE=1
+    session._pyspark_launch()
+    tree = root / session._tree_key(str(zip_path))
+    files = {str(p.relative_to(tree)) for p in tree.rglob("*")
+             if p.is_file() and "__pycache__" not in p.parts}
+    assert files == set(_ZIP_FILES)
+    for name, data in _ZIP_FILES.items():
+        assert (tree / name).read_bytes() == data
+        if name.endswith(".py") and "tests" not in Path(name).parts:
+            assert Path(importlib.util.cache_from_source(str(tree / name))).is_file(), name
+
+
+def test_missing_zip_leaves_the_environment(pyzip):
+    zip_path, root, _ = pyzip
+    zip_path.unlink()
+    before = dict(os.environ)
+    session._pyspark_launch()
+    assert dict(os.environ) == before and not root.exists()
+
+
+def test_unwritable_cache_leaves_the_environment(pyzip):
+    _, root, _ = pyzip
+    root.parent.parent.mkdir(parents=True)
+    root.parent.write_text("")  # sparkgraft/ is a file: makedirs raises
+    before = dict(os.environ)
+    session._pyspark_launch()
+    assert dict(os.environ) == before
+
+
+def test_tmp_tree_of_a_gone_process_is_removed(pyzip):
+    zip_path, root, _ = pyzip
+    gone = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                          capture_output=True, text=True, check=True)
+    key = session._tree_key(str(zip_path))
+    stale = root / f"{key}.{int(gone.stdout)}.tmp"
+    live = root / f"{key}.{os.getppid()}.tmp"
+    for tmp in (stale, live):
+        (tmp / "pyspark").mkdir(parents=True)
+    session._pyspark_launch()
+    assert not stale.exists() and live.is_dir()
+    assert (root / key / "pyspark" / "__init__.py").is_file()
+
+
+def test_existing_launcher_is_not_wrapped_again(pyzip):
+    _, root, _ = pyzip
+    session._pyspark_launch()
+    launcher = os.environ["PYSPARK_PYTHON"]
+    session._pyspark_launch()
+    assert os.environ["PYSPARK_PYTHON"] == launcher
+    assert [p.name for p in root.glob("python-*")] == [Path(launcher).name]
+
+
+# Where pyspark comes from in a planner daemon (the source's partitions()),
+# in the task worker that runs its read(), and in a mapInPandas worker.
+_ORIGINS = """
+import json
+import pandas as pd
+import sparkgraft
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+def origin():
+    import pyspark
+    return pyspark.__file__
+
+class Reader(DataSourceReader):
+    def partitions(self):
+        return [InputPartition(origin())]
+
+    def read(self, partition):
+        yield (partition.value, origin())
+
+class Origin(DataSource):
+    @classmethod
+    def name(cls):
+        return "origin"
+
+    def schema(self):
+        return "planner string, task string"
+
+    def reader(self, schema):
+        return Reader()
+
+def tasks(batches):
+    for _ in batches:
+        yield pd.DataFrame({"task": [origin()]})
+
+s = sparkgraft.get_session("pyspark-tree-test")
+s.dataSource.register(Origin)
+row = s.read.format("origin").load().first()
+mapped = s.range(1).mapInPandas(tasks, "task string").first()
+print(json.dumps([row.planner, row.task, mapped.task]))
+"""
+
+
+def test_workers_import_pyspark_from_the_tree(dumped):
+    run = _fresh_session(dumped, script=_ORIGINS)
+    assert run.returncode == 0, run.stderr[-2000:]
+    zip_path = os.path.join(session._find_spark_home(), "python", "lib", "pyspark.zip")
+    tree = dumped / "sparkgraft" / "pyspark" / session._tree_key(zip_path)
+    planner, task, mapped = json.loads(run.stdout.splitlines()[-1])
+    for origin in (planner, task, mapped):
+        assert origin == str(tree / "pyspark" / "__init__.py")
